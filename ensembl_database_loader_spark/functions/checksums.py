@@ -17,7 +17,7 @@ is reading the file bytes, not the join.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType
+from pyspark.sql.types import IntegerType, StringType
 
 #: BSD ``sum`` block unit: 1 KiB, rounded up (the second field of the
 #: `sum` output the reference parses, DownloadDatabase.pm:238-251).
@@ -68,15 +68,6 @@ def bsd_sum16_udf(s: str) -> int | None:
     if s is None:
         return None
     return bsd_sum16(s.encode("utf-8"))
-
-
-@F.udf(returnType=LongType(), useArrow=True)
-def bsd_sum16_file_udf(path: str) -> int | None:
-    """BSD sum16 of a local file's bytes (runs on executors, streamed;
-    used by the mirror-dump CHECKSUMS verification)."""
-    if path is None:
-        return None
-    return bsd_sum16_file(path)[0]
 
 
 @F.udf(returnType=StringType(), useArrow=True)

@@ -23,15 +23,11 @@ Reference analogue: the randomized fan-out order of the loader's job
 queue (``LoadFiles.pm`` shuffles its database list so big databases
 spread over workers) — here made deterministic and row-level.
 
-Relation to ``pipeline/export.shuffled_export`` (r6): that writer
-shards IMPLICITLY (part-file = hash partition; shard identity lives in
-the file name) which is the minimal-movement form when the consumer
-just globs files. This module makes the shard an ADDRESSABLE column
-with an explicit 1-based position: shard membership survives
+The shard is an ADDRESSABLE column with an explicit 1-based position,
+not an implicit part-file hash partition: shard membership survives
 re-writes, a single shard is partition-pruned readable (``read_shard``),
 and the exact permutation is contract-checkable cross-engine
-(``shard_order_checksum`` — the oracle-gated fingerprint the implicit
-form cannot express).
+(``shard_order_checksum`` — the oracle-gated fingerprint).
 """
 
 from __future__ import annotations

@@ -17,10 +17,13 @@ trigger (maxFilesPerTrigger)."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ensembl_database_loader_spark.sources.mysql_dump import ZERO_DATE_RE, _read_schema
+from ensembl_database_loader_spark.sources.mysql_dump import (
+    DUMP_CSV_OPTIONS,
+    _cast_temporal,
+    _read_schema,
+)
 
 
 def stream_dump_parts(
@@ -30,29 +33,18 @@ def stream_dump_parts(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming read of dump TSV parts appearing under ``landing_dir``
-    (glob includes split-part names). Dialect identical to the batch
-    reader: tab separator, backslash escape, ``\\N`` null, temporal
-    columns string-read with zero-date -> NULL post-cast."""
+    (glob includes split-part names), in the batch reader's dialect
+    (``DUMP_CSV_OPTIONS``, zero-date -> NULL temporal post-cast)."""
     read_schema, temporal = _read_schema(table_schema)
     reader = spark.readStream
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     df = (
         reader.schema(read_schema)
-        .options(sep="\t", escape="\\", nullValue="\\N", quote="", header=False)
+        .options(**DUMP_CSV_OPTIONS)
         .csv(landing_dir + "/*.txt.gz")
     )
-    if temporal:
-        target = {f.name: f.dataType for f in table_schema.fields}
-        df = df.withColumns(
-            {
-                c: F.when(F.col(c).rlike(ZERO_DATE_RE), F.lit(None))
-                .otherwise(F.col(c))
-                .cast(target[c])
-                for c in temporal
-            }
-        )
-    return df
+    return _cast_temporal(df, table_schema, temporal)
 
 
 def incremental_mirror(

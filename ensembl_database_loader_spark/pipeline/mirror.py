@@ -353,9 +353,8 @@ def _load_one(
         results.append(JobResult(database, "load", "DONE", attempt, branch=branch))
     except Exception as exc:  # noqa: BLE001 - containment is the contract
         stage = "verify" if not any(r.analysis == "verify" for r in results) else "load"
-        results.append(
-            JobResult(database, stage, "FAILED", attempt, str(exc)[:500], branch=branch)
-        )
+        error = f"{type(exc).__name__}: {exc}"
+        results.append(JobResult(database, stage, "FAILED", attempt, error, branch=branch))
     finally:
         sc.setLocalProperty("spark.scheduler.pool", None)
     return results

@@ -2,8 +2,8 @@
 plain-parquet lake.
 
 The round-7 gap this closes: every incremental writer in the repo
-(``merge_snapshot`` output, ``compact_parquet``'s two-rename swap,
-streaming micro-batch appends) left a window where a racing reader saw
+(``merge_snapshot`` output, rename-swap compaction, streaming
+micro-batch appends) left a window where a racing reader saw
 a half-written directory — the standard non-transactional parquet
 trade-off. The fingerprint store already solved the read side with a
 snapshot-isolated explicit file list (``pipeline/curate._snapshot_files``);
@@ -1679,8 +1679,8 @@ def compact_table(
 ) -> dict:
     """Small-file compaction as a commit: rewrite the current snapshot
     into ~``target_bytes`` files (optionally sorted to restore min/max
-    clustering) and publish. Unlike ``maintenance.compact_parquet``'s
-    two-rename swap, there is NO window where the table is missing or
+    clustering) and publish. Unlike a rename-swap rewrite of a plain
+    parquet directory, there is NO window where the table is missing or
     doubled: old files stay on disk until ``vacuum_table``, so
     snapshots resolved before the compaction keep reading bit-identical
     data. Returns the new manifest (with ``files_before``/

@@ -49,6 +49,18 @@ CHECKSUM_LINE_RE = re.compile(r"(\d+)\s+(\d+)\s+(.+)$")
 
 ZERO_DATE_RE = r"^0000-00-00"
 
+#: LOAD DATA's TSV dialect as csv-reader options (LoadFiles.pm:138-141):
+#: tab separator, backslash escape, ``\N`` null, no quoting, no header.
+#: The batch fast path and the streaming reader both read with these.
+DUMP_CSV_OPTIONS = {
+    "sep": "\t",
+    "escape": "\\",
+    "nullValue": "\\N",
+    "quote": "",
+    "header": False,
+    "mode": "PERMISSIVE",
+}
+
 
 class ChecksumError(RuntimeError):
     """Raised when CHECKSUMS verification fails; carries the per-file
@@ -175,6 +187,23 @@ def _read_schema(table_schema: StructType) -> tuple[StructType, list[str]]:
         else:
             fields.append(f)
     return StructType(fields), temporal
+
+
+def _cast_temporal(
+    df: DataFrame, table_schema: StructType, temporal: list[str]
+) -> DataFrame:
+    """Post-cast the string-read ``temporal`` columns to their DDL types,
+    MySQL zero-dates (``0000-00-00 ...``) becoming NULL."""
+    if not temporal:
+        return df
+    return df.withColumns(
+        {
+            c: F.when(F.col(c).rlike(ZERO_DATE_RE), F.lit(None))
+            .otherwise(F.col(c))
+            .cast(table_schema[c].dataType)
+            for c in temporal
+        }
+    )
 
 
 #: LOAD DATA's backslash letter map; any other escaped char is itself.
@@ -473,27 +502,8 @@ def read_dump_table(
             ]
         )
     else:
-        df = spark.read.csv(
-            paths,
-            schema=read_schema,
-            sep="\t",
-            escape="\\",
-            nullValue="\\N",
-            quote="",
-            header=False,
-            mode="PERMISSIVE",
-        )
-    if temporal:
-        target = {f.name: f.dataType for f in schema.fields}
-        df = df.withColumns(
-            {
-                c: F.when(F.col(c).rlike(ZERO_DATE_RE), F.lit(None))
-                .otherwise(F.col(c))
-                .cast(target[c])
-                for c in temporal
-            }
-        )
-    return df
+        df = spark.read.csv(paths, schema=read_schema, **DUMP_CSV_OPTIONS)
+    return _cast_temporal(df, schema, temporal)
 
 
 def read_mysql_dump(

@@ -1,6 +1,5 @@
 """Spark 4 Python STREAMING DataSource: deterministic offset-based
-replay of a parquet event log — the streaming twin of
-``dump_datasource`` and the test/backfill seam every streaming
+replay of a parquet event log — the test/backfill seam every streaming
 pipeline wants: replay a bounded historical log through the SAME
 streaming query that will later run live, with exact, reproducible
 micro-batch boundaries (offset = row position in ``id_col`` order, so

@@ -69,31 +69,6 @@ def test_jsonl_gzip_shards_readable(spark):
     assert back.agg(F.sum("id")).collect()[0][0] == sum(range(100))
 
 
-def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from ensembl_database_loader_spark.sinks.maintenance import compact_parquet
-
-    path = str(tmp_path / "t")
-    # 40 tiny appended files, the incremental-writer accretion pattern
-    for i in range(8):
-        spark.range(i * 100, (i + 1) * 100).select(
-            F.col("id"), (F.col("id") * 2).alias("v")
-        ).repartition(5).write.mode("append").parquet(path)
-    before = spark.read.parquet(path)
-    sum_before = before.agg(F.sum("id"), F.sum("v")).collect()[0]
-    stats = compact_parquet(spark, path, target_bytes=1 << 30, sort_cols=("id",))
-    assert stats["files_before"] == 40
-    assert stats["files_after"] == 1
-    after = spark.read.parquet(path)
-    assert after.count() == 800
-    assert after.agg(F.sum("id"), F.sum("v")).collect()[0] == sum_before
-    # temp/backup dirs are gone
-    import os
-    assert not os.path.exists(path + "__compact_tmp")
-    assert not os.path.exists(path + "__compact_bak")
-
-
 def test_stream_jsonl_tails_landing_dir(spark, tmp_path):
     """Two shard drops drain as bounded micro-batches; streamed rows ==
     batch read of the same directory, corrupt line captured not fatal."""

@@ -133,6 +133,51 @@ def test_mirror_failure_containment_and_summary(spark, tmp_path):
         mirror(spark, str(work), str(tmp_path / "t2"), failed_tolerance=0.2, max_retry=0)
 
 
+def test_mirror_failure_text_keeps_type_and_every_file(spark, tmp_path):
+    """A verify failure over many parts is stored whole: the exception
+    type first, then every corrupted file the ChecksumError lists."""
+    work = tmp_path / "work"
+    os.makedirs(work)
+    bad = build_dump(str(work), "many_parts_core_1_1", extra_order_parts=30)
+    corrupted = sorted(f for f in os.listdir(bad) if f.startswith("orders."))
+    assert len(corrupted) == 32
+    for fn in corrupted:
+        with open(os.path.join(bad, fn), "ab") as f:
+            f.write(b"corrupt")
+    report = mirror(
+        spark, str(work), str(tmp_path / "target"), max_retry=0, failed_tolerance=1.0
+    )
+    (failed,) = [r for r in report.results if r.status == "FAILED"]
+    assert failed.analysis == "verify"
+    assert failed.error.startswith("ChecksumError")
+    assert [fn for fn in corrupted if fn not in failed.error] == []
+
+
+def test_mirror_load_failure_containment(spark, tmp_path):
+    """Without verify, a part truncated mid-gzip-stream fails its
+    database at the load stage; the other database still mirrors."""
+    work = tmp_path / "work"
+    target = tmp_path / "target"
+    os.makedirs(work)
+    build_dump(str(work), "good_core_1_1")
+    bad = build_dump(str(work), "bad_core_1_1")
+    part = os.path.join(bad, "orders.0002.txt.gz")
+    with open(part, "rb") as f:
+        data = f.read()
+    with open(part, "wb") as f:
+        f.write(data[: len(data) // 2])
+    report = mirror(
+        spark, str(work), str(target), verify=False, max_retry=0, failed_tolerance=0.5
+    )
+    status = {(r.database, r.analysis): r.status for r in report.results}
+    assert status[("bad_core_1_1", "load")] == "FAILED"
+    assert status[("good_core_1_1", "load")] == "DONE"
+    (failed,) = failed_jobs(report.to_df(spark)).collect()
+    assert "orders.0002.txt.gz" in failed.error
+    orders = spark.read.parquet(str(target / "good_core_1_1" / "orders"))
+    assert sorted(r.o_orderkey for r in orders.collect()) == [1, 2, 3]
+
+
 def test_mirror_preexisting_target_retry_semantics(spark, tmp_path):
     work = tmp_path / "work"
     target = tmp_path / "target"

@@ -71,8 +71,11 @@ def _tsv(rows) -> bytes:
     return ("".join("\t".join(enc(v) for v in r) + "\n" for r in rows)).encode()
 
 
-def build_dump(root: str, name: str, gz_manifest: bool = False) -> str:
-    """One dump db dir: DDL + region.txt.gz + split orders parts + CHECKSUMS."""
+def build_dump(
+    root: str, name: str, gz_manifest: bool = False, extra_order_parts: int = 0
+) -> str:
+    """One dump db dir: DDL + region.txt.gz + split orders parts + CHECKSUMS.
+    ``extra_order_parts`` appends that many one-row orders parts."""
     d = os.path.join(root, name)
     os.makedirs(d)
     files = {
@@ -81,6 +84,9 @@ def build_dump(root: str, name: str, gz_manifest: bool = False) -> str:
         "orders.0001.txt.gz": gzip.compress(_tsv(ROWS_ORDERS_P1)),
         "orders.0002.txt.gz": gzip.compress(_tsv(ROWS_ORDERS_P2)),
     }
+    for key in range(4, 4 + extra_order_parts):
+        row = (str(key), "1.00", "1996-01-02", "5-LOW", "1996-01-02 00:00:00")
+        files[f"orders.{key - 1:04d}.txt.gz"] = gzip.compress(_tsv([row]))
     manifest_lines = []
     for fn, data in files.items():
         with open(os.path.join(d, fn), "wb") as f:
@@ -299,7 +305,8 @@ def test_eof_dangling_escape_with_escaped_tabs():
 
 def test_fast_path_matches_spark_writer_dialect(spark, tmp_path):
     """The csv fast path round-trips what Spark's writer emits with the
-    same dialect options (the q02 contract)."""
+    same dialect options (the q02 contract), and reads a dump exactly as
+    the strict decoder does."""
     from ensembl_database_loader_spark.catalog import table as cat_table
 
     src = cat_table(spark, "/root/testdata/sf0.001", "region")
@@ -308,64 +315,14 @@ def test_fast_path_matches_spark_writer_dialect(spark, tmp_path):
     src.coalesce(1).write.options(**opts).csv(out)
     back = spark.read.options(**opts).schema("r_regionkey INT, r_name STRING").csv(out)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
+    # On the dump fixture the fast path and the strict decoder agree on
+    # schema and rows: split parts, typed zero-date nulls, decimals.
+    dump = scan_dump_dir(build_dump(str(tmp_path), "dialect_db"))
+    for t in ("region", "orders"):
+        fast = read_dump_table(spark, dump, t)
+        strict = read_dump_table(spark, dump, t, strict_escapes=True)
+        assert fast.schema == strict.schema
+        assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, strict.collect()))
+    with pytest.raises(KeyError, match="not in DDL"):
+        read_dump_table(spark, dump, "nope")
 
-
-# --- Spark 4 Python DataSource (r9) ----------------------------------------
-
-
-def test_python_datasource_matches_read_dump_table(spark, tmp_path):
-    from ensembl_database_loader_spark.sources.dump_datasource import (
-        MySQLDumpDataSource,
-    )
-    from ensembl_database_loader_spark.sources.mysql_dump import read_dump_table
-
-    d = build_dump(str(tmp_path), "dsdb")
-    try:
-        spark.dataSource.register(MySQLDumpDataSource)
-    except Exception:  # already registered by an earlier test in the session
-        pass
-    for table in ("region", "orders"):
-        via_ds = (
-            spark.read.format("mysql_dump")
-            .option("path", d)
-            .option("table", table)
-            .load()
-        )
-        ref = read_dump_table(
-            spark, scan_dump_dir(d), table, strict_escapes=True
-        )
-        assert via_ds.schema == ref.schema
-        assert sorted(map(tuple, via_ds.collect())) == sorted(
-            map(tuple, ref.collect())
-        )
-    # split tables become one partition per part file
-    orders = (
-        spark.read.format("mysql_dump")
-        .option("path", d).option("table", "orders").load()
-    )
-    assert orders.rdd.getNumPartitions() == 2
-    # typed values incl. zero-date nulls arrive through the source
-    rows = {r.o_orderkey: r for r in orders.collect()}
-    assert rows[2].o_orderdate is None and rows[2].o_placed_at is None
-    assert rows[3].o_totalprice is None
-    import decimal
-
-    assert rows[1].o_totalprice == decimal.Decimal("173665.47")
-
-
-def test_python_datasource_guards(spark, tmp_path):
-    from ensembl_database_loader_spark.sources.dump_datasource import (
-        MySQLDumpDataSource,
-    )
-
-    d = build_dump(str(tmp_path), "dsdb2")
-    try:
-        spark.dataSource.register(MySQLDumpDataSource)
-    except Exception:
-        pass
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="not in DDL"):
-        spark.read.format("mysql_dump").option("path", d).option(
-            "table", "nope"
-        ).load().collect()

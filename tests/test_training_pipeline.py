@@ -60,40 +60,6 @@ def test_build_training_corpus_optional_stages_skip(spark):
     assert r.n_mixed == r.n_clean  # no rates -> no mixing
 
 
-def test_shuffled_export_is_deterministic_and_sharded(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from ensembl_database_loader_spark.pipeline.export import shuffled_export
-
-    df = spark.range(0, 1000).select(F.col("id"), (F.col("id") * 3).alias("v"))
-    p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
-    shuffled_export(df, p1, "id", n_shards=4)
-    # different input layout -> byte-identical shard membership/order
-    shuffled_export(df.repartition(7).sortWithinPartitions("v"), p2, "id", 4)
-
-    import glob
-
-    f1 = sorted(glob.glob(p1 + "/part-*"))
-    f2 = sorted(glob.glob(p2 + "/part-*"))
-    assert len(f1) == 4 and len(f2) == 4
-    for a, b in zip(f1, f2):
-        ra = [tuple(r) for r in spark.read.parquet(a).collect()]
-        rb = [tuple(r) for r in spark.read.parquet(b).collect()]
-        assert ra == rb  # same rows, same within-shard order
-    # full coverage, no duplication
-    total = spark.read.parquet(p1).count()
-    assert total == 1000
-    # shards are balanced slices, not range chunks: every shard should
-    # mix low and high ids
-    for a in f1:
-        ids = [r.id for r in spark.read.parquet(a).select("id").collect()]
-        assert min(ids) < 250 and max(ids) >= 750
-    # the returned inspection frame matches the written schema (no
-    # internal _shuffle_key column)
-    ret = shuffled_export(df, str(tmp_path / "c"), "id", 4)
-    assert ret.columns == spark.read.parquet(str(tmp_path / "c")).columns
-
-
 def test_build_training_corpus_line_clean_stage(spark):
     # one doc whose lines all fail the C4 rules disappears before the
     # funnel; survivors flow through with cleaned text
