@@ -196,32 +196,3 @@ def select_doc_cap(
         )
         kept = kept.unionByName(unlisted)
     return kept
-
-
-def select_token_budget_naive(
-    df: DataFrame,
-    id_col: str,
-    token_col: str,
-    strata_col: str,
-    budgets: dict[str, int],
-) -> DataFrame:
-    """The single-window reference plan (one sort per stratum — fine at
-    test scale, a one-task funnel at 100 TB). Kept for the equivalence
-    test pinning the bucketed plan's keep set."""
-    budget = _budget_col(strata_col, budgets)
-    w = Window.partitionBy(strata_col).orderBy("_h", id_col)
-    return (
-        df.withColumn("_h", knuth32(id_col))
-        .filter(budget.isNotNull())
-        .withColumn(
-            "_before",
-            F.coalesce(
-                F.sum(F.col(token_col)).over(
-                    w.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .filter(F.col("_before") < budget)
-        .drop("_h", "_before")
-    )

@@ -71,24 +71,6 @@ def hyperplanes(num_planes: int, dim: int) -> list[list[float]]:
     return [[_plane_component(p, d) for d in range(dim)] for p in range(num_planes)]
 
 
-def with_lsh_bucket(
-    df: DataFrame,
-    vec_col: str,
-    num_planes: int = 4,
-    dim: int = 64,
-    table_id: int = 0,
-    out_col: str = "_bucket",
-) -> DataFrame:
-    """Attach one hash table's sign-bit bucket key:
-    bit p = [v . plane_(table,p) >= 0]."""
-    key = F.lit(0).cast("bigint")
-    for p in range(num_planes):
-        w = [_plane_component(table_id * 1000 + p, d) for d in range(dim)]
-        proj = dot(F.col(vec_col), F.array(*[F.lit(x) for x in w]))
-        key = key + F.when(proj >= 0, F.lit(2**p)).otherwise(F.lit(0))
-    return df.withColumn(out_col, key)
-
-
 def with_lsh_buckets(
     df: DataFrame,
     vec_col: str,
@@ -2027,96 +2009,6 @@ def ivf_topk_indexed(
     )
 
 
-def build_lsh_index(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    path: str,
-    num_planes: int = 4,
-    num_tables: int = 8,
-    dim: int = 64,
-) -> None:
-    """Materialize a multi-table hyperplane-LSH index: one GEMM pass
-    computes every table's bucket key (``with_lsh_buckets``), then each
-    row is exploded into its ``num_tables`` (table, bucket) postings and
-    persisted ``partitionBy("_table", "_bucket")``. A query probes
-    exactly ``num_tables`` partitions (its bucket in each table) via
-    partition-pruned reads — the per-query corpus rehash in
-    ``lsh_bucket_topk`` disappears. Storage is num_tables x corpus (the
-    classic LSH replica trade); at 100 TB store only (id, vec) in the
-    postings, as here."""
-    import json
-    import os
-
-    b = with_lsh_buckets(df, vec_col, num_planes, num_tables, dim)
-    exploded = b.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.posexplode("_buckets").alias("_table", "_bucket"),
-    )
-    exploded.write.mode("overwrite").partitionBy("_table", "_bucket").parquet(path)
-    meta = {
-        "kind": "lsh",
-        "id_col": id_col,
-        "vec_col": vec_col,
-        "num_planes": num_planes,
-        "num_tables": num_tables,
-        "dim": dim,
-    }
-    with open(os.path.join(path, "_ann_meta.json"), "w") as f:
-        json.dump(meta, f)
-
-
-def lsh_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 5,
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Top-k over a materialized LSH index (``build_lsh_index``): the
-    query's bucket per table is computed driver-side from the same
-    deterministic hyperplanes, the scan filters on the two partition
-    columns (an OR of per-table conjunctions — still prunable), and
-    candidates are deduped by id before the exact cosine re-rank.
-    Identical results to ``lsh_bucket_topk`` on the same corpus."""
-    import numpy as np
-
-    meta = ann_index_meta(path)
-    num_planes, num_tables, dim = (
-        meta["num_planes"],
-        meta["num_tables"],
-        meta["dim"],
-    )
-    planes = np.array(
-        [
-            [_plane_component(t * 1000 + p, d) for d in range(dim)]
-            for t in range(num_tables)
-            for p in range(num_planes)
-        ]
-    )
-    q = np.asarray(query_vec, dtype=np.float64)
-    signs = (planes @ q) >= 0
-    weights = 1 << np.arange(num_planes)
-    qbuckets = signs.reshape(num_tables, num_planes) @ weights
-
-    cond = None
-    for t, b in enumerate(qbuckets):
-        c = (F.col("_table") == int(t)) & (F.col("_bucket") == int(b))
-        cond = c if cond is None else (cond | c)
-    idx = spark.read.parquet(path).filter(cond)
-    if exclude_id is not None:
-        idx = idx.filter(F.col(meta["id_col"]) != exclude_id)
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = _safe_cosine(F.col(meta["vec_col"]), qcol)
-    return (
-        idx.dropDuplicates([meta["id_col"]])
-        .select(F.col(meta["id_col"]), F.round(cos, 6).alias("cos"))
-        .orderBy(F.desc("cos"), meta["id_col"])
-        .limit(k)
-    )
-
-
 def embedding_neardup_pairs(
     df: DataFrame,
     id_col: str,
@@ -2428,7 +2320,7 @@ def mmr_rerank(
 
     Input is one row per (query, candidate) carrying BOTH vectors —
     the natural shape coming out of ``ivf_topk_indexed``/
-    ``lsh_topk_indexed`` joined back to the corpus for vectors.
+    ``lsh_bucket_topk`` joined back to the corpus for vectors.
     Execution: one hash shuffle on the query column, then each query
     group re-ranks in ONE vectorized numpy pass (an m x d candidate
     matrix; each greedy step is a matvec) inside applyInPandas —

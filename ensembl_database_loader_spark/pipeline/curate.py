@@ -18,7 +18,7 @@ components (see the iterative operator in operators/components.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ensembl_database_loader_spark.functions.text import normalize_text, tokens
@@ -625,151 +625,3 @@ def semantic_dedup_increment(
             centroids=centroids, mode="append",
         )
     return kept
-
-
-# ---------------------------------------------------------------------------
-# Corpus-stats sketch store (optional companion to the fingerprint store)
-#
-# "How many distinct tokens does the accumulated corpus have after 40
-# ingest runs?" answered WITHOUT rescanning history: each run appends
-# one ~KB HLL sketch row; the cumulative estimate is a union over those
-# rows (operators/sketches.py — error-bounded merge, ~1% at lg_k 14).
-# Deliberately decoupled from curate_corpus/curate_increment so the
-# funnel's outputs, probes, and timings are untouched — call it on the
-# kept frame right after each run, against the same store_path.
-
-
-def write_corpus_sketch(
-    kept: DataFrame,
-    store_path: str,
-    batch_label: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lg_k: int = 14,
-) -> None:
-    """Append one (batch, hll_sketch, distinct_est, n_docs, n_tokens)
-    row for this run's kept documents to
-    ``store_path + '/token_sketches'``.
-
-    ONE aggregate over one explode_outer pass computes the sketch and
-    both counts together (a second ``kept.agg`` branch would re-run
-    the whole curation lineage feeding ``kept``), and a global
-    aggregate always emits its row — an EMPTY batch (everything
-    filtered, or all-null texts) still lands in the store with a null
-    sketch and zero counts, so per-run accounting never silently
-    skips a run."""
-    tok = kept.select(
-        F.col(id_col).alias("_id"),
-        F.explode_outer(tokens(text_col)).alias("w"),
-    )
-    sk_agg = F.hll_sketch_agg(F.col("w"), F.lit(int(lg_k)))
-    row = tok.agg(
-        sk_agg.alias("hll_sketch"),
-        F.coalesce(F.hll_sketch_estimate(sk_agg), F.lit(0)).alias("distinct_est"),
-        F.count_distinct(F.col("_id")).alias("n_docs"),
-        F.count(F.col("w")).cast("bigint").alias("n_tokens"),
-    )
-    row.select(F.lit(batch_label).alias("batch"), "*").write.mode(
-        "append"
-    ).parquet(store_path + "/token_sketches")
-
-
-def corpus_distinct_stats(spark: SparkSession, store_path: str) -> DataFrame:
-    """One row over ALL batches ever sketched: ``n_batches, n_docs,
-    n_tokens, distinct_tokens_est`` — the cumulative corpus accounting,
-    computed from the tiny sketch rows only (no history rescan)."""
-    from ensembl_database_loader_spark.operators.sketches import (
-        merge_distinct_sketches,
-    )
-
-    sk = spark.read.parquet(
-        *_snapshot_files(spark, store_path + "/token_sketches")
-    )
-    # empty batches carry null sketches; hll_union_agg skips nulls, and
-    # an all-empty store estimates 0
-    merged = merge_distinct_sketches(sk.filter(F.col("hll_sketch").isNotNull())).select(
-        F.coalesce(F.col("distinct_est"), F.lit(0)).alias("distinct_tokens_est")
-    )
-    return (
-        sk.agg(
-            F.count(F.lit(1)).alias("n_batches"),
-            F.sum("n_docs").cast("bigint").alias("n_docs"),
-            F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-        )
-        .crossJoin(merged)
-    )
-
-
-def write_corpus_freq_items(
-    kept: DataFrame,
-    store_path: str,
-    batch_label: str,
-    text_col: str = "text",
-    k: int = 64,
-) -> None:
-    """Append this run's Misra-Gries token summary (<= k items + an
-    error row; operators/sketches.frequent_items) to
-    ``store_path + '/freq_items'``. Nothing item-granular shuffles —
-    the stored rows are the k-counter partition summaries' combine."""
-    from ensembl_database_loader_spark.operators.sketches import frequent_items
-
-    toks = kept.select(F.explode_outer(tokens(text_col)).alias("w"))
-    sk = frequent_items(toks.filter(F.col("w").isNotNull()), "w", k=k)
-    sk.select(F.lit(batch_label).alias("batch"), "*").write.mode(
-        "append"
-    ).parquet(store_path + "/freq_items")
-
-
-def corpus_top_tokens(
-    spark: SparkSession, store_path: str, k: int = 64
-) -> DataFrame:
-    """Heavy-hitter tokens across EVERY batch ever ingested, from the
-    stored summaries only (no history rescan): the merged MG summary
-    still carries the concatenated-input guarantees — lower-bound
-    weights within the error row of truth."""
-    from ensembl_database_loader_spark.operators.sketches import (
-        merge_frequent_items,
-    )
-
-    sk = spark.read.parquet(*_snapshot_files(spark, store_path + "/freq_items"))
-    return merge_frequent_items(sk.select("item", "weight"), k=k)
-
-
-def write_corpus_len_hist(
-    kept: DataFrame,
-    store_path: str,
-    batch_label: str,
-    text_col: str = "text",
-    precision: int = 32,
-) -> None:
-    """Append this run's document-token-length histogram
-    (operators/sketches.quantile_histogram) to
-    ``store_path + '/len_hist'`` — a few hundred (bucket, n) rows."""
-    from ensembl_database_loader_spark.operators.sketches import (
-        quantile_histogram,
-    )
-
-    lens = kept.select(F.size(tokens(text_col)).cast("double").alias("len"))
-    quantile_histogram(lens, "len", precision=precision).select(
-        F.lit(batch_label).alias("batch"), "*"
-    ).write.mode("append").parquet(store_path + "/len_hist")
-
-
-def corpus_length_quantiles(
-    spark: SparkSession,
-    store_path: str,
-    probs: tuple[float, ...] = (0.5, 0.9, 0.99),
-    precision: int = 32,
-) -> DataFrame:
-    """Doc-length quantiles of the ACCUMULATED corpus from stored
-    histograms only — the merge is bucket-exact, so this equals the
-    one-shot histogram over all batches' documents."""
-    from ensembl_database_loader_spark.operators.sketches import (
-        histogram_quantiles,
-        merge_quantile_histograms,
-    )
-
-    h = spark.read.parquet(*_snapshot_files(spark, store_path + "/len_hist"))
-    return histogram_quantiles(
-        merge_quantile_histograms(h.select("bucket", "n")), probs, precision
-    )

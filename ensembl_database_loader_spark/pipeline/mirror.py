@@ -338,16 +338,16 @@ def _load_one(
     sc = spark.sparkContext
     sc.setLocalProperty("spark.scheduler.pool", BRANCH_POOLS.get(branch, "load_normal"))
     try:
-        target = os.path.join(target_dir, database)
-        if os.path.exists(target):
-            if attempt == 0:  # LoadFiles.pm:56-64: first-attempt collision throws
-                raise FileExistsError(f"target database already exists: {target}")
-            shutil.rmtree(target)  # retry: drop + recreate (DownloadDatabase.pm:172-186)
         src = os.path.join(work_dir, database)
         tables = read_mysql_dump(
             spark, src, verify=verify, strict_escapes=strict_escapes
         )
         results.append(JobResult(database, "verify", "DONE", attempt, branch=branch))
+        target = os.path.join(target_dir, database)
+        if os.path.exists(target):
+            if attempt == 0:  # LoadFiles.pm:56-64: first-attempt collision throws
+                raise FileExistsError(f"target database already exists: {target}")
+            shutil.rmtree(target)  # retry: drop + recreate (DownloadDatabase.pm:172-186)
         for t, df in tables.items():
             df.write.mode("errorifexists").parquet(os.path.join(target, t))
         results.append(JobResult(database, "load", "DONE", attempt, branch=branch))

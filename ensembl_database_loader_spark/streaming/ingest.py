@@ -172,10 +172,8 @@ def streaming_curate(
             partition_by,
         )
         if sketch_root is not None:
-            record_batch_sketches(
-                kept, sketch_root, batch_id,
-                text_col=curate_kwargs.get("text_col", "text"),
-            )
+            # kept is always (id, blk, text), whatever text_col named
+            record_batch_sketches(kept, sketch_root, batch_id)
 
     w = (
         stream_df.writeStream.foreachBatch(_process)
@@ -202,13 +200,16 @@ def record_batch_sketches(
     manifest-table commits under ``sketch_root`` (``/tokens``,
     ``/freq``, ``/lenhist``).
 
-    The batch-file sketch store (pipeline/curate.write_corpus_sketch*)
-    appends plain parquet, which is at-least-once under foreachBatch
+    A plain-parquet append would be at-least-once under foreachBatch
     replay — harmless for HLL (union is idempotent) but WRONG for MG
     weights and histogram counts, which double. Committing through
     ``manifest.write_table(txn=(app, batch_id))`` makes every summary
     append exactly-once: a replayed batch hits the stored watermark
-    and commits nothing. Each commit is a few-hundred-row write."""
+    and commits nothing. Each commit is a few-hundred-row write.
+
+    Batch callers pass a run number as ``batch_id``; an empty ``kept``
+    still commits its row (null sketch, zero counts), so every run is
+    accounted."""
     from pyspark.sql import functions as F
 
     from ensembl_database_loader_spark.functions.text import tokens

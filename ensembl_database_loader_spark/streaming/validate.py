@@ -162,52 +162,3 @@ def validation_summary(spark: SparkSession, report_path: str) -> DataFrame:
         )
         .orderBy("rule")
     )
-
-
-def streaming_validate_atomic(
-    stream_df: DataFrame,
-    expectations: list[Expectation] | tuple[Expectation, ...],
-    root: str,
-    checkpoint_dir: str,
-    refs: dict[str, DataFrame] | None = None,
-    available_now: bool = True,
-):
-    """The gate with CROSS-TABLE atomicity: good/quarantine/report land
-    under one catalog root (``root/good``, ``root/quarantine``,
-    ``root/report``) and each micro-batch publishes ONE group commit
-    (sinks/catalog_commit.py) — a reader resolving the root never sees
-    a cycle's good rows without its verdict rows, and a replayed batch
-    rewrites nothing (the group txn covers member writes too). Read
-    with ``read_group(spark, root)``."""
-    expectations = list(expectations)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from ensembl_database_loader_spark.sinks.catalog_commit import (
-            commit_group,
-        )
-
-        good, quarantine, report = validate_batch(
-            batch_df, expectations, refs=refs
-        )
-        commit_group(
-            batch_df.sparkSession,
-            root,
-            {
-                "good": good,
-                "quarantine": quarantine,
-                "report": report.withColumn("batch", F.lit(int(batch_id))),
-            },
-            mode="append",
-            txn=(_TXN_APP, batch_id),
-        )
-
-    w = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()

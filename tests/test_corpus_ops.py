@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ensembl_database_loader_spark.operators.budget import _budget_col
 from ensembl_database_loader_spark.operators.contamination import (
     contamination_report,
     decontaminate,
@@ -15,6 +17,7 @@ from ensembl_database_loader_spark.operators.mixing import (
     KNUTH,
     deterministic_sample,
     keyed_hash,
+    knuth32,
     stratified_sample,
 )
 from ensembl_database_loader_spark.operators.packing import (
@@ -610,14 +613,40 @@ def test_remove_duplicate_spans_methods_equivalent(spark):
 # --- token-budget selection (r7) --------------------------------------------
 
 
+def select_token_budget_naive(
+    df: DataFrame,
+    id_col: str,
+    token_col: str,
+    strata_col: str,
+    budgets: dict[str, int],
+) -> DataFrame:
+    """The single-window reference plan (one sort per stratum — fine at
+    test scale, a one-task funnel at 100 TB). Kept for the equivalence
+    test pinning the bucketed plan's keep set."""
+    budget = _budget_col(strata_col, budgets)
+    w = Window.partitionBy(strata_col).orderBy("_h", id_col)
+    return (
+        df.withColumn("_h", knuth32(id_col))
+        .filter(budget.isNotNull())
+        .withColumn(
+            "_before",
+            F.coalesce(
+                F.sum(F.col(token_col)).over(
+                    w.rowsBetween(Window.unboundedPreceding, -1)
+                ),
+                F.lit(0),
+            ),
+        )
+        .filter(F.col("_before") < budget)
+        .drop("_h", "_before")
+    )
+
+
 def test_token_budget_bucketed_equals_naive(spark):
     """The scale plan (bucket histogram + boundary-only window) must
     pick the IDENTICAL keep set as the naive one-window reference, for
     any bucket count, including degenerate budgets."""
-    from ensembl_database_loader_spark.operators.budget import (
-        select_token_budget,
-        select_token_budget_naive,
-    )
+    from ensembl_database_loader_spark.operators.budget import select_token_budget
 
     rows = [(i, ["a", "b", "c"][i % 3], 10 + (i * 7) % 50) for i in range(500)]
     df = spark.createDataFrame(rows, "id bigint, lang string, n_tokens bigint")

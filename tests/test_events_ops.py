@@ -174,3 +174,105 @@ def test_cohort_retention_triangle(spark):
     )
     assert plan.count("Exchange") <= 3  # 2 + possible AQE final coalesce
     assert "Join" not in plan
+
+
+def test_rolling_anomalies_flags_spike_not_baseline(spark):
+    """A 10x spike after a stable week alarms; stable days don't; the
+    spike day's own count never pollutes its baseline; flat baselines
+    (std 0) yield null z and no alarm."""
+    import datetime as dt
+
+    import pytest
+
+    from ensembl_database_loader_spark.operators.events import (
+        rolling_anomalies,
+    )
+
+    base = dt.datetime(2024, 1, 1)
+    rows = []
+    eid = 0
+    # key 'a': days 0-7 have 10±1 events (varying), day 8 has 100
+    per_day = [10, 11, 9, 10, 11, 9, 10, 11, 100]
+    for d, n in enumerate(per_day):
+        for _ in range(n):
+            rows.append(("a", base + dt.timedelta(days=d, seconds=eid % 80000)))
+            eid += 1
+    # key 'b': perfectly flat 5/day -> std 0 -> never anomalous
+    for d in range(9):
+        for _ in range(5):
+            rows.append(("b", base + dt.timedelta(days=d, seconds=eid % 80000)))
+            eid += 1
+    df = spark.createDataFrame(rows, "event_type string, ts timestamp")
+    out = {
+        (r.key, r.day): r
+        for r in rolling_anomalies(df, trailing=7, z_threshold=3.0).collect()
+    }
+    d0 = min(d for k, d in out if k == "a")
+    spike = out[("a", d0 + 8)]
+    assert spike.anomalous and spike.z > 3.0
+    assert spike.cnt == 100 and spike.n_base == 7
+    # baseline mean excludes the spike day itself
+    assert 9.0 <= spike.base_mean <= 11.5
+    # a normal mid-week day is quiet
+    assert not out[("a", d0 + 5)].anomalous
+    # first day has no baseline at all
+    assert out[("a", d0)].z is None and not out[("a", d0)].anomalous
+    # flat key: std 0 -> null z, never anomalous
+    assert all(
+        out[(k, d)].z is None and not out[(k, d)].anomalous
+        for (k, d) in out
+        if k == "b"
+    )
+    with pytest.raises(ValueError, match="trailing"):
+        rolling_anomalies(df, trailing=1)
+
+
+def test_rolling_anomalies_densifies_dark_and_gap_days(spark):
+    """A source that goes fully dark gets cnt=0 rows (and alarms) up to
+    the GLOBAL last observed day; calendar gaps inside a key's range
+    fill with zeros so the ROWS-based trailing window stays calendar-
+    true; densify=False reproduces the sparse grid."""
+    import datetime as dt
+
+    from ensembl_database_loader_spark.operators.events import (
+        rolling_anomalies,
+    )
+
+    base = dt.datetime(2024, 3, 1)
+    rows = []
+    eid = 0
+    # key 'c': varying ~20/day for days 0-6, then DARK (no rows at all)
+    for d, n in enumerate([20, 21, 19, 20, 21, 19, 20]):
+        for _ in range(n):
+            rows.append(("c", base + dt.timedelta(days=d, seconds=eid % 80000)))
+            eid += 1
+    # key 'd': alive through day 10 (defines the global max day), with
+    # a one-day calendar gap at day 5
+    for d in range(11):
+        if d == 5:
+            continue
+        for _ in range(3 + (d % 2)):
+            rows.append(("d", base + dt.timedelta(days=d, seconds=eid % 80000)))
+            eid += 1
+    df = spark.createDataFrame(rows, "event_type string, ts timestamp")
+    out = {
+        (r.key, r.day): r
+        for r in rolling_anomalies(df, trailing=7, z_threshold=3.0).collect()
+    }
+    d0 = min(d for k, d in out if k == "c")
+    # dark days materialize as cnt=0 through the global max day
+    assert ("c", d0 + 7) in out and ("c", d0 + 10) in out
+    for d in range(7, 11):
+        assert out[("c", d0 + d)].cnt == 0
+    # the first dark day alarms: |0 - ~20| / std(~0.8) >> 3
+    assert out[("c", d0 + 7)].anomalous and out[("c", d0 + 7)].z < -3.0
+    # the calendar gap inside key 'd' fills with an explicit zero row
+    assert out[("d", d0 + 5)].cnt == 0
+    # sparse mode: no fabricated rows at all
+    sparse = {
+        (r.key, r.day)
+        for r in rolling_anomalies(
+            df, trailing=7, z_threshold=3.0, densify=False
+        ).collect()
+    }
+    assert ("c", d0 + 7) not in sparse and ("d", d0 + 5) not in sparse

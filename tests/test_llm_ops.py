@@ -214,25 +214,6 @@ def test_ann_index_append_equals_full_build(spark, sf_dir, tmp_path):
     assert [tuple(r) for r in inc] == [tuple(r) for r in full]
 
 
-def test_ann_index_lsh_matches_unindexed(spark, sf_dir, tmp_path):
-    """The materialized LSH index (per-table posting partitions) must
-    agree with lsh_bucket_topk's per-query rehash exactly."""
-    from ensembl_database_loader_spark.operators.similarity import (
-        build_lsh_index,
-        lsh_bucket_topk,
-        lsh_topk_indexed,
-    )
-
-    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    path = str(tmp_path / "lsh_idx")
-    build_lsh_index(e, "vec_id", "embedding", path)
-    direct = lsh_bucket_topk(e, "vec_id", "embedding", 0, k=5).collect()
-    indexed = lsh_topk_indexed(
-        spark, path, _query_vec(e), k=5, exclude_id=0
-    ).collect()
-    assert [tuple(r) for r in indexed] == [tuple(r) for r in direct]
-
-
 def test_regex_pretokens_unit(spark):
     from ensembl_database_loader_spark.operators.textstats import with_regex_tokens
 

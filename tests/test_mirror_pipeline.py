@@ -189,6 +189,11 @@ def test_mirror_preexisting_target_retry_semantics(spark, tmp_path):
         spark, str(work), str(target), max_retry=0, failed_tolerance=1.0
     )
     assert r0.failed_databases == ["gamma_core_1_1"]
+    # the collision is a load failure: the dump itself verified clean
+    stages = {r.analysis: r for r in r0.results}
+    assert stages["verify"].status == "DONE"
+    assert stages["load"].status == "FAILED"
+    assert stages["load"].error.startswith("FileExistsError")
     # max_retry=1: retry drops the stale target and reloads
     r1 = mirror(spark, str(work), str(target), max_retry=1, failed_tolerance=1.0)
     assert r1.failed_databases == []

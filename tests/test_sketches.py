@@ -72,9 +72,9 @@ def test_corpus_sketch_store_accumulates_across_runs(spark, tmp_path):
     rows only, within the sketch bound of the exact cross-batch
     distinct count."""
     from ensembl_database_loader_spark.functions.text import tokens as tok_fn
-    from ensembl_database_loader_spark.pipeline.curate import (
-        corpus_distinct_stats,
-        write_corpus_sketch,
+    from ensembl_database_loader_spark.streaming.ingest import (
+        record_batch_sketches,
+        streaming_corpus_stats,
     )
 
     store = str(tmp_path / "store")
@@ -86,9 +86,9 @@ def test_corpus_sketch_store_accumulates_across_runs(spark, tmp_path):
         F.col("id").alias("doc_id"),
         F.concat(F.lit("alpha tok"), F.col("id").cast("string"), F.lit(" gamma")).alias("text"),
     )
-    write_corpus_sketch(b1, store, "run1")
-    write_corpus_sketch(b2, store, "run2")
-    row = corpus_distinct_stats(spark, store).collect()[0]
+    record_batch_sketches(b1, store, 1)
+    record_batch_sketches(b2, store, 2)
+    row = streaming_corpus_stats(spark, store).collect()[0]
     assert row.n_batches == 2
     assert row.n_docs == 1000
     assert row.n_tokens == 3000
@@ -106,17 +106,17 @@ def test_corpus_sketch_store_records_empty_batches(spark, tmp_path):
     """An empty curation batch still lands one accounting row (null
     sketch, zero counts) — runs are never silently missing from the
     store."""
-    from ensembl_database_loader_spark.pipeline.curate import (
-        corpus_distinct_stats,
-        write_corpus_sketch,
+    from ensembl_database_loader_spark.streaming.ingest import (
+        record_batch_sketches,
+        streaming_corpus_stats,
     )
 
     store = str(tmp_path / "store")
     full = spark.createDataFrame([(1, "alpha beta")], "doc_id bigint, text string")
     empty = full.limit(0)
-    write_corpus_sketch(full, store, "run1")
-    write_corpus_sketch(empty, store, "run2")
-    row = corpus_distinct_stats(spark, store).collect()[0]
+    record_batch_sketches(full, store, 1)
+    record_batch_sketches(empty, store, 2)
+    row = streaming_corpus_stats(spark, store).collect()[0]
     assert row.n_batches == 2  # the empty run is still accounted
     assert row.n_docs == 1 and row.n_tokens == 2
     assert row.distinct_tokens_est == 2
@@ -283,11 +283,10 @@ def test_corpus_store_freq_items_and_len_hist(spark, tmp_path):
     """The r8 store companions: per-batch MG token summaries and
     length histograms, cumulative answers from stored rows only."""
     from ensembl_database_loader_spark.functions.text import tokens as tok_fn
-    from ensembl_database_loader_spark.pipeline.curate import (
-        corpus_length_quantiles,
-        corpus_top_tokens,
-        write_corpus_freq_items,
-        write_corpus_len_hist,
+    from ensembl_database_loader_spark.streaming.ingest import (
+        record_batch_sketches,
+        streaming_length_quantiles,
+        streaming_top_tokens,
     )
 
     store = str(tmp_path / "store")
@@ -303,11 +302,10 @@ def test_corpus_store_freq_items_and_len_hist(spark, tmp_path):
             F.lit("common other words here x"), F.col("id").cast("string")
         ).alias("text"),
     )
-    for label, b in (("r1", b1), ("r2", b2)):
-        write_corpus_freq_items(b, store, label, k=16)
-        write_corpus_len_hist(b, store, label)
+    for batch_id, b in ((1, b1), (2, b2)):
+        record_batch_sketches(b, store, batch_id)
 
-    top = corpus_top_tokens(spark, store, k=16).collect()
+    top = streaming_top_tokens(spark, store, k=16).collect()
     items = {r.item: r.weight for r in top if r.item is not None}
     err = sum(r.weight for r in top if r.item is None)
     n_tokens = (
@@ -318,7 +316,7 @@ def test_corpus_store_freq_items_and_len_hist(spark, tmp_path):
     assert items.get("common") is not None
     assert 800 - err <= items["common"] <= 800
 
-    q = {r.p: r.est for r in corpus_length_quantiles(spark, store).collect()}
+    q = {r.p: r.est for r in streaming_length_quantiles(spark, store).collect()}
     # doc lengths are 3 (b1) and 5 (b2) tokens; p50 of 500 docs is 3
     bound = 2 ** (1 / 32)
     assert 3 / bound <= q[0.5] <= 3 * bound

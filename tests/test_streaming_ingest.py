@@ -323,6 +323,38 @@ def test_streaming_sketches_recorded_and_replay_safe(spark, tmp_path):
     assert streaming_corpus_stats(spark, skroot).collect()[0].n_batches == 2
 
 
+def test_streaming_sketches_with_custom_text_col(spark, tmp_path):
+    """sketch_root with text_col='body': the curated frame names its
+    text column 'text' whatever the input called it, so the sketches
+    read that column and the stream drains."""
+    from ensembl_database_loader_spark.streaming.ingest import (
+        streaming_corpus_stats,
+    )
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    out = str(tmp_path / "curated")
+    skroot = str(tmp_path / "sketches")
+    docs = [{**r, "body": r.pop("text")} for r in _docs(0)]
+    with open(landing / "b1.jsonl", "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in docs)
+
+    s = stream_documents(
+        spark, str(landing), schema="doc_id bigint, lang string, body string"
+    )
+    _drain(
+        streaming_curate(
+            s, str(tmp_path / "store"), out, str(tmp_path / "ckpt"),
+            text_col="body", sketch_root=skroot,
+        )
+    )
+    n_kept = spark.read.parquet(out).count()
+    assert n_kept == 6
+    row = streaming_corpus_stats(spark, skroot).collect()[0]
+    assert row.n_batches == 1
+    assert row.n_docs == n_kept and row.n_tokens == 40 * n_kept
+
+
 def test_streaming_manifest_sink_partitioned_layout(spark, tmp_path):
     """partition_by on the manifest sink: the first batch declares the
     hive layout, later appends inherit it, and partition predicates

@@ -157,53 +157,3 @@ def test_streaming_validate_end_to_end_with_replay(spark, tmp_path):
     assert summary["regex:lang"] == (2, 1, 1)
     assert summary["in_range:textlen"] == (2, 1, 1)
     assert summary["row_count"] == (2, 0, 0)
-
-
-def test_streaming_validate_atomic_group(spark, tmp_path):
-    """The atomic variant: one group commit per batch — good rows and
-    their verdict rows become visible TOGETHER, time travel replays
-    whole cycles, fresh-checkpoint replay commits nothing."""
-    import shutil
-
-    from ensembl_database_loader_spark.sinks.catalog_commit import (
-        group_history,
-        read_group,
-    )
-    from ensembl_database_loader_spark.streaming.validate import (
-        streaming_validate_atomic,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    root = str(tmp_path / "gate")
-    ckpt = str(tmp_path / "ckpt")
-
-    def _run():
-        s = stream_documents(spark, str(landing))
-        q = streaming_validate_atomic(s, SUITE, root, ckpt)
-        q.awaitTermination(120)
-
-    _write_jsonl(landing / "b1.jsonl", ROWS1)
-    _run()
-    g = read_group(spark, root)
-    assert {r.doc_id for r in g["good"].collect()} == {1, 4}
-    assert g["quarantine"].count() == 2
-    assert g["report"].count() == len(SUITE)
-    v0_tables = group_history(spark, root)[0]["tables"]
-
-    time.sleep(1.1)
-    _write_jsonl(landing / "b2.jsonl", ROWS2)
-    _run()
-    g = read_group(spark, root)
-    assert {r.doc_id for r in g["good"].collect()} == {1, 4, 5, 6}
-    # time travel to cycle 0: the whole group rolls back together
-    g0 = read_group(spark, root, version=0)
-    assert {r.doc_id for r in g0["good"].collect()} == {1, 4}
-    assert g0["report"].count() == len(SUITE)
-    assert group_history(spark, root)[0]["tables"] == v0_tables
-
-    # full replay from a fresh checkpoint: group txns reject everything
-    shutil.rmtree(ckpt)
-    _run()
-    assert len(group_history(spark, root)) == 2
-    assert read_group(spark, root)["good"].count() == 4
