@@ -213,13 +213,33 @@ def main() -> int:
                     "persist leak that flattered r10's number; 4.1-4.4 s "
                     "is the honest steady-state"
                 ),
+                # one ANN index layout, one per-query top-k: --only
+                # medians of 3 runs each, before -> after, 4 cores
                 "ss_ann_manifest_index": (
                     "r12: +split_hot_cells lifecycle (partial rebalance "
-                    "+ replay no-op) rides this probe"
+                    "+ replay no-op) rides this probe; then the bare "
+                    "index and its parity gate left it, 11.73 -> 9.02 s"
                 ),
                 "ss_bm25_topk": (
                     "r12: +2 DataFrame-shaped (shuffle) query forms "
-                    "ride this probe"
+                    "ride this probe; then the salted form left it, "
+                    "9.89 -> 7.77 s"
+                ),
+                "ss_ann_batch_indexed": (
+                    "the salted batch form left it, 10.62 -> 8.01 s"
+                ),
+                "ss_hybrid_rrf": (
+                    "the salted fusion form left it, 3.95 -> 2.57 s"
+                ),
+                "ss_ann_ivf_indexed": (
+                    "the index build is a manifest commit (id stats + "
+                    "bloom), 1.83 -> 2.20 s"
+                ),
+                "ss_ann_ivf_quant": (
+                    "the index build is a manifest commit, 2.68 -> 3.21 s"
+                ),
+                "ss_ann_pq_indexed": (
+                    "the index build is a manifest commit, 6.46 -> 6.28 s"
                 ),
             },
         }

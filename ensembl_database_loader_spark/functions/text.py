@@ -54,14 +54,16 @@ def shingle_udf(n: int = 3):
     ASCII-only ``\\s`` (NOT Python's Unicode \\s), lowercase after trim.
     Shingle order differs from the JVM version (first-occurrence vs
     positional) — irrelevant, shingle arrays are sets under Jaccard/
-    MinHash."""
+    MinHash. A null text gives a null array, as the JVM twin does."""
     import re
 
     ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
     @F.pandas_udf("array<string>")
     def _sh(s):  # type: ignore[no-untyped-def]  # (pd.Series -> pd.Series)
-        def h(x: str) -> list[str]:
+        def h(x: str | None) -> list[str] | None:
+            if x is None:
+                return None
             t = ws.sub(" ", x.strip(" ").lower()).split(" ")
             if len(t) < n:
                 return []

@@ -28,9 +28,8 @@ Scale shape (the part that matters at 100 TB):
   give a high-cardinality term column; df per term is precomputed and
   versioned WITH the postings (same commit), so serving reads touch
   only pruned postings files + tiny side tables;
-- per-query top-k reuses the batch-ANN tail (``_per_query_topk``,
-  optional salted two-phase form) — no single reducer ever sorts more
-  than one bucket's share under hot-term skew.
+- per-query top-k reuses the batch-ANN tail (``_per_query_topk``, one
+  window per query).
 
 Determinism (oracle-checkable cross-engine, FIXTURES.md §3 rules):
 tokens = whitespace split of lower/trim/collapsed text with empties
@@ -133,15 +132,13 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     ndigits: int = 2,
-    salt_partitions: int = 0,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Top-``k`` BM25 matches per query: (qid, <id_col>, score, rank).
 
     One corpus scan; the exploded term stream is filtered by the
     query-term set BEFORE the tf aggregate, so the shuffle never
-    carries non-matching terms. ``salt_partitions`` > 1 bounds
-    per-query reducers under hot-term skew (two-phase top-k).
+    carries non-matching terms.
 
     ``broadcast_queries`` picks the query shape (row-identical — gated
     in tests):
@@ -207,7 +204,7 @@ def bm25_topk(
     )
     return _score_postings(
         postings, None, None, qt, id_col, k, k1, b, ndigits,
-        salt_partitions, broadcast_qside=broadcast_queries,
+        broadcast_qside=broadcast_queries,
         stats_df=stats_df,
     )
 
@@ -222,7 +219,6 @@ def _score_postings(
     k1: float,
     b: float,
     ndigits: int,
-    salt_partitions: int,
     broadcast_qside: bool = True,
     stats_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -272,8 +268,7 @@ def _score_postings(
         F.round(F.sum("_c"), 6).alias("_score")
     )
     ranked = _per_query_topk(
-        scored, "_qid", id_col, "_score", ascending=False, k=int(k),
-        n_salts=salt_partitions,
+        scored, "_qid", id_col, "_score", ascending=False, k=int(k)
     )
     return ranked.select(
         F.col("_qid").alias("qid"),
@@ -380,7 +375,7 @@ def build_bm25_index(
     (term, <id>, tf, dl) as a manifest table with BLOOM FILTERS on
     ``term`` AND the doc id, plus the corpus stats (N, avgdl) in table
     PROPERTIES — versioned with the postings they describe, the
-    ANN-index pattern (`build_ann_index(manifest=True)`). Postings
+    ANN-index pattern (``build_ann_index``). Postings
     files are laid out sorted by term so each file covers a narrow
     term range and the term bloom prunes point lookups file-by-file;
     a doc's postings concentrate in few files (one per its distinct
@@ -769,7 +764,6 @@ def bm25_topk_indexed(
     k1: float = 1.2,
     b: float = 0.75,
     ndigits: int = 2,
-    salt_partitions: int = 0,
     broadcast_queries: bool = True,
 ) -> DataFrame:
     """Top-``k`` per query against a materialized postings index: the
@@ -859,5 +853,5 @@ def bm25_topk_indexed(
         int(meta["n_docs"]),
         int(meta["total_tokens"]) / max(int(meta["n_docs"]), 1),
         qt, id_col, k, k1, b, ndigits,
-        salt_partitions, broadcast_qside=broadcast_queries,
+        broadcast_qside=broadcast_queries,
     )

@@ -14,8 +14,6 @@ Scale shape (100 TB corpus, benchmark ≪ corpus):
   the broadcast set map-side; no corpus-keyed shuffle is needed for the
   membership test, only the per-doc groupBy that follows (one shuffle
   on doc id, partial-aggregated).
-- With ``broadcast_benchmark=False`` the membership test becomes a
-  shuffle join on the shingle key for the rare huge-benchmark case.
 """
 
 from __future__ import annotations
@@ -42,7 +40,6 @@ def contamination_report(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Per-document contamination: ``(id, n_shingles, n_contaminated,
     contamination_frac)`` for EVERY corpus document (zero-hit and
@@ -53,11 +50,12 @@ def contamination_report(
     back onto the per-doc shingle counts so clean docs survive. The
     join back is on the doc id, so Catalyst reuses the single shuffle
     of the groupBy; the membership probe itself is map-side when
-    broadcast.
+    broadcast. A null-text document has a null ``n_shingles`` and
+    ``contamination_frac`` 0.0; a null benchmark text adds no shingles.
     """
-    bench = benchmark_ngrams(benchmark, text_col, n).withColumn("_hit", F.lit(1))
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(
+        benchmark_ngrams(benchmark, text_col, n).withColumn("_hit", F.lit(1))
+    )
 
     # single shingle pass: explode_outer keeps zero-shingle docs alive
     # (null shingle row), the left join marks benchmark members, and one
@@ -88,14 +86,11 @@ def decontaminate(
     n: int = 3,
     max_frac: float = 0.2,
     max_hits: int | None = None,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Drop documents whose benchmark n-gram overlap exceeds the
     threshold (fraction of the doc's distinct shingles, and/or an
     absolute hit count). Returns the surviving rows of ``docs``."""
-    rep = contamination_report(
-        docs, benchmark, id_col, text_col, n, broadcast_benchmark
-    )
+    rep = contamination_report(docs, benchmark, id_col, text_col, n)
     bad = rep.filter(F.col("contamination_frac") > max_frac)
     if max_hits is not None:
         bad = bad.unionByName(rep.filter(F.col("n_contaminated") > max_hits))

@@ -10,7 +10,7 @@ the sources that returned d; k0 = 60 is the canonical damping constant.
 Scale shape: the inputs are already top-k frames (k rows per query per
 source — tiny relative to the corpora they came from), so fusion is a
 union + one partial-aggregated groupBy(qid, id) + the shared per-query
-top-k tail (optionally salted). Nothing here rescans a corpus; the
+top-k window. Nothing here rescans a corpus; the
 expensive work stays in the retrieval operators where it is pruned,
 bloom-skipped, and broadcast-joined.
 
@@ -37,7 +37,6 @@ def rrf_fuse(
     k: int = 10,
     weights: Sequence[float] | None = None,
     ndigits: int = 6,
-    salt_partitions: int = 0,
 ) -> DataFrame:
     """Fuse per-query rankings into (qid, <id_col>, rrf, rank).
 
@@ -72,8 +71,7 @@ def rrf_fuse(
         F.round(F.sum("_c"), int(ndigits)).alias("_rrf")
     )
     ranked = _per_query_topk(
-        fused, "_qid", "_id", "_rrf", ascending=False, k=int(k),
-        n_salts=salt_partitions,
+        fused, "_qid", "_id", "_rrf", ascending=False, k=int(k)
     )
     return ranked.select(
         F.col("_qid").alias(qid_col),

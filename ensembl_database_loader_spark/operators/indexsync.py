@@ -2,7 +2,7 @@
 
 A curation wave lands on the corpus table as ordinary lake commits
 (append / ``delete_rows`` / ``update_rows``); the serving indexes built
-from that corpus — the ANN index (``build_ann_index(manifest=True)``)
+from that corpus — the ANN index (``build_ann_index``)
 and the BM25 postings index (``build_bm25_index``) — must follow
 WITHOUT a rebuild: at 100 TB a rebuild re-scans and re-writes the
 whole index to account for one wave's delta. ``sync_ann_index`` /
@@ -142,11 +142,6 @@ def sync_ann_index(
     )
 
     meta = ann_index_meta(index_path, spark)
-    if not meta.get("_manifest"):
-        raise ValueError(
-            f"index at {index_path} is bare parquet — sync needs the "
-            "transaction layer (build_ann_index(..., manifest=True))"
-        )
     from_v, to_v, _ = _resolve_window(
         spark, index_path, src_path, from_version, to_version
     )

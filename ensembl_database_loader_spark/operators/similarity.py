@@ -67,10 +67,6 @@ def _plane_component(plane: int, dim: int) -> float:
     return int.from_bytes(h[:8], "little") / 2**63 - 1.0
 
 
-def hyperplanes(num_planes: int, dim: int) -> list[list[float]]:
-    return [[_plane_component(p, d) for d in range(dim)] for p in range(num_planes)]
-
-
 def with_lsh_buckets(
     df: DataFrame,
     vec_col: str,
@@ -267,36 +263,17 @@ def _per_query_topk(
     score: str,
     ascending: bool,
     k: int,
-    n_salts: int = 0,
 ) -> DataFrame:
     """rank 1..k of ``pairs`` per ``qid`` by (score, id tie-break) — the
-    shared tail of every batch-ANN operator.
-
-    ``n_salts > 1`` switches to TWO-PHASE top-k: a first window over
-    ``(qid, xxhash64(id) % n_salts)`` keeps each bucket's top-k, then
-    the final per-qid window ranks only the <= k*n_salts survivors.
-    Row-identical to the single-window plan by construction — every
-    global top-k row is within the top-k of its own bucket, and ranks
-    over the survivors equal global ranks for rank <= k (ties break on
-    the unique id) — but no single reducer ever sorts more than one
-    bucket's share: the skew fix for batches where many queries probe
-    the same cells (at corpus scale a hot cell otherwise concentrates
-    every probing query's candidates on one partition).
-    """
+    shared tail of every batch-ANN operator: one window per qid. Wide
+    sweeps bound each query's window with the GEMM scorer, which emits
+    only per-(query, cell) top-k rows (<= n_probe*k per query)."""
     from pyspark.sql import Window
 
     order = [
         F.col(score).asc() if ascending else F.col(score).desc(),
         F.col(id_col).asc(),
     ]
-    if n_salts and int(n_salts) > 1:
-        salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(n_salts)))
-        w1 = Window.partitionBy(F.col(qid), salt).orderBy(*order)
-        pairs = (
-            pairs.withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= int(k))
-            .drop("_r1")
-        )
     w = Window.partitionBy(qid).orderBy(*order)
     return (
         pairs.withColumn("rank", F.row_number().over(w))
@@ -333,7 +310,6 @@ def ivf_topk_many(
     n_probe: int = 4,
     centroids: list[list[float]] | None = None,
     exclude_self: bool = False,
-    salt_partitions: int = 0,
 ) -> DataFrame:
     """BATCH-query IVF top-k: every query in ``queries`` answered in
     ONE plan — (qid, id, cos, rank) with rank 1..k per query — instead
@@ -400,7 +376,7 @@ def ivf_topk_many(
     cos = _safe_cosine(F.col(vec_col), F.col("_qvec"))
     ranked = _per_query_topk(
         pairs.select("_qid", F.col(id_col), F.round(cos, 6).alias("_cos")),
-        "_qid", id_col, "_cos", ascending=False, k=k, n_salts=salt_partitions,
+        "_qid", id_col, "_cos", ascending=False, k=k
     )
     return ranked.select(
         F.col("_qid").alias(qid_col),
@@ -419,7 +395,6 @@ def ivf_topk_many_indexed(
     k: int = 5,
     n_probe: int = 4,
     exclude_self: bool = False,
-    salt_partitions: int = 0,
     scorer: str = "expr",
     cell_split: int = 0,
 ) -> DataFrame:
@@ -516,7 +491,7 @@ def ivf_topk_many_indexed(
             "dedupe or re-key the queries first"
         )
     union_cells = sorted(row["cells"])
-    idx = _ann_cells_scan(spark, path, meta, union_cells)
+    idx = _ann_cells_scan(spark, path, union_cells)
     if scorer == "gemm":
         _require_integral_ids(idx, id_col, "index id")
         _require_integral_ids(queries, qid_col, "query qid")
@@ -540,8 +515,7 @@ def ivf_topk_many_indexed(
     else:
         raise ValueError(f"scorer must be expr|gemm, got {scorer!r}")
     ranked = _per_query_topk(
-        scored, "_qid", id_col, "_cos", ascending=False, k=k,
-        n_salts=salt_partitions,
+        scored, "_qid", id_col, "_cos", ascending=False, k=k
     )
     return ranked.select(
         F.col("_qid").alias(qid_col),
@@ -787,12 +761,11 @@ def build_ann_index(
     pq_k: int = 16,
     pq_residual: bool = True,
     pq_max_train: int = 20_000,
-    manifest: bool = False,
 ) -> list[list[float]]:
     """Materialize an IVF ANN index: assign every corpus row to its
-    nearest centroid ONCE and persist the corpus ``partitionBy("_cell")``
-    at ``path``, with the centroids in ``_ann_meta.json`` alongside
-    (underscore-prefixed files are invisible to Spark's directory scan).
+    nearest centroid ONCE and commit the corpus as a MANIFEST TABLE
+    (sinks/manifest.py) at ``path``, partitioned by ``_cell``, with the
+    centroids (and PQ codebooks) in the table PROPERTIES.
 
     This is the serving-path fix for per-query corpus rescans: a query
     via ``ivf_topk_indexed`` reads ONLY its ``n_probe`` probed cell
@@ -802,7 +775,7 @@ def build_ann_index(
     one assignment pass + one shuffle-free partitioned write, amortized
     over every subsequent query; rebuild on corpus refresh (or append
     new batches with the same persisted centroids — assignment is
-    stateless given ``_ann_meta.json``).
+    stateless given the persisted centroids).
 
     ``quantized=True`` (or ``'int8'``) stores int8 vectors + a
     per-vector scale (``operators/quantize.py``) INSTEAD of the float
@@ -822,7 +795,7 @@ def build_ann_index(
     scans; PQ shrinks WHAT the scan reads): each row stores only its
     ``pq_m`` sub-space code indices (tinyint — 8 BYTES per vector at
     the defaults, 64x smaller than the float64 array), the codebooks
-    ride in ``_ann_meta.json``, and ``pq_topk_indexed`` ADC-scans the
+    ride in the table properties, and ``pq_topk_indexed`` ADC-scans the
     probed cells' codes then re-ranks top candidates against
     full-precision vectors fetched by id. ``pq_residual`` (default)
     trains and encodes on the RESIDUAL (normalized vector minus its
@@ -834,23 +807,20 @@ def build_ann_index(
     at 100 TB pass a representative frame — encoding stays one Arrow
     GEMM pass over the corpus either way.
 
-    ``manifest=True`` stores the index as a MANIFEST TABLE
-    (sinks/manifest.py) partitioned by ``_cell`` with the
-    centroids/codebooks in table PROPERTIES instead of a sidecar json:
-    index builds and appends become atomic commits, ``restore_table``
-    gives serving rollback (metadata-only), ``read_changes`` lets a
-    replica ship only changed cells, ``vacuum_table`` reclaims
-    superseded builds, and ``delete_from_ann_index`` removes vectors
-    as a partition-scoped row-level DELETE — the index lifecycle the
-    bare-parquet layout left manual. Cell pruning is exact from the
-    manifest's partition values; per-file id stats + blooms are
+    Builds and appends are atomic commits: ``restore_table`` gives
+    serving rollback (metadata-only), ``read_changes`` lets a replica
+    ship only changed cells, and ``delete_from_ann_index`` removes
+    vectors as a partition-scoped row-level DELETE. A rebuild at the
+    same path is a new version that supersedes the old one; the
+    superseded files stay on disk (``snapshot`` can still read them)
+    until ``vacuum_table`` reclaims them. Cell pruning is exact from
+    the manifest's partition values; per-file id stats + blooms are
     collected so candidate fetches and deletes prune inside a cell
     too. Reference analogue: L1's drop/recreate-on-retry idempotency
     (LoadFiles.pm:56-64) — rebuilds are commits, not rm -rf.
 
     Returns the centroids used."""
-    import json
-    import os
+    from ensembl_database_loader_spark.sinks.manifest import write_table
 
     if quantized not in (False, True, "int8", "pq"):
         raise ValueError(
@@ -893,23 +863,15 @@ def build_ann_index(
     # per cell; oversized cells split by spark.sql.files.
     # maxRecordsPerFile (size governance stays with cell_split /
     # suggest_cell_split).
-    assigned = assigned.repartition("_cell")
-    if manifest:
-        from ensembl_database_loader_spark.sinks.manifest import write_table
-
-        write_table(
-            assigned,
-            path,
-            mode="overwrite",
-            partition_by=("_cell",),
-            stats_cols=(id_col,),
-            bloom_cols=(id_col,),
-            properties={"ann": meta},
-        )
-        return centroids
-    assigned.write.mode("overwrite").partitionBy("_cell").parquet(path)
-    with open(os.path.join(path, "_ann_meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_table(
+        assigned.repartition("_cell"),
+        path,
+        mode="overwrite",
+        partition_by=("_cell",),
+        stats_cols=(id_col,),
+        bloom_cols=(id_col,),
+        properties={"ann": meta},
+    )
     return centroids
 
 
@@ -1130,25 +1092,21 @@ def _adc_score(m: int, pk: int):
     )
 
 
-def _ann_cells_scan(spark, path: str, meta: dict, cells) -> DataFrame:
-    """The index rows of exactly ``cells`` — PartitionFilters-pruned
-    (plain parquet index) or manifest-partition-pruned (exact from the
-    manifest's partition values, zero stats jobs)."""
-    cells = [int(c) for c in cells]
-    if meta.get("_manifest"):
-        from ensembl_database_loader_spark.sinks.manifest import (
-            scan_table,
-            snapshot,
-        )
+def _ann_cells_scan(spark, path: str, cells) -> DataFrame:
+    """The index rows of exactly ``cells`` — manifest-partition-pruned
+    (exact from the manifest's partition values, zero stats jobs; the
+    executed scan carries PartitionFilters on ``_cell``)."""
+    from ensembl_database_loader_spark.sinks.manifest import (
+        scan_table,
+        snapshot,
+    )
 
-        if not cells:
-            # an empty query frame probes no cells: empty result with
-            # the index schema (files_matching rejects empty IN lists,
-            # and the bare-parquet path returns empty here too —
-            # storage layout stays invisible to serving)
-            return snapshot(spark, path).filter(F.lit(False))
-        return scan_table(spark, path, predicates=[("_cell", "in", cells)])
-    return spark.read.parquet(path).filter(F.col("_cell").isin(cells))
+    cells = [int(c) for c in cells]
+    if not cells:
+        # an empty query frame probes no cells: empty result with the
+        # index schema (files_matching rejects empty IN lists)
+        return snapshot(spark, path).filter(F.lit(False))
+    return scan_table(spark, path, predicates=[("_cell", "in", cells)])
 
 
 def pq_topk_many_indexed_df(
@@ -1162,7 +1120,6 @@ def pq_topk_many_indexed_df(
     refine: int = 0,
     corpus: DataFrame | None = None,
     exclude_self: bool = False,
-    salt_partitions: int = 0,
     scorer: str = "expr",
     cell_split: int = 0,
     _skip_qid_check: bool = False,
@@ -1185,8 +1142,7 @@ def pq_topk_many_indexed_df(
       sweeps into waves);
     - ADC computes JVM-SIDE per candidate pair (``_adc_score`` —
       whole-stage codegen, no Python over the corpus);
-    - one per-query top-k (``_per_query_topk``; ``salt_partitions``
-      bounds any single reducer under probe skew).
+    - one per-query top-k window (``_per_query_topk``).
 
     ``refine`` > 0 re-ranks each query's top-``refine`` ADC candidates
     against full-precision vectors from ``corpus`` (column-pruned scan
@@ -1285,7 +1241,7 @@ def pq_topk_many_indexed_df(
                 " — dedupe or re-key the queries first"
             )
         union_cells = sorted(row["cells"])
-    idx = _ann_cells_scan(spark, path, meta, union_cells)
+    idx = _ann_cells_scan(spark, path, union_cells)
     if scorer == "gemm":
         _require_integral_ids(idx, id_col, "index id")
         if _literal_queries is not None:
@@ -1344,7 +1300,7 @@ def pq_topk_many_indexed_df(
         raise ValueError(f"scorer must be expr|gemm, got {scorer!r}")
     ranked = _per_query_topk(
         scored, "_qid", id_col, "_adc", ascending=True,
-        k=(int(refine) if refine else int(k)), n_salts=salt_partitions,
+        k=(int(refine) if refine else int(k)),
     )
     if not refine:
         return ranked.select(
@@ -1367,8 +1323,7 @@ def pq_topk_many_indexed_df(
         .select("_qid", F.col(id_col), F.round(cos, 6).alias("_cos"))
     )
     ranked2 = _per_query_topk(
-        refined, "_qid", id_col, "_cos", ascending=False, k=int(k),
-        n_salts=salt_partitions,
+        refined, "_qid", id_col, "_cos", ascending=False, k=int(k)
     )
     return ranked2.select(
         F.col("_qid").alias(qid_col),
@@ -1387,7 +1342,6 @@ def pq_topk_many_indexed(
     refine: int = 0,
     corpus: DataFrame | None = None,
     exclude_self: bool = False,
-    salt_partitions: int = 0,
 ) -> DataFrame:
     """BATCH queries over an IVF-PQ index from a driver-side list of
     (qid, vector) — a thin wrapper over the DataFrame-shaped core
@@ -1410,7 +1364,7 @@ def pq_topk_many_indexed(
     return pq_topk_many_indexed_df(
         spark, path, None, "qid", "qvec", k=k, n_probe=n_probe,
         refine=refine, corpus=corpus, exclude_self=exclude_self,
-        salt_partitions=salt_partitions, _skip_qid_check=True,
+        _skip_qid_check=True,
         _literal_queries=list(queries),
     )
 
@@ -1541,7 +1495,7 @@ def append_to_ann_index(
     extra_properties: dict | None = None,
 ) -> None:
     """Append a NEW batch into an existing IVF index: assignment uses
-    the index's PERSISTED centroids (``_ann_meta.json``), so the append
+    the index's PERSISTED centroids (table properties), so the append
     is stateless and never touches the already-indexed rows — the ANN
     twin of ``pipeline.curate.curate_increment``'s fingerprint-store
     append for recurring ingest. New rows land inside the existing
@@ -1551,42 +1505,33 @@ def append_to_ann_index(
     A quantized index quantizes the appended rows the same way — the
     stored shape is uniform across batches (an IVF-PQ index encodes
     the new rows with the PERSISTED codebooks, so old and new codes
-    stay mutually comparable). A manifest-backed index appends as an
-    ATOMIC COMMIT (readers see the old snapshot until it publishes;
-    pass ``txn`` for exactly-once under streaming replay)."""
+    stay mutually comparable). The append is an ATOMIC COMMIT (readers
+    see the old snapshot until it publishes; pass ``txn`` for
+    exactly-once under streaming replay)."""
+    from ensembl_database_loader_spark.sinks.manifest import (
+        table_properties,
+        write_table,
+    )
+
     meta = ann_index_meta(path, new_df.sparkSession)
     assigned = _encode_rows_for_index(new_df, meta)
-    if meta.get("_manifest"):
-        from ensembl_database_loader_spark.sinks.manifest import (
-            table_properties,
-            write_table,
-        )
-
-        # id stats re-declared per append (blooms inherit from the
-        # table spec automatically; [min, max] stats do not) — without
-        # them every appended file loses the id-pruning the build
-        # promises for deletes and candidate fetches.
-        # extra_properties MERGES top-level keys into the head's map
-        # atomically with this commit (an index-sync watermark must
-        # version with the rows it accounts for); None carries the
-        # head's map untouched as before.
-        props = (
-            {
-                **table_properties(new_df.sparkSession, path),
-                **extra_properties,
-            }
-            if extra_properties
-            else None
-        )
-        write_table(
-            assigned, path, mode="append", txn=txn,
-            stats_cols=(meta["id_col"],),
-            properties=props,
-        )
-        return
-    if txn is not None:
-        raise ValueError("txn needs a manifest-backed index (manifest=True)")
-    assigned.write.mode("append").partitionBy("_cell").parquet(path)
+    # id stats re-declared per append (blooms inherit from the table
+    # spec automatically; [min, max] stats do not) — without them every
+    # appended file loses the id-pruning the build promises for deletes
+    # and candidate fetches. extra_properties MERGES top-level keys into
+    # the head's map atomically with this commit (an index-sync
+    # watermark must version with the rows it accounts for); None
+    # carries the head's map untouched.
+    props = (
+        {**table_properties(new_df.sparkSession, path), **extra_properties}
+        if extra_properties
+        else None
+    )
+    write_table(
+        assigned, path, mode="append", txn=txn,
+        stats_cols=(meta["id_col"],),
+        properties=props,
+    )
 
 
 def rebalance_ann_index(
@@ -1596,7 +1541,7 @@ def rebalance_ann_index(
     n_iter: int = 5,
     txn: tuple[str, int] | None = None,
 ) -> dict:
-    """RE-CLUSTER a manifest-backed IVF index in place: appends keep
+    """RE-CLUSTER an IVF index in place: appends keep
     the original centroids (assignment is stateless), so a drifting
     ingest slowly concentrates rows into a few hot cells — every query
     probing a hot cell then scans far more than n_probe/n_cells of the
@@ -1612,10 +1557,7 @@ def rebalance_ann_index(
     codes — the symmetric scale cancels in cosine, so code geometry ==
     vector geometry up to rounding). A PQ index stores only lossy
     codes; re-clustering needs the corpus — rebuild with
-    ``build_ann_index(..., quantized='pq', manifest=True)`` instead
-    (raises here). Requires ``manifest=True`` indexes: a bare-parquet
-    rebalance would be an rm-rf, exactly the lifecycle gap the
-    manifest layout closed.
+    ``build_ann_index(..., quantized='pq')`` instead (raises here).
 
     Returns {"version", "n_cells", "max_share_before",
     "max_share_after"} — the shares are metadata-only reads
@@ -1636,15 +1578,10 @@ def rebalance_ann_index(
     )
 
     meta = ann_index_meta(path, spark)
-    if not meta.get("_manifest"):
-        raise ValueError(
-            f"index at {path} is not manifest-backed — rebalance needs "
-            "atomic in-place rebuilds (build with manifest=True)"
-        )
     if meta.get("quantized") == "pq":
         raise ValueError(
             "PQ indexes store lossy codes — re-cluster from the corpus "
-            "via build_ann_index(..., quantized='pq', manifest=True)"
+            "via build_ann_index(..., quantized='pq')"
         )
     id_col = meta["id_col"]
     n_cells = int(n_cells or meta["n_cells"])
@@ -1669,9 +1606,7 @@ def rebalance_ann_index(
     assigned = _assign_cells(rows, vec_col, cents)
     if meta.get("quantized"):
         assigned = assigned.drop(vec_col)
-    new_meta = {
-        k: v for k, v in meta.items() if not k.startswith("_")
-    } | {"centroids": cents, "n_cells": n_cells}
+    new_meta = meta | {"centroids": cents, "n_cells": n_cells}
     # merge into the head's map: foreign property keys (an index-sync
     # watermark) must survive maintenance commits
     props = table_properties(spark, path)
@@ -1702,7 +1637,7 @@ def split_hot_cells(
     n_iter: int = 5,
     txn: tuple[str, int] | None = None,
 ) -> dict:
-    """PARTIAL rebalance of a manifest-backed IVF index: split only the
+    """PARTIAL rebalance of an IVF index: split only the
     cells whose row share exceeds ``hot_share``, carrying every other
     file BY REFERENCE (VERDICT r11 #4 — ``rebalance_ann_index``
     rewrites the whole index; at 100 TB routine maintenance must be
@@ -1741,15 +1676,10 @@ def split_hot_cells(
     )
 
     meta = ann_index_meta(path, spark)
-    if not meta.get("_manifest"):
-        raise ValueError(
-            f"index at {path} is not manifest-backed — partial rebalance "
-            "needs atomic partition replacement (build with manifest=True)"
-        )
     if meta.get("quantized") == "pq":
         raise ValueError(
             "PQ indexes store lossy codes — re-cluster from the corpus "
-            "via build_ann_index(..., quantized='pq', manifest=True)"
+            "via build_ann_index(..., quantized='pq')"
         )
     if int(split) < 2:
         raise ValueError(f"split must be >= 2, got {split}")
@@ -1819,10 +1749,7 @@ def split_hot_cells(
         out_rows = out_rows.unionByName(p)
     if meta.get("quantized"):
         out_rows = out_rows.drop(vec_col)
-    new_meta = {k: v for k, v in meta.items() if not k.startswith("_")} | {
-        "centroids": centroids,
-        "n_cells": len(centroids),
-    }
+    new_meta = meta | {"centroids": centroids, "n_cells": len(centroids)}
     # merged map, as in rebalance: foreign keys survive the hot-split
     m = replace_partitions(
         spark,
@@ -1861,16 +1788,11 @@ def suggest_cell_split(
     data IO, the same stats ``split_hot_cells`` diagnoses skew from).
     Returns 0 (no split) when every cell already fits. At the defaults
     a 100k-row cell of 128-dim float64 is ~100 MB per batch — inside a
-    4 GB executor comfortably; size down for wider vectors. Bare-
-    parquet indexes return 0 (no per-partition stats without a
-    manifest — pass an explicit cell_split instead); a manifest whose
-    counts are incomplete RAISES rather than return a guess the OOM
-    guard would trust (r12 self-review)."""
+    4 GB executor comfortably; size down for wider vectors. A manifest
+    whose counts are incomplete RAISES rather than return a guess the
+    OOM guard would trust (r12 self-review)."""
     import math
 
-    meta = ann_index_meta(path, spark)
-    if not meta.get("_manifest"):
-        return 0
     from ensembl_database_loader_spark.sinks.manifest import table_partitions
 
     parts = table_partitions(spark, path)
@@ -1886,7 +1808,7 @@ def suggest_cell_split(
 
 
 def delete_from_ann_index(spark, path: str, deleted_df: DataFrame) -> dict | None:
-    """Remove vectors from a MANIFEST-backed ANN index as a
+    """Remove vectors from an ANN index as a
     partition-scoped row-level DELETE — the maintenance step upstream
     dedup/curation deletes need: without it, stale vectors keep serving
     until a full rebuild.
@@ -1913,12 +1835,7 @@ def delete_from_ann_index(spark, path: str, deleted_df: DataFrame) -> dict | Non
     from ensembl_database_loader_spark.sinks.manifest import delete_rows
 
     meta = ann_index_meta(path, spark)
-    if not meta.get("_manifest"):
-        raise ValueError(
-            f"index at {path} is bare parquet — deletes need a "
-            "manifest-backed index (build_ann_index(..., manifest=True))"
-        )
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
+    id_col = meta["id_col"]
     if id_col not in deleted_df.columns:
         raise ValueError(
             f"deleted_df needs the index id column {id_col!r}; "
@@ -1937,29 +1854,15 @@ def delete_from_ann_index(spark, path: str, deleted_df: DataFrame) -> dict | Non
     return out
 
 
-def ann_index_meta(path: str, spark=None) -> dict:
-    """The index's meta (centroids, codebooks, quantization): from the
-    ``_ann_meta.json`` sidecar for a bare-parquet index, or from table
-    PROPERTIES for a manifest-backed one (``meta["_manifest"]`` marks
-    which, so readers pick the right scan)."""
-    import json
-    import os
-
-    sidecar = os.path.join(path, "_ann_meta.json")
-    if os.path.exists(sidecar):
-        with open(sidecar) as f:
-            return json.load(f)
-    if spark is None:
-        raise FileNotFoundError(
-            f"no _ann_meta.json at {path} — for a manifest-backed index "
-            "pass spark (meta lives in table properties)"
-        )
+def ann_index_meta(path: str, spark) -> dict:
+    """The index's meta (centroids, codebooks, quantization), read from
+    the index table's ``ann`` PROPERTY."""
     from ensembl_database_loader_spark.sinks.manifest import table_properties
 
     props = table_properties(spark, path)
     if "ann" not in props:
         raise ValueError(f"table at {path} has no 'ann' property — not an index")
-    return {**props["ann"], "_manifest": True}
+    return props["ann"]
 
 
 def ivf_topk_indexed(
@@ -1991,7 +1894,7 @@ def ivf_topk_indexed(
     qn = q / max(np.linalg.norm(q), 1e-12)
     probe_cells = [int(i) for i in np.argsort(-(cn @ qn))[:n_probe]]
 
-    idx = _ann_cells_scan(spark, path, meta, probe_cells)
+    idx = _ann_cells_scan(spark, path, probe_cells)
     if exclude_id is not None:
         idx = idx.filter(F.col(meta["id_col"]) != exclude_id)
     qcol = F.array(*[F.lit(float(x)) for x in query_vec])

@@ -972,8 +972,8 @@ def ss_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
 )
 def ss_ann_ivf_indexed(spark: SparkSession, sf: str) -> DataFrame:
     """Materialized IVF ANN index: ``build_ann_index`` assigns cells
-    ONCE and persists the corpus partitionBy(_cell);
-    ``ivf_topk_indexed`` reads only the n_probe probed cell directories
+    ONCE and commits the corpus as a manifest table partitioned by
+    ``_cell``; ``ivf_topk_indexed`` reads only the n_probe probed cells
     (PartitionFilters-pruned, pinned in tests/test_plan_quality.py) —
     the 100 TB serving path, vs ``ss_ann_ivf`` which re-assigns the
     whole corpus per query.
@@ -1122,9 +1122,9 @@ def ss_ann_pq_indexed(spark: SparkSession, sf: str) -> DataFrame:
     """IVF x PQ materialized index — the standard billion-vector
     composition (IVF prunes WHICH cells a query scans, PQ shrinks WHAT
     the scan reads): ``build_ann_index(quantized='pq')`` persists
-    8-BYTE code rows partitioned by k-means cell (codebooks in
-    _ann_meta.json), ``pq_topk_indexed`` ADC-scans only the n_probe
-    probed cell partitions (PartitionFilters-pruned, pinned in
+    8-BYTE code rows partitioned by k-means cell (codebooks in the
+    index table's properties), ``pq_topk_indexed`` ADC-scans only the
+    n_probe probed cell partitions (PartitionFilters-pruned, pinned in
     tests/test_plan_quality.py) and re-ranks the top-``refine``
     candidates against full-precision vectors fetched by id.
 
@@ -4148,7 +4148,7 @@ def tx_semantic_decontam(spark: SparkSession, sf: str) -> DataFrame:
     oracle=(
         "SELECT TRUE AS bi_ivf_matches, TRUE AS bi_pq_matches, "
         "CAST(20 AS BIGINT) AS bi_ivf_pairs, CAST(20 AS BIGINT) AS bi_pq_pairs, "
-        "TRUE AS bi_pq_df_matches, TRUE AS bi_salted_matches, "
+        "TRUE AS bi_pq_df_matches, "
         "TRUE AS bi_gemm_matches, TRUE AS bi_pq_gemm_matches, "
         "TRUE AS bi_split_matches, TRUE AS bi_pq_split_matches"
     ),
@@ -4170,13 +4170,10 @@ def ss_ann_batch_indexed(spark: SparkSession, sf: str) -> DataFrame:
     the DATAFRAME-shaped PQ batch (``pq_topk_many_indexed_df`` — ADC
     tables computed executor-side per query row, JVM-side scoring,
     plan-gated single pruned codes-only scan) is row-identical to the
-    list form, the SALTED two-phase per-query top-k
-    (``salt_partitions`` — skew-bounded reducers, plan-gated two
-    Window phases) is row-identical to the single-window plan, and the
-    per-cell GEMM scorer (``scorer='gemm'`` — cogrouped BLAS matmul
-    per probed cell with in-cell top-k, the measured ~100x wide-sweep
-    fix: 8.6 s vs 855-947 s at 10k queries x 40k vectors) is
-    row-identical to the pair-expression plan.
+    list form, and the per-cell GEMM scorer (``scorer='gemm'`` —
+    cogrouped BLAS matmul per probed cell with in-cell top-k, the
+    measured ~100x wide-sweep fix: 8.6 s vs 855-947 s at 10k queries x
+    40k vectors) is row-identical to the pair-expression plan.
 
     r12 riders (VERDICT r11 #3): ``cell_split`` sub-chunks each
     cogrouped cell by xxhash64(id) % split so no single Arrow batch
@@ -4267,7 +4264,6 @@ def ss_ann_batch_indexed(spark: SparkSession, sf: str) -> DataFrame:
             spark, pq_path, qlist, k=5, n_probe=2, exclude_self=True
         ),
         _pq_batch(),
-        _batch(salt_partitions=4),
         _batch(scorer="gemm"),
         _pq_batch(scorer="gemm"),
         _batch(scorer="gemm", cell_split=3),
@@ -4276,19 +4272,18 @@ def ss_ann_batch_indexed(spark: SparkSession, sf: str) -> DataFrame:
     )
     ivf_rows, pq_rows = collected[0], collected[1]
     df_matches = collected[2] == pq_rows
-    salt_matches = collected[3] == ivf_rows
-    gemm_matches = collected[4] == ivf_rows
-    pq_gemm_matches = collected[5] == pq_rows
-    split_matches = collected[6] == ivf_rows
-    pq_split_matches = collected[7] == pq_rows
+    gemm_matches = collected[3] == ivf_rows
+    pq_gemm_matches = collected[4] == pq_rows
+    split_matches = collected[5] == ivf_rows
+    pq_split_matches = collected[6] == pq_rows
 
     ivf_matches = True
     pq_matches = True
     for i, (qid, _) in enumerate(qlist):
         b_ivf = sorted((r[1], r[2], r[3]) for r in ivf_rows if r[0] == qid)
-        ivf_matches = ivf_matches and collected[8 + 2 * i] == b_ivf
+        ivf_matches = ivf_matches and collected[7 + 2 * i] == b_ivf
         b_pq = sorted((r[1], r[2], r[3]) for r in pq_rows if r[0] == qid)
-        pq_matches = pq_matches and collected[9 + 2 * i] == b_pq
+        pq_matches = pq_matches and collected[8 + 2 * i] == b_pq
 
     return spark.range(1).select(
         F.lit(bool(ivf_matches)).alias("bi_ivf_matches"),
@@ -4296,7 +4291,6 @@ def ss_ann_batch_indexed(spark: SparkSession, sf: str) -> DataFrame:
         F.lit(len(ivf_rows)).cast("bigint").alias("bi_ivf_pairs"),
         F.lit(len(pq_rows)).cast("bigint").alias("bi_pq_pairs"),
         F.lit(bool(df_matches)).alias("bi_pq_df_matches"),
-        F.lit(bool(salt_matches)).alias("bi_salted_matches"),
         F.lit(bool(gemm_matches)).alias("bi_gemm_matches"),
         F.lit(bool(pq_gemm_matches)).alias("bi_pq_gemm_matches"),
         F.lit(bool(split_matches)).alias("bi_split_matches"),
@@ -4306,7 +4300,7 @@ def ss_ann_batch_indexed(spark: SparkSession, sf: str) -> DataFrame:
 @probe(
     "ss_ann_manifest_index",
     oracle=(
-        "SELECT TRUE AS mi_matches_bare, TRUE AS mi_append_served, "
+        "SELECT TRUE AS mi_append_served, "
         "TRUE AS mi_append_scoped, TRUE AS mi_replay_noop, "
         "TRUE AS mi_delete_served_out, TRUE AS mi_delete_scoped, "
         "TRUE AS mi_restore_serves, TRUE AS mi_rebalance_ok, "
@@ -4315,35 +4309,33 @@ def ss_ann_batch_indexed(spark: SparkSession, sf: str) -> DataFrame:
     tags=("llm", "similarity", "index", "lake", "lifecycle"),
 )
 def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
-    """ANN index AS A MANIFEST TABLE (build_ann_index(manifest=True)):
-    the index's cells are hive partitions of a committed table, its
-    centroids live in table PROPERTIES, and the lake's whole lifecycle
-    machinery applies to the serving copy — the r10 gap where the index
-    sat outside the transaction layer (rebuilds were rm -rf, deletes
-    were impossible, rollback was manual).
+    """ANN index AS A MANIFEST TABLE (``build_ann_index``): the index's
+    cells are hive partitions of a committed table, its centroids live
+    in table PROPERTIES, and the lake's whole lifecycle machinery
+    applies to the serving copy — the r10 gap where the index sat
+    outside the transaction layer (rebuilds were rm -rf, deletes were
+    impossible, rollback was manual).
 
     Hash-gated contracts (TRUE-declaring oracle) on the planted-cluster
-    fixture: (1) queries over the manifest-backed index are
-    ROW-IDENTICAL to the bare-parquet index with the same centroids —
-    storage layout invisible to serving; (2) an appended near-query
-    vector serves at rank 1, the append's file delta (changed_files —
-    pure metadata) touches exactly ONE cell partition, and a REPLAYED
-    append with the same txn commits nothing (exactly-once ingest);
-    (3) ``delete_from_ann_index`` on the query's whole top-5 (the
-    upstream-dedup shape) removes them from serving, with the
-    copy-on-write rewrite scoped to their single cell; (4)
-    ``restore_table`` to the pre-delete version brings them back
-    METADATA-ONLY — serving rollback; (5, r11) ``rebalance_ann_index``
-    re-clusters in place as ONE commit (centroids version with the
-    layout), serving the same top-5 on the tight planted clusters,
-    with the replayed maintenance txn committing nothing; (6, r12)
-    ``split_hot_cells`` PARTIALLY rebalances — only the hottest
-    cell(s) split into sub-centroids trained on their own rows, every
-    other file carried by reference (files_untouched > 0), the
-    centroid list grows by the split count, serving the same top-5,
-    and the replayed txn is a no-op detected at entry before any
-    training (VERDICT r11 #4 + ADVICE r12). Reference analogue: L1
-    drop/recreate-on-retry idempotency, LoadFiles.pm:56-64."""
+    fixture: (1) an appended near-query vector serves at rank 1, the
+    append's file delta (changed_files — pure metadata) touches exactly
+    ONE cell partition, and a REPLAYED append with the same txn commits
+    nothing (exactly-once ingest); (2) ``delete_from_ann_index`` on the
+    query's whole top-5 (the upstream-dedup shape) removes them from
+    serving, with the copy-on-write rewrite scoped to their single
+    cell; (3) ``restore_table`` to the pre-delete version brings them
+    back METADATA-ONLY — serving rollback; (4, r11)
+    ``rebalance_ann_index`` re-clusters in place as ONE commit
+    (centroids version with the layout), serving the same top-5 on the
+    tight planted clusters, with the replayed maintenance txn
+    committing nothing; (5, r12) ``split_hot_cells`` PARTIALLY
+    rebalances — only the hottest cell(s) split into sub-centroids
+    trained on their own rows, every other file carried by reference
+    (files_untouched > 0), the centroid list grows by the split count,
+    serving the same top-5, and the replayed txn is a no-op detected at
+    entry before any training (VERDICT r11 #4 + ADVICE r12). Reference
+    analogue: L1 drop/recreate-on-retry idempotency,
+    LoadFiles.pm:56-64."""
     import tempfile
 
     from ensembl_database_loader_spark.operators.similarity import (
@@ -4360,26 +4352,19 @@ def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
 
     ensure_session_confs(spark)
     corpus = _planted_clusters(spark, sf).persist()
-    root = tempfile.mkdtemp(prefix="edl_annmi_")
-    bare, mani = root + "/bare", root + "/mani"
-    cents = build_ann_index(corpus, "vec_id", "embedding", bare, n_cells=8)
-    build_ann_index(
-        corpus, "vec_id", "embedding", mani, n_cells=8, centroids=cents,
-        manifest=True,
-    )
+    mani = tempfile.mkdtemp(prefix="edl_annmi_") + "/mani"
+    build_ann_index(corpus, "vec_id", "embedding", mani, n_cells=8)
     qvec = list(
         corpus.filter(F.col("vec_id") == 0)
         .select(F.col("embedding").cast("array<double>"))
         .first()[0]
     )
-    # the two 5-row serves collect concurrently and compare driver-side
-    # (the exceptAll gate evaluated both persisted frames through four
-    # extra aggregate branches in the final action)
-    arows, brows_mani = _collect_sorted_parallel(
-        ivf_topk_indexed(spark, bare, qvec, k=5, n_probe=2, exclude_id=0),
-        ivf_topk_indexed(spark, mani, qvec, k=5, n_probe=2, exclude_id=0),
+    before_ids = sorted(
+        r["vec_id"]
+        for r in ivf_topk_indexed(
+            spark, mani, qvec, k=5, n_probe=2, exclude_id=0
+        ).collect()
     )
-    matches_bare = arows == brows_mani
 
     plant = spark.createDataFrame(
         [(1_000_000, [float(x) + 1e-4 for x in qvec])],
@@ -4398,7 +4383,6 @@ def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
     append_to_ann_index(plant, mani, txn=("probe_ingest", 1))  # replay
     replay_noop = int(latest_manifest(spark, mani)["version"]) == v_app
 
-    before_ids = sorted(r[0] for r in arows)
     victims = corpus.filter(F.col("vec_id").isin(before_ids))
     out = delete_from_ann_index(spark, mani, victims)
     ch_del = changed_files(spark, mani, v_app, int(out["version"]))
@@ -4488,7 +4472,6 @@ def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
     return (
         spark.range(1)
         .select(
-            F.lit(bool(matches_bare)).alias("mi_matches_bare"),
             F.lit(bool(append_served)).alias("mi_append_served"),
             F.lit(bool(append_scoped)).alias("mi_append_scoped"),
             F.lit(bool(replay_noop)).alias("mi_replay_noop"),
@@ -4526,7 +4509,7 @@ _BM25_ORACLE = (
     "(PARTITION BY qid ORDER BY score DESC, doc_id) AS rn FROM sc) "
     "SELECT qid, doc_id, ROUND(score, 2) AS score, "
     "CAST(rn AS INTEGER) AS rank, TRUE AS bm_idx_matches, "
-    "TRUE AS bm_salted_matches, TRUE AS bm_shuffle_matches, "
+    "TRUE AS bm_shuffle_matches, "
     "TRUE AS bm_idx_shuffle_matches FROM rk WHERE rn <= 5 "
     "ORDER BY qid, rank"
 )
@@ -4547,9 +4530,8 @@ def ss_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     recompute — kept rows, rounded scores, ranks. TRUE-gated: the
     MATERIALIZED postings index (a manifest table with term + doc-id
     blooms, term-sorted [min, max] stats, corpus stats in table
-    properties) is row-identical to the ad-hoc path, the salted
-    two-phase top-k is row-identical to the single-window plan, and
-    (r12) the DATAFRAME-SHAPED query path (``broadcast_queries=False``
+    properties) is row-identical to the ad-hoc path, and (r12) the
+    DATAFRAME-SHAPED query path (``broadcast_queries=False``
     — executor-side tokenization, shuffle join, zero driver collect:
     the corpus-scale sweep shape, VERDICT r11 #2) is row-identical to
     the collected broadcast form on BOTH the ad-hoc and indexed
@@ -4580,11 +4562,10 @@ def ss_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     # frame) and the multiset compares happen driver-side on sorted
     # tuples; the exceptAll formulation paid two extra hash-aggregate
     # exchanges per gate and evaluated each compare side twice
-    trows, idx_rows, salt_rows, shuf_rows, idx_shuf_rows = (
+    trows, idx_rows, shuf_rows, idx_shuf_rows = (
         _collect_sorted_parallel(
             topk,
             bm25_topk_indexed(spark, path, queries, k=5),
-            bm25_topk_indexed(spark, path, queries, k=5, salt_partitions=4),
             bm25_topk(
                 docs, queries, "doc_id", "text", k=5,
                 broadcast_queries=False,
@@ -4595,18 +4576,16 @@ def ss_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     idx_matches = idx_rows == trows
-    salt_matches = salt_rows == idx_rows
     shuffle_matches = shuf_rows == trows
     idx_shuffle_matches = idx_shuf_rows == idx_rows
     return (
         topk.withColumn("bm_idx_matches", F.lit(bool(idx_matches)))
-        .withColumn("bm_salted_matches", F.lit(bool(salt_matches)))
         .withColumn("bm_shuffle_matches", F.lit(bool(shuffle_matches)))
         .withColumn("bm_idx_shuffle_matches", F.lit(bool(idx_shuffle_matches)))
         .select(
             "qid", "doc_id", "score", "rank",
-            "bm_idx_matches", "bm_salted_matches",
-            "bm_shuffle_matches", "bm_idx_shuffle_matches",
+            "bm_idx_matches", "bm_shuffle_matches",
+            "bm_idx_shuffle_matches",
         )
         .orderBy("qid", "rank")
     )
@@ -4647,8 +4626,8 @@ _RRF_ORACLE = (
     "f AS (SELECT qid, doc_id, ROUND(SUM(c), 6) AS rrf FROM u GROUP BY 1, 2), "
     "frk AS (SELECT qid, doc_id, rrf, ROW_NUMBER() OVER "
     "(PARTITION BY qid ORDER BY rrf DESC, doc_id) AS rn FROM f) "
-    "SELECT qid, doc_id, rrf, CAST(rn AS INTEGER) AS rank, "
-    "TRUE AS hy_salted_matches FROM frk WHERE rn <= 5 ORDER BY qid, rank"
+    "SELECT qid, doc_id, rrf, CAST(rn AS INTEGER) AS rank "
+    "FROM frk WHERE rn <= 5 ORDER BY qid, rank"
 )
 
 
@@ -4664,10 +4643,9 @@ def ss_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
     two-tower serving composition, fused on RANKS so the two systems'
     incomparable scores never need calibration. VALUE-EXACT against the
     oracle's full recompute of both retrievals and the fusion (fused
-    scores, ranks, kept rows). TRUE-gated: the salted two-phase fusion
-    top-k is row-identical to the single-window plan. Fusion costs one
-    union + one partial-agg over the already-tiny top-k frames — the
-    corpora are only scanned inside the gated retrieval operators."""
+    scores, ranks, kept rows). Fusion costs one union + one partial-agg
+    over the already-tiny top-k frames — the corpora are only scanned
+    inside the retrieval operators."""
     from pyspark.sql import Window
 
     from ensembl_database_loader_spark.functions.text import tokens
@@ -4682,10 +4660,7 @@ def ss_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("qid"),
         F.concat_ws(" ", F.slice(toks, 1, 5)).alias("qtext"),
     )
-    # both fusion forms consume the SAME two top-5 frames: persist the
-    # retrievals so the BM25 corpus scan and the dense scoring run once
-    # instead of once per fusion form
-    lex = bm25_topk(docs, queries, "doc_id", "text", k=5).persist()
+    lex = bm25_topk(docs, queries, "doc_id", "text", k=5)
 
     e = table(spark, sf, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -4701,20 +4676,10 @@ def ss_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), "doc_id")
     dense = pairs.withColumn("rank", F.row_number().over(w)).filter(
         F.col("rank") <= 5
-    ).persist()
-
-    fused = rrf_fuse([lex, dense], id_col="doc_id", k0=60, k=5).persist()
-    salted = rrf_fuse(
-        [lex, dense], id_col="doc_id", k0=60, k=5, salt_partitions=4
     )
-    # tiny gate frames: collect both fusion forms concurrently (each
-    # evaluated once — the exceptAll gate re-evaluated the unpersisted
-    # salted plan twice) and compare multisets driver-side; fused stays
-    # persisted to feed the returned value frame from cache
-    frows, srows = _collect_sorted_parallel(fused, salted)
     return (
-        fused.withColumn("hy_salted_matches", F.lit(frows == srows))
-        .select("qid", "doc_id", "rrf", "rank", "hy_salted_matches")
+        rrf_fuse([lex, dense], id_col="doc_id", k0=60, k=5)
+        .select("qid", "doc_id", "rrf", "rank")
         .orderBy("qid", "rank")
     )
 
@@ -5000,7 +4965,7 @@ def ss_index_sync(spark: SparkSession, sf: str) -> DataFrame:
         write_table(emb0.repartition(4), src_e, stats_cols=("vec_id",))
         build_ann_index(
             snapshot(spark, src_e, 0), "vec_id", "embedding", ann_idx,
-            n_cells=8, manifest=True,
+            n_cells=8,
         )
         delete_rows(
             spark, src_e, prune=[("vec_id", "in", _ids(emb0, "vec_id", 3))]

@@ -652,9 +652,8 @@ MERGE_SPECS: dict[str, list[tuple[str, list[tuple[str, str]]]]] = {
             ],
         ),
         # r11: batch ANN over MATERIALIZED indexes (float IVF + PQ ADC,
-        # the DataFrame-shaped PQ batch, and the salted two-phase
-        # top-k) — all hash-gated row-identical to their single-query
-        # operators
+        # the DataFrame-shaped PQ batch) — all hash-gated row-identical
+        # to their single-query operators
         (
             "ss_ann_batch_indexed",
             [
@@ -663,14 +662,13 @@ MERGE_SPECS: dict[str, list[tuple[str, list[tuple[str, str]]]]] = {
                 ("bi_ivf_pairs", "bi_ivf_pairs"),
                 ("bi_pq_pairs", "bi_pq_pairs"),
                 ("bi_pq_df_matches", "bi_pq_df_matches"),
-                ("bi_salted_matches", "bi_salted_matches"),
                 ("bi_gemm_matches", "bi_gemm_matches"),
                 ("bi_pq_gemm_matches", "bi_pq_gemm_matches"),
             ],
         ),
         # r11: BM25 sparse retrieval — value-exact top-5 rows per query
         # (keyed uniquely by (bm_qid, bm_rank)); the bloom-pruned
-        # postings index and salted top-k are TRUE-gated row-identical
+        # postings index is TRUE-gated row-identical
         (
             "ss_bm25_topk",
             [
@@ -679,7 +677,6 @@ MERGE_SPECS: dict[str, list[tuple[str, list[tuple[str, str]]]]] = {
                 ("score", "bm_score"),
                 ("rank", "bm_rank"),
                 ("bm_idx_matches", "bm_idx_matches"),
-                ("bm_salted_matches", "bm_salted_matches"),
             ],
         ),
         # r11: hybrid RRF fusion of the lexical + dense paths —
@@ -691,7 +688,6 @@ MERGE_SPECS: dict[str, list[tuple[str, list[tuple[str, str]]]]] = {
                 ("doc_id", "hy_doc_id"),
                 ("rrf", "hy_rrf"),
                 ("rank", "hy_rank"),
-                ("hy_salted_matches", "hy_salted_matches"),
             ],
         ),
         # r12.2: incremental index sync — one VALUE-EXACT fingerprint
@@ -716,13 +712,12 @@ MERGE_SPECS: dict[str, list[tuple[str, list[tuple[str, str]]]]] = {
                 ("sy_bm_append_only", "sy_bm_append_only"),
             ],
         ),
-        # r11: the ANN index AS A MANIFEST TABLE — layout-invisible
-        # serving, cell-scoped appends/deletes, exactly-once ingest,
-        # metadata-only serving rollback
+        # r11: the ANN index AS A MANIFEST TABLE — cell-scoped
+        # appends/deletes, exactly-once ingest, metadata-only serving
+        # rollback
         (
             "ss_ann_manifest_index",
             [
-                ("mi_matches_bare", "mi_matches_bare"),
                 ("mi_append_served", "mi_append_served"),
                 ("mi_append_scoped", "mi_append_scoped"),
                 ("mi_replay_noop", "mi_replay_noop"),

@@ -193,12 +193,12 @@ _SKETCH_TXN_APP = "streaming_sketches"
 
 
 def record_batch_sketches(
-    kept: DataFrame, sketch_root: str, batch_id: int, text_col: str = "text"
+    kept: DataFrame, sketch_root: str, batch_id: int
 ) -> None:
     """Append one micro-batch's mergeable summaries — HLL distinct
-    tokens, Misra-Gries heavy hitters, doc-length histogram — as THREE
-    manifest-table commits under ``sketch_root`` (``/tokens``,
-    ``/freq``, ``/lenhist``).
+    tokens, Misra-Gries heavy hitters, doc-length histogram — of
+    ``kept``'s ``text`` column as THREE manifest-table commits under
+    ``sketch_root`` (``/tokens``, ``/freq``, ``/lenhist``).
 
     A plain-parquet append would be at-least-once under foreachBatch
     replay — harmless for HLL (union is idempotent) but WRONG for MG
@@ -221,7 +221,7 @@ def record_batch_sketches(
 
     txn = (_SKETCH_TXN_APP, batch_id)
     bid = F.lit(int(batch_id)).alias("batch")
-    toks = kept.select(F.explode_outer(tokens(text_col)).alias("w"))
+    toks = kept.select(F.explode_outer(tokens("text")).alias("w"))
     sk = F.hll_sketch_agg(F.col("w"), F.lit(14))
     hll_row = toks.agg(
         sk.alias("hll_sketch"),
@@ -232,7 +232,7 @@ def record_batch_sketches(
     mg = frequent_items(toks.filter(F.col("w").isNotNull()), "w", k=64)
     write_table(mg.select(bid, "*"), sketch_root + "/freq",
                 mode="append", txn=txn)
-    lens = kept.select(F.size(tokens(text_col)).cast("double").alias("len"))
+    lens = kept.select(F.size(tokens("text")).cast("double").alias("len"))
     write_table(quantile_histogram(lens, "len").select(bid, "*"),
                 sketch_root + "/lenhist", mode="append", txn=txn)
 

@@ -759,7 +759,7 @@ def main() -> int:
                 t0 = time.perf_counter()
                 got = ivf_topk_many_indexed(
                     spark, flat_p, queries, "qid", "qvec", k=10, n_probe=8,
-                    exclude_self=True, salt_partitions=8,
+                    exclude_self=True,
                 ).count()
                 dt = time.perf_counter() - t0
                 rec = {"op": "ss_ann_batch_ivf_indexed", "n_vecs": n,
@@ -771,7 +771,7 @@ def main() -> int:
                 t0 = time.perf_counter()
                 got = pq_topk_many_indexed_df(
                     spark, pq_p, queries, "qid", "qvec", k=10, n_probe=8,
-                    exclude_self=True, salt_partitions=8,
+                    exclude_self=True,
                 ).count()
                 dt = time.perf_counter() - t0
                 rec = {"op": "ss_ann_batch_pq_df", "n_vecs": n,

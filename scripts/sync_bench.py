@@ -128,7 +128,7 @@ def bench_ann(spark, sf_dir: str, reps: list[int], root: str) -> None:
         n = M.table_row_count(spark, src)
         build_ann_index(
             M.snapshot(spark, src, 0), "vec_id", "embedding", idx,
-            n_cells=64, manifest=True,
+            n_cells=64,
         )
         M.delete_rows(spark, src, prune=[("vec_id", "in", WAVE_DEL)])
         M.update_rows(
@@ -153,7 +153,7 @@ def bench_ann(spark, sf_dir: str, reps: list[int], root: str) -> None:
         t0 = time.time()
         build_ann_index(
             M.snapshot(spark, src), "vec_id", "embedding", fresh,
-            n_cells=64, centroids=cents, manifest=True,
+            n_cells=64, centroids=cents,
         )
         t_rebuild = time.time() - t0
         _emit(op="ann_sync_vs_rebuild", n_vectors=int(n),

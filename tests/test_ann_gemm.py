@@ -130,7 +130,7 @@ def test_rebalance_fixes_skewed_cells(spark, clustered, tmp_path):
     bad = [[x + 1e-9 * i for x in base] for i in range(N_CLUSTERS)]
     build_ann_index(
         clustered, "vec_id", "embedding", path, n_cells=N_CLUSTERS,
-        centroids=bad, manifest=True,
+        centroids=bad,
     )
     v0 = int(latest_manifest(spark, path)["version"])
     n0 = snapshot(spark, path).count()
@@ -174,15 +174,10 @@ def test_rebalance_guards(spark, clustered, tmp_path):
         rebalance_ann_index,
     )
 
-    bare = str(tmp_path / "bare")
-    build_ann_index(clustered, "vec_id", "embedding", bare, n_cells=4)
-    with _pytest.raises(ValueError, match="manifest"):
-        rebalance_ann_index(spark, bare)
-
     pq = str(tmp_path / "pq")
     build_ann_index(
         clustered, "vec_id", "embedding", pq, n_cells=4, quantized="pq",
-        pq_m=8, pq_k=8, manifest=True,
+        pq_m=8, pq_k=8,
     )
     with _pytest.raises(ValueError, match="PQ"):
         rebalance_ann_index(spark, pq)
@@ -252,23 +247,18 @@ def test_zero_norm_vector_scores_zero_on_both_scorers(spark, clustered, tmp_path
 
 
 def test_empty_query_frame_returns_empty(spark, clustered, tmp_path):
-    """An upstream filter may leave the query frame empty: both
-    manifest-backed and bare layouts return an empty result (the
-    manifest path used to raise from files_matching's empty-IN guard —
-    storage layout must stay invisible to serving)."""
-    for manifest in (False, True):
-        path = str(tmp_path / f"empty_{manifest}")
-        build_ann_index(
-            clustered, "vec_id", "embedding", path, n_cells=4,
-            manifest=manifest,
+    """An upstream filter may leave the query frame empty: the result
+    is empty with the output schema (the scan used to raise from
+    files_matching's empty-IN guard)."""
+    path = str(tmp_path / "empty")
+    build_ann_index(clustered, "vec_id", "embedding", path, n_cells=4)
+    q = _queries(clustered, n=0)
+    for scorer in ("expr", "gemm"):
+        got = ivf_topk_many_indexed(
+            spark, path, q, "qid", "qvec", k=3, scorer=scorer
         )
-        q = _queries(clustered, n=0)
-        for scorer in ("expr", "gemm"):
-            got = ivf_topk_many_indexed(
-                spark, path, q, "qid", "qvec", k=3, scorer=scorer
-            )
-            assert got.count() == 0
-            assert got.columns == ["qid", "vec_id", "cos", "rank"]
+        assert got.count() == 0
+        assert got.columns == ["qid", "vec_id", "cos", "rank"]
 
 
 def test_pq_index_with_id_col_named_qid(spark, clustered, tmp_path):
@@ -309,7 +299,7 @@ def test_delete_after_rebalance_on_int8_index(spark, clustered, tmp_path):
     path = str(tmp_path / "int8_del")
     build_ann_index(
         clustered, "vec_id", "embedding", path, n_cells=N_CLUSTERS,
-        quantized=True, manifest=True,
+        quantized=True,
     )
     rebalance_ann_index(spark, path, txn=("maint", 1))
     qv = list(clustered.filter(F.col("vec_id") == 0).first()["embedding"])
@@ -521,7 +511,7 @@ def test_split_hot_cells_partial_rebalance(spark, tmp_path):
     for p in (partial, full):
         build_ann_index(
             corpus, "vec_id", "embedding", p, n_cells=n_seeds,
-            centroids=cents, manifest=True,
+            centroids=cents,
         )
     n0 = snapshot(spark, partial).count()
     n_files0 = len(latest_manifest(spark, partial)["files"])
@@ -579,9 +569,7 @@ def test_suggest_cell_split_sizes_from_metadata(spark, clustered, tmp_path):
     )
 
     path = str(tmp_path / "sized")
-    build_ann_index(
-        clustered, "vec_id", "embedding", path, n_cells=4, manifest=True
-    )
+    build_ann_index(clustered, "vec_id", "embedding", path, n_cells=4)
     # 320 rows over 4 cells: nothing exceeds a 1000-row target
     assert suggest_cell_split(spark, path, target_rows_per_batch=1000) == 0
     # a 30-row target forces a split of the biggest (~80-row) cell
@@ -596,10 +584,6 @@ def test_suggest_cell_split_sizes_from_metadata(spark, clustered, tmp_path):
         scorer="gemm", cell_split=s,
     )
     assert _diff(expr, gemm) == 0
-    # bare parquet has no per-partition stats: explicit 0
-    bare = str(tmp_path / "bare_sized")
-    build_ann_index(clustered, "vec_id", "embedding", bare, n_cells=4)
-    assert suggest_cell_split(spark, bare) == 0
 
 
 def test_split_hot_cells_on_int8_index(spark, clustered, tmp_path):
@@ -615,8 +599,7 @@ def test_split_hot_cells_on_int8_index(spark, clustered, tmp_path):
     path = str(tmp_path / "int8_split")
     # 2 cells over 8 planted clusters: both ~0.5 share, both split
     build_ann_index(
-        clustered, "vec_id", "embedding", path, n_cells=2,
-        quantized=True, manifest=True,
+        clustered, "vec_id", "embedding", path, n_cells=2, quantized=True
     )
     cols0 = snapshot(spark, path).columns
     n0 = snapshot(spark, path).count()

@@ -1,8 +1,8 @@
-"""Manifest-backed ANN index lifecycle (similarity.build_ann_index
-manifest=True): query parity with the bare-parquet layout, atomic
-appends with exactly-once txns, partition-scoped row-level deletes,
-metadata-only restore, CDC reads scoped to changed cells, and exact
-partition pruning via the manifest."""
+"""ANN index lifecycle (similarity.build_ann_index commits a manifest
+table): versioned rebuilds, atomic appends with exactly-once txns,
+partition-scoped row-level deletes, metadata-only restore, CDC reads
+scoped to changed cells, and exact partition pruning via the
+manifest."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from ensembl_database_loader_spark.operators.similarity import (
     build_ann_index,
     delete_from_ann_index,
     ivf_topk_indexed,
-    pq_topk_indexed,
 )
 
 DIM = 16
@@ -51,34 +50,28 @@ def _qvec(clustered, vid=0):
     return list(clustered.filter(F.col("vec_id") == vid).first()["embedding"])
 
 
-def test_manifest_index_matches_bare_index(spark, clustered, tmp_path):
-    """Same centroids, same rows back — the storage layout must be
-    invisible to the query path (float AND pq indexes)."""
-    bare, mani = str(tmp_path / "bare"), str(tmp_path / "mani")
-    cents = build_ann_index(
-        clustered, "vec_id", "embedding", bare, n_cells=N_CLUSTERS
+def test_default_build_is_versioned_and_exactly_once(spark, clustered, tmp_path):
+    """A default build is a committed table: a rebuild at the same path
+    is version 1 and keeps version 0 readable until vacuum, and a
+    replayed txn append publishes nothing."""
+    path = str(tmp_path / "default")
+    first = clustered.filter(F.col("vec_id") < 100)
+    build_ann_index(first, "vec_id", "embedding", path, n_cells=4)
+    build_ann_index(clustered, "vec_id", "embedding", path, n_cells=4)
+    assert M.latest_manifest(spark, path)["version"] == 1
+
+    def ids(df):
+        return sorted(r[0] for r in df.select("vec_id").collect())
+
+    assert ids(M.snapshot(spark, path, 0)) == ids(first)
+    assert ids(M.snapshot(spark, path)) == ids(clustered)
+    plant = spark.createDataFrame(
+        [(100_000, _qvec(clustered))], "vec_id bigint, embedding array<double>"
     )
-    build_ann_index(
-        clustered, "vec_id", "embedding", mani, n_cells=N_CLUSTERS,
-        centroids=cents, manifest=True,
-    )
-    qv = _qvec(clustered)
-    a = ivf_topk_indexed(spark, bare, qv, k=5, n_probe=2, exclude_id=0)
-    b = ivf_topk_indexed(spark, mani, qv, k=5, n_probe=2, exclude_id=0)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    # pq variant
-    bare_pq, mani_pq = str(tmp_path / "bare_pq"), str(tmp_path / "mani_pq")
-    build_ann_index(
-        clustered, "vec_id", "embedding", bare_pq, n_cells=N_CLUSTERS,
-        centroids=cents, quantized="pq", pq_m=4, pq_k=16,
-    )
-    build_ann_index(
-        clustered, "vec_id", "embedding", mani_pq, n_cells=N_CLUSTERS,
-        centroids=cents, quantized="pq", pq_m=4, pq_k=16, manifest=True,
-    )
-    ap = pq_topk_indexed(spark, bare_pq, qv, k=5, n_probe=2, exclude_id=0)
-    bp = pq_topk_indexed(spark, mani_pq, qv, k=5, n_probe=2, exclude_id=0)
-    assert sorted(map(tuple, ap.collect())) == sorted(map(tuple, bp.collect()))
+    append_to_ann_index(plant, path, txn=("t", 1))
+    append_to_ann_index(plant, path, txn=("t", 1))
+    assert M.latest_manifest(spark, path)["version"] == 2
+    assert ids(M.snapshot(spark, path)) == ids(clustered) + [100_000]
 
 
 def test_manifest_index_scan_prunes_to_probed_cells(spark, clustered, tmp_path):
@@ -87,7 +80,6 @@ def test_manifest_index_scan_prunes_to_probed_cells(spark, clustered, tmp_path):
     mani = str(tmp_path / "mani_prune")
     build_ann_index(
         clustered, "vec_id", "embedding", mani, n_cells=N_CLUSTERS,
-        manifest=True,
     )
     q = ivf_topk_indexed(spark, mani, _qvec(clustered), k=5, n_probe=2)
     files = q.inputFiles()
@@ -99,7 +91,6 @@ def test_manifest_index_append_atomic_and_exactly_once(spark, clustered, tmp_pat
     mani = str(tmp_path / "mani_app")
     build_ann_index(
         clustered, "vec_id", "embedding", mani, n_cells=N_CLUSTERS,
-        manifest=True,
     )
     qv = _qvec(clustered)
     plant = spark.createDataFrame(
@@ -126,7 +117,6 @@ def test_manifest_index_delete_scoped_and_restorable(spark, clustered, tmp_path)
     mani = str(tmp_path / "mani_del")
     build_ann_index(
         clustered, "vec_id", "embedding", mani, n_cells=N_CLUSTERS,
-        manifest=True,
     )
     qv = _qvec(clustered)
     before = {r["vec_id"] for r in ivf_topk_indexed(
@@ -162,20 +152,12 @@ def test_manifest_index_delete_scoped_and_restorable(spark, clustered, tmp_path)
 
 
 def test_delete_guards(spark, clustered, tmp_path):
-    bare = str(tmp_path / "bare_guard")
-    build_ann_index(clustered, "vec_id", "embedding", bare, n_cells=4)
-    with pytest.raises(ValueError, match="manifest-backed"):
-        delete_from_ann_index(spark, bare, clustered.limit(1))
     mani = str(tmp_path / "mani_guard")
-    build_ann_index(
-        clustered, "vec_id", "embedding", mani, n_cells=4, manifest=True
-    )
+    build_ann_index(clustered, "vec_id", "embedding", mani, n_cells=4)
     with pytest.raises(ValueError, match="id column"):
         delete_from_ann_index(
             spark, mani, clustered.select(F.col("vec_id").alias("other"))
         )
-    with pytest.raises(ValueError, match="manifest-backed"):
-        append_to_ann_index(clustered.limit(1), bare, txn=("x", 1))
 
 
 def test_streaming_ingest_into_manifest_index(spark, clustered, tmp_path):
@@ -188,7 +170,6 @@ def test_streaming_ingest_into_manifest_index(spark, clustered, tmp_path):
     path = str(tmp_path / "stream_idx")
     build_ann_index(
         clustered, "vec_id", "embedding", path, n_cells=N_CLUSTERS,
-        manifest=True,
     )
     v0 = int(M.latest_manifest(spark, path)["version"])
     qvec = _qvec(clustered, 0)

@@ -65,7 +65,7 @@ def test_pq_index_recall_and_shape(spark, clustered, tmp_path):
         n_cells=N_CLUSTERS, quantized="pq", pq_m=4, pq_k=16,
         pq_residual=True,
     )
-    meta = ann_index_meta(path)
+    meta = ann_index_meta(path, spark)
     assert meta["quantized"] == "pq" and meta["pq"]["residual"] is True
     assert len(meta["pq"]["codebooks"]) == 4
 
@@ -348,52 +348,3 @@ def test_pq_df_form_matches_list_form_and_guards(spark, clustered, tmp_path):
         pq_topk_many_indexed_df(
             spark, path, qdf.withColumnRenamed("q", "vec_id"), "vec_id", "v"
         )
-
-
-def test_salted_topk_row_identical(spark, clustered, tmp_path):
-    """salt_partitions switches every batch operator to two-phase
-    per-query top-k (skew-bounded reducers) with IDENTICAL rows."""
-    from ensembl_database_loader_spark.operators.similarity import (
-        ivf_topk_many_indexed,
-        pq_topk_many_indexed_df,
-    )
-
-    queries = clustered.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    plain = ivf_topk_many(
-        queries, clustered, "qid", "qvec", "vec_id", "embedding",
-        k=3, n_cells=N_CLUSTERS, n_probe=2, exclude_self=True,
-    )
-    salted = ivf_topk_many(
-        queries, clustered, "qid", "qvec", "vec_id", "embedding",
-        k=3, n_cells=N_CLUSTERS, n_probe=2, exclude_self=True,
-        salt_partitions=4,
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.collect())
-    )
-    flat = str(tmp_path / "salt_flat")
-    build_ann_index(clustered, "vec_id", "embedding", flat, n_cells=N_CLUSTERS)
-    p2 = ivf_topk_many_indexed(
-        spark, flat, queries, "qid", "qvec", k=3, n_probe=2,
-        exclude_self=True,
-    )
-    s2 = ivf_topk_many_indexed(
-        spark, flat, queries, "qid", "qvec", k=3, n_probe=2,
-        exclude_self=True, salt_partitions=4,
-    )
-    assert sorted(map(tuple, p2.collect())) == sorted(map(tuple, s2.collect()))
-    pqp = str(tmp_path / "salt_pq")
-    build_ann_index(
-        clustered, "vec_id", "embedding", pqp,
-        n_cells=N_CLUSTERS, quantized="pq", pq_m=4, pq_k=16,
-    )
-    p3 = pq_topk_many_indexed_df(
-        spark, pqp, queries, k=3, n_probe=2, exclude_self=True
-    )
-    s3 = pq_topk_many_indexed_df(
-        spark, pqp, queries, k=3, n_probe=2, exclude_self=True,
-        salt_partitions=4,
-    )
-    assert sorted(map(tuple, p3.collect())) == sorted(map(tuple, s3.collect()))

@@ -1,7 +1,7 @@
 """operators/bm25.py — Okapi BM25 sparse retrieval: ad-hoc scoring
 against a pure-Python mirror, the materialized postings index
-row-identical to ad-hoc, bloom + stats file skipping on term lookups,
-and the salted two-phase top-k row-identical to the single-window plan.
+row-identical to ad-hoc, and bloom + stats file skipping on term
+lookups.
 """
 
 from __future__ import annotations
@@ -84,15 +84,13 @@ def _group(rows):
     return out
 
 
-def test_indexed_row_identical_and_salted(spark, tmp_path):
+def test_indexed_row_identical(spark, tmp_path):
     docs, queries = _frames(spark)
     path = str(tmp_path / "bm25")
     build_bm25_index(docs, "doc_id", "text", path)
     adhoc = bm25_topk(docs, queries, "doc_id", "text", k=3)
     idx = bm25_topk_indexed(spark, path, queries, k=3)
     assert idx.exceptAll(adhoc).unionAll(adhoc.exceptAll(idx)).count() == 0
-    salted = bm25_topk_indexed(spark, path, queries, k=3, salt_partitions=4)
-    assert salted.exceptAll(idx).unionAll(idx.exceptAll(salted)).count() == 0
 
 
 def test_index_prunes_postings_files(spark, tmp_path, sf_dir):
@@ -291,12 +289,6 @@ def test_shuffle_query_shape_row_identical(spark, tmp_path):
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before, "shuffle-shaped plan construction collected"
     assert i_s.exceptAll(i_b).unionAll(i_b.exceptAll(i_s)).count() == 0
-    # the salted two-phase tail composes with the shuffle shape
-    i_ss = bm25_topk_indexed(
-        spark, path, queries, k=3, broadcast_queries=False,
-        salt_partitions=4,
-    )
-    assert i_ss.exceptAll(i_b).unionAll(i_b.exceptAll(i_ss)).count() == 0
 
 
 def test_delete_wave_prunes_files_via_id_bloom(spark, tmp_path):

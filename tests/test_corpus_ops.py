@@ -75,6 +75,24 @@ def test_decontaminate_drops_by_fraction_and_hits(spark):
     assert kept2 == {3}
 
 
+def test_decontaminate_tolerates_null_texts(spark):
+    """A null benchmark text adds no shingles, so the kept set is the
+    same as without it; a corpus doc with null text survives."""
+    corpus = _docs(
+        spark,
+        [
+            (1, "alpha beta gamma delta"),  # frac 0.5 > 0.2 -> dropped
+            (2, None),
+            (3, "clean words only here"),
+        ],
+    )
+    bench = _docs(spark, [(100, "alpha beta gamma")])
+    with_null = bench.unionByName(_docs(spark, [(101, None)]))
+    kept = {r.doc_id for r in decontaminate(corpus, bench).collect()}
+    kept_null = {r.doc_id for r in decontaminate(corpus, with_null).collect()}
+    assert kept == kept_null == {2, 3}
+
+
 # --- mixing ----------------------------------------------------------------
 
 

@@ -123,7 +123,6 @@ def test_sync_ann_index_tracks_source_and_replays_noop(spark, src, tmp_path):
         "embedding",
         idx,
         n_cells=N_CLUSTERS,
-        manifest=True,
     )
     to_v = _mutate(spark, src)
 
@@ -171,7 +170,6 @@ def test_sync_ann_delete_only_wave_and_crash_rerun_converge(
         "embedding",
         idx,
         n_cells=N_CLUSTERS,
-        manifest=True,
     )
     # delete-only wave: the watermark commit carries an EMPTY append
     M.delete_rows(spark, src, prune=[("doc_id", "in", [4, 8])])
@@ -218,7 +216,6 @@ def test_sync_state_survives_maintenance_and_first_sync_requires_base(
         "embedding",
         idx,
         n_cells=2,  # few fat cells so a hot split has work to do
-        manifest=True,
     )
     with pytest.raises(ValueError, match="no sync state"):
         sync_ann_index(spark, idx, src)
@@ -256,7 +253,7 @@ def test_publish_search_cycle_via_pin_group(spark, tmp_path):
     build_bm25_index(M.snapshot(spark, corpus, 0), "doc_id", "text", bm)
     build_ann_index(
         M.snapshot(spark, corpus, 0), "doc_id", "embedding", ann,
-        n_cells=N_CLUSTERS, manifest=True,
+        n_cells=N_CLUSTERS,
     )
     assert pin_group(
         spark, root,
@@ -575,7 +572,7 @@ def test_sync_ann_auto_split_bounds_cell_skew(spark, src, tmp_path):
     idx = str(tmp_path / "annidx")
     build_ann_index(
         M.snapshot(spark, src, 0), "doc_id", "embedding", idx,
-        n_cells=2, manifest=True,
+        n_cells=2,
     )
     # a wave of clustered-but-separable arrivals: all land in one cell
     M.write_table(
@@ -636,7 +633,7 @@ def test_advance_search_cycle_one_call(spark, tmp_path):
     build_bm25_index(M.snapshot(spark, corpus, 0), "doc_id", "text", f"{root}/bm25")
     build_ann_index(
         M.snapshot(spark, corpus, 0), "doc_id", "embedding", f"{root}/ann",
-        n_cells=N_CLUSTERS, manifest=True,
+        n_cells=N_CLUSTERS,
     )
     # cycle 0: no wave yet — both syncs no-op, the pin still publishes
     out = advance_search_cycle(spark, root, from_version=0)

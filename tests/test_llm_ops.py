@@ -181,7 +181,7 @@ def test_ann_index_ivf_matches_unindexed(spark, sf_dir, tmp_path):
         ).collect()
         assert [tuple(r) for r in indexed] == [tuple(r) for r in direct], label
 
-    meta = ann_index_meta(str(tmp_path / "idx_kmeans"))
+    meta = ann_index_meta(str(tmp_path / "idx_kmeans"), spark)
     assert meta["kind"] == "ivf" and meta["n_cells"] == 8
     assert len(meta["centroids"][0]) == meta["dim"]
 
@@ -190,7 +190,8 @@ def test_ann_index_append_equals_full_build(spark, sf_dir, tmp_path):
     """Incremental index growth: build on half the corpus, append the
     other half with the PERSISTED centroids — queries must equal a
     one-shot full build with the same centroids (assignment is
-    stateless given _ann_meta.json, so cell membership is identical)."""
+    stateless given the persisted centroids, so cell membership is
+    identical)."""
     from ensembl_database_loader_spark.operators.similarity import (
         append_to_ann_index,
         build_ann_index,
@@ -836,7 +837,7 @@ def test_ann_index_quantized_storage_and_append(spark, sf_dir, tmp_path):
     build_ann_index(
         e, "vec_id", "embedding", qp, n_cells=8, centroids=cents, quantized=True
     )
-    assert ann_index_meta(qp)["quantized"] is True
+    assert ann_index_meta(qp, spark)["quantized"] is True
 
     # stored shape: no float vector column, tinyint codes
     stored = spark.read.parquet(qp)

@@ -91,7 +91,7 @@ def test_mirror_end_to_end(spark, tmp_path):
     target = tmp_path / "target"
     os.makedirs(work)
     build_dump(str(work), "alpha_core_1_1")
-    build_dump(str(work), "beta_mart_1", gz_manifest=True)
+    build_dump(str(work), "beta_mart_1", gz_checksums=True)
     report = mirror(
         spark,
         str(work),

@@ -72,7 +72,7 @@ def _tsv(rows) -> bytes:
 
 
 def build_dump(
-    root: str, name: str, gz_manifest: bool = False, extra_order_parts: int = 0
+    root: str, name: str, gz_checksums: bool = False, extra_order_parts: int = 0
 ) -> str:
     """One dump db dir: DDL + region.txt.gz + split orders parts + CHECKSUMS.
     ``extra_order_parts`` appends that many one-row orders parts."""
@@ -94,7 +94,7 @@ def build_dump(
         s, blocks = bsd_sum16_blocks(data)
         manifest_lines.append(f"{s:05d} {blocks:5d} {fn}\n")
     manifest = "".join(manifest_lines).encode()
-    if gz_manifest:
+    if gz_checksums:
         with open(os.path.join(d, "CHECKSUMS.gz"), "wb") as f:
             f.write(gzip.compress(manifest))
     else:
@@ -152,7 +152,7 @@ def test_dump_round_trip(spark, tmp_path):
 
 
 def test_checksums_gz_variant(spark, tmp_path):
-    d = build_dump(str(tmp_path), "tpch_core_2_2", gz_manifest=True)
+    d = build_dump(str(tmp_path), "tpch_core_2_2", gz_checksums=True)
     dump = scan_dump_dir(d)
     assert dump.checksum_file.endswith("CHECKSUMS.gz")
     assert verify_checksums(spark, dump).count() == 0

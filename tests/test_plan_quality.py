@@ -829,9 +829,9 @@ def test_pq_batch_df_single_pruned_scan_no_corpus_python(spark, tmp_path):
     assert plan.count("ArrowEvalPython") == 1
 
 
-def test_salted_topk_plans_two_phase(spark):
-    """salt_partitions must actually add the partial-topk phase: two
-    Window nodes (bucket partial, then final) vs one unsalted."""
+def test_batch_topk_plans_one_window(spark):
+    """The batch per-query top-k is a single window per qid: exactly one
+    Window node in the executed plan."""
     from pyspark.sql import functions as F
 
     from ensembl_database_loader_spark.catalog import table as cat_table
@@ -844,15 +844,11 @@ def test_salted_topk_plans_two_phase(spark):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
 
-    def nwindows(salt):
-        q = ivf_topk_many(
-            queries, e, "qid", "qvec", "vec_id", "embedding",
-            k=3, n_cells=8, n_probe=2, salt_partitions=salt,
-        )
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        # "Window [" = the sort-and-rank node itself (Spark 4 also
-        # plans WindowGroupLimit partial/final helpers — not counted)
-        return plan.count("Window [")
-
-    assert nwindows(0) == 1
-    assert nwindows(8) == 2
+    q = ivf_topk_many(
+        queries, e, "qid", "qvec", "vec_id", "embedding",
+        k=3, n_cells=8, n_probe=2,
+    )
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    # "Window [" = the sort-and-rank node itself (Spark 4 also plans
+    # WindowGroupLimit partial/final helpers — not counted)
+    assert plan.count("Window [") == 1

@@ -126,8 +126,7 @@ def test_replicate_ann_index_serves_identically(spark, pair):
     corpus = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<double>"
     )
-    build_ann_index(corpus, "vec_id", "embedding", src, n_cells=4,
-                    manifest=True)
+    build_ann_index(corpus, "vec_id", "embedding", src, n_cells=4)
     out = M.replicate_table(spark, src, dst)
     assert out["noop"] is False
     assert M.table_properties(spark, dst) == M.table_properties(spark, src)
