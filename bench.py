@@ -218,7 +218,9 @@ def main() -> int:
                 "ss_ann_manifest_index": (
                     "r12: +split_hot_cells lifecycle (partial rebalance "
                     "+ replay no-op) rides this probe; then the bare "
-                    "index and its parity gate left it, 11.73 -> 9.02 s"
+                    "index and its parity gate left it, 11.73 -> 9.02 s; "
+                    "then serving moved to 1-element ann_topk batches "
+                    "(window top-k), 12.27 -> 13.92 s"
                 ),
                 "ss_bm25_topk": (
                     "r12: +2 DataFrame-shaped (shuffle) query forms "
@@ -226,20 +228,48 @@ def main() -> int:
                     "9.89 -> 7.77 s"
                 ),
                 "ss_ann_batch_indexed": (
-                    "the salted batch form left it, 10.62 -> 8.01 s"
+                    "the salted batch form left it, 10.62 -> 8.01 s; "
+                    "then 5 cross-form gates left it (ann_topk list vs "
+                    "frame only), 8.27 -> 7.03 s"
                 ),
                 "ss_hybrid_rrf": (
                     "the salted fusion form left it, 3.95 -> 2.57 s"
                 ),
                 "ss_ann_ivf_indexed": (
                     "the index build is a manifest commit (id stats + "
-                    "bloom), 1.83 -> 2.20 s"
+                    "bloom), 1.83 -> 2.20 s; then matches_unindexed "
+                    "compares against a cosine re-rank of the probed "
+                    "cells, 2.85 -> 3.22 s"
                 ),
                 "ss_ann_ivf_quant": (
-                    "the index build is a manifest commit, 2.68 -> 3.21 s"
+                    "the index build is a manifest commit, 2.68 -> 3.21 "
+                    "s; then a 1-element ann_topk batch serves (window "
+                    "top-k), 3.98 -> 4.59 s"
                 ),
                 "ss_ann_pq_indexed": (
-                    "the index build is a manifest commit, 6.46 -> 6.28 s"
+                    "the index build is a manifest commit, 6.46 -> 6.28 "
+                    "s; then 1-element ann_topk batches serve, "
+                    "7.45 -> 7.61 s"
+                ),
+                # one ANN query function (ann_topk): --only medians of
+                # 5 alternating parent/change runs, 4 cores
+                "ss_ann_ivf": (
+                    "builds a 16-cell index and serves a 1-element "
+                    "ann_topk batch instead of the unindexed query, "
+                    "0.69 -> 2.36 s"
+                ),
+                "ss_ann_recall_clustered": (
+                    "the IVF leg builds an index and serves through "
+                    "ann_topk, 2.60 -> 4.55 s"
+                ),
+                "ss_ann_batch": (
+                    "the 100-query batch runs over a built index (GEMM "
+                    "scorer at this width) and the loop gate compares "
+                    "1-element batches, 6.21 -> 6.11 s, 24 -> 15 jobs"
+                ),
+                "ss_index_sync": (
+                    "the ANN serving gate calls ann_topk, "
+                    "22.41 -> 18.55 s (within the probe's spread)"
                 ),
             },
         }

@@ -1,18 +1,40 @@
 """Similarity search over dense embedding columns (ARRAY<FLOAT>).
 
-- cosine_topk:        exact brute-force top-k for one query vector —
-                      a broadcast of the (1-row) query against the
-                      corpus, cosine in JVM higher-order functions,
-                      TakeOrderedAndProject for the top-k. The exactness
-                      baseline.
-- lsh_bucket_topk:    random-hyperplane LSH: deterministic seed-derived
-                      planes -> sign bits -> bucket key; candidates =
-                      query's bucket (plus optional multi-probe at
-                      Hamming distance 1), exact cosine re-rank within.
-                      At 100 TB the bucket groupBy replaces the full
-                      scan per query.
-- embedding_neardup_pairs: all-pairs cosine >= threshold (within an
-                      optional block) — the embedding dedup operator.
+Exact and hashed search over a frame:
+
+- cosine_topk:        exact brute-force top-k for one corpus row — the
+                      recall oracle every approximate path is gated
+                      against.
+- lsh_bucket_topk:    multi-table random-hyperplane LSH (deterministic
+                      md5-derived planes, one GEMM pass for every
+                      table's bucket keys) with exact cosine re-rank
+                      inside the candidate union.
+- kmeans_centroids:   distributed Lloyd's for IVF cell training.
+
+One IVF index, one query function:
+
+- build_ann_index:    assigns every row to its nearest centroid once and
+                      commits a manifest table partitioned by ``_cell``,
+                      storing float vectors, int8 codes or PQ codes; the
+                      centroids and codebooks ride in the ``ann`` table
+                      property.
+- ann_topk:           batch top-k over any index kind. Queries are a
+                      driver-side list of (qid, vector) or a DataFrame;
+                      the scan prunes to the union of probed cells, and
+                      the scorer (broadcast expression or per-cell
+                      GEMM/ADC cogroup) follows from the batch width and
+                      the id types.
+- append_to_ann_index, delete_from_ann_index, rebalance_ann_index,
+  split_hot_cells:    index maintenance as atomic manifest commits.
+
+Pair and dedup operators:
+
+- embedding_neardup_pairs / embedding_cross_pairs: blocked-GEMM
+                      all-pairs (or left x right) cosine >= threshold.
+- semantic_dedup / semantic_decontaminate: keep-first dedup and
+                      benchmark scrub over those pair stages, exact or
+                      restricted to IVF cells / LSH buckets.
+- mmr_rerank:         per-query Maximal Marginal Relevance re-ranking.
 """
 
 from __future__ import annotations
@@ -20,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ensembl_database_loader_spark.functions.vectors import cosine, dot, norm
+from ensembl_database_loader_spark.functions.vectors import dot, norm
 
 
 def _safe_cosine(a, b):
@@ -155,7 +177,7 @@ def kmeans_centroids(
     (n_cells x dim doubles collected per round — the broadcast-dim
     pattern). ``sample_fraction`` trains on a seeded sample: at 100 TB
     centroid quality needs only a representative sample, not the full
-    corpus, and the assignment pass in ``ivf_topk`` is unchanged.
+    corpus, and ``build_ann_index``'s assignment pass is unchanged.
     Deterministic for a fixed input (seeded sample, id-ordered init;
     means use float summation so ulp-level drift across partition
     orders is possible — fine for a cell index, which is why the IVF
@@ -203,59 +225,6 @@ def kmeans_centroids(
     return cn.tolist()
 
 
-def ivf_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id: int,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    dim: int = 64,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """Approximate top-k via IVF (inverted-file) cells: vectors are
-    assigned to their nearest of ``n_cells`` centroids (one GEMM pass in
-    a pandas UDF), and a query scans only its ``n_probe`` nearest cells
-    with exact cosine re-rank — the other standard ANN scale path next
-    to hyperplane LSH (``lsh_bucket_topk``).
-
-    Default centroid 'training' is deterministic first-``n_cells``-by-id;
-    pass ``centroids=kmeans_centroids(df, ...)`` for trained cells (the
-    assignment and probe machinery is identical). Centroids and the
-    query vector are tiny driver-side collects (n_cells + 1 rows, the
-    broadcast-dim pattern); the corpus itself is never collected —
-    assignment is one narrow GEMM pass and the probed scan touches
-    ~n_probe/n_cells of the data."""
-    import numpy as np
-
-    if centroids is None:
-        centroids = _grid_centroids(df, id_col, vec_col, n_cells)
-    c = np.array(centroids, dtype=np.float64)
-    cn = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-
-    qrow = (
-        df.filter(F.col(id_col) == query_id)
-        .select(F.col(vec_col).cast("array<double>"))
-        .collect()
-    )
-    q = np.array(qrow[0][0], dtype=np.float64)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probe_cells = [int(i) for i in np.argsort(-(cn @ qn))[:n_probe]]
-
-    assigned = _assign_cells(df, vec_col, centroids)
-    qdf = df.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("_qvec"))
-    cos = _safe_cosine(F.col(vec_col), F.col("_qvec"))
-    return (
-        assigned.filter(F.col("_cell").isin(probe_cells))
-        .crossJoin(F.broadcast(qdf))
-        .filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(cos, 6).alias("cos"))
-        .orderBy(F.desc("cos"), id_col)
-        .limit(k)
-    )
-
-
 def _per_query_topk(
     pairs: DataFrame,
     qid: str,
@@ -281,295 +250,68 @@ def _per_query_topk(
     )
 
 
-def _reject_duplicate_qids(queries: DataFrame, qid_col: str) -> None:
-    """Duplicate qids would silently merge candidate pools inside the
-    per-qid top-k window, yielding one blended result per duplicated id.
-    ``pq_topk_many_indexed`` already raises; this keeps every batch
-    operator on the same contract. One tiny aggregate on the query
-    frame (broadcast-dim by assumption)."""
-    row = queries.agg(
-        F.count(qid_col).alias("n"), F.count_distinct(qid_col).alias("d")
-    ).first()
-    if int(row["n"]) != int(row["d"]):
-        raise ValueError(
-            f"duplicate {qid_col} values in the query frame "
-            f"({int(row['n'])} rows, {int(row['d'])} distinct) — "
-            "dedupe or re-key the queries first"
-        )
-
-
-def ivf_topk_many(
-    queries: DataFrame,
-    corpus: DataFrame,
-    qid_col: str,
-    qvec_col: str,
-    id_col: str,
-    vec_col: str,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    centroids: list[list[float]] | None = None,
-    exclude_self: bool = False,
-) -> DataFrame:
-    """BATCH-query IVF top-k: every query in ``queries`` answered in
-    ONE plan — (qid, id, cos, rank) with rank 1..k per query — instead
-    of O(queries) separate corpus scans (what a loop over ``ivf_topk``
-    costs; the shape contamination-kNN and retrieval sweeps need).
-
-    Plan: one Arrow GEMM pass assigns each QUERY its ``n_probe``
-    nearest cells (a small queries x n_cells matmul, then
-    posexplode), one identical pass assigns each CORPUS row its cell
-    (``_assign_cells`` — the same math as ``ivf_topk``/
-    ``build_ann_index``, so probed candidates match the single-query
-    path exactly), the exploded query side BROADCASTS into a hash join
-    on ``_cell`` (queries are the small side by assumption — a few
-    thousand rows replicated n_probe ways), cosine computes JVM-side
-    per candidate pair, and one window per qid takes the top-k. Total:
-    one corpus scan, zero corpus self-joins, one shuffle of the
-    candidate pairs (~n_probe/n_cells of the corpus per query) keyed
-    by qid for the window sort. Each corpus row lives in exactly one
-    cell and each query probes distinct cells, so no pair duplicates.
-
-    Results for any single query are IDENTICAL to ``ivf_topk`` with
-    the same centroids (probe ``ss_ann_batch`` hash-gates the parity);
-    ties break on the corpus id. ``exclude_self`` drops candidates
-    whose corpus id equals the query id (the self-match when queries
-    are drawn from the corpus)."""
-    import numpy as np
-    import pandas as pd
-
-    if qid_col == id_col:
-        raise ValueError(
-            f"qid_col and id_col must differ in the output, both {qid_col!r}"
-            " — alias one side first"
-        )
-    _reject_duplicate_qids(queries, qid_col)
-    if centroids is None:
-        centroids = _grid_centroids(corpus, id_col, vec_col, n_cells)
-    cn0 = np.asarray(centroids, dtype=np.float64)
-    cn = cn0 / np.maximum(np.linalg.norm(cn0, axis=1, keepdims=True), 1e-12)
-    n_probe = min(int(n_probe), cn.shape[0])
-
-    @F.pandas_udf("array<int>")
-    def _probes(s):  # type: ignore[no-untyped-def]
-        x = np.array(s.tolist(), dtype=np.float64)
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        sims = xn @ cn.T
-        # argsort descending = the same probe order ivf_topk uses
-        order = np.argsort(-sims, axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(order))
-
-    qcells = (
-        queries.select(
-            F.col(qid_col).alias("_qid"),
-            F.col(qvec_col).cast("array<double>").alias("_qvec"),
-        )
-        .withColumn("_probe_cells", _probes(F.col("_qvec")))
-        .select("_qid", "_qvec", F.explode("_probe_cells").alias("_cell"))
-    )
-    assigned = _assign_cells(
-        corpus.select(F.col(id_col), F.col(vec_col)), vec_col, centroids
-    )
-    pairs = assigned.join(F.broadcast(qcells), "_cell")
-    if exclude_self:
-        pairs = pairs.filter(F.col(id_col) != F.col("_qid"))
-    cos = _safe_cosine(F.col(vec_col), F.col("_qvec"))
-    ranked = _per_query_topk(
-        pairs.select("_qid", F.col(id_col), F.round(cos, 6).alias("_cos")),
-        "_qid", id_col, "_cos", ascending=False, k=k
-    )
-    return ranked.select(
-        F.col("_qid").alias(qid_col),
-        F.col(id_col),
-        F.col("_cos").alias("cos"),
-        "rank",
-    )
-
-
-def ivf_topk_many_indexed(
-    spark,
-    path: str,
-    queries: DataFrame,
-    qid_col: str,
-    qvec_col: str,
-    k: int = 5,
-    n_probe: int = 4,
-    exclude_self: bool = False,
-    scorer: str = "expr",
-    cell_split: int = 0,
-) -> DataFrame:
-    """``ivf_topk_many`` against a MATERIALIZED index
-    (``build_ann_index`` — float or int8): the scan prunes to the
-    UNION of every query's probed cells (PartitionFilters — at
-    n_probe/n_cells coverage a 100-query batch still touches a
-    fraction of the index, and never re-assigns the corpus), the
-    exploded query side broadcasts into a hash join on ``_cell``, and
-    one window per query takes the top-k. Per-query results are
-    IDENTICAL to ``ivf_topk_indexed`` with the same index (int8
-    indexes rank on the codes directly — the per-vector scale cancels
-    in cosine). ``exclude_self`` drops candidates whose index id
-    equals the query id. Returns (qid, id, cos, rank).
-
-    ``scorer`` picks the candidate-scoring engine:
-
-    - ``"expr"`` (default): per-pair JVM cosine (whole-stage codegen) —
-      right for narrow batches, zero Python over the corpus;
-    - ``"gemm"``: per-cell BLAS — the probed cells COGROUP with their
-      probing queries (``applyInPandas``: one Arrow batch per cell),
-      each cell scores as ONE queries x vectors matmul and emits only
-      its per-(query, cell) top-k, so the global window ranks
-      <= n_probe*k rows per query. The measured wide-sweep fix: the
-      codegen fold costs ~64 us per candidate pair (three 64-element
-      folds), which at 10k queries x 8 probes x 625-vector cells is
-      855-947 s; the matmul scores the same 50M pairs in BLAS time
-      (8.6 s end-to-end, ~100x — COVERAGE.md r11). The cogroup also
-      SHUFFLES the query side instead of broadcasting it, so the GEMM
-      path has no broadcast-width cap — million-query sweeps hash-join
-      on ``_cell`` like any other large join. Row-identical to
-      ``"expr"`` on the fixture (bi_gemm_matches gate): both round
-      cosine to 6 digits before ranking, and per-cell top-k is exact
-      (every global top-k row is within its own cell's top-k).
-
-    ``cell_split`` > 1 (GEMM only) sub-chunks each cell by
-    ``xxhash64(id) % cell_split`` so no single Arrow batch holds more
-    than ~1/split of a cell — the per-group memory bound for
-    append-fattened hot cells (VERDICT r11 #3); row-identical by the
-    same per-chunk-top-k-is-exact argument, gated in tests."""
-    import numpy as np
-    import pandas as pd
-
-    meta = ann_index_meta(path, spark)
-    if meta.get("quantized") == "pq":
-        raise ValueError(
-            f"index at {path} is PQ-quantized — batch PQ serving needs "
-            "the ADC path (query pq_topk_indexed per query)"
-        )
-    id_col = meta["id_col"]
-    if qid_col == id_col:
-        raise ValueError(
-            f"qid_col and id_col must differ in the output, both {qid_col!r}"
-            " — alias the query side first"
-        )
-    cn0 = np.asarray(meta["centroids"], dtype=np.float64)
-    cn = cn0 / np.maximum(np.linalg.norm(cn0, axis=1, keepdims=True), 1e-12)
-    n_probe = min(int(n_probe), cn.shape[0])
-
-    @F.pandas_udf("array<int>")
-    def _probes(s):  # type: ignore[no-untyped-def]
-        x = np.array(s.tolist(), dtype=np.float64)
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(xn @ cn.T), axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(order))
-
-    qcells = (
-        queries.select(
-            F.col(qid_col).alias("_qid"),
-            F.col(qvec_col).cast("array<double>").alias("_qvec"),
-        )
-        .withColumn("_probe_cells", _probes(F.col("_qvec")))
-        .select("_qid", "_qvec", F.explode("_probe_cells").alias("_cell"))
-    )
-    # ONE driver action plans the serve: the probed-cell union (drives
-    # the pruned scan), the duplicate-qid guard (rows == distinct qids
-    # x n_probe — _probes emits EXACTLY n_probe cells per query, so any
-    # duplicate qid breaks the equality), and nothing else. The r12
-    # shape replaced three round trips (a dup-check aggregate over the
-    # raw query frame, an eager localCheckpoint of qcells, a distinct-
-    # cells collect); the main action recomputes the cheap Arrow
-    # assignment instead of reading a checkpoint — the same recompute
-    # contract as the PQ core's cells pass. collect_set stays bounded
-    # by n_cells however wide the batch.
-    row = qcells.agg(
-        F.collect_set("_cell").alias("cells"),
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct("_qid").alias("d"),
-    ).first()
-    if int(row["n"]) != int(row["d"]) * n_probe:
-        raise ValueError(
-            f"duplicate {qid_col} values in the query frame "
-            f"({int(row['n']) // n_probe} rows, {int(row['d'])} distinct) — "
-            "dedupe or re-key the queries first"
-        )
-    union_cells = sorted(row["cells"])
-    idx = _ann_cells_scan(spark, path, union_cells)
-    if scorer == "gemm":
-        _require_integral_ids(idx, id_col, "index id")
-        _require_integral_ids(queries, qid_col, "query qid")
-        scored = _gemm_cell_scores(
-            idx, qcells, meta, id_col, k=int(k), exclude_self=exclude_self,
-            split=cell_split,
-        )
-    elif scorer == "expr":
-        pairs = idx.join(F.broadcast(qcells), "_cell")
-        if exclude_self:
-            pairs = pairs.filter(F.col(id_col) != F.col("_qid"))
-        if meta.get("quantized"):
-            cos = _safe_cosine(
-                F.transform("q", lambda x: x.cast("double")), F.col("_qvec")
-            )
-        else:
-            cos = _safe_cosine(F.col(meta["vec_col"]), F.col("_qvec"))
-        scored = pairs.select(
-            "_qid", F.col(id_col), F.round(cos, 6).alias("_cos")
-        )
-    else:
-        raise ValueError(f"scorer must be expr|gemm, got {scorer!r}")
-    ranked = _per_query_topk(
-        scored, "_qid", id_col, "_cos", ascending=False, k=k
-    )
-    return ranked.select(
-        F.col("_qid").alias(qid_col),
-        F.col(id_col),
-        F.col("_cos").alias("cos"),
-        "rank",
-    )
-
-
-def _require_integral_ids(frame: DataFrame, col: str, what: str) -> None:
-    """The GEMM scorers move ids through numpy int64 arrays; a
-    non-integral column would fail deep inside Arrow with an opaque
-    TypeError — fail at the API edge with the workaround instead."""
-    t = dict(frame.dtypes).get(col)
-    if t not in ("tinyint", "smallint", "int", "bigint"):
-        raise ValueError(
-            f"scorer='gemm' requires an integral {what} column, got "
-            f"{col}: {t} — use scorer='expr' or re-key to integers"
-        )
-
-
-def _gemm_cell_scores(
+def _cogroup_cell_scores(
     idx: DataFrame,
     qcells: DataFrame,
     meta: dict,
     id_col: str,
     k: int,
     exclude_self: bool,
-    split: int = 0,
+    split: int,
 ) -> DataFrame:
-    """Per-cell BLAS scoring: each probed cell cogroups with its
-    probing queries, scores as one queries x vectors matmul, and emits
-    only its per-(query, cell) top-k (round-6 cosine, id tie-break) —
-    the exact per-cell prefix of the global ranking, so the downstream
-    per-qid window over <= n_probe*k rows per query reproduces the
-    pair-expression plan row-for-row.
+    """The wide-batch scorer of ``ann_topk``: each probed cell cogroups
+    with its probing queries (``applyInPandas``, one Arrow batch per
+    cell), scores them as one queries x rows block — a BLAS matmul of
+    cosine rounded to 6 digits, or PQ ADC gathers summed in
+    ``_adc_score``'s subspace order from the same numpy table
+    expressions — and emits only its per-(query, cell) top-k by
+    (score, id). That is the exact per-cell prefix of the global
+    ranking, so the per-qid window over <= n_probe*k rows per query
+    reproduces the broadcast-expression plan row for row. The query
+    side shuffles on ``_cell``, so there is no broadcast-width cap. The
+    measured wide-sweep case: the codegen cosine fold costs ~64 us per
+    candidate pair, 855-947 s at 10k queries x 8 probes x 625-vector
+    cells, which the matmul scores in 8.6 s end to end (COVERAGE.md r11).
 
-    ``split`` > 1 bounds PER-GROUP MEMORY: one cogroup group
-    materializes an entire cell as one Arrow batch, so an
-    append-fattened hot cell at 100 TB is an executor OOM, not a
-    slowdown (VERDICT r11 #3). The index side gains a secondary key
-    ``_chunk = xxhash64(id) % split`` and the query side replicates
-    each (qid, cell) probe across all chunks, so each (cell, chunk)
-    group scores ~1/split of the cell and emits its own EXACT top-k —
-    still row-identical (every global top-k row is within its own
-    chunk's top-k; the downstream window ranks <= n_probe*split*k rows
-    per query). Size it as ceil(max_cell_rows / target_rows_per_batch)
-    from the index's partition stats (metadata-only)."""
+    ``split`` > 1 bounds PER-GROUP MEMORY: one group materializes a
+    whole cell, so an append-fattened hot cell would be an executor OOM
+    (VERDICT r11 #3). The index side gains ``_chunk = xxhash64(id) %
+    split`` and every (qid, cell) probe replicates across all chunks;
+    each (cell, chunk) group emits its own exact top-k, so rows stay
+    identical."""
     import numpy as np
     import pandas as pd
 
-    vec_col = "q" if meta.get("quantized") else meta["vec_col"]
-    kk = int(k)
-    excl = bool(exclude_self)
+    kind = _index_kind(meta)
+    if kind == "pq":
+        books, m, w, pk, cn, residual = _pq_meta_arrays(meta)
+    vec_col = "q" if kind == "int8" else meta["vec_col"]
+    kk, excl = int(k), bool(exclude_self)
+
+    def _dist(cell, idx_pdf, q):  # (queries x rows), lower ranks first
+        if kind != "pq":
+            v = np.array(idx_pdf[vec_col].tolist(), dtype=np.float64)
+            # dot / (|q| * |v|): same formulation as functions.vectors.cosine
+            sims = (q @ v.T) / np.maximum(
+                np.outer(np.linalg.norm(q, axis=1), np.linalg.norm(v, axis=1)),
+                1e-300,
+            )
+            return -np.round(sims, 6)
+        codes = np.array(idx_pdf["codes"].tolist(), dtype=np.int64)
+        xn = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
+        qr = xn - cn[cell] if residual else xn
+        sub = np.arange(m)
+        d = np.empty((len(q), len(codes)))
+        for qi in range(len(q)):
+            t = np.stack(
+                [
+                    ((books[si] - qr[qi, si * w : (si + 1) * w][None, :]) ** 2)
+                    .sum(axis=1)
+                    for si in range(m)
+                ]
+            )
+            d[qi] = t[sub[None, :], codes].sum(axis=1)
+        return d
 
     def _cell_topk(key, idx_pdf, q_pdf):  # type: ignore[no-untyped-def]
         if len(idx_pdf) == 0 or len(q_pdf) == 0:
@@ -577,150 +319,54 @@ def _gemm_cell_scores(
                 {
                     "_qid": pd.Series([], dtype="int64"),
                     id_col: pd.Series([], dtype="int64"),
-                    "_cos": pd.Series([], dtype="float64"),
+                    "_score": pd.Series([], dtype="float64"),
                 }
             )
-        v = np.array(idx_pdf[vec_col].tolist(), dtype=np.float64)
         ids = idx_pdf[id_col].to_numpy(dtype=np.int64)
-        q = np.array(q_pdf["_qvec"].tolist(), dtype=np.float64)
         qids = q_pdf["_qid"].to_numpy(dtype=np.int64)
-        # dot / (|q| * |v|): same formulation as functions.vectors.cosine
-        sims = (q @ v.T) / np.maximum(
-            np.outer(np.linalg.norm(q, axis=1), np.linalg.norm(v, axis=1)),
-            1e-300,
-        )
-        sims = np.round(sims, 6)
+        q = np.array(q_pdf["_qvec"].tolist(), dtype=np.float64)
+        d = _dist(int(key[0]), idx_pdf, q)
         if excl:
-            sims[qids[:, None] == ids[None, :]] = -np.inf
-        n = min(kk, sims.shape[1])
-        rq, ri, rc = [], [], []
-        for i in range(sims.shape[0]):
-            row = sims[i]
-            order = np.lexsort((ids, -row))[:n]
-            keep = order[np.isfinite(row[order])]
+            d[qids[:, None] == ids[None, :]] = np.inf
+        n = min(kk, len(ids))
+        rq, ri, rd = [], [], []
+        for i in range(len(qids)):
+            order = np.lexsort((ids, d[i]))[:n]
+            keep = order[np.isfinite(d[i][order])]
             rq.append(np.full(len(keep), qids[i], dtype=np.int64))
             ri.append(ids[keep])
-            rc.append(row[keep])
+            rd.append(d[i][keep])
+        score = np.concatenate(rd)
         return pd.DataFrame(
             {
                 "_qid": np.concatenate(rq),
                 id_col: np.concatenate(ri),
-                "_cos": np.concatenate(rc),
+                "_score": score if kind == "pq" else -score,
             }
         )
 
-    idx, qcells, keys = _chunked_cogroup_sides(idx, qcells, id_col, split)
-    return (
-        idx.groupBy(*keys)
-        .cogroup(qcells.groupBy(*keys))
-        .applyInPandas(_cell_topk, f"_qid bigint, {id_col} bigint, _cos double")
-    )
-
-
-def _chunked_cogroup_sides(
-    idx: DataFrame, qcells: DataFrame, id_col: str, split: int
-) -> tuple[DataFrame, DataFrame, list[str]]:
-    """The shared ``split`` plumbing of both cogrouped scorers: with
-    ``split`` > 1 the index side gains ``_chunk = xxhash64(id) % split``
-    and every (qid, cell) probe replicates across all chunks, so the
-    cogroup key becomes (cell, chunk) and no single Arrow batch holds
-    more than ~1/split of a cell."""
-    if int(split) <= 1:
-        return idx, qcells, ["_cell"]
-    chunk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(split))).cast("int")
-    idx = idx.withColumn("_chunk", chunk)
-    # sequence of int literals is already array<int> (a cast around a
-    # generator is illegal anyway), matching the pmod cast on the index
-    qcells = qcells.withColumn(
-        "_chunk", F.explode(F.sequence(F.lit(0), F.lit(int(split) - 1)))
-    )
-    return idx, qcells, ["_cell", "_chunk"]
-
-
-def _pq_gemm_cell_scores(
-    idx: DataFrame,
-    qcells: DataFrame,
-    meta: dict,
-    id_col: str,
-    k: int,
-    exclude_self: bool,
-    split: int = 0,
-) -> DataFrame:
-    """Per-cell vectorized ADC (the PQ twin of ``_gemm_cell_scores``):
-    each probed cell cogroups with its probing queries; the UDF builds
-    each query's (m x pk) table for THIS cell with the exact numpy
-    expressions ``_pq_query_tables_udf`` uses, gathers the cell's code
-    matrix against it in subspace order (the ``_adc_score`` sum
-    order), and emits only per-(query, cell) top-k by (adc, id). The
-    query side shuffles on ``_cell`` — no broadcast-width cap.
-    ``split`` bounds per-group memory exactly as in
-    ``_gemm_cell_scores`` (same chunk key, same row-identity
-    argument); the per-chunk ADC table rebuild is the only duplicated
-    work — m*pk doubles per (query, cell, chunk), noise next to the
-    gather."""
-    import numpy as np
-    import pandas as pd
-
-    books, m, w, pk, cn, residual = _pq_meta_arrays(meta)
-    kk = int(k)
-    excl = bool(exclude_self)
-
-    def _cell_adc(key, idx_pdf, q_pdf):  # type: ignore[no-untyped-def]
-        if len(idx_pdf) == 0 or len(q_pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "_qid": pd.Series([], dtype="int64"),
-                    id_col: pd.Series([], dtype="int64"),
-                    "_adc": pd.Series([], dtype="float64"),
-                }
-            )
-        cell = int(key[0])
-        codes = np.array(idx_pdf["codes"].tolist(), dtype=np.int64)
-        ids = idx_pdf[id_col].to_numpy(dtype=np.int64)
-        x = np.array(q_pdf["_qvec"].tolist(), dtype=np.float64)
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        qids = q_pdf["_qid"].to_numpy(dtype=np.int64)
-        sub = np.arange(m)
-        n = min(kk, codes.shape[0])
-        rq, ri, rc = [], [], []
-        for qi in range(xn.shape[0]):
-            qr = xn[qi] - cn[cell] if residual else xn[qi]
-            t = np.stack(
-                [
-                    ((books[si] - qr[si * w : (si + 1) * w][None, :]) ** 2)
-                    .sum(axis=1)
-                    for si in range(m)
-                ]
-            )
-            d = t[sub[None, :], codes].sum(axis=1)
-            if excl:
-                d = np.where(ids == qids[qi], np.inf, d)
-            order = np.lexsort((ids, d))[:n]
-            keep = order[np.isfinite(d[order])]
-            rq.append(np.full(len(keep), qids[qi], dtype=np.int64))
-            ri.append(ids[keep])
-            rc.append(d[keep])
-        return pd.DataFrame(
-            {
-                "_qid": np.concatenate(rq),
-                id_col: np.concatenate(ri),
-                "_adc": np.concatenate(rc),
-            }
+    keys = ["_cell"]
+    if int(split) > 1:
+        chunk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(split))).cast("int")
+        idx = idx.withColumn("_chunk", chunk)
+        # sequence of int literals is already array<int> (a cast around a
+        # generator is illegal anyway), matching the pmod cast on the index
+        qcells = qcells.withColumn(
+            "_chunk", F.explode(F.sequence(F.lit(0), F.lit(int(split) - 1)))
         )
-
-    idx, qcells, keys = _chunked_cogroup_sides(idx, qcells, id_col, split)
+        keys.append("_chunk")
     return (
         idx.groupBy(*keys)
         .cogroup(qcells.groupBy(*keys))
-        .applyInPandas(_cell_adc, f"_qid bigint, {id_col} bigint, _adc double")
+        .applyInPandas(_cell_topk, f"_qid bigint, {id_col} bigint, _score double")
     )
 
 
 def _assign_cells(df: DataFrame, vec_col: str, centroids) -> DataFrame:
     """Attach `_cell` = argmax cosine(vec, centroid) in one Arrow GEMM
-    pass (the shared assignment step of ivf_topk / build_ann_index —
-    identical math, so a materialized index and a direct query agree
-    bit-for-bit on cell membership)."""
+    pass — the one assignment step behind ``build_ann_index``, appends,
+    syncs, deletes and the IVF dedup paths, so every stateless
+    re-assignment agrees bit-for-bit with the stored cells)."""
     import numpy as np
     import pandas as pd
 
@@ -738,7 +384,7 @@ def _assign_cells(df: DataFrame, vec_col: str, centroids) -> DataFrame:
 
 def _grid_centroids(df: DataFrame, id_col: str, vec_col: str, n_cells: int):
     """The deterministic first-``n_cells``-by-id centroid init shared by
-    ``ivf_topk`` and ``build_ann_index`` (pass ``kmeans_centroids`` output
+    ``build_ann_index`` and the IVF dedup paths (pass ``kmeans_centroids`` output
     instead for trained cells)."""
     rows = (
         df.orderBy(id_col)
@@ -768,7 +414,7 @@ def build_ann_index(
     centroids (and PQ codebooks) in the table PROPERTIES.
 
     This is the serving-path fix for per-query corpus rescans: a query
-    via ``ivf_topk_indexed`` reads ONLY its ``n_probe`` probed cell
+    via ``ann_topk`` reads ONLY its ``n_probe`` probed cell
     directories (PartitionFilters pruning, pinned in
     tests/test_plan_quality.py) — at 100 TB that is ~n_probe/n_cells of
     the data instead of a full scan + rehash per query. The write costs
@@ -795,9 +441,9 @@ def build_ann_index(
     scans; PQ shrinks WHAT the scan reads): each row stores only its
     ``pq_m`` sub-space code indices (tinyint — 8 BYTES per vector at
     the defaults, 64x smaller than the float64 array), the codebooks
-    ride in the table properties, and ``pq_topk_indexed`` ADC-scans the
-    probed cells' codes then re-ranks top candidates against
-    full-precision vectors fetched by id. ``pq_residual`` (default)
+    ride in the table properties, and ``ann_topk`` ADC-scans the
+    probed cells' codes (``refine`` re-ranks the top candidates against
+    full-precision vectors fetched by id). ``pq_residual`` (default)
     trains and encodes on the RESIDUAL (normalized vector minus its
     cell's normalized centroid) — residual magnitudes are much smaller
     than vector magnitudes, so the same 8-byte budget buys finer
@@ -861,8 +507,8 @@ def build_ann_index(
     # 1000+ splinter files, and every later scan/bloom-check/commit
     # pays per file. Hash-clustering on _cell first writes ~one file
     # per cell; oversized cells split by spark.sql.files.
-    # maxRecordsPerFile (size governance stays with cell_split /
-    # suggest_cell_split).
+    # maxRecordsPerFile (the cogroup scorer's memory bound is
+    # _suggest_cell_split).
     write_table(
         assigned.repartition("_cell"),
         path,
@@ -992,32 +638,28 @@ def _pq_meta_arrays(meta: dict):
     return books, m, w, pk, cn, bool(pq["residual"])
 
 
-def _pq_probe_cells_np(cn, n_probe, x):
+def _probe_cells_np(cn, n_probe, x):
     """(normalized queries, probe order) for an (n, dim) query block —
-    the ONE argsort every PQ probe-cell computation shares (the light
-    Arrow pass, the tables helper below, and the literal fast path's
-    gemm branch, which needs cells WITHOUT tables — the cogroup UDF
-    rebuilds tables per cell executor-side, so boxing them driver-side
-    would be pure waste)."""
+    the ONE argsort behind every probe-cell computation: the driver-side
+    list path, the Arrow probe pass over a query frame, and the PQ
+    table builder."""
     import numpy as np
 
     xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     return xn, np.argsort(-(xn @ cn.T), axis=1)[:, :n_probe]
 
 
-def _pq_query_tables_np(books, m, w, pk, cn, residual, n_probe, x):
-    """Probed cells + flattened ADC tables for an (n, dim) query block —
-    the ONE numpy implementation behind BOTH the executor Arrow pass
-    (``_pq_query_tables_udf``) and the driver-side literal fast path
-    (``pq_topk_many_indexed_df(_literal_queries=...)``), so the two
-    serving forms produce bit-identical tables by construction. Returns
-    one list per query of (cell, flattened (m x pk) table row-major —
-    si*pk + code indexes it)."""
+def _pq_query_tables_np(books, m, w, pk, cn, residual, xn, order):
+    """Flattened ADC tables for normalized queries ``xn`` at their probe
+    ``order`` — the ONE numpy implementation behind both the executor
+    Arrow pass (``_pq_query_tables_udf``) and the driver-side list path,
+    so the two query shapes produce bit-identical tables by construction.
+    Returns one list per query of (cell, flattened (m x pk) table
+    row-major — si*pk + code indexes it)."""
     import numpy as np
 
-    xn, order = _pq_probe_cells_np(cn, n_probe, x)
     out = []
-    for qi in range(x.shape[0]):
+    for qi in range(xn.shape[0]):
         ents = []
         for c in order[qi]:
             c = int(c)
@@ -1038,19 +680,18 @@ def _pq_query_tables_udf(books, m, w, pk, cn, residual, n_probe):
     """Arrow UDF: query vector -> its ``n_probe`` probed cells, each
     with the (m x pk) ADC lookup table FLATTENED row-major (si*pk +
     code indexes it). Tables are pure codebook gathers over the query —
-    computable executor-side per query ROW, which is what makes the
-    batch form DataFrame-shaped: the driver never loops over queries
-    (reference analogue: fan-out X1, LoadDBs_conf.pm:113-123 — the
-    work list is data, not driver state). ~1 KB per (query, cell) at
-    the m=8, pq_k=16 defaults. The numpy body is ``_pq_query_tables_np``
-    — shared with the driver-side literal fast path."""
+    computable executor-side per query ROW, so the driver never loops
+    over a query frame (reference analogue: fan-out X1,
+    LoadDBs_conf.pm:113-123 — the work list is data, not driver state).
+    ~1 KB per (query, cell) at the m=8, pq_k=16 defaults."""
     import numpy as np
     import pandas as pd
 
     @F.pandas_udf("array<struct<cell: int, tbl: array<double>>>")
     def _qtables(vs):  # type: ignore[no-untyped-def]
         x = np.array(vs.tolist(), dtype=np.float64)
-        ents_all = _pq_query_tables_np(books, m, w, pk, cn, residual, n_probe, x)
+        xn, order = _probe_cells_np(cn, n_probe, x)
+        ents_all = _pq_query_tables_np(books, m, w, pk, cn, residual, xn, order)
         return pd.Series(
             [[{"cell": c, "tbl": t} for c, t in ents] for ents in ents_all]
         )
@@ -1058,27 +699,36 @@ def _pq_query_tables_udf(books, m, w, pk, cn, residual, n_probe):
     return _qtables
 
 
-def _pq_probe_cells_udf(cn, n_probe):
-    """Arrow UDF: query vector -> its n_probe nearest cells (cells
-    only, no tables) — the light pass the union-cell pruning collect
-    uses, so the 128-double tables are never materialized for it."""
+def _probe_cells_udf(cn, n_probe: int, dim: int):
+    """Arrow UDF: query vector -> its ``n_probe`` nearest cells. A null,
+    wrong-length or null/NaN-holding vector maps to an empty array
+    instead of failing the batch, so the planning aggregate can count
+    it and ``ann_topk`` rejects it on the driver with a readable
+    error."""
     import numpy as np
     import pandas as pd
 
     @F.pandas_udf("array<int>")
     def _probes(s):  # type: ignore[no-untyped-def]
-        x = np.array(s.tolist(), dtype=np.float64)
-        _, order = _pq_probe_cells_np(cn, n_probe, x)
-        return pd.Series(list(order.astype(np.int32)))
+        ok = np.array([v is not None and len(v) == dim for v in s], dtype=bool)
+        x = np.zeros((len(s), dim), dtype=np.float64)
+        if ok.any():
+            x[ok] = np.array([v for v, g in zip(s, ok) if g], dtype=np.float64)
+        ok &= ~np.isnan(x).any(axis=1)  # Arrow hands null elements as NaN
+        _, order = _probe_cells_np(cn, n_probe, x)
+        none = np.empty(0, dtype=np.int32)
+        return pd.Series(
+            [o if g else none for o, g in zip(order.astype(np.int32), ok)]
+        )
 
     return _probes
 
 
 def _adc_score(m: int, pk: int):
     """JVM-side ADC distance: m flattened-table gathers summed in
-    subspace order (whole-stage codegen — the corpus-side Python
-    crossing of the r10 implementation is GONE; the only Arrow UDF
-    left runs over the small query side). element_at is 1-based."""
+    subspace order (whole-stage codegen — no Python over the corpus;
+    the only Arrow UDF runs over the small query side). element_at is
+    1-based."""
     return F.aggregate(
         F.sequence(F.lit(0), F.lit(int(m) - 1)),
         F.lit(0.0),
@@ -1103,321 +753,240 @@ def _ann_cells_scan(spark, path: str, cells) -> DataFrame:
 
     cells = [int(c) for c in cells]
     if not cells:
-        # an empty query frame probes no cells: empty result with the
+        # an empty query batch probes no cells: empty result with the
         # index schema (files_matching rejects empty IN lists)
         return snapshot(spark, path).filter(F.lit(False))
     return scan_table(spark, path, predicates=[("_cell", "in", cells)])
 
 
-def pq_topk_many_indexed_df(
+#: Distinct queries from which ``ann_topk`` scores with the per-cell
+#: GEMM/ADC cogroup instead of the broadcast-expression plan, per index
+#: kind: the crossover measured at 1-1,000 queries on a 2,000-vector,
+#: 16-cell index (COVERAGE.md, "ann_topk scorer crossover") — float
+#: between 32 and 64 queries, PQ between 300 and 500 (its JVM ADC
+#: gathers score ~6-7x cheaper per pair than a 64-dim cosine fold). int8
+#: runs the float scorers and takes the float value.
+_GEMM_MIN_QUERIES = {"float": 32, "int8": 32, "pq": 500}
+
+#: Most index rows one cogroup Arrow batch may hold: a bigger cell is
+#: sub-chunked by ``xxhash64(id) % split`` (``_suggest_cell_split``).
+#: A 100k-row cell of 128-dim float64 is ~100 MB per batch.
+_CELL_SPLIT_TARGET_ROWS = 100_000
+
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _index_kind(meta: dict) -> str:
+    q = meta.get("quantized")
+    return "pq" if q == "pq" else ("int8" if q else "float")
+
+
+def _reject_malformed(n_bad: int, dim: int) -> None:
+    if n_bad:
+        raise ValueError(
+            f"{n_bad} query vector(s) are null, hold null/NaN elements, or "
+            f"are not {dim}-dim (the index dim) — fix or drop them first"
+        )
+
+
+def ann_topk(
     spark,
     path: str,
-    queries: DataFrame,
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
+    queries,
     k: int = 5,
     n_probe: int = 4,
+    qid_col: str = "qid",
+    qvec_col: str = "qvec",
+    exclude_self: bool = False,
     refine: int = 0,
     corpus: DataFrame | None = None,
-    exclude_self: bool = False,
-    scorer: str = "expr",
-    cell_split: int = 0,
-    _skip_qid_check: bool = False,
-    _literal_queries: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
-    """DataFrame-shaped BATCH queries over an IVF-PQ index — the core
-    every PQ serving form delegates to. One plan end-to-end:
+    """Top-k per query over an IVF index (``build_ann_index``) of any
+    kind — float, int8 or PQ, read from the index's ``ann`` property.
+    Returns (qid, <id_col>, score, rank) with rank 1..k per query;
+    score is ``cos`` (float/int8, or PQ with ``refine``) or
+    ``adc_dist`` (PQ). Ties break on the index id.
 
-    - an Arrow pass over the QUERY frame computes each query's probed
-      cells and per-cell ADC tables EXECUTOR-SIDE (``_pq_query_tables_udf``
-      — tables are pure codebook gathers, so the work list stays data;
-      the r10 form built them serially on the driver and shipped them
-      in a UDF closure, capping batches at closure size);
-    - the index scan prunes to the UNION of probed cells (a light
-      cells-only Arrow pass feeds the tiny distinct-cells collect,
-      <= n_cells values);
-    - the exploded (qid, cell, table) query side BROADCASTS into a
-      hash join on ``_cell`` (~1 KB per (query, probe) pair at the
-      defaults: a 10k-query wave is ~40 MB — shard million-query
-      sweeps into waves);
-    - ADC computes JVM-SIDE per candidate pair (``_adc_score`` —
-      whole-stage codegen, no Python over the corpus);
-    - one per-query top-k window (``_per_query_topk``).
+    ``queries`` is either a driver-side list of (int qid, vector) — a
+    single query is a 1-element list — or a DataFrame with ``qid_col``
+    and ``qvec_col``. For a list, probe cells are driver arithmetic and
+    the query side enters the plan as a literal frame, so planning runs
+    no Spark job. For a frame, ONE aggregate over an Arrow probe pass
+    returns the probed-cell union, the duplicate-qid guard, the
+    malformed-vector count and the query count. Either way the scan
+    reads only the union of probed cell partitions (PartitionFilters).
+    A null, wrong-length or null/NaN-holding vector and a duplicate qid
+    raise ValueError before any scoring.
 
-    ``refine`` > 0 re-ranks each query's top-``refine`` ADC candidates
-    against full-precision vectors from ``corpus`` (column-pruned scan
-    + broadcast joins on the tiny candidate/query frames). Returns
-    (qid, id, adc_dist|cos, rank); per-query rows are IDENTICAL to
-    ``pq_topk_indexed`` (which delegates here) — gated by
-    ``ss_ann_batch_indexed``.
+    The scorer follows from what the planner holds:
 
-    ``scorer='gemm'`` is the WIDE-sweep form (the float path's r11
-    pattern): probed cells cogroup with their probing queries, each
-    cell's ADC runs as vectorized numpy gathers emitting only per-
-    (query, cell) top-k, and the query side SHUFFLES instead of
-    broadcasting — no broadcast-width cap, no per-pair JVM aggregate.
-    Tables use the identical numpy expressions and the gather sum runs
-    in the same subspace order as ``_adc_score``, so rows match the
-    expr plan (gated in tests).
+    - at least ``_GEMM_MIN_QUERIES[kind]`` queries and integral index id
+      and qid columns: per-cell GEMM (float/int8) or vectorized ADC (PQ)
+      — probed cells cogroup with their probing queries and each cell
+      emits only its per-(query, cell) top-k, so the query side shuffles
+      with no broadcast-width cap. A cell above
+      ``_CELL_SPLIT_TARGET_ROWS`` rows (manifest row counts, no data
+      read) is sub-chunked so no Arrow batch holds more than that;
+    - otherwise the broadcast-expression plan: the exploded query side
+      broadcasts into a hash join on ``_cell`` and scores JVM-side
+      (cosine, or ADC table gathers). It is the only path for string
+      qids, and the faster one for narrow batches.
 
-    ``_literal_queries`` is the INTERACTIVE-serving fast path the list
-    and single-query wrappers use: when the query batch already lives
-    on the driver as (int qid, vector) pairs, probe cells and ADC
-    tables compute driver-side with the SAME numpy helper the Arrow
-    pass runs (``_pq_query_tables_np`` — bit-identical tables by
-    construction), so the probe-cell union needs NO Spark job and the
-    query side enters the plan as a literal frame. This is what keeps
-    one-row serving latency at scan + score + top-k instead of paying
-    the batch core's per-call Arrow/collect round trips (the r11
-    ``ss_ann_pq_indexed`` regression). Pass EITHER ``queries`` or
-    ``_literal_queries``."""
+    Both scorers round cosine to 6 digits before ranking and per-cell
+    top-k is exact, so they return identical rows. int8 indexes rank on
+    the codes directly — the per-vector scale cancels in cosine.
+
+    ``exclude_self`` drops candidates whose index id equals the qid.
+    ``refine`` > 0 (PQ only) re-ranks each query's top-``refine`` ADC
+    candidates by exact cosine against ``corpus`` vectors fetched by id
+    (broadcast joins on the tiny candidate and query frames)."""
+    import numpy as np
+
     meta = ann_index_meta(path, spark)
-    if meta.get("quantized") != "pq" or "pq" not in meta:
-        raise ValueError(
-            f"index at {path} is not PQ-quantized — use ivf_topk_many_indexed"
-        )
-    id_col = meta["id_col"]
+    kind = _index_kind(meta)
+    id_col, dim = meta["id_col"], int(meta["dim"])
     if qid_col == id_col:
         raise ValueError(
             f"qid_col and id_col must differ in the output, both {qid_col!r}"
             " — alias the query side first"
         )
-    books, m, w, pk, cn, residual = _pq_meta_arrays(meta)
+    if refine and kind != "pq":
+        raise ValueError("refine re-ranks PQ ADC candidates — PQ indexes only")
+    if refine and corpus is None:
+        raise ValueError("refine > 0 needs the corpus to fetch vectors from")
+    cn = np.asarray(meta["centroids"], dtype=np.float64)
+    cn = cn / np.maximum(np.linalg.norm(cn, axis=1, keepdims=True), 1e-12)
     n_probe = min(int(n_probe), cn.shape[0])
+    probes = _probe_cells_udf(cn, n_probe, dim)
 
-    lit_q: list[tuple[int, list[float]]] = []
-    ents_all: list = []
-    if _literal_queries is not None:
-        lit_q = [
-            (int(q), [float(v) for v in vec]) for q, vec in _literal_queries
-        ]
-        if not lit_q:
-            raise ValueError("literal query batch must be non-empty")
-        if len({q for q, _ in lit_q}) != len(lit_q):
-            raise ValueError("duplicate qids in the literal query batch")
-        import numpy as np
-
-        x = np.array([vec for _, vec in lit_q], dtype=np.float64)
-        # probe-cell union is driver arithmetic — zero Spark jobs. The
-        # gemm branch needs CELLS only (its cogroup UDF rebuilds tables
-        # per cell executor-side); boxing m*pk floats per (query, cell)
-        # here would be pure waste on wide literal batches.
-        if scorer == "gemm":
-            _, order = _pq_probe_cells_np(cn, n_probe, x)
-            lit_cells = [[int(c) for c in row] for row in order]
-            union_cells = sorted({c for row in lit_cells for c in row})
-        else:
-            ents_all = _pq_query_tables_np(
-                books, m, w, pk, cn, residual, n_probe, x
-            )
-            union_cells = sorted({c for ents in ents_all for c, _ in ents})
-        q0 = None  # built below only if refine needs the vectors
-    else:
-        if queries is None:
-            raise ValueError("pass a query DataFrame or _literal_queries")
+    if isinstance(queries, DataFrame):
+        lit = None
         q0 = queries.select(
             F.col(qid_col).alias("_qid"),
             F.col(qvec_col).cast("array<double>").alias("_qvec"),
         )
-        # light pass: ONE aggregate returns both the probed-cell union
-        # for partition pruning (collect_set — <= n_cells values
-        # however wide the batch) and the duplicate-qid guard (the UDF
-        # emits EXACTLY n_probe cells per query, so rows == distinct
-        # qids x n_probe iff qids are unique) — the r12 fold of the
-        # separate dup-check aggregate into the cells pass (one fewer
-        # driver round trip per serve).
-        probes = _pq_probe_cells_udf(cn, n_probe)
-        row = q0.select(
-            "_qid", F.explode_outer(probes(F.col("_qvec"))).alias("_c")
-        ).agg(
-            F.collect_set("_c").alias("cells"),
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct("_qid").alias("d"),
-        ).first()
-        if not _skip_qid_check and int(row["n"]) != int(row["d"]) * n_probe:
-            raise ValueError(
-                f"duplicate {qid_col} values in the query frame "
-                f"({int(row['n']) // n_probe} rows, {int(row['d'])} distinct)"
-                " — dedupe or re-key the queries first"
-            )
-        union_cells = sorted(row["cells"])
-    idx = _ann_cells_scan(spark, path, union_cells)
-    if scorer == "gemm":
-        _require_integral_ids(idx, id_col, "index id")
-        if _literal_queries is not None:
-            qcells = spark.createDataFrame(
-                [
-                    (q, vec, c)
-                    for (q, vec), row in zip(lit_q, lit_cells)
-                    for c in row
-                ],
-                "_qid bigint, _qvec array<double>, _cell int",
-            )
-        else:
-            _require_integral_ids(queries, qid_col, "query qid")
-            qcells = q0.select(
-                "_qid",
-                "_qvec",
-                F.explode_outer(probes(F.col("_qvec"))).alias("_cell"),
-            )
-        scored = _pq_gemm_cell_scores(
-            idx, qcells, meta, id_col,
-            k=(int(refine) if refine else int(k)), exclude_self=exclude_self,
-            split=cell_split,
+        v = F.col("_qvec")
+        bad = (
+            v.isNull()
+            | (F.size(v) != dim)
+            | F.exists(v, lambda x: x.isNull() | F.isnan(x))
         )
-    elif scorer == "expr":
-        if _literal_queries is not None:
-            qcells = spark.createDataFrame(
-                [
-                    (q, c, t)
-                    for (q, _), ents in zip(lit_q, ents_all)
-                    for c, t in ents
-                ],
-                "_qid bigint, _cell int, _tbl array<double>",
+        # a malformed vector probes no cells, so explode_outer keeps it
+        # as ONE row; every valid query yields exactly n_probe rows, so
+        # rows == distinct qids x n_probe iff qids are unique
+        row = (
+            q0.select("_qid", bad.alias("_bad"), F.explode_outer(probes(v)).alias("_c"))
+            .agg(
+                F.collect_set("_c").alias("cells"),
+                F.count(F.lit(1)).alias("n"),
+                F.count_distinct("_qid").alias("d"),
+                F.count(F.when(F.col("_bad"), 1)).alias("bad"),
             )
-        else:
-            qtables = _pq_query_tables_udf(
-                books, m, w, pk, cn, residual, n_probe
-            )
+            .first()
+        )
+        _reject_malformed(int(row["bad"]), dim)
+        n_rows, n_q = int(row["n"]) // max(n_probe, 1), int(row["d"])
+        cells = sorted(row["cells"])
+        integral = dict(queries.dtypes)[qid_col] in _INTEGRAL
+    else:
+        pairs_in = list(queries)
+        _reject_malformed(
+            sum(
+                1
+                for _, vec in pairs_in
+                if vec is None
+                or len(vec) != dim
+                or any(x is None or x != x for x in vec)
+            ),
+            dim,
+        )
+        lit = [(int(q), [float(x) for x in vec]) for q, vec in pairs_in]
+        n_rows, n_q = len(lit), len({q for q, _ in lit})
+        x = np.array([vec for _, vec in lit], dtype=np.float64).reshape(-1, dim)
+        xn, order = _probe_cells_np(cn, n_probe, x)
+        cells = sorted({int(c) for c in order.ravel()})
+        integral = True
+    if n_rows != n_q:
+        raise ValueError(
+            f"duplicate {qid_col} values in the query batch ({n_rows} rows, "
+            f"{n_q} distinct) — dedupe or re-key the queries first"
+        )
+
+    idx = _ann_cells_scan(spark, path, cells)
+    gemm = (
+        n_q >= _GEMM_MIN_QUERIES[kind]
+        and integral
+        and dict(idx.dtypes)[id_col] in _INTEGRAL
+    )
+    pq = _pq_meta_arrays(meta) if kind == "pq" else None
+    if kind == "pq" and not gemm:
+        if lit is None:
+            qtables = _pq_query_tables_udf(*pq, n_probe)
             # explode_outer: plain explode would let Catalyst infer
             # size(udf(...)) > 0 and push a UDF-referencing constraint
-            # around the plan (re-running the UDF); semantics are
-            # identical here
+            # around the plan (re-running the UDF)
             qcells = q0.select(
                 "_qid", F.explode_outer(qtables(F.col("_qvec"))).alias("_e")
             ).select(
-                "_qid",
-                F.col("_e.cell").alias("_cell"),
-                F.col("_e.tbl").alias("_tbl"),
+                "_qid", F.col("_e.cell").alias("_cell"), F.col("_e.tbl").alias("_tbl")
             )
+        else:
+            ents = _pq_query_tables_np(*pq, xn, order)
+            qcells = spark.createDataFrame(
+                [(q, c, t) for (q, _), es in zip(lit, ents) for c, t in es],
+                "_qid bigint, _cell int, _tbl array<double>",
+            )
+    elif lit is None:
+        qcells = q0.select(
+            "_qid", "_qvec", F.explode_outer(probes(F.col("_qvec"))).alias("_cell")
+        )
+    else:
+        qcells = spark.createDataFrame(
+            [(q, vec, int(c)) for (q, vec), cs in zip(lit, order) for c in cs],
+            "_qid bigint, _qvec array<double>, _cell int",
+        )
+
+    kk = int(refine) if refine else int(k)
+    if gemm:
+        scored = _cogroup_cell_scores(
+            idx, qcells, meta, id_col, kk, exclude_self,
+            _suggest_cell_split(spark, path),
+        )
+    else:
         pairs = idx.join(F.broadcast(qcells), "_cell")
         if exclude_self:
             pairs = pairs.filter(F.col(id_col) != F.col("_qid"))
-        scored = pairs.select(
-            "_qid", F.col(id_col), _adc_score(m, pk).alias("_adc")
+        if kind == "pq":
+            score = _adc_score(pq[1], pq[3])
+        else:
+            vec = (
+                F.transform("q", lambda x: x.cast("double"))
+                if kind == "int8"
+                else F.col(meta["vec_col"])
+            )
+            score = F.round(_safe_cosine(vec, F.col("_qvec")), 6)
+        scored = pairs.select("_qid", F.col(id_col), score.alias("_score"))
+    ranked = _per_query_topk(scored, "_qid", id_col, "_score", kind == "pq", kk)
+
+    if refine:
+        qv = q0 if lit is None else spark.createDataFrame(
+            lit, "_qid bigint, _qvec array<double>"
         )
-    else:
-        raise ValueError(f"scorer must be expr|gemm, got {scorer!r}")
-    ranked = _per_query_topk(
-        scored, "_qid", id_col, "_adc", ascending=True,
-        k=(int(refine) if refine else int(k)),
-    )
-    if not refine:
-        return ranked.select(
-            F.col("_qid").alias(qid_col),
-            F.col(id_col),
-            F.round("_adc", 6).alias("adc_dist"),
-            "rank",
+        vec_col = meta["vec_col"]
+        cos = F.round(_safe_cosine(F.col(vec_col), F.col("_qvec")), 6)
+        refined = (
+            corpus.select(F.col(id_col), F.col(vec_col))
+            .join(F.broadcast(ranked.select("_qid", id_col)), id_col)
+            .join(F.broadcast(qv), "_qid")
+            .select("_qid", F.col(id_col), cos.alias("_score"))
         )
-    if corpus is None:
-        raise ValueError("refine > 0 needs the corpus to fetch vectors from")
-    if q0 is None:  # literal path: the refine join needs the raw vectors
-        q0 = spark.createDataFrame(lit_q, "_qid bigint, _qvec array<double>")
-    cand = ranked.select("_qid", id_col)
-    vec_col = meta["vec_col"]
-    cos = _safe_cosine(F.col(vec_col), F.col("_qvec"))
-    refined = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .join(F.broadcast(cand), id_col)
-        .join(F.broadcast(q0), "_qid")
-        .select("_qid", F.col(id_col), F.round(cos, 6).alias("_cos"))
+        ranked = _per_query_topk(refined, "_qid", id_col, "_score", False, int(k))
+    out = (
+        F.round("_score", 6).alias("adc_dist")
+        if kind == "pq" and not refine
+        else F.col("_score").alias("cos")
     )
-    ranked2 = _per_query_topk(
-        refined, "_qid", id_col, "_cos", ascending=False, k=int(k)
-    )
-    return ranked2.select(
-        F.col("_qid").alias(qid_col),
-        F.col(id_col),
-        F.col("_cos").alias("cos"),
-        "rank",
-    )
-
-
-def pq_topk_many_indexed(
-    spark,
-    path: str,
-    queries: list[tuple[int, list[float]]],
-    k: int = 5,
-    n_probe: int = 4,
-    refine: int = 0,
-    corpus: DataFrame | None = None,
-    exclude_self: bool = False,
-) -> DataFrame:
-    """BATCH queries over an IVF-PQ index from a driver-side list of
-    (qid, vector) — a thin wrapper over the DataFrame-shaped core
-    (``pq_topk_many_indexed_df``), so the list and DataFrame forms are
-    row-identical BY CONSTRUCTION (the tables come from the shared
-    numpy helper either way). Rides the core's LITERAL fast path:
-    probe cells and ADC tables compute driver-side, so the call plans
-    one pruned scan + score + top-k with no per-call Arrow/collect
-    round trips. Prefer the DataFrame form when the queries already
-    live in a frame (contamination-kNN sweeps)."""
-    # meta/path validation happens in the core; validate the batch here
-    if not queries:
-        raise ValueError("queries must be a non-empty list of (qid, vector)")
-    seen: set[int] = set()
-    for qid, _ in queries:
-        qid = int(qid)
-        if qid in seen:
-            raise ValueError(f"duplicate qid {qid} in query batch")
-        seen.add(qid)
-    return pq_topk_many_indexed_df(
-        spark, path, None, "qid", "qvec", k=k, n_probe=n_probe,
-        refine=refine, corpus=corpus, exclude_self=exclude_self,
-        _skip_qid_check=True,
-        _literal_queries=list(queries),
-    )
-
-
-def pq_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 5,
-    n_probe: int = 4,
-    refine: int = 50,
-    corpus: DataFrame | None = None,
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Top-k over an IVF-PQ index (``build_ann_index(quantized='pq')``)
-    — the billion-vector serving path: the scan touches only the
-    ``n_probe`` probed cell PARTITIONS (PartitionFilters pruning, same
-    gate as ``ivf_topk_indexed``) and reads only 8-byte CODE rows
-    (what-a-scan-reads lever), scored by asymmetric distance JVM-side
-    against the query's per-cell lookup tables.
-
-    With ``corpus`` the top-``refine`` ADC candidates re-rank against
-    full-precision vectors fetched by id — one column-pruned scan with
-    a BROADCAST semi-join on the tiny candidate set (at 100 TB keep the
-    corpus id-clustered/bloom-indexed, e.g. a manifest table with
-    ``bloom_cols=(id,)``, so the fetch prunes to a handful of files);
-    returns (id, cos). Without ``corpus`` the ADC order itself returns
-    as (id, adc_dist) — recall is lower but no float vector is ever
-    read. Recall gated by ``ss_ann_pq_indexed`` on the clustered
-    fixture; reference analogue: priority-pruned routing,
-    Prioritise.pm:70-81.
-
-    Delegates to the batch core's LITERAL fast path with a one-row
-    batch — single and batch serving CANNOT drift (the ADC tables come
-    from the shared numpy helper, the JVM sum order and tie-break are
-    the core's), but the probe-cell assignment runs as driver
-    arithmetic against the already-driver-resident centroids: the call
-    costs ONE pruned scan + score + top-k, no per-call Arrow pass or
-    probed-cells collect (the r11 regression this form re-fixes)."""
-    qid = int(exclude_id) if exclude_id is not None else 0
-    # internal qid name must not collide with the index's id column
-    # (an index built with id_col='qid' is valid — the single-query
-    # API has no qid concept to rename)
-    qc = "_pq_qid" if ann_index_meta(path, spark)["id_col"] == "qid" else "qid"
-    out = pq_topk_many_indexed_df(
-        spark, path, None, qc, "qvec", k=k, n_probe=n_probe,
-        refine=(refine if corpus is not None else 0), corpus=corpus,
-        exclude_self=exclude_id is not None, _skip_qid_check=True,
-        _literal_queries=[(qid, [float(x) for x in query_vec])],
-    )
-    score = "cos" if corpus is not None else "adc_dist"
-    id_col = out.columns[1]  # core output is (qid, id, score, rank)
-    return out.orderBy("rank").select(id_col, score)
+    return ranked.select(F.col("_qid").alias(qid_col), F.col(id_col), out, "rank")
 
 
 def _encode_rows_for_index(new_df: DataFrame, meta: dict) -> DataFrame:
@@ -1778,19 +1347,13 @@ def _sharemax(parts) -> float:
     return (max(counts) / total) if total else 0.0
 
 
-def suggest_cell_split(
-    spark, path: str, target_rows_per_batch: int = 100_000
-) -> int:
-    """The ``cell_split`` a GEMM/ADC batch query should pass for this
-    index so no cogroup Arrow batch holds more than
-    ``target_rows_per_batch`` index rows — sized from the MAX cell's
-    row count in manifest metadata alone (``table_partitions``; zero
-    data IO, the same stats ``split_hot_cells`` diagnoses skew from).
-    Returns 0 (no split) when every cell already fits. At the defaults
-    a 100k-row cell of 128-dim float64 is ~100 MB per batch — inside a
-    4 GB executor comfortably; size down for wider vectors. A manifest
-    whose counts are incomplete RAISES rather than return a guess the
-    OOM guard would trust (r12 self-review)."""
+def _suggest_cell_split(spark, path: str) -> int:
+    """The cogroup sub-chunk count for this index: 0 when every cell
+    fits ``_CELL_SPLIT_TARGET_ROWS``, else ceil(max cell rows / target)
+    — sized from the manifest's per-cell row counts alone (zero data
+    IO, the same stats ``split_hot_cells`` diagnoses skew from). A
+    manifest whose counts are incomplete RAISES rather than return a
+    guess the memory bound would trust."""
     import math
 
     from ensembl_database_loader_spark.sinks.manifest import table_partitions
@@ -1799,12 +1362,12 @@ def suggest_cell_split(
     if any(p["n_rows"] is None for p in parts):
         raise ValueError(
             f"index at {path} has partitions without row counts — "
-            "pass an explicit cell_split (metadata cannot size it)"
+            "rebuild or compact it (modern commits record per-file rows)"
         )
     biggest = max((int(p["n_rows"]) for p in parts), default=0)
-    if biggest <= int(target_rows_per_batch):
+    if biggest <= _CELL_SPLIT_TARGET_ROWS:
         return 0
-    return math.ceil(biggest / int(target_rows_per_batch))
+    return math.ceil(biggest / _CELL_SPLIT_TARGET_ROWS)
 
 
 def delete_from_ann_index(spark, path: str, deleted_df: DataFrame) -> dict | None:
@@ -1863,53 +1426,6 @@ def ann_index_meta(path: str, spark) -> dict:
     if "ann" not in props:
         raise ValueError(f"table at {path} has no 'ann' property — not an index")
     return props["ann"]
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 5,
-    n_probe: int = 4,
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Top-k over a materialized IVF index (``build_ann_index``): pick
-    the ``n_probe`` nearest centroids driver-side (n_cells x dim numpy —
-    tiny), then scan ONLY those cell partitions with exact cosine
-    re-rank. The probe filter is on the partition column, so the scan's
-    PartitionFilters prune to n_probe directories — no corpus rescan,
-    no per-query re-hash. Result is identical to the unindexed
-    ``ivf_topk`` with the same centroids (hash-gated by
-    ss_ann_ivf_indexed)."""
-    import numpy as np
-
-    meta = ann_index_meta(path, spark)
-    if meta.get("quantized") == "pq":
-        raise ValueError(
-            f"index at {path} is PQ-quantized — use pq_topk_indexed"
-        )
-    cn = np.asarray(meta["centroids"], dtype=np.float64)
-    cn = cn / np.maximum(np.linalg.norm(cn, axis=1, keepdims=True), 1e-12)
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = q / max(np.linalg.norm(q), 1e-12)
-    probe_cells = [int(i) for i in np.argsort(-(cn @ qn))[:n_probe]]
-
-    idx = _ann_cells_scan(spark, path, probe_cells)
-    if exclude_id is not None:
-        idx = idx.filter(F.col(meta["id_col"]) != exclude_id)
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    if meta.get("quantized"):
-        # the per-vector scale cancels in cosine (cos(s*q, y) == cos(q, y)
-        # for s > 0), so the int8 codes rank directly — no dequantize
-        # column, no scale read, in the hot path
-        cos = _safe_cosine(F.transform("q", lambda x: x.cast("double")), qcol)
-    else:
-        cos = _safe_cosine(F.col(meta["vec_col"]), qcol)
-    return (
-        idx.select(F.col(meta["id_col"]), F.round(cos, 6).alias("cos"))
-        .orderBy(F.desc("cos"), meta["id_col"])
-        .limit(k)
-    )
 
 
 def embedding_neardup_pairs(
@@ -2222,7 +1738,7 @@ def mmr_rerank(
     deterministic.
 
     Input is one row per (query, candidate) carrying BOTH vectors —
-    the natural shape coming out of ``ivf_topk_indexed``/
+    the natural shape coming out of ``ann_topk``/
     ``lsh_bucket_topk`` joined back to the corpus for vectors.
     Execution: one hash shuffle on the query column, then each query
     group re-ranks in ONE vectorized numpy pass (an m x d candidate

@@ -70,6 +70,16 @@ def _collect_sorted_parallel(*dfs, max_workers: int = 8):
         return list(ex.map(rows, dfs))
 
 
+def _vec_of(df: DataFrame, vec_id: int) -> list[float]:
+    """Row ``vec_id``'s embedding as a driver-side list — the query side
+    of a 1-element ``ann_topk`` batch."""
+    return list(
+        df.filter(F.col("vec_id") == vec_id)
+        .select(F.col("embedding").cast("array<double>"))
+        .first()[0]
+    )
+
+
 # --- shared Spark corpus (documents + near-dup variants) -------------------
 
 
@@ -942,15 +952,26 @@ def ss_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
     sf0.01/sf0.1, so the 0.6 bound has >= 1-cell slack.) ss_ann_lsh
     stays rows-only: hyperplane-LSH recall for moderately-similar
     neighbors is legitimately fixture-dependent (0 at sf0.01).
-    Complements ss_ann_lsh as the second standard ANN scale path."""
-    from ensembl_database_loader_spark.operators.similarity import ivf_topk
+    Complements ss_ann_lsh as the second standard ANN scale path:
+    ``build_ann_index`` (16 grid-init cells) + a 1-element ``ann_topk``
+    batch probing 4 cells."""
+    import tempfile
+
+    from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
+        build_ann_index,
+    )
 
     ensure_session_confs(spark)
-    e = table(spark, sf, "embeddings")
+    e = table(spark, sf, "embeddings").select("vec_id", "embedding")
+    path = tempfile.mkdtemp(prefix="edl_annivf_") + "/embeddings"
+    build_ann_index(e, "vec_id", "embedding", path, n_cells=16)
     # persist the 5-row results: each feeds two DAG branches (agg +
     # intersect) and would otherwise recompute its whole scan path
     exact = cosine_topk(e, "vec_id", "embedding", query_id=0, k=5).persist()
-    approx = ivf_topk(e, "vec_id", "embedding", query_id=0, k=5).persist()
+    approx = ann_topk(
+        spark, path, [(0, _vec_of(e, 0))], k=5, n_probe=4, exclude_self=True
+    ).persist()
     overlap = exact.select("vec_id").intersect(approx.select("vec_id"))
     return (
         approx.agg(_cnt().alias("ann_results"))
@@ -973,42 +994,49 @@ def ss_ann_ivf(spark: SparkSession, sf: str) -> DataFrame:
 def ss_ann_ivf_indexed(spark: SparkSession, sf: str) -> DataFrame:
     """Materialized IVF ANN index: ``build_ann_index`` assigns cells
     ONCE and commits the corpus as a manifest table partitioned by
-    ``_cell``; ``ivf_topk_indexed`` reads only the n_probe probed cells
+    ``_cell``; ``ann_topk`` reads only the n_probe probed cells
     (PartitionFilters-pruned, pinned in tests/test_plan_quality.py) —
-    the 100 TB serving path, vs ``ss_ann_ivf`` which re-assigns the
-    whole corpus per query.
+    the 100 TB serving path.
 
     Contract (all hash-gated by a TRUE-declaring oracle): k results
-    returned; the indexed result is ROW-IDENTICAL to the unindexed
-    ``ivf_topk`` with the same deterministic centroids (same grid init,
-    same GEMM assignment, same exact-cosine re-rank — symmetric
-    exceptAll must be empty); recall vs exact top-5 >= 0.6 (same bound
-    ss_ann_ivf carries, measured 0.8-1.0 across fixtures)."""
+    returned; the indexed result is ROW-IDENTICAL (id, cos) to an exact
+    cosine re-rank of the SAME probed cells computed from the raw frame
+    (``_assign_cells`` with the index's centroids, then ``cosine_topk``
+    over the rows of the query's n_probe nearest cells); recall vs
+    exact top-5 >= 0.6 (same bound ss_ann_ivf carries, measured 0.8-1.0
+    across fixtures)."""
     import tempfile
 
+    import numpy as np
+
     from ensembl_database_loader_spark.operators.similarity import (
+        _assign_cells,
+        _probe_cells_np,
+        ann_topk,
         build_ann_index,
-        ivf_topk,
-        ivf_topk_indexed,
     )
 
     ensure_session_confs(spark)
     e = table(spark, sf, "embeddings").select("vec_id", "embedding")
     path = tempfile.mkdtemp(prefix="edl_annidx_") + "/embeddings"
-    build_ann_index(e, "vec_id", "embedding", path, n_cells=16)
+    cents = build_ann_index(e, "vec_id", "embedding", path, n_cells=16)
 
-    qvec = list(
-        e.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>"))
-        .first()[0]
+    qvec = _vec_of(e, 0)
+    cn = np.asarray(cents, dtype=np.float64)
+    cn = cn / np.maximum(np.linalg.norm(cn, axis=1, keepdims=True), 1e-12)
+    _, order = _probe_cells_np(cn, 4, np.asarray([qvec], dtype=np.float64))
+    probed = _assign_cells(e, "embedding", cents).filter(
+        F.col("_cell").isin([int(c) for c in order[0]])
     )
     # the three 5-row gate frames collect concurrently (each serving
     # form evaluated exactly once) and the identity/recall checks run
     # driver-side — the exceptAll/intersect formulation re-read the
     # index per DAG branch and paid the extra gate exchanges
     irows, drows, erows = _collect_sorted_parallel(
-        ivf_topk_indexed(spark, path, qvec, k=5, n_probe=4, exclude_id=0),
-        ivf_topk(e, "vec_id", "embedding", query_id=0, k=5),
+        ann_topk(
+            spark, path, [(0, qvec)], k=5, n_probe=4, exclude_self=True
+        ).select("vec_id", "cos"),
+        cosine_topk(probed, "vec_id", "embedding", query_id=0, k=5),
         cosine_topk(e, "vec_id", "embedding", query_id=0, k=5).select(
             "vec_id"
         ),
@@ -1064,8 +1092,8 @@ def ss_ann_ivf_quant(spark: SparkSession, sf: str) -> DataFrame:
     import tempfile
 
     from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
         build_ann_index,
-        ivf_topk_indexed,
     )
 
     ensure_session_confs(spark)
@@ -1076,16 +1104,12 @@ def ss_ann_ivf_quant(spark: SparkSession, sf: str) -> DataFrame:
     build_ann_index(e, "vec_id", "embedding", quant_path, n_cells=16, quantized=True)
     bytes_halved = _dir_data_bytes(quant_path) < 0.5 * _dir_data_bytes(full_path)
 
-    qvec = list(
-        e.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>"))
-        .first()[0]
-    )
-    quant = ivf_topk_indexed(
-        spark, quant_path, qvec, k=5, n_probe=4, exclude_id=0
+    q = [(0, _vec_of(e, 0))]
+    quant = ann_topk(
+        spark, quant_path, q, k=5, n_probe=4, exclude_self=True
     ).persist()
-    full = ivf_topk_indexed(
-        spark, full_path, qvec, k=5, n_probe=4, exclude_id=0
+    full = ann_topk(
+        spark, full_path, q, k=5, n_probe=4, exclude_self=True
     ).persist()
     exact = cosine_topk(e, "vec_id", "embedding", query_id=0, k=5).persist()
     return (
@@ -1123,7 +1147,7 @@ def ss_ann_pq_indexed(spark: SparkSession, sf: str) -> DataFrame:
     composition (IVF prunes WHICH cells a query scans, PQ shrinks WHAT
     the scan reads): ``build_ann_index(quantized='pq')`` persists
     8-BYTE code rows partitioned by k-means cell (codebooks in the
-    index table's properties), ``pq_topk_indexed`` ADC-scans only the
+    index table's properties), ``ann_topk`` ADC-scans only the
     n_probe probed cell partitions (PartitionFilters-pruned, pinned in
     tests/test_plan_quality.py) and re-ranks the top-``refine``
     candidates against full-precision vectors fetched by id.
@@ -1149,9 +1173,9 @@ def ss_ann_pq_indexed(spark: SparkSession, sf: str) -> DataFrame:
 
     from ensembl_database_loader_spark.functions.vectors import cosine
     from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
         build_ann_index,
         kmeans_centroids,
-        pq_topk_indexed,
     )
 
     ensure_session_confs(spark)
@@ -1187,22 +1211,18 @@ def ss_ann_pq_indexed(spark: SparkSession, sf: str) -> DataFrame:
         )
     bytes_lt_int8 = _dir_data_bytes(res_path) < _dir_data_bytes(int8_path)
 
-    qvec = list(
-        corpus.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>"))
-        .first()[0]
-    )
+    qvec = _vec_of(corpus, 0)
     exact = (
         cosine_topk(corpus, "vec_id", "embedding", query_id=0, k=5)
         .select("vec_id")
         .persist()
     )
-    adc = pq_topk_indexed(
-        spark, res_path, qvec, k=5, n_probe=2, exclude_id=0
+    adc = ann_topk(
+        spark, res_path, [(0, qvec)], k=5, n_probe=2, exclude_self=True
     ).persist()
-    refine = pq_topk_indexed(
-        spark, res_path, qvec, k=5, n_probe=2, refine=200,
-        corpus=corpus, exclude_id=0,
+    refine = ann_topk(
+        spark, res_path, [(0, qvec)], k=5, n_probe=2, refine=200,
+        corpus=corpus, exclude_self=True,
     ).persist()
 
     # mean |adc - true_L2| over every probed candidate, both encodings:
@@ -1217,8 +1237,9 @@ def ss_ann_pq_indexed(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     def _mean_err(path: str):
-        full = pq_topk_indexed(
-            spark, path, qvec, k=1_000_000, n_probe=2, exclude_id=0
+        full = ann_topk(
+            spark, path, [(0, qvec)], k=1_000_000, n_probe=2,
+            exclude_self=True,
         )
         return (
             full.join(true_d, "vec_id")
@@ -1260,62 +1281,55 @@ def ss_ann_pq_indexed(spark: SparkSession, sf: str) -> DataFrame:
     tags=("llm", "similarity", "approx", "batch"),
 )
 def ss_ann_batch(spark: SparkSession, sf: str) -> DataFrame:
-    """BATCH-query ANN (``ivf_topk_many``): 100 queries answered in ONE
-    plan — one corpus cell-assignment pass, the probed-cell-exploded
-    query side broadcast into a hash join, one per-query window top-k —
-    vs the O(queries) full corpus scans a loop over ``ivf_topk`` costs
-    (the retrieval-sweep / contamination-kNN shape).
+    """BATCH-query ANN: 100 queries answered by ONE ``ann_topk`` call
+    over a materialized float index — one probed-cell planning
+    aggregate, one pruned scan, one per-query window (at this width the
+    per-cell GEMM scorer) — instead of O(queries) separate serves (the
+    retrieval-sweep / contamination-kNN shape).
 
     Hash-gated contract (TRUE-declaring oracle): 100 queries produce
-    exactly 100 x k pairs; for one query PER CLUSTER (qids 0..7) the
-    batch rows are ROW-IDENTICAL (id, cos, rank) to the single-query
-    ``ivf_topk`` with the same deterministic grid centroids; and ALL
-    100 queries' top-5 id sets match an independent driver-side numpy
-    mirror of the IVF math (same normalization, same probe order, same
+    exactly 100 x k pairs; for one query PER CLUSTER (qids 0..7) a
+    1-element list batch (driver-side planning, broadcast-expression
+    scorer) returns ROW-IDENTICAL (qid, id, cos, rank) rows to that
+    qid's rows in the frame batch; and ALL 100 queries' top-5 id sets
+    match an independent driver-side numpy mirror of the IVF math (same
+    normalization, same grid centroids, same probe order, same
     rounded-cosine tie-break) — the loop-parity check at full batch
     width without 100 Spark jobs."""
+    import tempfile
+
     import numpy as np
 
     from ensembl_database_loader_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_many,
+        ann_topk,
+        build_ann_index,
     )
 
     ensure_session_confs(spark)
     corpus = _planted_clusters(spark, sf).persist()
+    path = tempfile.mkdtemp(prefix="edl_annbq_") + "/idx"
+    build_ann_index(corpus, "vec_id", "embedding", path, n_cells=8)
     queries = corpus.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    batch = ivf_topk_many(
-        queries, corpus, "qid", "qvec", "vec_id", "embedding",
-        k=5, n_cells=8, n_probe=2, exclude_self=True,
-    )
-    # every gate frame is tiny (batch = 500 rows, singles <= 5): build
-    # them all lazily, collect CONCURRENTLY (each serving form runs
-    # exactly once), and run the multiset compares, the numpy mirror,
-    # and the count checks driver-side — the symmetric-exceptAll
-    # formulation evaluated each single-query plan twice and paid 16
-    # extra exchanges plus a union-tree final action
     singles = [
-        ivf_topk(
-            corpus, "vec_id", "embedding", query_id=qid, k=5,
-            n_cells=8, n_probe=2,
-        )
-        for qid in range(8)
+        ann_topk(spark, path, [q], k=5, n_probe=2, exclude_self=True)
+        for q in queries.filter(F.col("qid") < 8).orderBy("qid").collect()
     ]
+    # every gate frame is tiny (batch = 500 rows, singles = 5): collect
+    # them CONCURRENTLY (each serving form runs exactly once) and run
+    # the multiset compares, the numpy mirror, and the count checks
+    # driver-side
     collected = _collect_sorted_parallel(
-        batch,
+        ann_topk(spark, path, queries, k=5, n_probe=2, exclude_self=True),
         corpus.select("vec_id", F.col("embedding").cast("array<double>")),
         *singles,
     )
     brows, rows, single_rows = collected[0], collected[1], collected[2:]
-
-    # Spark-loop parity on one query per cluster: the (vec_id, cos)
-    # multisets must match exactly for each of qids 0..7
-    loop_ok = True
-    for qid in range(8):
-        b = sorted((r[1], r[2]) for r in brows if r[0] == qid)
-        loop_ok = loop_ok and single_rows[qid] == b
+    loop_ok = all(
+        single_rows[qid] == [r for r in brows if r[0] == qid]
+        for qid in range(8)
+    )
 
     # numpy mirror of the full 100-query batch (driver-side verifier on
     # the fixture-sized corpus — the operator itself never collects)
@@ -2691,11 +2705,15 @@ def ss_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
     Hash-gated contract (TRUE-declaring oracle): exact top-5 all in
     cluster 0; both ANN paths return k=5; recall@5 vs exact >= 0.8 for
     multi-table hyperplane LSH (default 4 planes x 8 tables) AND for
-    IVF with kmeans-trained cells (n_cells=8, n_probe=2) — measured
-    1.0 at every sf, bound leaves one-miss slack for ulp-level k-means
+    IVF with kmeans-trained cells (n_cells=8, n_probe=2, served by
+    ``ann_topk`` from a ``build_ann_index`` index) — measured 1.0 at
+    every sf, bound leaves one-miss slack for ulp-level k-means
     drift."""
+    import tempfile
+
     from ensembl_database_loader_spark.operators.similarity import (
-        ivf_topk,
+        ann_topk,
+        build_ann_index,
         kmeans_centroids,
         lsh_bucket_topk,
     )
@@ -2716,10 +2734,12 @@ def ss_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
         .persist()
     )
     cents = kmeans_centroids(corpus, "vec_id", "embedding", n_cells=8, n_iter=3)
+    path = tempfile.mkdtemp(prefix="edl_annrc_") + "/idx"
+    build_ann_index(corpus, "vec_id", "embedding", path, centroids=cents)
     ivf = (
-        ivf_topk(
-            corpus, "vec_id", "embedding", 0, 5,
-            n_cells=8, n_probe=2, centroids=cents,
+        ann_topk(
+            spark, path, [(0, _vec_of(corpus, 0))], k=5, n_probe=2,
+            exclude_self=True,
         )
         .select("vec_id")
         .persist()
@@ -4147,50 +4167,25 @@ def tx_semantic_decontam(spark: SparkSession, sf: str) -> DataFrame:
     "ss_ann_batch_indexed",
     oracle=(
         "SELECT TRUE AS bi_ivf_matches, TRUE AS bi_pq_matches, "
-        "CAST(20 AS BIGINT) AS bi_ivf_pairs, CAST(20 AS BIGINT) AS bi_pq_pairs, "
-        "TRUE AS bi_pq_df_matches, "
-        "TRUE AS bi_gemm_matches, TRUE AS bi_pq_gemm_matches, "
-        "TRUE AS bi_split_matches, TRUE AS bi_pq_split_matches"
+        "CAST(20 AS BIGINT) AS bi_ivf_pairs, CAST(20 AS BIGINT) AS bi_pq_pairs"
     ),
     tags=("llm", "similarity", "approx", "batch", "index"),
 )
 def ss_ann_batch_indexed(spark: SparkSession, sf: str) -> DataFrame:
-    """Batch queries over MATERIALIZED indexes: ``ivf_topk_many_indexed``
-    (float index — union-of-probed-cells pruned scan, broadcast query
-    join) and ``pq_topk_many_indexed`` (PQ index — one ADC pass scoring
-    each code row against exactly the queries probing its cell). Both
-    hash-gated ROW-IDENTICAL (id, score, rank) to their single-query
-    operators (``ivf_topk_indexed`` / ``pq_topk_indexed``) across one
-    query for each of four clusters on the planted fixture — the serving-path batch
-    forms provably equal the gated single-query paths they amortize.
-
-    r11 additions, hash-gated via exact multiset identity (r12: each
-    form collected once — <= 20 rows — and compared driver-side, which
-    replaces the symmetric-exceptAll union tree's ~24 extra exchanges):
-    the DATAFRAME-shaped PQ batch (``pq_topk_many_indexed_df`` — ADC
-    tables computed executor-side per query row, JVM-side scoring,
-    plan-gated single pruned codes-only scan) is row-identical to the
-    list form, and the per-cell GEMM scorer (``scorer='gemm'`` —
-    cogrouped BLAS matmul per probed cell with in-cell top-k, the
-    measured ~100x wide-sweep fix: 8.6 s vs 855-947 s at 10k queries x
-    40k vectors) is row-identical to the pair-expression plan.
-
-    r12 riders (VERDICT r11 #3): ``cell_split`` sub-chunks each
-    cogrouped cell by xxhash64(id) % split so no single Arrow batch
-    holds more than ~1/split of a hot cell (the per-group memory
-    bound); hash-gated row-identical to the unsplit plans on BOTH the
-    float GEMM and PQ ADC paths."""
+    """Batch queries over MATERIALIZED indexes through ``ann_topk``: a
+    float index (union-of-probed-cells pruned scan, exact cosine) and a
+    PQ index (ADC over 8-byte codes). For one query in each of four
+    clusters on the planted fixture, a 1-element list batch (driver-side
+    probe planning, literal query frame) is hash-gated ROW-IDENTICAL
+    (qid, id, score, rank) to that qid's rows in the 4-query DataFrame
+    batch (Arrow probe pass + one planning aggregate) — both query
+    shapes serve the same rows on both index kinds. Each form is
+    collected once (<= 20 rows) and compared driver-side."""
     import tempfile
 
-    from pyspark.sql import Window
-
     from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
         build_ann_index,
-        ivf_topk_indexed,
-        ivf_topk_many_indexed,
-        pq_topk_indexed,
-        pq_topk_many_indexed,
-        pq_topk_many_indexed_df,
     )
 
     ensure_session_confs(spark)
@@ -4213,88 +4208,34 @@ def ss_ann_batch_indexed(spark: SparkSession, sf: str) -> DataFrame:
             n_cells=8, quantized="pq", pq_m=8, pq_k=16,
         )
         _f1.result(), _f2.result()
-    qrows = corpus.filter(F.col("vec_id") < 4).collect()
-    qlist = [(r["vec_id"], list(r["embedding"])) for r in qrows]
     queries = corpus.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
+    qlist = queries.orderBy("qid").collect()
 
-    # every gate frame here is <= 20 rows: build ALL serving forms
-    # lazily, collect them CONCURRENTLY (each form evaluated exactly
-    # once), and run the multiset identity checks driver-side on
-    # sorted tuples — the symmetric-exceptAll formulation computed the
-    # same empty diffs but paid ~24 extra hash-aggregate exchanges
-    # plus one giant union-tree final action (measured 9 s of the
-    # probe by itself at sf0.1)
-    def _batch(**kw):
-        return ivf_topk_many_indexed(
-            spark, flat_path, queries, "qid", "qvec", k=5, n_probe=2,
-            exclude_self=True, **kw,
-        )
+    def _serve(path, q):
+        return ann_topk(spark, path, q, k=5, n_probe=2, exclude_self=True)
 
-    def _pq_batch(**kw):
-        return pq_topk_many_indexed_df(
-            spark, pq_path, queries, "qid", "qvec", k=5, n_probe=2,
-            exclude_self=True, **kw,
-        )
-
-    singles = []
-    for qid, qv in qlist:
-        singles.append(
-            ivf_topk_indexed(
-                spark, flat_path, qv, k=5, n_probe=2, exclude_id=qid
-            ).withColumn(
-                "rank",
-                F.row_number().over(Window.orderBy(F.desc("cos"), "vec_id")),
-            ).select("vec_id", "cos", "rank")
-        )
-        singles.append(
-            pq_topk_indexed(
-                spark, pq_path, qv, k=5, n_probe=2, exclude_id=qid
-            ).withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.orderBy(F.asc("adc_dist"), "vec_id")
-                ),
-            ).select("vec_id", "adc_dist", "rank")
-        )
     collected = _collect_sorted_parallel(
-        _batch(),
-        pq_topk_many_indexed(
-            spark, pq_path, qlist, k=5, n_probe=2, exclude_self=True
-        ),
-        _pq_batch(),
-        _batch(scorer="gemm"),
-        _pq_batch(scorer="gemm"),
-        _batch(scorer="gemm", cell_split=3),
-        _pq_batch(scorer="gemm", cell_split=3),
-        *singles,
+        _serve(flat_path, queries),
+        _serve(pq_path, queries),
+        *[_serve(p, [q]) for q in qlist for p in (flat_path, pq_path)],
     )
     ivf_rows, pq_rows = collected[0], collected[1]
-    df_matches = collected[2] == pq_rows
-    gemm_matches = collected[3] == ivf_rows
-    pq_gemm_matches = collected[4] == pq_rows
-    split_matches = collected[5] == ivf_rows
-    pq_split_matches = collected[6] == pq_rows
-
-    ivf_matches = True
-    pq_matches = True
-    for i, (qid, _) in enumerate(qlist):
-        b_ivf = sorted((r[1], r[2], r[3]) for r in ivf_rows if r[0] == qid)
-        ivf_matches = ivf_matches and collected[7 + 2 * i] == b_ivf
-        b_pq = sorted((r[1], r[2], r[3]) for r in pq_rows if r[0] == qid)
-        pq_matches = pq_matches and collected[8 + 2 * i] == b_pq
+    ivf_matches = pq_matches = True
+    for i, q in enumerate(qlist):
+        ivf_matches = ivf_matches and collected[2 + 2 * i] == [
+            r for r in ivf_rows if r[0] == q[0]
+        ]
+        pq_matches = pq_matches and collected[3 + 2 * i] == [
+            r for r in pq_rows if r[0] == q[0]
+        ]
 
     return spark.range(1).select(
         F.lit(bool(ivf_matches)).alias("bi_ivf_matches"),
         F.lit(bool(pq_matches)).alias("bi_pq_matches"),
         F.lit(len(ivf_rows)).cast("bigint").alias("bi_ivf_pairs"),
         F.lit(len(pq_rows)).cast("bigint").alias("bi_pq_pairs"),
-        F.lit(bool(df_matches)).alias("bi_pq_df_matches"),
-        F.lit(bool(gemm_matches)).alias("bi_gemm_matches"),
-        F.lit(bool(pq_gemm_matches)).alias("bi_pq_gemm_matches"),
-        F.lit(bool(split_matches)).alias("bi_split_matches"),
-        F.lit(bool(pq_split_matches)).alias("bi_pq_split_matches"),
     )
 
 @probe(
@@ -4339,10 +4280,10 @@ def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
     import tempfile
 
     from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
         append_to_ann_index,
         build_ann_index,
         delete_from_ann_index,
-        ivf_topk_indexed,
     )
     from ensembl_database_loader_spark.sinks.manifest import (
         changed_files,
@@ -4354,17 +4295,17 @@ def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
     corpus = _planted_clusters(spark, sf).persist()
     mani = tempfile.mkdtemp(prefix="edl_annmi_") + "/mani"
     build_ann_index(corpus, "vec_id", "embedding", mani, n_cells=8)
-    qvec = list(
-        corpus.filter(F.col("vec_id") == 0)
-        .select(F.col("embedding").cast("array<double>"))
-        .first()[0]
-    )
-    before_ids = sorted(
-        r["vec_id"]
-        for r in ivf_topk_indexed(
-            spark, mani, qvec, k=5, n_probe=2, exclude_id=0
-        ).collect()
-    )
+    qvec = _vec_of(corpus, 0)
+
+    def _served(k: int) -> set:
+        return {
+            r["vec_id"]
+            for r in ann_topk(
+                spark, mani, [(0, qvec)], k=k, n_probe=2, exclude_self=True
+            ).collect()
+        }
+
+    before_ids = sorted(_served(5))
 
     plant = spark.createDataFrame(
         [(1_000_000, [float(x) + 1e-4 for x in qvec])],
@@ -4372,8 +4313,7 @@ def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
     )
     append_to_ann_index(plant, mani, txn=("probe_ingest", 1))
     v_app = int(latest_manifest(spark, mani)["version"])
-    top1 = ivf_topk_indexed(spark, mani, qvec, k=1, n_probe=2, exclude_id=0)
-    append_served = top1.first()["vec_id"] == 1_000_000
+    append_served = _served(1) == {1_000_000}
     ch_app = changed_files(spark, mani, v_app - 1, v_app)
     append_scoped = (
         not ch_app["removed"]
@@ -4390,20 +4330,10 @@ def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
         f"_cell={out['cells_scoped'][0]}/" in f
         for f in ch_del["added"] + ch_del["removed"]
     )
-    after = {
-        r["vec_id"]
-        for r in ivf_topk_indexed(
-            spark, mani, qvec, k=5, n_probe=2, exclude_id=0
-        ).collect()
-    }
+    after = _served(5)
     delete_served_out = bool(after) and not (after & set(before_ids))
     restore_table(spark, mani, v_app)
-    restored = {
-        r["vec_id"]
-        for r in ivf_topk_indexed(
-            spark, mani, qvec, k=6, n_probe=2, exclude_id=0
-        ).collect()
-    }
+    restored = _served(6)
     restore_serves = set(before_ids) <= restored
 
     # r11: in-place re-clustering (rebalance_ann_index) — one atomic
@@ -4413,20 +4343,10 @@ def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
         rebalance_ann_index,
     )
 
-    pre = {
-        r["vec_id"]
-        for r in ivf_topk_indexed(
-            spark, mani, qvec, k=5, n_probe=2, exclude_id=0
-        ).collect()
-    }
+    pre = _served(5)
     v_pre = int(latest_manifest(spark, mani)["version"])
     rb = rebalance_ann_index(spark, mani, txn=("probe_maint", 1))
-    post = {
-        r["vec_id"]
-        for r in ivf_topk_indexed(
-            spark, mani, qvec, k=5, n_probe=2, exclude_id=0
-        ).collect()
-    }
+    post = _served(5)
     rb_replay = rebalance_ann_index(spark, mani, txn=("probe_maint", 1))
     rebalance_ok = (
         rb["version"] == v_pre + 1
@@ -4451,12 +4371,7 @@ def ss_ann_manifest_index(spark: SparkSession, sf: str) -> DataFrame:
     thr = (max(counts) / sum(counts)) - 1e-9
     n_cells_pre = int(ann_index_meta(mani, spark)["n_cells"])
     hs = split_hot_cells(spark, mani, hot_share=thr, txn=("probe_maint", 2))
-    post_hs = {
-        r["vec_id"]
-        for r in ivf_topk_indexed(
-            spark, mani, qvec, k=5, n_probe=2, exclude_id=0
-        ).collect()
-    }
+    post_hs = _served(5)
     hs_replay = split_hot_cells(
         spark, mani, hot_share=thr, txn=("probe_maint", 2)
     )
@@ -4808,8 +4723,8 @@ def ss_index_sync(spark: SparkSession, sf: str) -> DataFrame:
     from ensembl_database_loader_spark.operators.similarity import (
         _assign_cells,
         ann_index_meta,
+        ann_topk,
         build_ann_index,
-        ivf_topk_many_indexed,
     )
     from ensembl_database_loader_spark.sinks.manifest import (
         changed_files,
@@ -5004,9 +4919,7 @@ def ss_index_sync(spark: SparkSession, sf: str) -> DataFrame:
             F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
         )
         ann_serving = tuple(
-            ivf_topk_many_indexed(
-                spark, ann_idx, qe, "qid", "qv", k=5, n_probe=8
-            )
+            ann_topk(spark, ann_idx, qe, k=5, n_probe=8, qvec_col="qv")
             .agg(
                 F.count(F.lit(1)).cast("bigint").alias("sy_ann_n"),
                 F.sum("qid").cast("bigint").alias("sy_ann_qid_sum"),

@@ -640,8 +640,9 @@ MERGE_SPECS: dict[str, list[tuple[str, list[tuple[str, str]]]]] = {
                 ("pqix_bytes_lt_int8", "pqix_bytes_lt_int8"),
             ],
         ),
-        # r10: batch-query ANN — 100 queries in one plan, row-identical
-        # to the single-query loop + an independent numpy mirror
+        # r10: batch-query ANN — 100 queries in one plan, each of 8
+        # row-identical to its 1-element batch + an independent numpy
+        # mirror
         (
             "ss_ann_batch",
             [
@@ -651,9 +652,9 @@ MERGE_SPECS: dict[str, list[tuple[str, list[tuple[str, str]]]]] = {
                 ("bq_matches_mirror", "bq_matches_mirror"),
             ],
         ),
-        # r11: batch ANN over MATERIALIZED indexes (float IVF + PQ ADC,
-        # the DataFrame-shaped PQ batch) — all hash-gated row-identical
-        # to their single-query operators
+        # r11: batch ANN over MATERIALIZED indexes (float IVF + PQ ADC)
+        # — a 1-element list batch hash-gated row-identical to its
+        # qid's rows in the DataFrame batch
         (
             "ss_ann_batch_indexed",
             [
@@ -661,9 +662,6 @@ MERGE_SPECS: dict[str, list[tuple[str, list[tuple[str, str]]]]] = {
                 ("bi_pq_matches", "bi_pq_matches"),
                 ("bi_ivf_pairs", "bi_ivf_pairs"),
                 ("bi_pq_pairs", "bi_pq_pairs"),
-                ("bi_pq_df_matches", "bi_pq_df_matches"),
-                ("bi_gemm_matches", "bi_gemm_matches"),
-                ("bi_pq_gemm_matches", "bi_pq_gemm_matches"),
             ],
         ),
         # r11: BM25 sparse retrieval — value-exact top-5 rows per query

@@ -36,9 +36,8 @@ from ensembl_database_loader_spark.operators.dedup import (  # noqa: E402
     simhash64_pairs_banded,
 )
 from ensembl_database_loader_spark.operators.similarity import (  # noqa: E402
+    ann_topk,
     build_ann_index,
-    ivf_topk,
-    ivf_topk_indexed,
     lsh_bucket_topk,
 )
 from ensembl_database_loader_spark.session import get_spark  # noqa: E402
@@ -124,14 +123,13 @@ def main() -> int:
         help="batch-ANN width scaling over materialized indexes: "
         "'<vec_reps>:<q1>,<q2>,...' — build float + PQ indexes on "
         "vec_reps-replicated embeddings, then run each query-batch "
-        "width through ivf_topk_many_indexed and pq_topk_many_indexed_df; "
+        "width through ann_topk (the scorer follows the width); "
         "empty = skip",
     )
     ap.add_argument(
-        "--r11-ops", default="ivf,pq_df,ivf_gemm,pq_gemm",
-        help="which r11-batch scorers to time (comma subset of "
-        "ivf,pq_df,ivf_gemm,pq_gemm) — re-measure one without re-paying "
-        "the others",
+        "--r11-ops", default="ivf,pq",
+        help="which r11-batch index kinds to time (comma subset of "
+        "ivf,pq) — re-measure one without re-paying the other",
     )
     args = ap.parse_args()
 
@@ -263,13 +261,6 @@ def main() -> int:
         out.append(rec)
         print(json.dumps(rec), flush=True)
 
-        t0 = time.perf_counter()
-        top = ivf_topk(e, "vec_id", "embedding", query_id=0, k=5).collect()
-        dt = time.perf_counter() - t0
-        rec = {"op": "ss_ann_ivf", "n_vecs": n, "sec": round(dt, 2), "topk": len(top)}
-        out.append(rec)
-        print(json.dumps(rec), flush=True)
-
         # materialized-index serving path: build once (timed separately),
         # then the query reads ONLY its probed cell partitions — query
         # cost should stay flat in corpus size
@@ -286,7 +277,7 @@ def main() -> int:
             .first()[0]
         ]
         t0 = time.perf_counter()
-        top = ivf_topk_indexed(spark, idx, qvec, k=5, exclude_id=0).collect()
+        top = ann_topk(spark, idx, [(0, qvec)], k=5, exclude_self=True).collect()
         dt = time.perf_counter() - t0
         rec = {"op": "ss_ann_ivf_indexed", "n_vecs": n, "build_sec": round(build_dt, 2),
                "query_sec": round(dt, 2), "topk": len(top)}  # fmt: skip
@@ -722,8 +713,6 @@ def main() -> int:
 
         from ensembl_database_loader_spark.operators.similarity import (
             build_ann_index,
-            ivf_topk_many_indexed,
-            pq_topk_many_indexed_df,
         )
 
         reps_s, qcounts_s = args.r11_batch.split(":")
@@ -755,50 +744,15 @@ def main() -> int:
                 F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
             ).localCheckpoint()
 
-            if "ivf" in ops:
+            for op, path in (("ivf", flat_p), ("pq", pq_p)):
+                if op not in ops:
+                    continue
                 t0 = time.perf_counter()
-                got = ivf_topk_many_indexed(
-                    spark, flat_p, queries, "qid", "qvec", k=10, n_probe=8,
-                    exclude_self=True,
+                got = ann_topk(
+                    spark, path, queries, k=10, n_probe=8, exclude_self=True
                 ).count()
                 dt = time.perf_counter() - t0
-                rec = {"op": "ss_ann_batch_ivf_indexed", "n_vecs": n,
-                       "n_queries": nq, "sec": round(dt, 2), "rows": int(got)}  # fmt: skip
-                out.append(rec)
-                print(json.dumps(rec), flush=True)
-
-            if "pq_df" in ops:
-                t0 = time.perf_counter()
-                got = pq_topk_many_indexed_df(
-                    spark, pq_p, queries, "qid", "qvec", k=10, n_probe=8,
-                    exclude_self=True,
-                ).count()
-                dt = time.perf_counter() - t0
-                rec = {"op": "ss_ann_batch_pq_df", "n_vecs": n,
-                       "n_queries": nq, "sec": round(dt, 2), "rows": int(got)}  # fmt: skip
-                out.append(rec)
-                print(json.dumps(rec), flush=True)
-
-            if "ivf_gemm" in ops:
-                t0 = time.perf_counter()
-                got = ivf_topk_many_indexed(
-                    spark, flat_p, queries, "qid", "qvec", k=10, n_probe=8,
-                    exclude_self=True, scorer="gemm",
-                ).count()
-                dt = time.perf_counter() - t0
-                rec = {"op": "ss_ann_batch_ivf_gemm", "n_vecs": n,
-                       "n_queries": nq, "sec": round(dt, 2), "rows": int(got)}  # fmt: skip
-                out.append(rec)
-                print(json.dumps(rec), flush=True)
-
-            if "pq_gemm" in ops:
-                t0 = time.perf_counter()
-                got = pq_topk_many_indexed_df(
-                    spark, pq_p, queries, "qid", "qvec", k=10, n_probe=8,
-                    exclude_self=True, scorer="gemm",
-                ).count()
-                dt = time.perf_counter() - t0
-                rec = {"op": "ss_ann_batch_pq_gemm", "n_vecs": n,
+                rec = {"op": f"ss_ann_batch_{op}_indexed", "n_vecs": n,
                        "n_queries": nq, "sec": round(dt, 2), "rows": int(got)}  # fmt: skip
                 out.append(rec)
                 print(json.dumps(rec), flush=True)

@@ -13,10 +13,10 @@ from pyspark.sql import functions as F
 
 import ensembl_database_loader_spark.sinks.manifest as M
 from ensembl_database_loader_spark.operators.similarity import (
+    ann_topk,
     append_to_ann_index,
     build_ann_index,
     delete_from_ann_index,
-    ivf_topk_indexed,
 )
 
 DIM = 16
@@ -81,7 +81,7 @@ def test_manifest_index_scan_prunes_to_probed_cells(spark, clustered, tmp_path):
     build_ann_index(
         clustered, "vec_id", "embedding", mani, n_cells=N_CLUSTERS,
     )
-    q = ivf_topk_indexed(spark, mani, _qvec(clustered), k=5, n_probe=2)
+    q = ann_topk(spark, mani, [(0, _qvec(clustered))], k=5, n_probe=2)
     files = q.inputFiles()
     cells = {f.split("_cell=")[1].split("/")[0] for f in files}
     assert len(cells) == 2
@@ -98,7 +98,7 @@ def test_manifest_index_append_atomic_and_exactly_once(spark, clustered, tmp_pat
         "vec_id bigint, embedding array<double>",
     )
     append_to_ann_index(plant, mani, txn=("ann_ingest", 1))
-    top = ivf_topk_indexed(spark, mani, qv, k=1, n_probe=2, exclude_id=0)
+    top = ann_topk(spark, mani, [(0, qv)], k=1, n_probe=2, exclude_self=True)
     assert top.first()["vec_id"] == 100_000
     v_after = M.latest_manifest(spark, mani)["version"]
     # replayed batch commits nothing
@@ -119,9 +119,12 @@ def test_manifest_index_delete_scoped_and_restorable(spark, clustered, tmp_path)
         clustered, "vec_id", "embedding", mani, n_cells=N_CLUSTERS,
     )
     qv = _qvec(clustered)
-    before = {r["vec_id"] for r in ivf_topk_indexed(
-        spark, mani, qv, k=5, n_probe=2, exclude_id=0
-    ).collect()}
+    def _served():
+        return {r["vec_id"] for r in ann_topk(
+            spark, mani, [(0, qv)], k=5, n_probe=2, exclude_self=True
+        ).collect()}
+
+    before = _served()
     victims = clustered.filter(F.col("vec_id").isin(sorted(before)))
     v_pre = M.latest_manifest(spark, mani)["version"]
     out = delete_from_ann_index(spark, mani, victims)
@@ -131,15 +134,11 @@ def test_manifest_index_delete_scoped_and_restorable(spark, clustered, tmp_path)
     ch = M.changed_files(spark, mani, v_pre, out["version"])
     cell = f"_cell={out['cells_scoped'][0]}/"
     assert all(cell in f for f in ch["added"] + ch["removed"])
-    after = {r["vec_id"] for r in ivf_topk_indexed(
-        spark, mani, qv, k=5, n_probe=2, exclude_id=0
-    ).collect()}
+    after = _served()
     assert after and not (after & before)
     # metadata-only rollback: the victims serve again
     M.restore_table(spark, mani, v_pre)
-    restored = {r["vec_id"] for r in ivf_topk_indexed(
-        spark, mani, qv, k=5, n_probe=2, exclude_id=0
-    ).collect()}
+    restored = _served()
     assert restored == before
     # no-match delete is a no-op (no commit)
     ghost = spark.createDataFrame(
@@ -210,7 +209,7 @@ def test_streaming_ingest_into_manifest_index(spark, clustered, tmp_path):
     n_batches = int(head["version"]) - v0
     assert 1 <= n_batches <= 2
     assert int(head["txn"]["vec_ingest"]) >= 0
-    got = ivf_topk_indexed(spark, path, qvec, k=4, n_probe=2, exclude_id=0)
+    got = ann_topk(spark, path, [(0, qvec)], k=4, n_probe=2, exclude_self=True)
     assert {r["vec_id"] for r in got.collect()} == {
         1_000_000, 1_000_001, 1_000_002, 1_000_003
     }

@@ -1,5 +1,5 @@
 """IVF x PQ materialized index (similarity.build_ann_index
-quantized='pq') and batch-query ANN (ivf_topk_many): recall on a
+quantized='pq') and batch-query ANN (ann_topk): recall on a
 planted-cluster corpus, residual-vs-plain encoding, stored shape,
 append path, guards, and batch/single-query parity."""
 
@@ -12,13 +12,10 @@ from pyspark.sql import functions as F
 
 from ensembl_database_loader_spark.operators.similarity import (
     ann_index_meta,
+    ann_topk,
     append_to_ann_index,
     build_ann_index,
     cosine_topk,
-    ivf_topk,
-    ivf_topk_indexed,
-    ivf_topk_many,
-    pq_topk_indexed,
 )
 
 DIM = 16
@@ -54,8 +51,13 @@ def clustered(spark):
 
 
 def _recall(top_df, exact_ids):
-    got = {r[0] for r in top_df.collect()}
+    got = {r["vec_id"] for r in top_df.collect()}
     return len(got & exact_ids) / len(exact_ids)
+
+
+def _one(qvec, qid=0):
+    """A 1-element query batch."""
+    return [(qid, qvec)]
 
 
 def test_pq_index_recall_and_shape(spark, clustered, tmp_path):
@@ -82,13 +84,13 @@ def test_pq_index_recall_and_shape(spark, clustered, tmp_path):
         for r in cosine_topk(clustered, "vec_id", "embedding", 0, 5).collect()
     }
     # ADC-only path
-    adc = pq_topk_indexed(spark, path, qvec, k=5, n_probe=2, exclude_id=0)
+    adc = ann_topk(spark, path, _one(qvec), k=5, n_probe=2, exclude_self=True)
     assert adc.count() == 5
     assert _recall(adc, exact) >= 0.8
     # refine path: re-rank against full-precision vectors fetched by id
-    ref = pq_topk_indexed(
-        spark, path, qvec, k=5, n_probe=2, refine=25,
-        corpus=clustered, exclude_id=0,
+    ref = ann_topk(
+        spark, path, _one(qvec), k=5, n_probe=2, refine=25,
+        corpus=clustered, exclude_self=True,
     )
     assert _recall(ref, exact) >= 0.8
     # re-ranked cosines are the TRUE cosines (match the exact operator)
@@ -116,7 +118,9 @@ def test_pq_residual_beats_or_ties_plain(spark, clustered, tmp_path):
             n_cells=N_CLUSTERS, quantized="pq", pq_m=4, pq_k=16,
             pq_residual=residual,
         )
-        top = pq_topk_indexed(spark, path, qvec, k=5, n_probe=2, exclude_id=0)
+        top = ann_topk(
+            spark, path, _one(qvec), k=5, n_probe=2, exclude_self=True
+        )
         recalls[residual] = _recall(top, exact)
     assert recalls[True] >= recalls[False]
     assert recalls[True] >= 0.8
@@ -131,16 +135,18 @@ def test_pq_index_append_and_guards(spark, clustered, tmp_path):
     # append member 1 of cluster 0 encoded with the PERSISTED codebooks
     append_to_ann_index(clustered.filter(F.col("vec_id") == 8), path)
     qvec = list(clustered.filter(F.col("vec_id") == 0).first()["embedding"])
-    top = pq_topk_indexed(spark, path, qvec, k=39, n_probe=1, exclude_id=0)
-    ids = {r[0] for r in top.collect()}
+    top = ann_topk(
+        spark, path, _one(qvec), k=39, n_probe=1, exclude_self=True
+    )
+    ids = {r["vec_id"] for r in top.collect()}
     assert 8 in ids  # the appended row is queryable
-    # wrong-path guards
-    with pytest.raises(ValueError, match="use pq_topk_indexed"):
-        ivf_topk_indexed(spark, path, qvec, k=5)
+    # guards: refine is PQ-only and needs the corpus
     flat = str(tmp_path / "flat_idx")
     build_ann_index(clustered, "vec_id", "embedding", flat, n_cells=4)
-    with pytest.raises(ValueError, match="not PQ-quantized"):
-        pq_topk_indexed(spark, flat, qvec, k=5)
+    with pytest.raises(ValueError, match="PQ indexes only"):
+        ann_topk(spark, flat, _one(qvec), refine=10, corpus=clustered)
+    with pytest.raises(ValueError, match="needs the corpus"):
+        ann_topk(spark, path, _one(qvec), refine=10)
     with pytest.raises(ValueError, match="quantized must be"):
         build_ann_index(
             clustered, "vec_id", "embedding", flat, n_cells=4,
@@ -153,48 +159,10 @@ def test_pq_index_append_and_guards(spark, clustered, tmp_path):
         )
 
 
-def test_ivf_topk_many_matches_single_query_loop(spark, clustered):
-    """Every batch row must equal the single-query operator's result —
-    same centroids, same probes, same tie-break."""
-    queries = clustered.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    batch = ivf_topk_many(
-        queries, clustered, "qid", "qvec", "vec_id", "embedding",
-        k=3, n_cells=N_CLUSTERS, n_probe=2, exclude_self=True,
-    )
-    got = {
-        (r.qid, r.rank): (r.vec_id, r.cos) for r in batch.collect()
-    }
-    assert len(got) == 10 * 3
-    for qid in range(10):
-        single = ivf_topk(
-            clustered, "vec_id", "embedding", query_id=qid, k=3,
-            n_cells=N_CLUSTERS, n_probe=2,
-        ).collect()
-        for rank, r in enumerate(single, start=1):
-            assert got[(qid, rank)] == (r.vec_id, r.cos), (
-                f"qid={qid} rank={rank}: batch {got[(qid, rank)]} "
-                f"vs single ({r.vec_id}, {r.cos})"
-            )
-
-
-def test_ivf_topk_many_guards(spark, clustered):
-    q = clustered.select(
-        F.col("vec_id").alias("vec_id"), F.col("embedding").alias("qvec")
-    )
-    with pytest.raises(ValueError, match="must differ"):
-        ivf_topk_many(q, clustered, "vec_id", "qvec", "vec_id", "embedding")
-
-
 def test_ivf_topk_many_indexed_matches_single_query(spark, clustered, tmp_path):
-    """Batch-over-index: per-query rows identical to ivf_topk_indexed
-    (float AND int8 indexes); the scan prunes to the union of probed
-    cells; PQ indexes are rejected with a pointer to the ADC path."""
-    from ensembl_database_loader_spark.operators.similarity import (
-        ivf_topk_many_indexed,
-    )
-
+    """Batch-over-index: a frame batch's per-query rows are identical
+    to 1-element list batches (float AND int8 indexes); a frame whose
+    qid column is the index id is rejected."""
     queries = clustered.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
@@ -207,35 +175,28 @@ def test_ivf_topk_many_indexed_matches_single_query(spark, clustered, tmp_path):
             clustered, "vec_id", "embedding", path,
             n_cells=N_CLUSTERS, quantized=quant,
         )
-        batch = ivf_topk_many_indexed(
-            spark, path, queries, "qid", "qvec",
-            k=3, n_probe=2, exclude_self=True,
+        batch = ann_topk(
+            spark, path, queries, k=3, n_probe=2, exclude_self=True
         )
         got = {(r.qid, r.rank): (r.vec_id, r.cos) for r in batch.collect()}
         assert len(got) == 6 * 3
         for qid, qv in qvecs.items():
-            single = ivf_topk_indexed(
-                spark, path, qv, k=3, n_probe=2, exclude_id=qid
+            single = ann_topk(
+                spark, path, _one(qv, qid), k=3, n_probe=2, exclude_self=True
             ).collect()
-            for rank, r in enumerate(single, start=1):
-                assert got[(qid, rank)] == (r.vec_id, r.cos)
-    # PQ index rejected
-    pq_path = str(tmp_path / "idx_pq")
-    build_ann_index(
-        clustered, "vec_id", "embedding", pq_path,
-        n_cells=N_CLUSTERS, quantized="pq", pq_m=4, pq_k=16,
-    )
-    with pytest.raises(ValueError, match="ADC path"):
-        ivf_topk_many_indexed(spark, pq_path, queries, "qid", "qvec")
+            for r in single:
+                assert got[(qid, r.rank)] == (r.vec_id, r.cos)
+    with pytest.raises(ValueError, match="must differ"):
+        ann_topk(
+            spark, path, queries.withColumnRenamed("qid", "vec_id"),
+            qid_col="vec_id",
+        )
 
 
 def test_pq_topk_many_indexed_matches_single_query(spark, clustered, tmp_path):
-    """Batch ADC over the PQ index: per-query rows identical to
-    pq_topk_indexed, both ADC-only and with refine re-rank; guards."""
-    from ensembl_database_loader_spark.operators.similarity import (
-        pq_topk_many_indexed,
-    )
-
+    """Batch ADC over the PQ index: a list batch's per-query rows are
+    identical to 1-element batches, both ADC-only and with refine
+    re-rank; guards."""
     path = str(tmp_path / "pq_batch")
     build_ann_index(
         clustered, "vec_id", "embedding", path,
@@ -244,73 +205,59 @@ def test_pq_topk_many_indexed_matches_single_query(spark, clustered, tmp_path):
     qrows = clustered.filter(F.col("vec_id") < 6).collect()
     queries = [(r.vec_id, list(r.embedding)) for r in qrows]
 
-    batch = pq_topk_many_indexed(
-        spark, path, queries, k=3, n_probe=2, exclude_self=True
-    )
+    batch = ann_topk(spark, path, queries, k=3, n_probe=2, exclude_self=True)
     got = {(r.qid, r.rank): (r.vec_id, r.adc_dist) for r in batch.collect()}
     assert len(got) == 6 * 3
     for qid, qv in queries:
-        single = pq_topk_indexed(
-            spark, path, qv, k=3, n_probe=2, exclude_id=qid
+        single = ann_topk(
+            spark, path, _one(qv, qid), k=3, n_probe=2, exclude_self=True
         ).collect()
-        for rank, r in enumerate(single, start=1):
-            assert got[(qid, rank)] == (r.vec_id, r.adc_dist)
+        for r in single:
+            assert got[(qid, r.rank)] == (r.vec_id, r.adc_dist)
 
-    ref = pq_topk_many_indexed(
+    ref = ann_topk(
         spark, path, queries, k=3, n_probe=2, refine=20,
         corpus=clustered, exclude_self=True,
     )
     gotr = {(r.qid, r.rank): (r.vec_id, r.cos) for r in ref.collect()}
     assert len(gotr) == 6 * 3
     for qid, qv in queries:
-        single = pq_topk_indexed(
-            spark, path, qv, k=3, n_probe=2, refine=20,
-            corpus=clustered, exclude_id=qid,
+        single = ann_topk(
+            spark, path, _one(qv, qid), k=3, n_probe=2, refine=20,
+            corpus=clustered, exclude_self=True,
         ).collect()
-        for rank, r in enumerate(single, start=1):
-            assert gotr[(qid, rank)] == (r.vec_id, r.cos)
+        for r in single:
+            assert gotr[(qid, r.rank)] == (r.vec_id, r.cos)
 
-    with pytest.raises(ValueError, match="non-empty"):
-        pq_topk_many_indexed(spark, path, [])
+    assert ann_topk(spark, path, []).count() == 0
     with pytest.raises(ValueError, match="duplicate qid"):
-        pq_topk_many_indexed(spark, path, [(1, queries[0][1])] * 2)
-    with pytest.raises(ValueError, match="needs the corpus"):
-        pq_topk_many_indexed(spark, path, queries, refine=10)
-    flat = str(tmp_path / "flat2")
-    build_ann_index(clustered, "vec_id", "embedding", flat, n_cells=4)
-    with pytest.raises(ValueError, match="ivf_topk_many_indexed"):
-        pq_topk_many_indexed(spark, flat, queries)
+        ann_topk(spark, path, [(1, queries[0][1])] * 2)
 
 
 def test_batch_operators_reject_duplicate_qids(spark, clustered, tmp_path):
     """Duplicate qids silently merge candidate pools inside the per-qid
-    window; all three batch operators must reject them the same way
-    (pq_topk_many_indexed already did)."""
-    from ensembl_database_loader_spark.operators.similarity import (
-        ivf_topk_many_indexed,
-    )
-
+    window; both query shapes must reject them, on float and PQ
+    indexes."""
     dup = clustered.filter(F.col("vec_id") < 2).select(
         F.lit(7).alias("qid"), F.col("embedding").alias("qvec")
     )
-    with pytest.raises(ValueError, match="duplicate qid"):
-        ivf_topk_many(dup, clustered, "qid", "qvec", "vec_id", "embedding")
-    path = str(tmp_path / "dupq_idx")
-    build_ann_index(clustered, "vec_id", "embedding", path, n_cells=4)
-    with pytest.raises(ValueError, match="duplicate qid"):
-        ivf_topk_many_indexed(spark, path, dup, "qid", "qvec")
+    dup_list = [tuple(r) for r in dup.collect()]
+    for quant in (False, "pq"):
+        path = str(tmp_path / f"dupq_idx_{quant}")
+        build_ann_index(
+            clustered, "vec_id", "embedding", path, n_cells=4,
+            quantized=quant, pq_m=4, pq_k=16,
+        )
+        for q in (dup, dup_list):
+            with pytest.raises(ValueError, match="duplicate qid"):
+                ann_topk(spark, path, q)
 
 
 def test_pq_df_form_matches_list_form_and_guards(spark, clustered, tmp_path):
     """The DataFrame-shaped PQ batch (queries as a frame, ADC tables
-    computed executor-side) is row-identical to the list form — by
-    delegation, but gate the public API: column names, dup check,
-    refine parity."""
-    from ensembl_database_loader_spark.operators.similarity import (
-        pq_topk_many_indexed,
-        pq_topk_many_indexed_df,
-    )
-
+    computed executor-side) is row-identical to the list form (tables
+    computed on the driver) — gate the public API: column names, dup
+    check, refine parity."""
     path = str(tmp_path / "pq_df")
     build_ann_index(
         clustered, "vec_id", "embedding", path,
@@ -321,30 +268,26 @@ def test_pq_df_form_matches_list_form_and_guards(spark, clustered, tmp_path):
     qdf = clustered.filter(F.col("vec_id") < 6).select(
         F.col("vec_id").alias("q"), F.col("embedding").alias("v")
     )
-    a = pq_topk_many_indexed(
-        spark, path, qlist, k=3, n_probe=2, exclude_self=True
-    )
-    b = pq_topk_many_indexed_df(
-        spark, path, qdf, "q", "v", k=3, n_probe=2, exclude_self=True
-    )
+    kw = dict(k=3, n_probe=2, exclude_self=True)
+    a = ann_topk(spark, path, qlist, qid_col="q", **kw)
+    b = ann_topk(spark, path, qdf, qid_col="q", qvec_col="v", **kw)
+    assert b.columns == ["q", "vec_id", "adc_dist", "rank"]
     rows_a = sorted(map(tuple, a.collect()))
     rows_b = sorted(map(tuple, b.collect()))
     assert rows_a == rows_b and len(rows_a) == 6 * 3
     # refine parity between forms
-    ra = pq_topk_many_indexed(
-        spark, path, qlist, k=3, n_probe=2, refine=20,
-        corpus=clustered, exclude_self=True,
-    )
-    rb = pq_topk_many_indexed_df(
-        spark, path, qdf, "q", "v", k=3, n_probe=2, refine=20,
-        corpus=clustered, exclude_self=True,
+    ra = ann_topk(spark, path, qlist, refine=20, corpus=clustered, **kw)
+    rb = ann_topk(
+        spark, path, qdf, qid_col="q", qvec_col="v", refine=20,
+        corpus=clustered, **kw,
     )
     assert sorted(map(tuple, ra.collect())) == sorted(map(tuple, rb.collect()))
     # duplicate qids rejected in the df form too
     dup = qdf.select(F.lit(1).alias("q"), "v")
     with pytest.raises(ValueError, match="duplicate q"):
-        pq_topk_many_indexed_df(spark, path, dup, "q", "v")
+        ann_topk(spark, path, dup, qid_col="q", qvec_col="v")
     with pytest.raises(ValueError, match="must differ"):
-        pq_topk_many_indexed_df(
-            spark, path, qdf.withColumnRenamed("q", "vec_id"), "vec_id", "v"
+        ann_topk(
+            spark, path, qdf.withColumnRenamed("q", "vec_id"),
+            qid_col="vec_id", qvec_col="v",
         )

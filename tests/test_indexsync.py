@@ -24,9 +24,9 @@ from ensembl_database_loader_spark.operators.indexsync import (
 from ensembl_database_loader_spark.operators.similarity import (
     _assign_cells,
     ann_index_meta,
+    ann_topk,
     build_ann_index,
     delete_from_ann_index,
-    ivf_topk_indexed,
     split_hot_cells,
 )
 
@@ -143,10 +143,10 @@ def test_sync_ann_index_tracks_source_and_replays_noop(spark, src, tmp_path):
     )
     # serving: the inserted near-duplicate is rank 1, deleted ids are
     # gone, the flipped (updated) doc left the cluster's neighborhood
-    got = ivf_topk_indexed(
-        spark, idx, _vec(0, 90), k=30, n_probe=N_CLUSTERS
+    got = ann_topk(
+        spark, idx, [(0, _vec(0, 90))], k=30, n_probe=N_CLUSTERS
     ).collect()
-    ids = [r["doc_id"] for r in got]
+    ids = [r["doc_id"] for r in sorted(got, key=lambda r: r["rank"])]
     assert ids[0] == 1000
     assert not {2, 3, 7} & set(ids)  # deleted
     assert 0 not in ids  # updated: vector flipped out of the cluster
@@ -178,8 +178,8 @@ def test_sync_ann_delete_only_wave_and_crash_rerun_converge(
     assert sync_ann_index(spark, idx, src)["noop"] is True
     served = {
         r["doc_id"]
-        for r in ivf_topk_indexed(
-            spark, idx, _vec(0, 1), k=50, n_probe=N_CLUSTERS
+        for r in ann_topk(
+            spark, idx, [(0, _vec(0, 1))], k=50, n_probe=N_CLUSTERS
         ).collect()
     }
     assert not {4, 8} & served

@@ -119,10 +119,13 @@ def test_ann_lsh_finds_planted_neardup(spark, sf_dir):
     assert 999999 in top, top
 
 
-def test_ivf_topk_finds_planted_neardup(spark, sf_dir):
+def test_ivf_topk_finds_planted_neardup(spark, sf_dir, tmp_path):
     """IVF must route a ~0.9999-cosine near-dup of the query into a
     probed cell and surface it in the approximate top-k."""
-    from ensembl_database_loader_spark.operators.similarity import ivf_topk
+    from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
+        build_ann_index,
+    )
 
     e = table(spark, sf_dir, "embeddings")
     planted = e.filter(F.col("vec_id") == 0).select(
@@ -132,10 +135,12 @@ def test_ivf_topk_finds_planted_neardup(spark, sf_dir):
         ),
         F.col("label"),
     )
+    path = str(tmp_path / "idx")
+    build_ann_index(e.unionByName(planted), "vec_id", "embedding", path)
     top = [
         r.vec_id
-        for r in ivf_topk(
-            e.unionByName(planted), "vec_id", "embedding", query_id=0, k=5
+        for r in ann_topk(
+            spark, path, [(0, _query_vec(e))], k=5, exclude_self=True
         ).collect()
     ]
     assert 888888 in top, top
@@ -151,14 +156,20 @@ def _query_vec(e, query_id=0):
 
 def test_ann_index_ivf_matches_unindexed(spark, sf_dir, tmp_path):
     """The materialized IVF index must return ROW-IDENTICAL results to
-    the per-query-assignment ivf_topk — under both the grid init and
-    trained k-means centroids — and persist its meta for stateless
-    reuse (a later session / appended batch needs only the json)."""
+    an exact cosine re-rank of the same probed cells computed from the
+    raw frame (stateless re-assignment with the index's centroids) —
+    under both the grid init and trained k-means centroids — and
+    persist its meta for stateless reuse (a later session / appended
+    batch needs only the json)."""
+    import numpy as np
+
     from ensembl_database_loader_spark.operators.similarity import (
+        _assign_cells,
+        _probe_cells_np,
         ann_index_meta,
+        ann_topk,
         build_ann_index,
-        ivf_topk,
-        ivf_topk_indexed,
+        cosine_topk,
         kmeans_centroids,
     )
 
@@ -173,12 +184,15 @@ def test_ann_index_ivf_matches_unindexed(spark, sf_dir, tmp_path):
         used = build_ann_index(
             e, "vec_id", "embedding", path, n_cells=8, centroids=cents
         )
-        direct = ivf_topk(
-            e, "vec_id", "embedding", 0, k=5, n_cells=8, centroids=used
-        ).collect()
-        indexed = ivf_topk_indexed(
-            spark, path, qvec, k=5, n_probe=4, exclude_id=0
-        ).collect()
+        cn = np.asarray(used) / np.linalg.norm(used, axis=1, keepdims=True)
+        _, order = _probe_cells_np(cn, 4, np.asarray([qvec]))
+        probed = _assign_cells(e, "embedding", used).filter(
+            F.col("_cell").isin([int(c) for c in order[0]])
+        )
+        direct = cosine_topk(probed, "vec_id", "embedding", 0, k=5).collect()
+        indexed = ann_topk(
+            spark, path, [(0, qvec)], k=5, n_probe=4, exclude_self=True
+        ).orderBy("rank").select("vec_id", "cos").collect()
         assert [tuple(r) for r in indexed] == [tuple(r) for r in direct], label
 
     meta = ann_index_meta(str(tmp_path / "idx_kmeans"), spark)
@@ -193,9 +207,9 @@ def test_ann_index_append_equals_full_build(spark, sf_dir, tmp_path):
     stateless given the persisted centroids, so cell membership is
     identical)."""
     from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
         append_to_ann_index,
         build_ann_index,
-        ivf_topk_indexed,
     )
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -210,9 +224,11 @@ def test_ann_index_append_equals_full_build(spark, sf_dir, tmp_path):
     build_ann_index(half1, "vec_id", "embedding", inc_path, centroids=cents)
     append_to_ann_index(half2, inc_path)
 
-    full = ivf_topk_indexed(spark, full_path, qvec, k=5, exclude_id=0).collect()
-    inc = ivf_topk_indexed(spark, inc_path, qvec, k=5, exclude_id=0).collect()
-    assert [tuple(r) for r in inc] == [tuple(r) for r in full]
+    full, inc = (
+        sorted(ann_topk(spark, p, [(0, qvec)], k=5, exclude_self=True).collect())
+        for p in (full_path, inc_path)
+    )
+    assert inc == full
 
 
 def test_regex_pretokens_unit(spark):
@@ -712,7 +728,7 @@ def test_connected_components_random_graphs_match_union_find(spark):
         assert got == expected, f"seed={seed}"
 
 
-def test_kmeans_centroids_recover_separated_clusters(spark):
+def test_kmeans_centroids_recover_separated_clusters(spark, tmp_path):
     """Three well-separated synthetic clusters: after Lloyd's rounds,
     every point's nearest trained centroid must put its whole cluster
     in one cell (purity 1.0), and trained centroids must sit near the
@@ -720,7 +736,8 @@ def test_kmeans_centroids_recover_separated_clusters(spark):
     import numpy as np
 
     from ensembl_database_loader_spark.operators.similarity import (
-        ivf_topk,
+        ann_topk,
+        build_ann_index,
         kmeans_centroids,
     )
 
@@ -750,10 +767,11 @@ def test_kmeans_centroids_recover_separated_clusters(spark):
     best = (tm @ cn.T).max(axis=1)
     assert (best > 0.99).all(), best
 
-    # trained centroids slot into ivf_topk unchanged
-    top = ivf_topk(
-        df, "vec_id", "embedding", query_id=0, k=3, n_cells=3, n_probe=1,
-        centroids=cents.tolist(),
+    # trained centroids slot into the index build unchanged
+    path = str(tmp_path / "idx")
+    build_ann_index(df, "vec_id", "embedding", path, centroids=cents.tolist())
+    top = ann_topk(
+        spark, path, [(0, rows[0][1])], k=3, n_probe=1, exclude_self=True
     ).collect()
     assert len(top) == 3
     got_ids = {r.vec_id for r in top}
@@ -825,9 +843,9 @@ def test_ann_index_quantized_storage_and_append(spark, sf_dir, tmp_path):
 
     from ensembl_database_loader_spark.operators.similarity import (
         ann_index_meta,
+        ann_topk,
         append_to_ann_index,
         build_ann_index,
-        ivf_topk_indexed,
     )
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -844,8 +862,10 @@ def test_ann_index_quantized_storage_and_append(spark, sf_dir, tmp_path):
     assert "embedding" not in stored.columns
     assert dict(stored.dtypes)["q"] == "array<tinyint>"
 
-    full = ivf_topk_indexed(spark, fp, qvec, k=5, exclude_id=0).collect()
-    quant = ivf_topk_indexed(spark, qp, qvec, k=5, exclude_id=0).collect()
+    full, quant = (
+        sorted(ann_topk(spark, p, [(0, qvec)], k=5, exclude_self=True).collect())
+        for p in (fp, qp)
+    )
     overlap = {r.vec_id for r in full} & {r.vec_id for r in quant}
     assert len(overlap) >= 3  # int8 rounding may flip near-ties only
 
@@ -869,8 +889,10 @@ def test_ann_index_quantized_storage_and_append(spark, sf_dir, tmp_path):
         centroids=cents, quantized=True,
     )
     append_to_ann_index(e.filter(F.col("vec_id") % 2 == 1), inc)
-    got = ivf_topk_indexed(spark, inc, qvec, k=5, exclude_id=0).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in quant]
+    got = sorted(
+        ann_topk(spark, inc, [(0, qvec)], k=5, exclude_self=True).collect()
+    )
+    assert got == quant
 
 
 def test_quantize_scale_cancels_in_cosine(spark):

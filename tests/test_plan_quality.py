@@ -264,7 +264,7 @@ def test_cbo_column_stats_enable_broadcast_after_filter(spark, tmp_path):
 
 def test_ann_index_query_scan_is_partition_pruned(spark, tmp_path):
     """The serving-path contract of the materialized ANN index: an
-    ivf_topk_indexed query must read ONLY its n_probe probed cell
+    ann_topk query must read ONLY its n_probe probed cell
     directories — the _cell filter reaches the scan as a
     PartitionFilter, and the data actually read contains exactly the
     probed cells, not the corpus."""
@@ -272,8 +272,8 @@ def test_ann_index_query_scan_is_partition_pruned(spark, tmp_path):
 
     from ensembl_database_loader_spark.catalog import table as cat_table
     from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
         build_ann_index,
-        ivf_topk_indexed,
     )
 
     e = cat_table(spark, SF, "embeddings").select("vec_id", "embedding")
@@ -284,7 +284,7 @@ def test_ann_index_query_scan_is_partition_pruned(spark, tmp_path):
         .select(F.col("embedding").cast("array<double>"))
         .first()[0]
     )
-    q = ivf_topk_indexed(spark, path, qvec, k=5, n_probe=4, exclude_id=0)
+    q = ann_topk(spark, path, [(0, qvec)], k=5, n_probe=4, exclude_self=True)
     q.collect()
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
@@ -717,7 +717,7 @@ def test_bfs_frontier_joins_are_hash(spark):
 
 
 def test_pq_index_query_scan_is_partition_pruned(spark, tmp_path):
-    """The IVF-PQ serving path's contract: a pq_topk_indexed ADC scan
+    """The IVF-PQ serving path's contract: an ann_topk ADC scan
     must read ONLY its n_probe probed cell directories (the _cell
     filter reaches the scan as a PartitionFilter), and the scan reads
     CODES, not float vectors (ReadSchema carries the tinyint codes
@@ -726,8 +726,8 @@ def test_pq_index_query_scan_is_partition_pruned(spark, tmp_path):
 
     from ensembl_database_loader_spark.catalog import table as cat_table
     from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
         build_ann_index,
-        pq_topk_indexed,
     )
 
     e = cat_table(spark, SF, "embeddings").select("vec_id", "embedding")
@@ -741,7 +741,7 @@ def test_pq_index_query_scan_is_partition_pruned(spark, tmp_path):
         .select(F.col("embedding").cast("array<double>"))
         .first()[0]
     )
-    q = pq_topk_indexed(spark, path, qvec, k=5, n_probe=4, exclude_id=0)
+    q = ann_topk(spark, path, [(0, qvec)], k=5, n_probe=4, exclude_self=True)
     q.collect()
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
@@ -750,34 +750,37 @@ def test_pq_index_query_scan_is_partition_pruned(spark, tmp_path):
     assert "codes" in read_schema and "embedding" not in read_schema
 
 
-def test_ivf_topk_many_broadcasts_queries_single_corpus_scan(spark):
-    """The batch-ANN contract: the exploded query side broadcasts into
+def test_ivf_topk_many_broadcasts_queries_single_corpus_scan(spark, tmp_path):
+    """The narrow-batch ANN contract (ann_topk's broadcast-expression
+    scorer over a float index): the exploded query side broadcasts into
     a hash join on _cell (never a shuffled or nested-loop join), and
-    the corpus is scanned ONCE (one parquet relation in the optimized
-    plan — a second would mean per-stage re-assignment)."""
+    the index is scanned ONCE (one index relation in the optimized
+    plan — a second would mean a duplicated subtree)."""
     from pyspark.sql import functions as F
 
     from ensembl_database_loader_spark.catalog import table as cat_table
     from ensembl_database_loader_spark.operators.similarity import (
-        ivf_topk_many,
+        ann_topk,
+        build_ann_index,
     )
 
     e = cat_table(spark, SF, "embeddings").select("vec_id", "embedding")
+    path = str(tmp_path / "idx")
+    build_ann_index(e, "vec_id", "embedding", path, n_cells=8)
     queries = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    q = ivf_topk_many(
-        queries, e, "qid", "qvec", "vec_id", "embedding",
-        k=3, n_cells=8, n_probe=2, exclude_self=True,
-    )
+    q = ann_topk(spark, path, queries, k=3, n_probe=2, exclude_self=True)
     q.collect()
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan and "SortMergeJoin" not in plan
-    opt = q._jdf.queryExecution().optimizedPlan().toString()
-    # corpus + query side both read embeddings: exactly 2 relations,
-    # not 3+ (which would mean the corpus subtree was duplicated)
-    assert opt.count("Relation") <= 2
+    # index + query side (the embeddings table): exactly 2 scans in the
+    # FINAL executed plan, not 3+ (a duplicated subtree). The optimized
+    # plan also prints the query side inside the index scan's
+    # dynamic-pruning subquery, which reuses the broadcast at run time,
+    # so it is not counted.
+    assert plan.split("Initial Plan")[0].count("Scan parquet") == 2
 
 
 def test_pq_batch_df_single_pruned_scan_no_corpus_python(spark, tmp_path):
@@ -790,8 +793,8 @@ def test_pq_batch_df_single_pruned_scan_no_corpus_python(spark, tmp_path):
 
     from ensembl_database_loader_spark.catalog import table as cat_table
     from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
         build_ann_index,
-        pq_topk_many_indexed_df,
     )
 
     e = cat_table(spark, SF, "embeddings").select("vec_id", "embedding")
@@ -803,9 +806,7 @@ def test_pq_batch_df_single_pruned_scan_no_corpus_python(spark, tmp_path):
     queries = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
-    q = pq_topk_many_indexed_df(
-        spark, path, queries, k=5, n_probe=4, exclude_self=True
-    )
+    q = ann_topk(spark, path, queries, k=5, n_probe=4, exclude_self=True)
     q.collect()
     plan = q._jdf.queryExecution().executedPlan().toString()
     # AQE's toString appends the Initial Plan — gate the FINAL plan only
@@ -829,25 +830,25 @@ def test_pq_batch_df_single_pruned_scan_no_corpus_python(spark, tmp_path):
     assert plan.count("ArrowEvalPython") == 1
 
 
-def test_batch_topk_plans_one_window(spark):
+def test_batch_topk_plans_one_window(spark, tmp_path):
     """The batch per-query top-k is a single window per qid: exactly one
     Window node in the executed plan."""
     from pyspark.sql import functions as F
 
     from ensembl_database_loader_spark.catalog import table as cat_table
     from ensembl_database_loader_spark.operators.similarity import (
-        ivf_topk_many,
+        ann_topk,
+        build_ann_index,
     )
 
     e = cat_table(spark, SF, "embeddings").select("vec_id", "embedding")
+    path = str(tmp_path / "idx")
+    build_ann_index(e, "vec_id", "embedding", path, n_cells=8)
     queries = e.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
 
-    q = ivf_topk_many(
-        queries, e, "qid", "qvec", "vec_id", "embedding",
-        k=3, n_cells=8, n_probe=2,
-    )
+    q = ann_topk(spark, path, queries, k=3, n_probe=2)
     plan = q._jdf.queryExecution().executedPlan().toString()
     # "Window [" = the sort-and-rank node itself (Spark 4 also plans
     # WindowGroupLimit partial/final helpers — not counted)

@@ -109,8 +109,8 @@ def test_replicate_ann_index_serves_identically(spark, pair):
     import math
 
     from ensembl_database_loader_spark.operators.similarity import (
+        ann_topk,
         build_ann_index,
-        ivf_topk_indexed,
     )
 
     src, dst = pair
@@ -131,10 +131,10 @@ def test_replicate_ann_index_serves_identically(spark, pair):
     assert out["noop"] is False
     assert M.table_properties(spark, dst) == M.table_properties(spark, src)
     q = rows[0][1]
-    serve = lambda p: [
-        (r["vec_id"], r["cos"])
-        for r in ivf_topk_indexed(spark, p, q, k=5, n_probe=2).collect()
-    ]
+    serve = lambda p: sorted(
+        (r["rank"], r["vec_id"], r["cos"])
+        for r in ann_topk(spark, p, [(0, q)], k=5, n_probe=2).collect()
+    )
     assert serve(dst) == serve(src)
     # integrity deep-verify: bucketed checksums agree bucket-for-bucket
     from ensembl_database_loader_spark.operators.integrity import (
