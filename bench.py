@@ -22,7 +22,8 @@ Measurement protocol (defensible-by-construction):
   `.benchmarks/BENCH_full_latest.json` (and appended to
   `.benchmarks/history.jsonl`) BEFORE the stdout line is printed — the
   driver's fixed-size stdout tail can truncate the one-liner, never the
-  persisted record.
+  persisted record. `--only` runs write the same pair under the
+  git-ignored `.benchmarks/partial/` instead.
 - The stdout line uses compact separators so it fits the driver's tail.
 
 Usage: python bench.py [--repeat N] [--only name1,name2] [--seed S]
@@ -273,14 +274,16 @@ def main() -> int:
                 ),
             },
         }
-        # BENCH_full_latest.json is the FULL-SUITE record of note;
-        # --only isolations must not clobber it (they still land in
-        # history.jsonl and BENCH_partial_latest.json).
-        latest = "BENCH_full_latest.json" if not args.only else "BENCH_partial_latest.json"
-        with open(os.path.join(BENCH_DIR, latest), "w") as fh:
+        # The tracked BENCH_full_latest.json/history.jsonl hold FULL-SUITE
+        # records; --only isolations go to the git-ignored partial/ so
+        # they neither clobber them nor dirty the checkout.
+        out_dir = os.path.join(BENCH_DIR, "partial") if args.only else BENCH_DIR
+        os.makedirs(out_dir, exist_ok=True)
+        latest = "BENCH_partial_latest.json" if args.only else "BENCH_full_latest.json"
+        with open(os.path.join(out_dir, latest), "w") as fh:
             json.dump(full, fh, indent=1, sort_keys=True)
             fh.write("\n")
-        with open(os.path.join(BENCH_DIR, "history.jsonl"), "a") as fh:
+        with open(os.path.join(out_dir, "history.jsonl"), "a") as fh:
             fh.write(json.dumps(full, separators=(",", ":")) + "\n")
     except OSError as exc:
         print(f"# WARN could not persist .benchmarks record: {exc}", file=sys.stderr)

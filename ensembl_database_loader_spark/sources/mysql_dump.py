@@ -16,13 +16,12 @@ Spark-first design decisions:
   zero-dates (``0000-00-00 ...``) mapped to NULL — a direct timestamp
   read would null entire rows on the first zero-date (univocity treats
   the row as malformed).
-- CHECKSUMS verification is the reference's join-compare (parse
-  manifest DownloadDatabase.pm:188-216; compare 148-170) expressed as
-  a full-outer join of two one-row-per-file manifests, with the BSD
-  ``sum`` 16-bit checksum (DownloadDatabase.pm:238-251) computed by an
-  Arrow-batched UDF on executors. At local scale the file list comes
-  from os.scandir; on a real cluster the same join runs over a
-  ``binaryFile`` read of the shared store.
+- CHECKSUMS verification is the reference's own: one coreutils
+  ``sum -r`` (the BSD 16-bit checksum, DownloadDatabase.pm:238-251)
+  over the manifest's files, then a compare against the parsed
+  manifest (DownloadDatabase.pm:148-170, 188-216). It runs on the
+  driver in the calling database's thread, with no Spark job: the
+  cost of a job and a Python worker dwarfs hashing a dump directory.
 """
 
 from __future__ import annotations
@@ -30,13 +29,13 @@ from __future__ import annotations
 import gzip
 import os
 import re
+import subprocess
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, StringType, StructField, StructType, TimestampType
 
-from ensembl_database_loader_spark.functions.checksums import bsd_sum16_file_check_udf
 from ensembl_database_loader_spark.sources.mysql_ddl import DumpSchema, parse_mysql_ddl
 
 #: Part-grouping regex — the reference's, verbatim (LoadFiles.pm:203):
@@ -132,48 +131,64 @@ def parse_checksum_manifest(path: str) -> list[tuple[str, int, int]]:
     return out
 
 
+def _sum_r(directory: str, names: list[str]) -> dict[str, str]:
+    """``{name: '%05d blocks'}`` from one coreutils ``sum -r`` over
+    ``names`` in ``directory``. The output is read as one line per
+    operand, in operand order, and the printed names are not parsed:
+    GNU omits the name for a lone operand in some versions and prefixes
+    the line with ``\\`` when it escapes one."""
+    try:
+        out = subprocess.run(
+            ["sum", "-r", "--", *names],
+            cwd=directory, capture_output=True, text=True, errors="replace",
+        )
+    except FileNotFoundError as exc:
+        raise RuntimeError(f"checksum tool `sum` (coreutils) not found: {exc}") from exc
+    if out.returncode != 0:
+        raise RuntimeError(
+            f"`sum -r` exited {out.returncode} in {directory}: {out.stderr.strip()}"
+        )
+    sums = [line.lstrip("\\").split()[:2] for line in out.stdout.splitlines()]
+    return {n: f"{int(s):05d} {int(b)}" for n, (s, b) in zip(names, sums, strict=True)}
+
+
+_FAILURE_SCHEMA = StructType(
+    [StructField(c, StringType(), True) for c in ("file", "expected", "actual")]
+)
+
+
 def verify_checksums(
     spark: SparkSession, dump: DumpDirectory, raise_on_failure: bool = True
 ) -> DataFrame:
-    """Join-compare the CHECKSUMS manifest against recomputed BSD sums.
+    """Compare the CHECKSUMS manifest against ``sum -r`` of the files.
 
     Returns a DataFrame (file, expected, actual) of FAILURES (empty =
-    verified). Missing files surface as actual='-' exactly like the
+    verified), built from the local list: the check itself runs no
+    Spark job. Missing files surface as actual='-' exactly like the
     reference (DownloadDatabase.pm:157); extra on-disk files not in the
     manifest are ignored (the manifest drives the check). Like the
     reference, the compared value is the combined ``'%05d sum' blocks``
     pair (DownloadDatabase.pm:208-210, 247-250) — a truncated or
     resized file fails on the block count even if the 16-bit sum
-    collides."""
+    collides. Raises RuntimeError if ``sum`` is missing or fails."""
     if dump.checksum_file is None:
         raise FileNotFoundError(f"{dump.path}: no CHECKSUMS manifest")
     manifest = parse_checksum_manifest(dump.checksum_file)
-    expected = spark.createDataFrame(
-        [(f, f"{s:05d} {blocks}") for f, s, blocks in manifest],
-        "file string, expected string",
-    )
-    local = [
+    local = {
         e.name
         for e in os.scandir(dump.path)
         if e.is_file() and not e.name.startswith(("CHECKSUMS", "."))
+    }
+    listed = sorted({f for f, _, _ in manifest} & local)
+    actual = _sum_r(dump.path, listed) if listed else {}
+    failures = [
+        (f, want, got)
+        for f, s, blocks in manifest
+        if (want := f"{s:05d} {blocks}") != (got := actual.get(f, "-"))
     ]
-    actual = spark.createDataFrame(
-        [(f, os.path.join(dump.path, f)) for f in local] or [],
-        "file string, path string",
-    ).select(
-        "file",
-        bsd_sum16_file_check_udf(F.col("path")).alias("actual"),
-    )
-    failures = (
-        expected.join(actual, "file", "left_outer")
-        .select("file", "expected", F.coalesce("actual", F.lit("-")).alias("actual"))
-        .filter(F.col("expected") != F.col("actual"))
-    )
-    if raise_on_failure:
-        rows = failures.collect()
-        if rows:
-            raise ChecksumError(dump.name, [(r.file, r.expected, r.actual) for r in rows])
-    return failures
+    if raise_on_failure and failures:
+        raise ChecksumError(dump.name, failures)
+    return spark.createDataFrame(failures, _FAILURE_SCHEMA)
 
 
 def _read_schema(table_schema: StructType) -> tuple[StructType, list[str]]:

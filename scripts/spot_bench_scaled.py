@@ -9,8 +9,9 @@ scaling_bench replica construction: per-replica word suffixes keep
 shingle vocabularies replica-disjoint, ids offset per replica) with
 the standard table names, then runs a COMPUTE-HEAVY probe subset
 through the unmodified bench harness at two core counts and prints the
-low/high-core ratio per probe. Records land in .benchmarks/history.jsonl
-via bench.py as usual (sf=None marks the non-standard fixture).
+low/high-core ratio per probe. Records land in
+.benchmarks/partial/history.jsonl via bench.py --only (sf=None marks the
+non-standard fixture).
 
 Strictly additive: the driver's sf0.1 contract, probe set, and stdout
 line are untouched; nothing here is read by any probe.

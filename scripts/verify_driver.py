@@ -19,10 +19,15 @@ from __future__ import annotations
 import argparse
 import importlib.util
 import json
+import os
 import sys
 import time
 
 import duckdb
+
+#: The checkout this script belongs to: its own ``__spark_entry__.py`` and
+#: package are the ones verified, whichever directory it is run from.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = [
     "region",
@@ -55,13 +60,18 @@ def main() -> int:
     args = ap.parse_args()
 
     spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "/root/repo/__spark_entry__.py"
+        "__spark_entry__", os.path.join(ROOT, "__spark_entry__.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
     from pyspark.sql import SparkSession
 
+    # Python workers inherit the JVM's environment: put this checkout
+    # first so they import the same package the driver loaded.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.ui.enabled", "false")

@@ -5,6 +5,7 @@ retry semantics, and the A1 summary aggregation."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -120,17 +121,45 @@ def test_mirror_failure_containment_and_summary(spark, tmp_path):
     bad = build_dump(str(work), "bad_core_1_1")
     with open(os.path.join(bad, "region.txt.gz"), "ab") as f:
         f.write(b"corrupt")
+    missing = build_dump(str(work), "missing_core_1_1")
+    os.remove(os.path.join(missing, "orders.0002.txt.gz"))
     report = mirror(
-        spark, str(work), str(target), failed_tolerance=0.5, max_retry=0
+        spark, str(work), str(target), failed_tolerance=0.7, max_retry=0
     )
-    assert report.failed_databases == ["bad_core_1_1"]
-    failed = failed_jobs(report.to_df(spark)).collect()
-    assert failed[0].database == "bad_core_1_1" and failed[0].analysis == "verify"
+    assert report.failed_databases == ["bad_core_1_1", "missing_core_1_1"]
+    failed = {r.database: r for r in failed_jobs(report.to_df(spark)).collect()}
+    assert {r.analysis for r in failed.values()} == {"verify"}
+    # the report names the part and what was found; a missing part reads
+    # '-' (DownloadDatabase.pm:157); nothing of a failed db is written
+    for db, part, actual in [
+        ("bad_core_1_1", "region.txt.gz", r"\d{5} \d+"),
+        ("missing_core_1_1", "orders.0002.txt.gz", "-"),
+    ]:
+        found = rf"{re.escape(part)}: expected \d{{5}} \d+ got {actual}(,|$)"
+        assert re.search(found, failed[db].error)
+        assert not os.path.exists(target / db)
     # good db still mirrored (containment, LoadDBs_conf.pm failed_job_tolerance)
     assert os.path.isdir(str(target / "good_core_1_1" / "region"))
     # tolerance exceeded when everything fails
     with pytest.raises(RuntimeError, match="tolerance"):
         mirror(spark, str(work), str(tmp_path / "t2"), failed_tolerance=0.2, max_retry=0)
+
+
+def test_mirror_verify_without_sum_tool(spark, tmp_path, monkeypatch):
+    """Verify runs coreutils ``sum``; without it on PATH the database
+    fails at verify with an error naming the tool, and is not loaded."""
+    work = tmp_path / "work"
+    os.makedirs(work)
+    build_dump(str(work), "nosum_core_1_1")
+    os.makedirs(tmp_path / "empty_bin")
+    monkeypatch.setenv("PATH", str(tmp_path / "empty_bin"))
+    report = mirror(
+        spark, str(work), str(tmp_path / "target"), max_retry=0, failed_tolerance=1.0
+    )
+    (failed,) = [r for r in report.results if r.status == "FAILED"]
+    assert failed.analysis == "verify"
+    assert "`sum`" in failed.error and "not found" in failed.error
+    assert not os.path.exists(tmp_path / "target" / "nosum_core_1_1")
 
 
 def test_mirror_failure_text_keeps_type_and_every_file(spark, tmp_path):

@@ -264,6 +264,39 @@ def test_truncation_with_colliding_sum16_fails(spark, tmp_path):
     assert any(f == "t.txt.gz" for f, _, _ in ei.value.failures)
 
 
+def test_verify_runs_no_spark_job(spark, tmp_path):
+    """The check runs ``sum -r`` and a Python compare on the driver: a
+    clean dump verifies without starting a Spark job."""
+    dump = scan_dump_dir(build_dump(str(tmp_path), "nojob_core_1_1"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    failures = verify_checksums(spark, dump)
+    assert set(tracker.getJobIdsForGroup(None) or []) - before == set()
+    assert failures.count() == 0
+
+
+@pytest.mark.parametrize(
+    "tool, message",
+    [(None, r"checksum tool `sum` \(coreutils\) not found"),
+     ("#!/bin/sh\necho 'sum: disk on fire' >&2\nexit 3\n",
+      "`sum -r` exited 3 in .*: sum: disk on fire")],
+    ids=["missing", "failing"],
+)
+def test_verify_names_a_missing_or_failing_sum(spark, tmp_path, monkeypatch, tool, message):
+    """No silent fallback: a missing ``sum`` or one that exits non-zero
+    raises an error naming the tool, with its stderr."""
+    dump = scan_dump_dir(build_dump(str(tmp_path), "nosum_core_1_1"))
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    if tool is not None:
+        (bin_dir / "sum").write_text(tool)
+        (bin_dir / "sum").chmod(0o755)
+    monkeypatch.setenv("PATH", str(bin_dir))
+    with pytest.raises(RuntimeError, match=message) as ei:
+        verify_checksums(spark, dump)
+    assert ei.type is RuntimeError
+
+
 def test_conditional_comment_views_detected():
     """Real mysqldump wraps view DDL in /*!50001 ... */ conditional
     comments (temporary stand-in + final structure); both must be
