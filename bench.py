@@ -226,7 +226,10 @@ def main() -> int:
                 "ss_bm25_topk": (
                     "r12: +2 DataFrame-shaped (shuffle) query forms "
                     "ride this probe; then the salted form left it, "
-                    "9.89 -> 7.77 s"
+                    "9.89 -> 7.77 s; then one bm25_topk over the index "
+                    "(list wave vs frame wave only, ad-hoc forms "
+                    "retired), 8.95 -> 5.75 s (medians of 5 alternating "
+                    "runs)"
                 ),
                 "ss_ann_batch_indexed": (
                     "the salted batch form left it, 10.62 -> 8.01 s; "
@@ -234,7 +237,10 @@ def main() -> int:
                     "frame only), 8.27 -> 7.03 s"
                 ),
                 "ss_hybrid_rrf": (
-                    "the salted fusion form left it, 3.95 -> 2.57 s"
+                    "the salted fusion form left it, 3.95 -> 2.57 s; "
+                    "then the lexical side builds a postings index and "
+                    "serves through bm25_topk (the build is the new "
+                    "cost), 3.66 -> 4.78 s (medians of 5 alternating runs)"
                 ),
                 "ss_ann_ivf_indexed": (
                     "the index build is a manifest commit (id stats + "
@@ -270,7 +276,9 @@ def main() -> int:
                 ),
                 "ss_index_sync": (
                     "the ANN serving gate calls ann_topk, "
-                    "22.41 -> 18.55 s (within the probe's spread)"
+                    "22.41 -> 18.55 s (within the probe's spread); "
+                    "then BM25 serves a frame wave through bm25_topk, "
+                    "18.51 -> 18.29 s (within the probe's spread)"
                 ),
             },
         }

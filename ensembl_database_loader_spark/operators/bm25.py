@@ -1,8 +1,8 @@
 """BM25 sparse retrieval over a document corpus — the lexical sibling
-of the dense-ANN stack (operators/similarity.py): batch query frames
-scored against term postings with the Okapi BM25 weighting, plus a
-materialized postings INDEX (a manifest table with bloom-filtered term
-lookups) so repeated query waves never re-tokenize the corpus.
+of the dense-ANN stack (operators/similarity.py): a materialized
+postings INDEX (a manifest table with bloom-filtered term lookups) and
+one query function, ``bm25_topk``, that scores query waves against it
+with the Okapi BM25 weighting — the corpus is tokenized once, at build.
 
 Reference scope: the reference engine (Ensembl/ensembl-database-loader)
 delegates all querying to MySQL and has no retrieval surface; this is
@@ -11,23 +11,21 @@ part of the training-data-pipeline extension the engine targets
 want a cheap lexical top-k next to the embedding one).
 
 Scale shape (the part that matters at 100 TB):
-- the AD-HOC path scans the corpus ONCE: tokenize (JVM higher-order
-  functions, no Python), explode, FILTER BY THE BROADCAST QUERY TERM
-  SET before the tf aggregate — the shuffle carries only matching
-  (doc, term) pairs, never the full inverted index;
-- document length (``dl``) is ``size(tokens)`` in the same projection —
-  no second pass; corpus stats (N, avgdl) are a one-row aggregate that
-  rides a crossJoin;
-- per-term document frequency is computed from the FILTERED postings
-  (df is only needed for query terms), so the df frame is at most
-  |distinct query terms| rows — broadcast back onto the postings;
-- the INDEXED path stores (term, doc, tf) postings as a manifest table
-  with a BLOOM FILTER on ``term`` (sinks/manifest.py `bloom_cols`):
-  a query wave's postings lookup skips every file whose bloom rejects
-  all wave terms — the point-lookup pruning [min, max] stats can't
-  give a high-cardinality term column; df per term is precomputed and
-  versioned WITH the postings (same commit), so serving reads touch
-  only pruned postings files + tiny side tables;
+- the index stores (term, doc, tf, dl) postings as a manifest table
+  with a BLOOM FILTER on ``term`` (sinks/manifest.py `bloom_cols`) and
+  term-sorted files; corpus stats (N, total tokens) are exact integers
+  in table properties, versioned WITH the postings (same commit), and
+  df per term derives from the postings at query time;
+- the kind of query wave picks the serving shape: a driver LIST of
+  (qid, qtext) tokenizes in ONE JVM collect and reads the postings
+  through ONE ``term IN`` predicate, so manifest [min, max] stats and
+  the term bloom skip every file holding none of the wave's terms; a
+  DATAFRAME wave tokenizes executor-side and SHUFFLE-joins the postings
+  snapshot on ``term`` — no driver collect, the corpus-scale sweep
+  shape;
+- deletes are O(wave) generation-marker appends; serving drops dead
+  generations BEFORE the df aggregate, and ``compact_bm25_tombstones``
+  reclaims them amortized;
 - per-query top-k reuses the batch-ANN tail (``_per_query_topk``, one
   window per query).
 
@@ -52,43 +50,14 @@ def _nonempty_tokens(col) -> "F.Column":
     return F.filter(tokens(col), lambda w: w != "")
 
 
-def _query_terms_df(
-    queries: DataFrame, qid_col: str, qtext_col: str
-) -> DataFrame:
-    """(qid, term) pairs as a DATAFRAME — DISTINCT terms per query,
-    tokenized EXECUTOR-side: the corpus-scale query shape
-    (``broadcast_queries=False``), where a million-query contamination
-    sweep phrased lexically must never collect to the driver — the
-    work list stays data (reference analogue: fan-out X1,
-    LoadDBs_conf.pm:113-123) and joins the postings as an ordinary
-    shuffle join on ``term``."""
+def _query_terms(queries: DataFrame, qid_col: str, qtext_col: str) -> DataFrame:
+    """(_qid, term) pairs — DISTINCT terms per query row (BM25 scores
+    each term once however often it repeats in the query text),
+    tokenized by the same JVM tokenizer the index was built with."""
     return queries.select(
         F.col(qid_col).alias("_qid"),
         F.explode(F.array_distinct(_nonempty_tokens(qtext_col))).alias("term"),
-    ).distinct()
-
-
-def _query_term_rows(
-    queries: DataFrame, qid_col: str, qtext_col: str
-) -> list[tuple[int, str]]:
-    """(qid, term) pairs — DISTINCT terms per query (BM25 scores each
-    term once however often it repeats in the query text), collected
-    driver-side: the query side is broadcast-dim by contract (it
-    broadcasts into the postings join), and one collect lets every
-    downstream consumer (the qt frame, the distinct term list, the
-    wave IN-predicate) derive WITHOUT re-running the query frame's
-    lineage as its own Spark job."""
-    rows = (
-        queries.select(
-            F.col(qid_col).alias("_qid"),
-            F.explode(F.array_distinct(_nonempty_tokens(qtext_col))).alias(
-                "term"
-            ),
-        )
-        .distinct()
-        .collect()
     )
-    return [(r["_qid"], r["term"]) for r in rows]
 
 
 def _literal_df(spark, rows: list[tuple], schema: str) -> DataFrame:
@@ -96,14 +65,6 @@ def _literal_df(spark, rows: list[tuple], schema: str) -> DataFrame:
     from ensembl_database_loader_spark.functions.frames import literal_frame
 
     return literal_frame(spark, rows, schema)
-
-
-def _qt_frame(
-    spark, rows: list[tuple], qid_type: str = "bigint"
-) -> DataFrame:
-    """Literal (qid, term) frame carrying the CALLER's qid type (query
-    ids may be strings — UUIDs — as well as integers)."""
-    return _literal_df(spark, rows, f"_qid {qid_type}, term string")
 
 
 def _bm25_score(k1: float, b: float) -> "F.Column":
@@ -121,165 +82,8 @@ def _bm25_score(k1: float, b: float) -> "F.Column":
     return idf * tf * F.lit(k1 + 1.0) / norm
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    text_col: str,
-    qid_col: str = "qid",
-    qtext_col: str = "qtext",
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    ndigits: int = 2,
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """Top-``k`` BM25 matches per query: (qid, <id_col>, score, rank).
-
-    One corpus scan; the exploded term stream is filtered by the
-    query-term set BEFORE the tf aggregate, so the shuffle never
-    carries non-matching terms.
-
-    ``broadcast_queries`` picks the query shape (row-identical — gated
-    in tests):
-
-    - True (default): the query frame collects to the driver and
-      BROADCASTS into the postings joins — right for interactive waves
-      (tens..thousands of queries), zero shuffle of the query side;
-    - False: the query frame tokenizes EXECUTOR-side and the (qid,
-      term) stream SHUFFLE-joins the postings — the corpus-scale sweep
-      shape (a million-query lexical contamination screen must never
-      drive through the driver), the lexical twin of the dense stack's
-      GEMM cogroup. No driver collect anywhere in the plan."""
-    spark = docs.sparkSession
-    if broadcast_queries:
-        qrows = _query_term_rows(queries, qid_col, qtext_col)
-        qt = _qt_frame(spark, qrows, dict(queries.dtypes)[qid_col])
-        terms_only = _literal_df(
-            spark, [(t,) for t in sorted({t for _, t in qrows})],
-            "term string",
-        )
-    else:
-        # lazily persisted: qt feeds BOTH the postings pre-filter and
-        # the scoring join — without the cache the query frame's
-        # tokenize+distinct lineage executes twice, at exactly the
-        # sweep scale this shape targets (blocks are freed when the
-        # result frame is released / the context cleaner runs)
-        qt = _query_terms_df(queries, qid_col, qtext_col).persist()
-        terms_only = qt.select("term").distinct()
-
-    toked = docs.select(
-        F.col(id_col),
-        _nonempty_tokens(text_col).alias("_toks"),
-    ).select(
-        F.col(id_col),
-        "_toks",
-        F.size("_toks").cast("bigint").alias("dl"),
-    )
-    # corpus stats ride the MAIN action as a one-row BROADCAST subtree
-    # (BroadcastNestedLoopJoin with a 1-row build side — NOT the former
-    # unhinted crossJoin of parallelized frames, which planned a
-    # CartesianProduct of slices x slices empty Python tasks): the
-    # serve plans with no separate stats action, and the shuffle-shaped
-    # sweep form (broadcast_queries=False) plans with ZERO driver
-    # round trips. Values are the engine's own aggregate either way,
-    # so scores stay bit-identical to the collected-literal form.
-    stats_df = toked.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.coalesce(F.avg("dl"), F.lit(0.0)).alias("avgdl"),
-    )
-
-    # (doc, term, tf, dl) for QUERY terms only — the term filter runs
-    # before the aggregate, so partial aggregation sees only hits
-    postings = (
-        toked.select(
-            F.col(id_col), "dl", F.explode("_toks").alias("term")
-        )
-        .join(
-            F.broadcast(terms_only) if broadcast_queries else terms_only,
-            "term",
-        )
-        .groupBy(id_col, "term", "dl")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-    return _score_postings(
-        postings, None, None, qt, id_col, k, k1, b, ndigits,
-        broadcast_qside=broadcast_queries,
-        stats_df=stats_df,
-    )
-
-
-def _score_postings(
-    postings: DataFrame,
-    n_docs: int | None,
-    avgdl: float | None,
-    qt: DataFrame,
-    id_col: str,
-    k: int,
-    k1: float,
-    b: float,
-    ndigits: int,
-    broadcast_qside: bool = True,
-    stats_df: DataFrame | None = None,
-) -> DataFrame:
-    """Shared scoring tail: attach per-term ``df`` to the postings as a
-    COUNT OVER (PARTITION BY term) window — the former separate
-    ``groupBy(term)`` aggregate branch evaluated the whole postings
-    subtree a SECOND time (for the indexed path, a second scan of the
-    pruned posting files per serve) and joined it back; the window
-    yields the identical count on the single pass, and downstream
-    term-keyed joins reuse its hash partitioning. Corpus stats attach
-    either as driver-resident LITERAL columns (the indexed path: stats
-    live in table properties, no job) or as a one-row ``stats_df``
-    BROADCAST nested-loop join (the ad-hoc path: stats ride the main
-    action instead of a separate driver round trip; an unhinted
-    crossJoin here would plan a CartesianProduct of parallelized
-    frames — slices x slices empty Python tasks). Then join the query
-    terms (BROADCAST for collected interactive waves, SHUFFLE for
-    DataFrame-shaped corpus-scale sweeps — same rows either way), sum
-    per (qid, doc), rank by (ROUND(score, 6) DESC, doc)."""
-    from pyspark.sql import Window
-
-    from ensembl_database_loader_spark.operators.similarity import (
-        _per_query_topk,
-    )
-
-    postings = postings.withColumn(
-        "df",
-        F.count(F.lit(1)).over(Window.partitionBy("term")).cast("bigint"),
-    )
-    if stats_df is not None:
-        qside = qt.crossJoin(F.broadcast(stats_df))
-    else:
-        qside = qt.withColumns(
-            {
-                "n_docs": F.lit(int(n_docs)).cast("bigint"),
-                "avgdl": F.lit(float(avgdl)),
-            }
-        )
-    pairs = postings.join(
-        F.broadcast(qside) if broadcast_qside else qside, "term"
-    ).select(
-        "_qid",
-        F.col(id_col),
-        _bm25_score(float(k1), float(b)).alias("_c"),
-    )
-    scored = pairs.groupBy("_qid", id_col).agg(
-        F.round(F.sum("_c"), 6).alias("_score")
-    )
-    ranked = _per_query_topk(
-        scored, "_qid", id_col, "_score", ascending=False, k=int(k)
-    )
-    return ranked.select(
-        F.col("_qid").alias("qid"),
-        F.col(id_col),
-        F.round("_score", int(ndigits)).alias("score"),
-        "rank",
-    )
-
-
 # ---------------------------------------------------------------------------
-# Materialized postings index (manifest table, bloom-pruned term lookups)
+# Postings index: build and maintenance (manifest table, bloom-pruned)
 # ---------------------------------------------------------------------------
 
 
@@ -310,7 +114,7 @@ def _with_gens(postings: DataFrame, id_col: str, gens) -> DataFrame:
     wave's resurrections/updates); every other row is generation 0.
     A row's generation never changes after it is written; liveness is
     decided against the marker rows (the kill-map join in
-    ``bm25_topk_indexed``)."""
+    ``bm25_topk``)."""
     if not gens:
         return postings.withColumn("_gen", F.lit(0).cast("bigint"))
     spark = postings.sparkSession
@@ -379,9 +183,9 @@ def build_bm25_index(
     files are laid out sorted by term so each file covers a narrow
     term range and the term bloom prunes point lookups file-by-file;
     a doc's postings concentrate in few files (one per its distinct
-    terms' ranges at most), so the ID bloom is what lets a curation
-    wave's ``delete_from_bm25_index`` prove absence and carry most of
-    the index by reference instead of candidate-rewriting every file
+    terms' ranges at most), so the ID bloom is what lets
+    ``compact_bm25_tombstones`` prove absence and carry most of the
+    index by reference instead of candidate-rewriting every file
     (VERDICT r11 #5). Zero-token docs persist as sentinel rows so
     delete stats stay exact (``_index_postings``)."""
     from ensembl_database_loader_spark.sinks.manifest import write_table
@@ -564,48 +368,32 @@ def delete_from_bm25_index(
     spark: SparkSession,
     path: str,
     doc_ids,
-    mode: str = "rewrite",
     txn: tuple[str, int] | None = None,
 ) -> dict | None:
-    """Remove documents from the postings index as ONE commit that
-    ALSO decrements the corpus stats (n_docs, total_tokens) — without
-    the stats delta, every later idf/avgdl would keep counting the
-    deleted docs and indexed scoring would drift from a from-scratch
-    rebuild (the re-ingest path: delete, then ``append_to_bm25_index``
-    the corrected docs). ``doc_ids`` is broadcast-dim (a curation
-    wave's drop list). Returns the commit manifest or None when no
-    victim is indexed.
-
-    ``mode='rewrite'``: copy-on-write — victims' posting rows (and any
-    markers they carry) leave physically. File economics: the build
-    blooms ``term`` AND the id column, so the rewrite prunes to files
-    actually holding a victim's postings. HONEST SCALING BOUNDARY
-    (measured, scripts/sync_bench): a scattered wave's DISTINCT TERMS
-    span most term ranges — ~100 distinct terms per victim hit ~100
-    files — so for multi-doc waves the rewrite degrades to O(index
-    files) regardless of blooms.
-    ``mode='tombstone'`` is the scalable delete: ONE O(wave) append of
-    GENERATION MARKER rows (term = ``_TOMB_TERM``, gen = the victim's
-    live generation + 1 — kills every row strictly below) plus the
-    exact stats decrement in the same commit — no posting is
-    rewritten. Serving filters dead generations out BEFORE the df
-    aggregate, so indexed scores stay BIT-IDENTICAL to a rebuild on
-    the survivors (gated in tests) — the Lucene-style deferred delete
-    without Lucene's stale-df scoring drift. A tombstoned id may
-    re-enter via ``append_to_bm25_index`` at the marker's generation
-    (resurrection, O(batch)); dead postings and markers are physically
-    reclaimed, amortized, by ``compact_bm25_tombstones``. Ids with no
-    live rows (never indexed, or already dead) are excluded from the
-    wave (idempotent re-delete)."""
+    """Remove documents from the postings index as ONE O(wave) append
+    commit: GENERATION MARKER rows (term = ``_TOMB_TERM``, gen = the
+    victim's live generation + 1 — kills every row strictly below) plus
+    the exact corpus-stats decrement (n_docs, total_tokens) in the same
+    commit, so idf/avgdl never keep counting a deleted doc. No posting
+    file is rewritten: a scattered wave's distinct terms span most
+    term-sorted files, so a physical delete would cost O(index files),
+    about a rebuild. Serving filters dead generations out BEFORE the df
+    aggregate, so scores stay BIT-IDENTICAL to a rebuild on the
+    survivors (gated in tests) — the Lucene-style deferred delete
+    without Lucene's stale-df scoring drift. A deleted id may re-enter
+    via ``append_to_bm25_index`` at the marker's generation
+    (resurrection, O(batch)); ``compact_bm25_tombstones`` reclaims dead
+    postings and markers physically, amortized. ``doc_ids`` is
+    broadcast-dim (a curation wave's drop list); ids with no live rows
+    (never indexed, or already dead) are excluded from the wave
+    (idempotent re-delete). Returns the commit manifest, or None when
+    no victim is live or ``txn`` was already applied."""
     from ensembl_database_loader_spark.sinks.manifest import (
-        delete_rows,
         snapshot,
         table_properties,
         write_table,
     )
 
-    if mode not in ("rewrite", "tombstone"):
-        raise ValueError(f"mode must be rewrite|tombstone, got {mode!r}")
     props = table_properties(spark, path)
     meta = props.get("bm25")
     if not meta:
@@ -618,45 +406,28 @@ def delete_from_bm25_index(
     live = _live_victim_rows(spark, path, id_col, ids, gens)
     if not live:
         return None
-    n_del = len(live)
-    tok_del = sum(dl for dl, _ in live.values())
-    if mode == "tombstone":
-        n_markers = len(set(gens) | set(live))
-    else:
-        # the id-IN prune drops victims' marker rows along with their
-        # postings, so the live-marker count shrinks by the overlap
-        n_markers = len(set(gens) - set(live))
-    # merged map, as in append: foreign property keys survive deletes
-    new_props = {
-        **props,
-        "bm25": {
-            **meta,
-            "n_docs": int(meta["n_docs"]) - n_del,
-            "total_tokens": int(meta["total_tokens"]) - tok_del,
-            "tombstones": n_markers,
-        },
-    }
-    if mode == "tombstone":
-        return write_table(
-            _tombstone_rows(
-                spark,
-                snapshot(spark, path),
-                id_col,
-                {i: g + 1 for i, (_, g) in live.items()},
-            ),
-            path,
-            mode="append",
-            txn=txn,
-            stats_cols=("term",),
-            properties=new_props,
-        )
-    if txn is not None:
-        raise ValueError("txn applies to tombstone deletes only")
-    return delete_rows(
-        spark,
+    return write_table(
+        _tombstone_rows(
+            spark,
+            snapshot(spark, path),
+            id_col,
+            {i: g + 1 for i, (_, g) in live.items()},
+        ),
         path,
-        prune=[(id_col, "in", sorted(live))],
-        properties=new_props,
+        mode="append",
+        txn=txn,
+        stats_cols=("term",),
+        # merged map, as in append: foreign property keys survive deletes
+        properties={
+            **props,
+            "bm25": {
+                **meta,
+                "n_docs": int(meta["n_docs"]) - len(live),
+                "total_tokens": int(meta["total_tokens"])
+                - sum(dl for dl, _ in live.values()),
+                "tombstones": len(set(gens) | set(live)),
+            },
+        },
     )
 
 
@@ -754,34 +525,47 @@ def compact_bm25_tombstones(
     )
 
 
-def bm25_topk_indexed(
+def bm25_topk(
     spark: SparkSession,
     path: str,
-    queries: DataFrame,
-    qid_col: str = "qid",
-    qtext_col: str = "qtext",
+    queries,
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
     ndigits: int = 2,
-    broadcast_queries: bool = True,
+    qid_col: str = "qid",
+    qtext_col: str = "qtext",
 ) -> DataFrame:
-    """Top-``k`` per query against a materialized postings index: the
-    corpus is never re-tokenized. Row-identical to ``bm25_topk`` on
-    the same corpus (same ranking contract — including the empty-query
-    edge: a wave with no terms returns an EMPTY result frame, exactly
-    like the ad-hoc path, instead of raising).
+    """Top-``k`` BM25 matches per query against a postings index
+    (``build_bm25_index``): (qid, <id_col>, score, rank), rank 1..k per
+    query, ties broken on the doc id. The corpus is never re-tokenized.
 
-    ``broadcast_queries=True`` (default, interactive waves): the wave's
-    terms collect driver-side and the postings scan carries ONE IN
-    predicate, so manifest [min, max] stats and the term bloom skip
-    every file holding none of them. ``broadcast_queries=False``
-    (corpus-scale sweeps): the query frame tokenizes executor-side and
-    SHUFFLE-joins the postings snapshot on ``term`` — no driver
-    collect, no broadcast-width cap; a million-query sweep's term set
-    covers most files anyway, so the lost file skipping is the right
-    trade (the lexical twin of the dense GEMM path's shuffled query
-    side)."""
+    ``queries`` is either a driver-side list of (qid, qtext) — int or
+    str qids — or a DataFrame with ``qid_col`` and ``qtext_col``; the
+    kind of wave picks the shape, and both return identical rows:
+
+    - list (interactive waves): ONE JVM tokenize+collect job turns the
+      wave into (qid, term) literals, the postings scan carries ONE
+      ``term IN`` predicate (manifest [min, max] stats and the term
+      bloom skip every file holding none of the terms), and the query
+      side broadcasts into the scoring join. A duplicate qid raises
+      ValueError before any job — two rows under one qid would
+      silently union their terms;
+    - DataFrame (corpus-scale sweeps): the wave tokenizes
+      executor-side and SHUFFLE-joins the postings snapshot on
+      ``term`` — no driver collect, no broadcast-width cap; a
+      million-query sweep's term set covers most files anyway, so the
+      lost file skipping is the right trade. Building the plan runs no
+      Spark job.
+
+    A wave with no terms returns an EMPTY frame with the output schema.
+    An index whose id column is named ``qid`` raises ValueError (the
+    output would carry two ``qid`` columns)."""
+    from pyspark.sql import Window
+
+    from ensembl_database_loader_spark.operators.similarity import (
+        _per_query_topk,
+    )
     from ensembl_database_loader_spark.sinks.manifest import (
         scan_table,
         snapshot,
@@ -792,48 +576,60 @@ def bm25_topk_indexed(
     if not meta:
         raise ValueError(f"no bm25 index at {path} (missing properties)")
     id_col = meta["id_col"]
+    if id_col == "qid":
+        raise ValueError(
+            f"bm25 index at {path} has id_col 'qid', which collides with "
+            "the output's qid column — rebuild it under another id name"
+        )
 
-    if broadcast_queries:
-        qrows = _query_term_rows(queries, qid_col, qtext_col)
-        wave_terms = sorted({t for _, t in qrows})
-        if not wave_terms:
-            # ad-hoc parity: an all-stopword/empty wave scores nothing —
-            # empty frame with the exact output schema, never an error
-            id_type = {
-                f.name: f.dataType.simpleString()
-                for f in snapshot(spark, path).schema.fields
-            }[id_col]
-            qid_type = dict(queries.dtypes)[qid_col]
-            return spark.createDataFrame(
-                [],
-                f"qid {qid_type}, {id_col} {id_type}, score double, rank int",
+    if isinstance(queries, DataFrame):
+        # lazily persisted: qt feeds BOTH the postings pre-filter and
+        # the scoring join — without the cache the wave's
+        # tokenize+distinct lineage executes twice, at exactly the
+        # sweep scale this shape targets
+        qt = _query_terms(queries, qid_col, qtext_col).distinct().persist()
+        # sentinel ''-term rows can never match (the tokenizer drops
+        # empties)
+        postings = snapshot(spark, path).join(qt.select("term").distinct(), "term")
+    else:
+        wave = list(queries)
+        n_q = len({q for q, _ in wave})
+        if n_q != len(wave):
+            raise ValueError(
+                f"duplicate qid values in the query wave ({len(wave)} rows, "
+                f"{n_q} distinct) — dedupe or re-key the queries first"
             )
-        qt = _qt_frame(spark, qrows, dict(queries.dtypes)[qid_col])
+        qid_type = (
+            "string" if wave and all(isinstance(q, str) for q, _ in wave)
+            else "bigint"
+        )
+        # unique qids + per-row array_distinct: the collect needs no
+        # distinct shuffle
+        qrows = [
+            tuple(r)
+            for r in _query_terms(
+                _literal_df(spark, wave, f"_q {qid_type}, _t string"), "_q", "_t"
+            ).collect()
+        ]
+        terms = sorted({t for _, t in qrows})
+        qt = F.broadcast(_literal_df(spark, qrows, f"_qid {qid_type}, term string"))
         # one IN predicate: [min, max] stats prune by the term-sorted
         # layout, the term bloom prunes the stragglers, and scan_table
-        # still applies the row filter
-        postings = scan_table(
-            spark, path, predicates=[("term", "in", wave_terms)]
-        )
-    else:
-        # lazily persisted — dual-consumed, as in the ad-hoc shuffle path
-        qt = _query_terms_df(queries, qid_col, qtext_col).persist()
-        # the wave's term set is data, not literals: filter the full
-        # snapshot with a shuffle join (sentinel ''-term rows can never
-        # match — the tokenizer drops empties)
-        postings = snapshot(spark, path).join(
-            qt.select("term").distinct(), "term"
+        # still applies the row filter; a no-terms wave scores nothing
+        postings = (
+            scan_table(spark, path, predicates=[("term", "in", terms)])
+            if terms
+            else snapshot(spark, path).limit(0)
         )
     # dead generations (tombstoned docs, superseded update images)
     # leave serving BEFORE the df aggregate, so idf is computed over
     # the LIVE corpus — scores stay bit-identical to a rebuild (no
     # Lucene-style stale-df drift); zero cost when the marker count
     # property is 0. Marker rows themselves never reach here: both
-    # paths keep only rows whose term matches a query term. The kill
+    # shapes keep only rows whose term matches a query term. The kill
     # map rides the MAIN action as a broadcast subtree (the pruned
-    # marker scan + a per-id max aggregate — exactly the frame
-    # ``_marker_gens`` would collect) instead of a separate driver
-    # collect per serve: one less action on the interactive path.
+    # marker scan + a per-id max aggregate) instead of a separate
+    # driver collect per serve.
     if int(meta.get("tombstones", 0)):
         kdf = (
             scan_table(spark, path, predicates=[("term", "=", _TOMB_TERM)])
@@ -845,13 +641,30 @@ def bm25_topk_indexed(
             .filter(F.col("_gen") >= F.coalesce(F.col("_kill"), F.lit(0)))
             .drop("_kill")
         )
-    # avgdl = total_tokens / n_docs: the same exact-integer division
-    # the ad-hoc path's avg("dl") performs, so both paths (and an
-    # append-maintained index) score bit-for-bit identically
-    return _score_postings(
-        postings,
-        int(meta["n_docs"]),
-        int(meta["total_tokens"]) / max(int(meta["n_docs"]), 1),
-        qt, id_col, k, k1, b, ndigits,
-        broadcast_qside=broadcast_queries,
+    # per-term df as a COUNT OVER (PARTITION BY term) window on the one
+    # pass over the matched postings (a separate groupBy(term) branch
+    # would scan them twice); avgdl = total_tokens / n_docs from the
+    # exact-integer properties, so an append-maintained index scores
+    # bit-for-bit like a rebuild
+    n_docs = int(meta["n_docs"])
+    postings = postings.withColumns(
+        {
+            "df": F.count(F.lit(1)).over(Window.partitionBy("term")).cast("bigint"),
+            "n_docs": F.lit(n_docs).cast("bigint"),
+            "avgdl": F.lit(int(meta["total_tokens"]) / max(n_docs, 1)),
+        }
+    )
+    scored = (
+        postings.join(qt, "term")
+        .select("_qid", F.col(id_col), _bm25_score(float(k1), float(b)).alias("_c"))
+        .groupBy("_qid", id_col)
+        .agg(F.round(F.sum("_c"), 6).alias("_score"))
+    )
+    return _per_query_topk(
+        scored, "_qid", id_col, "_score", ascending=False, k=int(k)
+    ).select(
+        F.col("_qid").alias("qid"),
+        F.col(id_col),
+        F.round("_score", int(ndigits)).alias("score"),
+        "rank",
     )

@@ -255,7 +255,6 @@ def sync_bm25_index(
     src_path: str,
     from_version: int | None = None,
     to_version: int | None = None,
-    delete_mode: str = "auto",
     auto_compact_ratio: float | None = None,
 ) -> dict:
     """Bring a BM25 postings index up to date with its source table —
@@ -264,25 +263,18 @@ def sync_bm25_index(
     term-sorted files), exact-integer stats, sync watermark, and txn
     all publish together.
 
-    ``delete_mode`` picks how victim docs leave (the scattered-terms
-    boundary ``delete_from_bm25_index`` documents: a multi-doc wave's
+    The wave is PURE APPEND — O(wave), no posting file rewritten,
+    ``removed == []`` on the commit (gated): a multi-doc wave's
     distinct terms span most term-sorted files, so a physical rewrite
-    degrades to O(index files)):
-
-    - ``'auto'`` (default): the wave is PURE APPEND — O(wave), no
-      posting file rewritten, ``removed == []`` on the commit (gated).
-      Pure deletes append a GENERATION MARKER at the target version
-      (kills every lower generation); updates append the marker AND
-      the re-tokenized rows AT that generation (the marker kills the
-      old image, spares the new); resurrected inserts re-enter at
-      their existing marker's generation. Serving filters dead
-      generations before the df aggregate, staying bit-identical to a
-      rebuild on the live corpus; ``compact_bm25_tombstones`` reclaims
-      dead rows amortized and restores snapshot bit-identity.
-    - ``'rewrite'``: every victim rewrites physically — bit-identical
-      snapshots immediately, O(victim-term files) cost.
-    - ``'tombstone'``: alias of ``'auto'`` (kept for callers that want
-      the append-only guarantee spelled at the call site).
+    would cost O(index files). Pure deletes append a GENERATION MARKER
+    at the target version (kills every lower generation); updates
+    append the marker AND the re-tokenized rows AT that generation
+    (the marker kills the old image, spares the new); resurrected
+    inserts re-enter at their existing marker's generation. Serving
+    filters dead generations before the df aggregate, staying
+    bit-identical to a rebuild on the live corpus;
+    ``compact_bm25_tombstones`` reclaims dead rows amortized and
+    restores snapshot bit-identity.
 
     ``auto_compact_ratio`` bounds marker pressure mechanically: after
     a wave commits, if live markers exceed that fraction of live docs
@@ -304,10 +296,6 @@ def sync_bm25_index(
         table_properties,
     )
 
-    if delete_mode not in ("auto", "rewrite", "tombstone"):
-        raise ValueError(
-            f"delete_mode must be auto|rewrite|tombstone, got {delete_mode!r}"
-        )
     props = table_properties(spark, index_path)
     meta = props.get("bm25")
     if not meta:
@@ -336,8 +324,7 @@ def sync_bm25_index(
         # is size(tokens(text)) by construction (shared tokenizer) —
         # so the decrement is exact with ZERO postings IO. (The
         # standalone delete_from_bm25_index has only ids and must
-        # scan; a scattered wave's terms hit most term-sorted files,
-        # which is exactly the O(index) read sync avoids here.) The
+        # scan the id-bloom-pruned postings for their dl.) The
         # sync invariant makes every preimage id live in the index:
         # within-window insert-then-delete rows never enter the feed
         # (their file was never part of from_version's snapshot).
@@ -387,30 +374,16 @@ def sync_bm25_index(
         # rows — identical to _corpus_stats(toked) by construction)
         arr = [r for r in feed if r[0] in ("insert", "update")]
         n_add, tok_add = len(arr), sum(int(r[2]) for r in arr)
-        if delete_mode in ("auto", "tombstone"):
-            # PURE-APPEND wave: one marker per victim at gen=to_v
-            # (source versions strictly increase, so to_v exceeds
-            # every live generation); updated ids ALSO re-arrive at
-            # gen=to_v — the marker kills the old image, spares the
-            # new; resurrected inserts re-enter at their existing
-            # marker's generation. No file is rewritten: removed == []
-            # on the commit (gated in tests).
-            marker_ids = del_ids + upd_ids
-            arr_gens = {i: to_v for i in upd_ids}
-            arr_gens.update(
-                {i: gens[i] for i in ins_ids if i in gens}
-            )
-            phys_ids: list = []
-            n_markers = len(set(gens) | set(marker_ids))
-        else:  # 'rewrite': physical copy-on-write for every victim
-            marker_ids = []
-            arr_gens = {}
-            # resurrected ids' dead rows + markers leave in this
-            # commit too (the id-IN prune catches marker rows — they
-            # carry the victim id), so their arrivals restart at gen 0
-            resurrected = sorted(set(gens) & set(ins_ids + upd_ids))
-            phys_ids = sorted(set(del_ids) | set(upd_ids) | set(resurrected))
-            n_markers = len(set(gens) - set(phys_ids))
+        # PURE-APPEND wave: one marker per victim at gen=to_v (source
+        # versions strictly increase, so to_v exceeds every live
+        # generation); updated ids ALSO re-arrive at gen=to_v — the
+        # marker kills the old image, spares the new; resurrected
+        # inserts re-enter at their existing marker's generation. No
+        # file is rewritten: removed == [] on the commit (gated in
+        # tests).
+        marker_ids = del_ids + upd_ids
+        arr_gens = {i: to_v for i in upd_ids}
+        arr_gens.update({i: gens[i] for i in ins_ids if i in gens})
         arrivals = _index_postings(toked, id_col, gens=arr_gens)
         if marker_ids:
             arrivals = arrivals.unionByName(
@@ -424,9 +397,6 @@ def sync_bm25_index(
         out = apply_delta(
             spark,
             index_path,
-            delete_prune=(
-                [(id_col, "in", phys_ids)] if phys_ids else ()
-            ),
             append_df=arrivals,
             txn=(_SYNC_APP, to_v),
             properties={
@@ -437,7 +407,7 @@ def sync_bm25_index(
                     "total_tokens": int(meta["total_tokens"])
                     - tok_del
                     + tok_add,
-                    "tombstones": n_markers,
+                    "tombstones": len(set(gens) | set(marker_ids)),
                 },
                 "sync": {"src": src_path, "version": to_v},
             },
@@ -465,7 +435,7 @@ def sync_bm25_index(
         # deleted within the window was never indexed — not counted;
         # updated docs leave AND return, counted here and in appended)
         "deleted": n_del,
-        "tombstoned": len(del_ids) if delete_mode != "rewrite" else 0,
+        "tombstoned": len(del_ids),
         "appended": int(n_add),
         "compacted": compacted,
     }

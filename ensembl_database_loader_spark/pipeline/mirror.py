@@ -31,13 +31,13 @@ pre-existing target raises.
 from __future__ import annotations
 
 import os
-import shutil
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ensembl_database_loader_spark.sources.discovery import prepare_target_dir
 from ensembl_database_loader_spark.sources.mysql_dump import read_mysql_dump
 
 VALID_MODES = ("all", "ensembl", "mart")  # DatabaseFactory.pm:32-53
@@ -344,10 +344,7 @@ def _load_one(
         )
         results.append(JobResult(database, "verify", "DONE", attempt, branch=branch))
         target = os.path.join(target_dir, database)
-        if os.path.exists(target):
-            if attempt == 0:  # LoadFiles.pm:56-64: first-attempt collision throws
-                raise FileExistsError(f"target database already exists: {target}")
-            shutil.rmtree(target)  # retry: drop + recreate (DownloadDatabase.pm:172-186)
+        prepare_target_dir(target, attempt)
         for t, df in tables.items():
             df.write.mode("errorifexists").parquet(os.path.join(target, t))
         results.append(JobResult(database, "load", "DONE", attempt, branch=branch))

@@ -4423,9 +4423,8 @@ _BM25_ORACLE = (
     "rk AS (SELECT qid, doc_id, score, ROW_NUMBER() OVER "
     "(PARTITION BY qid ORDER BY score DESC, doc_id) AS rn FROM sc) "
     "SELECT qid, doc_id, ROUND(score, 2) AS score, "
-    "CAST(rn AS INTEGER) AS rank, TRUE AS bm_idx_matches, "
-    "TRUE AS bm_shuffle_matches, "
-    "TRUE AS bm_idx_shuffle_matches FROM rk WHERE rn <= 5 "
+    "CAST(rn AS INTEGER) AS rank, TRUE AS bm_idx_matches "
+    "FROM rk WHERE rn <= 5 "
     "ORDER BY qid, rank"
 )
 
@@ -4437,26 +4436,22 @@ _BM25_ORACLE = (
 )
 def ss_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     """BM25 sparse retrieval (operators/bm25.py) — the lexical sibling
-    of the dense-ANN serving stack: a batch query frame (every doc_id %
-    100 == 7's first five tokens) scored against the documents corpus,
-    top-5 per query. The AD-HOC path (one corpus scan; the exploded
-    term stream filtered by the broadcast query-term set BEFORE the tf
-    aggregate) is hash-gated VALUE-EXACT against the oracle's full
-    recompute — kept rows, rounded scores, ranks. TRUE-gated: the
-    MATERIALIZED postings index (a manifest table with term + doc-id
+    of the dense-ANN serving stack: a query wave (every doc_id % 100 ==
+    7's first five tokens) served top-5 per query by ``bm25_topk`` over
+    a materialized postings index (a manifest table with term + doc-id
     blooms, term-sorted [min, max] stats, corpus stats in table
-    properties) is row-identical to the ad-hoc path, and (r12) the
-    DATAFRAME-SHAPED query path (``broadcast_queries=False``
-    — executor-side tokenization, shuffle join, zero driver collect:
-    the corpus-scale sweep shape, VERDICT r11 #2) is row-identical to
-    the collected broadcast form on BOTH the ad-hoc and indexed
-    paths."""
+    properties). The LIST wave (one JVM tokenize+collect, one ``term
+    IN`` predicate pruning postings files) is hash-gated VALUE-EXACT
+    against the oracle's full recompute — kept rows, rounded scores,
+    ranks. TRUE-gated (``bm_idx_matches``): the DATAFRAME wave
+    (executor-side tokenization, shuffle join, zero driver collect:
+    the corpus-scale sweep shape, VERDICT r11 #2) returns the
+    identical rows."""
     import tempfile
 
     from ensembl_database_loader_spark.functions.text import tokens
     from ensembl_database_loader_spark.operators.bm25 import (
         bm25_topk,
-        bm25_topk_indexed,
         build_bm25_index,
     )
 
@@ -4467,41 +4462,18 @@ def ss_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("qid"),
         F.concat_ws(" ", F.slice(toks, 1, 5)).alias("qtext"),
     )
-    topk = bm25_topk(docs, queries, "doc_id", "text", k=5).persist()
-
     path = tempfile.mkdtemp(prefix="edl_bm25_") + "/idx"
     build_bm25_index(docs, "doc_id", "text", path, num_files=4)
-    # every identity gate compares <= |queries|*5 rows: the serving
-    # forms collect CONCURRENTLY (each evaluated exactly once; topk
-    # stays persisted — its cached rows also feed the returned value
-    # frame) and the multiset compares happen driver-side on sorted
-    # tuples; the exceptAll formulation paid two extra hash-aggregate
-    # exchanges per gate and evaluated each compare side twice
-    trows, idx_rows, shuf_rows, idx_shuf_rows = (
-        _collect_sorted_parallel(
-            topk,
-            bm25_topk_indexed(spark, path, queries, k=5),
-            bm25_topk(
-                docs, queries, "doc_id", "text", k=5,
-                broadcast_queries=False,
-            ),
-            bm25_topk_indexed(
-                spark, path, queries, k=5, broadcast_queries=False
-            ),
-        )
+    wave = [(r["qid"], r["qtext"]) for r in queries.collect()]
+    # both waves collect CONCURRENTLY, each evaluated once; topk stays
+    # persisted — its cached rows also feed the returned value frame
+    topk = bm25_topk(spark, path, wave, k=5).persist()
+    trows, frame_rows = _collect_sorted_parallel(
+        topk, bm25_topk(spark, path, queries, k=5)
     )
-    idx_matches = idx_rows == trows
-    shuffle_matches = shuf_rows == trows
-    idx_shuffle_matches = idx_shuf_rows == idx_rows
     return (
-        topk.withColumn("bm_idx_matches", F.lit(bool(idx_matches)))
-        .withColumn("bm_shuffle_matches", F.lit(bool(shuffle_matches)))
-        .withColumn("bm_idx_shuffle_matches", F.lit(bool(idx_shuffle_matches)))
-        .select(
-            "qid", "doc_id", "score", "rank",
-            "bm_idx_matches", "bm_shuffle_matches",
-            "bm_idx_shuffle_matches",
-        )
+        topk.withColumn("bm_idx_matches", F.lit(bool(frame_rows == trows)))
+        .select("qid", "doc_id", "score", "rank", "bm_idx_matches")
         .orderBy("qid", "rank")
     )
 
@@ -4560,12 +4532,18 @@ def ss_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
     oracle's full recompute of both retrievals and the fusion (fused
     scores, ranks, kept rows). Fusion costs one union + one partial-agg
     over the already-tiny top-k frames — the corpora are only scanned
-    inside the retrieval operators."""
+    inside the retrieval operators. The lexical side serves from a
+    postings index built per call in a temp dir."""
+    import tempfile
+
     from pyspark.sql import Window
 
     from ensembl_database_loader_spark.functions.text import tokens
     from ensembl_database_loader_spark.functions.vectors import cosine
-    from ensembl_database_loader_spark.operators.bm25 import bm25_topk
+    from ensembl_database_loader_spark.operators.bm25 import (
+        bm25_topk,
+        build_bm25_index,
+    )
     from ensembl_database_loader_spark.operators.fusion import rrf_fuse
 
     ensure_session_confs(spark)
@@ -4575,7 +4553,9 @@ def ss_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
         F.col("doc_id").alias("qid"),
         F.concat_ws(" ", F.slice(toks, 1, 5)).alias("qtext"),
     )
-    lex = bm25_topk(docs, queries, "doc_id", "text", k=5)
+    path = tempfile.mkdtemp(prefix="edl_rrf_") + "/bm25"
+    build_bm25_index(docs, "doc_id", "text", path, num_files=4)
+    lex = bm25_topk(spark, path, queries, k=5)
 
     e = table(spark, sf, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -4712,7 +4692,7 @@ def ss_index_sync(spark: SparkSession, sf: str) -> DataFrame:
 
     from ensembl_database_loader_spark.functions.text import tokens
     from ensembl_database_loader_spark.operators.bm25 import (
-        bm25_topk_indexed,
+        bm25_topk,
         build_bm25_index,
         compact_bm25_tombstones,
     )
@@ -4846,7 +4826,7 @@ def ss_index_sync(spark: SparkSession, sf: str) -> DataFrame:
         )
 
         def _bm_serve():
-            return bm25_topk_indexed(spark, bm_idx, qd, k=5).agg(
+            return bm25_topk(spark, bm_idx, qd, k=5).agg(
                 F.count(F.lit(1)).cast("bigint").alias("sy_bm_n"),
                 F.sum("qid").cast("bigint").alias("sy_bm_qid_sum"),
                 F.sum("doc_id").cast("bigint").alias("sy_bm_doc_sum"),

@@ -665,8 +665,8 @@ MERGE_SPECS: dict[str, list[tuple[str, list[tuple[str, str]]]]] = {
             ],
         ),
         # r11: BM25 sparse retrieval — value-exact top-5 rows per query
-        # (keyed uniquely by (bm_qid, bm_rank)); the bloom-pruned
-        # postings index is TRUE-gated row-identical
+        # (keyed uniquely by (bm_qid, bm_rank)) from a list wave; the
+        # DataFrame wave is TRUE-gated row-identical
         (
             "ss_bm25_topk",
             [

@@ -100,12 +100,13 @@ def ftp_download(ftp, db_dir: str, target_dir: str) -> list[str]:
 
 
 def prepare_target_dir(path: str, attempt: int) -> None:
-    """D4: idempotent dir (re)create — first attempt: existing dir is an
-    error; on retry: rmtree then recreate (DownloadDatabase.pm:172-186)."""
+    """D4: idempotent dir (re)create for a download or load target —
+    first attempt: an existing dir is an error (LoadFiles.pm:56-64); on
+    retry: rmtree then recreate (DownloadDatabase.pm:172-186)."""
     import shutil
 
     if os.path.exists(path):
         if attempt == 0:
-            raise FileExistsError(f"download target already exists: {path}")
+            raise FileExistsError(f"target already exists: {path}")
         shutil.rmtree(path)
     os.makedirs(path)

@@ -1,7 +1,8 @@
-"""operators/bm25.py — Okapi BM25 sparse retrieval: ad-hoc scoring
-against a pure-Python mirror, the materialized postings index
-row-identical to ad-hoc, and bloom + stats file skipping on term
-lookups.
+"""operators/bm25.py — Okapi BM25 sparse retrieval over the postings
+index: ``bm25_topk`` against a pure-Python mirror, list and DataFrame
+waves row-identical, bloom + stats file skipping on term lookups, and
+index maintenance (append, generation-marker delete, compaction)
+serving identical to a rebuild.
 """
 
 from __future__ import annotations
@@ -13,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ensembl_database_loader_spark.operators.bm25 import (
     bm25_topk,
-    bm25_topk_indexed,
     build_bm25_index,
 )
 
@@ -63,15 +63,17 @@ def _frames(spark):
     return docs, queries
 
 
-def test_bm25_topk_matches_mirror(spark):
-    docs, queries = _frames(spark)
+def test_bm25_topk_matches_mirror(spark, tmp_path):
+    docs, _ = _frames(spark)
+    path = str(tmp_path / "bm25")
+    build_bm25_index(docs, "doc_id", "text", path)
     got = {
         qid: [
             (r["doc_id"], r["score"], r["rank"])
             for r in rows
         ]
         for qid, rows in _group(
-            bm25_topk(docs, queries, "doc_id", "text", k=3).collect()
+            bm25_topk(spark, path, QUERIES, k=3).collect()
         ).items()
     }
     assert got == _mirror_topk(k=3)
@@ -84,13 +86,21 @@ def _group(rows):
     return out
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 def test_indexed_row_identical(spark, tmp_path):
+    """A list wave and a DataFrame wave of the same queries serve the
+    same rows, and both match the mirror's kept (doc, score, rank)."""
     docs, queries = _frames(spark)
     path = str(tmp_path / "bm25")
     build_bm25_index(docs, "doc_id", "text", path)
-    adhoc = bm25_topk(docs, queries, "doc_id", "text", k=3)
-    idx = bm25_topk_indexed(spark, path, queries, k=3)
-    assert idx.exceptAll(adhoc).unionAll(adhoc.exceptAll(idx)).count() == 0
+    listed = _rows(bm25_topk(spark, path, QUERIES, k=3))
+    assert listed == _rows(bm25_topk(spark, path, queries, k=3))
+    assert listed == sorted(
+        (qid, *row) for qid, rows in _mirror_topk(k=3).items() for row in rows
+    )
 
 
 def test_index_prunes_postings_files(spark, tmp_path, sf_dir):
@@ -111,12 +121,7 @@ def test_index_prunes_postings_files(spark, tmp_path, sf_dir):
     assert len(m["files"]) > 1, "fixture index must span multiple files"
     kept = files_matching(m, [("term", "in", ["the"])])
     assert 0 < len(kept) < len(m["files"])
-    got = bm25_topk_indexed(
-        spark,
-        path,
-        spark.createDataFrame([(1, "the")], "qid bigint, qtext string"),
-        k=5,
-    )
+    got = bm25_topk(spark, path, [(1, "the")], k=5)
     assert got.count() == 5
 
 
@@ -157,18 +162,24 @@ def test_bloom_prunes_in_predicates(spark, tmp_path):
 
 
 def test_empty_query_wave_returns_empty_like_adhoc(spark, tmp_path):
-    """ADVICE r12: the paths documented as row-identical must agree on
-    the no-terms edge — an all-whitespace wave returns an EMPTY frame
-    with the exact output schema from BOTH, never an error."""
+    """ADVICE r12: the waves documented as row-identical must agree on
+    the no-terms edge — an all-whitespace wave (and an empty list)
+    returns an EMPTY frame with the exact output schema from BOTH wave
+    kinds, never an error."""
     docs, _ = _frames(spark)
     path = str(tmp_path / "bm25e")
     build_bm25_index(docs, "doc_id", "text", path)
     empty = spark.createDataFrame([(1, "   ")], "qid bigint, qtext string")
-    adhoc = bm25_topk(docs, empty, "doc_id", "text", k=3)
-    idx = bm25_topk_indexed(spark, path, empty, k=3)
-    assert adhoc.count() == 0 and idx.count() == 0
-    assert idx.columns == adhoc.columns == ["qid", "doc_id", "score", "rank"]
-    assert dict(idx.dtypes) == dict(adhoc.dtypes)
+    frame = bm25_topk(spark, path, empty, k=3)
+    for listed in (
+        bm25_topk(spark, path, [(1, "   ")], k=3),
+        bm25_topk(spark, path, [], k=3),
+    ):
+        assert listed.count() == 0
+        assert listed.columns == frame.columns
+        assert dict(listed.dtypes) == dict(frame.dtypes)
+    assert frame.count() == 0
+    assert frame.columns == ["qid", "doc_id", "score", "rank"]
 
 
 def test_append_serves_identical_to_rebuild(spark, tmp_path):
@@ -199,9 +210,9 @@ def test_append_serves_identical_to_rebuild(spark, tmp_path):
     assert props["n_docs"] == len(DOCS)
     assert props == table_properties(spark, full)["bm25"]
 
-    a = bm25_topk_indexed(spark, inc, queries, k=4)
-    b = bm25_topk_indexed(spark, full, queries, k=4)
-    assert a.exceptAll(b).unionAll(b.exceptAll(a)).count() == 0
+    assert _rows(bm25_topk(spark, inc, queries, k=4)) == _rows(
+        bm25_topk(spark, full, queries, k=4)
+    )
 
     # exactly-once: the replayed ingest commits nothing — version AND
     # stats unchanged
@@ -212,12 +223,14 @@ def test_append_serves_identical_to_rebuild(spark, tmp_path):
 
 
 def test_delete_decrements_stats_and_matches_rebuild(spark, tmp_path):
-    """delete_from_bm25_index removes postings AND decrements the
+    """delete_from_bm25_index masks the postings AND decrements the
     corpus stats in ONE commit, so the delete->append re-ingest cycle
     serves ROW-IDENTICAL to a from-scratch rebuild (stale stats would
-    silently skew idf/avgdl forever)."""
+    silently skew idf/avgdl forever); after compaction the properties
+    match the rebuild's too."""
     from ensembl_database_loader_spark.operators.bm25 import (
         append_to_bm25_index,
+        compact_bm25_tombstones,
         delete_from_bm25_index,
     )
     from ensembl_database_loader_spark.sinks.manifest import table_properties
@@ -234,73 +247,97 @@ def test_delete_decrements_stats_and_matches_rebuild(spark, tmp_path):
 
     inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
     build_bm25_index(alldocs, "doc_id", "text", inc)
-    out = delete_from_bm25_index(spark, inc, [2])
-    assert out is not None and out["rows_affected"] > 0
+    assert delete_from_bm25_index(spark, inc, [2]) is not None
     props = table_properties(spark, inc)["bm25"]
     assert props["n_docs"] == len(DOCS) - 1
     append_to_bm25_index(corrected, "text", inc)
     build_bm25_index(final, "doc_id", "text", full)
+    assert _rows(bm25_topk(spark, inc, queries, k=4)) == _rows(
+        bm25_topk(spark, full, queries, k=4)
+    )
+    assert compact_bm25_tombstones(spark, inc) is not None
     assert (
         table_properties(spark, inc)["bm25"]
         == table_properties(spark, full)["bm25"]
     )
-    a = bm25_topk_indexed(spark, inc, queries, k=4)
-    b = bm25_topk_indexed(spark, full, queries, k=4)
-    assert a.exceptAll(b).unionAll(b.exceptAll(a)).count() == 0
+    assert _rows(bm25_topk(spark, inc, queries, k=4)) == _rows(
+        bm25_topk(spark, full, queries, k=4)
+    )
     # deleting nothing is a no-op (no commit, stats unchanged)
     assert delete_from_bm25_index(spark, inc, [999]) is None
 
 
 def test_string_qids_supported(spark, tmp_path):
-    """Query ids may be strings (UUIDs): the literal qt frame carries
-    the caller's qid type through scoring and output."""
+    """Query ids may be strings (UUIDs): a list wave and a DataFrame
+    wave both carry the string qid through scoring and output, with
+    the same rows."""
     docs, _ = _frames(spark)
-    queries = spark.createDataFrame(
-        [("q-a", "quick brown fox"), ("q-b", "lazy dog")],
-        "qid string, qtext string",
-    )
-    got = bm25_topk(docs, queries, "doc_id", "text", k=2)
-    rows = got.collect()
-    assert {r["qid"] for r in rows} == {"q-a", "q-b"}
-    assert all(isinstance(r["qid"], str) for r in rows)
+    path = str(tmp_path / "bm25_str")
+    build_bm25_index(docs, "doc_id", "text", path)
+    wave = [("q-a", "quick brown fox"), ("q-b", "lazy dog")]
+    frame = spark.createDataFrame(wave, "qid string, qtext string")
+    got = [bm25_topk(spark, path, w, k=2) for w in (wave, frame)]
+    for df in got:
+        assert dict(df.dtypes)["qid"] == "string"
+        rows = df.collect()
+        assert {r["qid"] for r in rows} == {"q-a", "q-b"}
+        assert all(isinstance(r["qid"], str) for r in rows)
+    assert _rows(got[0]) == _rows(got[1])
 
 
 def test_shuffle_query_shape_row_identical(spark, tmp_path):
-    """VERDICT r11 #2: the DataFrame-shaped query path (executor-side
-    tokenization, shuffle join — no driver collect) is row-identical to
-    the collected broadcast form on BOTH the ad-hoc and indexed paths,
-    and builds its plan without launching a Spark job."""
+    """VERDICT r11 #2: a DataFrame wave (executor-side tokenization,
+    shuffle join — no driver collect) is row-identical to the list
+    wave of the same queries (one collect, term-IN pruned scan), and
+    builds its plan without launching a Spark job."""
     docs, queries = _frames(spark)
     path = str(tmp_path / "bm25_shuf")
     build_bm25_index(docs, "doc_id", "text", path)
 
-    a_b = bm25_topk(docs, queries, "doc_id", "text", k=3)
-    a_s = bm25_topk(
-        docs, queries, "doc_id", "text", k=3, broadcast_queries=False
-    )
-    assert a_s.exceptAll(a_b).unionAll(a_b.exceptAll(a_s)).count() == 0
-
-    i_b = bm25_topk_indexed(spark, path, queries, k=3)
+    listed = bm25_topk(spark, path, QUERIES, k=3)
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None) or [])
-    i_s = bm25_topk_indexed(
-        spark, path, queries, k=3, broadcast_queries=False
-    )
+    frame = bm25_topk(spark, path, queries, k=3)
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before, "shuffle-shaped plan construction collected"
-    assert i_s.exceptAll(i_b).unionAll(i_b.exceptAll(i_s)).count() == 0
+    assert _rows(frame) == _rows(listed)
+
+
+def test_wave_guards_raise_before_any_job(spark, tmp_path):
+    """Two list rows under one qid would silently union their terms, so
+    a duplicate qid raises with the row and distinct counts; an index
+    whose id column is ``qid`` would emit two ``qid`` columns, so it
+    raises too. Both checks run on the driver with no Spark job."""
+    docs, queries = _frames(spark)
+    path = str(tmp_path / "bm25_dup")
+    build_bm25_index(docs, "doc_id", "text", path)
+    qid_path = str(tmp_path / "bm25_qid")
+    build_bm25_index(
+        docs.withColumnRenamed("doc_id", "qid"), "qid", "text", qid_path
+    )
+
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None) or [])
+    with pytest.raises(ValueError, match=r"3 rows, 2 distinct"):
+        bm25_topk(spark, path, QUERIES + [(100, "lazy")], k=3)
+    for wave in (QUERIES, queries):
+        with pytest.raises(ValueError, match="id_col 'qid'"):
+            bm25_topk(spark, qid_path, wave, k=3)
+    after = len(tracker.getJobIdsForGroup(None) or [])
+    assert after == before, "a wave guard launched a Spark job"
 
 
 def test_delete_wave_prunes_files_via_id_bloom(spark, tmp_path):
     """VERDICT r11 #5: the index blooms the doc id as well as the term,
-    and the copy-on-write rewrite path consults blooms — a delete wave
-    rewrites only the files actually holding a victim's postings and
-    carries the rest by reference (files_untouched > 0). A doc's
-    postings land in as many files as its terms span term ranges, so
-    the fixture uses docs with NARROW term ranges (the realistic shape
-    at scale: thousands of term-range files vs hundreds of distinct
-    terms per doc)."""
+    and compaction's copy-on-write rewrite consults blooms — reclaiming
+    a delete wave rewrites only the files actually holding a victim's
+    postings or marker and carries the rest by reference
+    (files_untouched > 0). A doc's postings land in as many files as
+    its terms span term ranges, so the fixture uses docs with NARROW
+    term ranges (the realistic shape at scale: thousands of term-range
+    files vs hundreds of distinct terms per doc)."""
     from ensembl_database_loader_spark.operators.bm25 import (
+        compact_bm25_tombstones,
         delete_from_bm25_index,
     )
     from ensembl_database_loader_spark.sinks.manifest import latest_manifest
@@ -315,12 +352,14 @@ def test_delete_wave_prunes_files_via_id_bloom(spark, tmp_path):
     )
     path = str(tmp_path / "bm25_del")
     build_bm25_index(narrow, "doc_id", "text", path, num_files=3)
+    assert len(latest_manifest(spark, path)["files"]) > 1
+    assert delete_from_bm25_index(spark, path, [1]) is not None
     n_files = len(latest_manifest(spark, path)["files"])
-    assert n_files > 1
-    out = delete_from_bm25_index(spark, path, [1])
-    assert out is not None and out["rows_affected"] == 4
+    out = compact_bm25_tombstones(spark, path)
+    # doc 1's four postings plus its marker row
+    assert out is not None and out["rows_affected"] == 5
     assert out["files_untouched"] > 0, (
-        "id bloom failed to prove absence on any file — delete wave "
+        "id bloom failed to prove absence on any file — compaction "
         "rewrote the whole index"
     )
     assert out["files_rewritten"] + out["files_untouched"] == n_files
@@ -332,6 +371,7 @@ def test_zero_token_doc_delete_keeps_stats_exact(spark, tmp_path):
     sentinel posting row) so the index stays row-identical to a rebuild
     without it."""
     from ensembl_database_loader_spark.operators.bm25 import (
+        compact_bm25_tombstones,
         delete_from_bm25_index,
     )
     from ensembl_database_loader_spark.sinks.manifest import table_properties
@@ -349,13 +389,17 @@ def test_zero_token_doc_delete_keeps_stats_exact(spark, tmp_path):
         spark.createDataFrame(DOCS, "doc_id bigint, text string"),
         "doc_id", "text", full,
     )
+    assert table_properties(spark, inc)["bm25"] == {
+        **table_properties(spark, full)["bm25"], "tombstones": 1
+    }
+    assert _rows(bm25_topk(spark, inc, queries, k=4)) == _rows(
+        bm25_topk(spark, full, queries, k=4)
+    )
+    assert compact_bm25_tombstones(spark, inc) is not None
     assert (
         table_properties(spark, inc)["bm25"]
         == table_properties(spark, full)["bm25"]
     )
-    a = bm25_topk_indexed(spark, inc, queries, k=4)
-    b = bm25_topk_indexed(spark, full, queries, k=4)
-    assert a.exceptAll(b).unionAll(b.exceptAll(a)).count() == 0
 
 
 def test_tombstone_delete_lifecycle(spark, tmp_path):
@@ -377,9 +421,7 @@ def test_tombstone_delete_lifecycle(spark, tmp_path):
     rebuilt = str(tmp_path / "rebuilt")
     build_bm25_index(docs, "doc_id", "text", idx, num_files=3)
 
-    out = delete_from_bm25_index(
-        spark, idx, [1, 3, 999], mode="tombstone", txn=("wave", 1)
-    )
+    out = delete_from_bm25_index(spark, idx, [1, 3, 999], txn=("wave", 1))
     assert out is not None
     # O(wave): an APPEND-only commit — no existing file removed
     v = int(M.latest_manifest(spark, idx)["version"])
@@ -398,21 +440,16 @@ def test_tombstone_delete_lifecycle(spark, tmp_path):
     )
     assert ms["tombstones"] == 2
 
-    def serve(p, **kw):
-        return sorted(
-            map(tuple, bm25_topk_indexed(spark, p, queries, k=3, **kw).collect())
-        )
+    def serve(p, wave=QUERIES):
+        return _rows(bm25_topk(spark, p, wave, k=3))
 
     assert serve(idx) == serve(rebuilt)
-    # the shuffle-shaped query path filters tombstones identically
-    assert serve(idx, broadcast_queries=False) == serve(rebuilt)
+    # the DataFrame wave filters tombstones identically
+    assert serve(idx, queries) == serve(rebuilt)
 
     # idempotent re-delete (already tombstoned) and replayed txn: no-ops
-    assert delete_from_bm25_index(spark, idx, [1, 3], mode="tombstone") is None
-    assert (
-        delete_from_bm25_index(spark, idx, [5], mode="tombstone", txn=("wave", 1))
-        is None
-    )
+    assert delete_from_bm25_index(spark, idx, [1, 3]) is None
+    assert delete_from_bm25_index(spark, idx, [5], txn=("wave", 1)) is None
 
     assert compact_bm25_tombstones(spark, idx) is not None
     assert M.table_properties(spark, idx)["bm25"]["tombstones"] == 0
@@ -462,12 +499,10 @@ def test_generation_resurrection_append_only(spark, tmp_path):
         assert cf["removed"] == [], "maintenance commit rewrote a file"
 
     def serve(p):
-        return sorted(
-            map(tuple, bm25_topk_indexed(spark, p, queries, k=3).collect())
-        )
+        return _rows(bm25_topk(spark, p, queries, k=3))
 
     # tombstone -> resurrect with REPLACEMENT text -> serving follows
-    assert delete_from_bm25_index(spark, idx, [2], mode="tombstone") is not None
+    assert delete_from_bm25_index(spark, idx, [2]) is not None
     assert_append_only()
     append_to_bm25_index(
         spark.createDataFrame(
@@ -497,7 +532,7 @@ def test_generation_resurrection_append_only(spark, tmp_path):
 
     # re-delete the RESURRECTED doc: the marker must advance past the
     # live generation (gen+1), not collide with the old marker
-    assert delete_from_bm25_index(spark, idx, [2], mode="tombstone") is not None
+    assert delete_from_bm25_index(spark, idx, [2]) is not None
     assert_append_only()
     fresh2 = str(tmp_path / "fresh2")
     build_bm25_index(
@@ -533,10 +568,10 @@ def test_marker_free_serving_pays_zero_cost(spark, tmp_path):
     assert _marker_gens(spark, path) == {}
     after = len(tracker.getJobIdsForGroup(None) or [])
     assert after == before, "marker map on a clean index launched a job"
-    plan = bm25_topk_indexed(spark, path, queries, k=3)._jdf.queryExecution().analyzed().toString()
+    plan = bm25_topk(spark, path, queries, k=3)._jdf.queryExecution().analyzed().toString()
     assert "_kill" not in plan, "marker-free plan carries the liveness join"
 
     # with a marker present the join appears, and it is broadcast-dim
-    delete_from_bm25_index(spark, path, [2], mode="tombstone")
-    plan2 = bm25_topk_indexed(spark, path, queries, k=3)._jdf.queryExecution().analyzed().toString()
+    delete_from_bm25_index(spark, path, [2])
+    plan2 = bm25_topk(spark, path, queries, k=3)._jdf.queryExecution().analyzed().toString()
     assert "_kill" in plan2

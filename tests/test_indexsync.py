@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 import ensembl_database_loader_spark.sinks.manifest as M
 from ensembl_database_loader_spark.operators.bm25 import (
+    bm25_topk,
     build_bm25_index,
-    bm25_topk_indexed,
 )
 from ensembl_database_loader_spark.operators.indexsync import (
     sync_ann_index,
@@ -347,7 +347,7 @@ def test_sync_resurrects_tombstoned_id(spark, src, tmp_path):
     double stats decrement, removed == []), and the index stays
     rebuild-exact end to end."""
     from ensembl_database_loader_spark.operators.bm25 import (
-        bm25_topk_indexed,
+        bm25_topk,
         compact_bm25_tombstones,
         tombstoned_ids,
     )
@@ -378,7 +378,7 @@ def test_sync_resurrects_tombstoned_id(spark, src, tmp_path):
     queries = spark.createDataFrame(
         [(1, "resurrect token")], "qid bigint, qtext string"
     )
-    got = bm25_topk_indexed(spark, idx, queries, k=3).collect()
+    got = bm25_topk(spark, idx, queries, k=3).collect()
     assert [r.doc_id for r in got][:1] == [8]
     # rebuild-exact: stats and (post-reclaim) snapshots agree
     fresh = str(tmp_path / "fresh")
@@ -435,7 +435,7 @@ def test_sync_bm25_index_serves_identical_to_rebuild(spark, src, tmp_path):
     )
     serve = lambda p: sorted(
         (r.qid, r.doc_id, round(r.score, 9), r.rank)
-        for r in bm25_topk_indexed(spark, p, queries, k=5).collect()
+        for r in bm25_topk(spark, p, queries, k=5).collect()
     )
     # TOMBSTONE serving: dead postings still on disk, yet scores are
     # bit-identical to the rebuild (victims filtered before the df agg)
@@ -474,56 +474,6 @@ def test_sync_bm25_index_serves_identical_to_rebuild(spark, src, tmp_path):
     assert serve(idx) == before
     assert M.table_properties(spark, idx)["sync"] == state
     assert M.table_properties(spark, idx)["bm25"] == m2
-    assert sync_bm25_index(spark, idx, src)["noop"] is True
-
-
-def test_sync_bm25_rewrite_mode_immediate_bit_identity(spark, src, tmp_path):
-    """delete_mode='rewrite': every victim (pure deletes, updated ids,
-    AND a previously-tombstoned id being resurrected) leaves
-    PHYSICALLY in the one-commit wave — the snapshot is bit-identical
-    to a from-scratch rebuild immediately, with no compaction step;
-    marker rows of resurrected ids leave with their dead postings, so
-    the live-marker count drops to zero."""
-    from ensembl_database_loader_spark.operators.bm25 import (
-        tombstoned_ids,
-    )
-
-    idx = str(tmp_path / "bm25idx")
-    build_bm25_index(M.snapshot(spark, src, 0), "doc_id", "text", idx)
-    # wave 1 (auto): tombstone doc 8
-    M.delete_rows(spark, src, prune=[("doc_id", "in", [8])])
-    out = sync_bm25_index(spark, idx, src, from_version=0)
-    assert out["tombstoned"] == 1 and tombstoned_ids(spark, idx) == [8]
-    # wave 2: doc 8 resurrects + mixed mutations, synced with REWRITE
-    M.write_table(
-        spark.createDataFrame(
-            [(8, _vec(0, 8), "returned doc for the rewrite path")],
-            "doc_id bigint, embedding array<double>, text string",
-        ),
-        src,
-        mode="append",
-    )
-    to_v = _mutate(spark, src)
-    out = sync_bm25_index(spark, idx, src, delete_mode="rewrite")
-    assert out["noop"] is False and out["to_version"] == to_v
-    assert out["tombstoned"] == 0  # nothing deferred
-    assert tombstoned_ids(spark, idx) == []  # marker left with the dead rows
-    fresh = str(tmp_path / "fresh")
-    build_bm25_index(M.snapshot(spark, src, to_v), "doc_id", "text", fresh)
-    ms, mf = (M.table_properties(spark, p)["bm25"] for p in (idx, fresh))
-    assert (ms["n_docs"], ms["total_tokens"], ms["tombstones"]) == (
-        mf["n_docs"], mf["total_tokens"], 0,
-    )
-    a, b = M.snapshot(spark, idx), M.snapshot(spark, fresh)
-    assert a.exceptAll(b).unionAll(b.exceptAll(a)).count() == 0
-    queries = spark.createDataFrame(
-        [(1, "rewritten topic t0"), (2, "returned doc")],
-        "qid bigint, qtext string",
-    )
-    serve = lambda p: sorted(
-        map(tuple, bm25_topk_indexed(spark, p, queries, k=5).collect())
-    )
-    assert serve(idx) == serve(fresh)
     assert sync_bm25_index(spark, idx, src)["noop"] is True
 
 

@@ -401,8 +401,8 @@ def test_streaming_ingest_to_synced_serving_index(spark, tmp_path):
     nothing anywhere."""
     import ensembl_database_loader_spark.sinks.manifest as M
     from ensembl_database_loader_spark.operators.bm25 import (
+        bm25_topk,
         build_bm25_index,
-        bm25_topk_indexed,
     )
     from ensembl_database_loader_spark.operators.indexsync import (
         sync_bm25_index,
@@ -469,7 +469,7 @@ def test_streaming_ingest_to_synced_serving_index(spark, tmp_path):
         "qid bigint, qtext string",
     )
     serve = lambda p: sorted(
-        map(tuple, bm25_topk_indexed(spark, p, queries, k=3).collect())
+        map(tuple, bm25_topk(spark, p, queries, k=3).collect())
     )
     assert serve(idx) == serve(fresh)
 
