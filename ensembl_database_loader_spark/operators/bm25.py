@@ -583,14 +583,13 @@ def bm25_topk(
         )
 
     if isinstance(queries, DataFrame):
-        # lazily persisted: qt feeds BOTH the postings pre-filter and
-        # the scoring join — without the cache the wave's
-        # tokenize+distinct lineage executes twice, at exactly the
-        # sweep scale this shape targets
-        qt = _query_terms(queries, qid_col, qtext_col).distinct().persist()
-        # sentinel ''-term rows can never match (the tokenizer drops
-        # empties)
-        postings = snapshot(spark, path).join(qt.select("term").distinct(), "term")
+        # qt feeds BOTH the postings pre-filter (a semi join) and the
+        # scoring join: the two branches share qt's tokenize+distinct
+        # exchange, which the engine runs once and reuses, so the wave
+        # needs no cache that could outlive the call. Sentinel ''-term
+        # rows can never match (the tokenizer drops empties)
+        qt = _query_terms(queries, qid_col, qtext_col).distinct()
+        postings = snapshot(spark, path).join(qt, "term", "left_semi")
     else:
         wave = list(queries)
         n_q = len({q for q, _ in wave})

@@ -35,6 +35,16 @@ at-least-once to exactly-once: a replayed micro-batch (same app, same
 batch id <= the stored watermark) commits nothing (the idiom JDBC/Delta
 sinks use for idempotent replay).
 
+Every commit path builds its next manifest through one successor rule
+(``_successor``): the parent's files minus the ones it drops, carried
+by reference with their per-file stats/rows/blooms/parts entries, plus
+the staged files' entries; schema, bloom spec, layout and properties
+carry unless the commit replaces them. ``restore_table`` alone
+re-publishes its target version verbatim. Rewrites (compaction, merge,
+row-level delete/update, ``apply_delta``) keep the table's stat
+columns by default (``stats_cols=None``), so a rewritten file loses no
+file skipping its predecessor had.
+
 Reference analogue: the loader's coarse transactionality — drop/create
 with a collision guard around every database load
 (``LoadFiles.pm:56-64``, ``Database.pm:56-63``) — made incremental:
@@ -58,6 +68,7 @@ import re
 import urllib.parse
 import uuid
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -268,6 +279,24 @@ def latest_manifest(spark: SparkSession, path: str) -> dict | None:
     return read_manifest(spark, path, versions[-1])
 
 
+def _not_committed(path: str) -> FileNotFoundError:
+    return FileNotFoundError(f"no manifest at {path} — not a committed table")
+
+
+def _head(spark: SparkSession, path: str, version: int | None = None) -> dict:
+    """The manifest at ``version`` (default: the head); raises for a
+    table that was never committed."""
+    root = path.rstrip("/")
+    m = (
+        read_manifest(spark, root, version)
+        if version is not None
+        else latest_manifest(spark, root)
+    )
+    if m is None:
+        raise _not_committed(path)
+    return m
+
+
 # ---------------------------------------------------------------------------
 # Commit protocol
 # ---------------------------------------------------------------------------
@@ -354,6 +383,29 @@ def _commit(
         f"manifest commit at {path} lost {_MAX_COMMIT_RETRIES} races — "
         "pathological contention or a stuck competing writer"
     )
+
+
+def _commit_pinned(
+    spark: SparkSession, path: str, head: dict, operation: str, payload: dict
+) -> dict:
+    """Publish ``payload`` — computed from ``head`` — only while
+    ``head`` is still the table's head. A commit that rewrote data read
+    from ``head`` cannot be rebuilt against a newer head (its staged
+    files would silently drop the competing writer's rows), so a lost
+    race raises for an explicit re-run instead of retrying."""
+
+    def build(h: dict | None) -> dict:
+        if h is None or h["version"] != head["version"]:
+            raise RuntimeError(
+                f"concurrent commit during {operation} at {path} "
+                f"(expected head {head['version']}, "
+                f"found {h['version'] if h else None}) — re-run"
+            )
+        return payload
+
+    out = _commit(spark, path, build, operation)
+    assert out is not None
+    return out
 
 
 def _stage_data(
@@ -1055,17 +1107,10 @@ def scan_table(
     keys whose per-file [min, max] spans everything; a miss is
     definite, a hit is probabilistic, and rows are still filtered, so
     false positives only cost IO."""
-    root = path.rstrip("/")
-    m = (
-        read_manifest(spark, root, version)
-        if version is not None
-        else latest_manifest(spark, root)
-    )
-    if m is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
+    m = _head(spark, path, version)
     schema = StructType.fromJson(json.loads(m["schema"]))
     kept = _bloom_prune(spark, m, schema, files_matching(m, predicates), predicates)
-    df = _read_files(spark, m, root, kept)
+    df = _read_files(spark, m, path.rstrip("/"), kept)
     for col, op, v in predicates:
         c = F.col(col)
         if op == "in":
@@ -1149,6 +1194,154 @@ def _evolved_schema(head_json: str, staged_json: str, schema_mode: str) -> str:
         ]
     )
     return merged.json()
+
+
+class _Staged(NamedTuple):
+    """One writer's staged data files and their manifest entries."""
+
+    pb: tuple[str, ...]
+    files: list[str] = []
+    schema: str | None = None
+    bloom_spec: dict = {}
+    stats: dict = {}
+    rows: dict = {}
+    blooms: dict = {}
+    parts: dict = {}
+
+
+def _check_stats_cols(pb, stats_cols, bloom_cols=()) -> None:
+    clash = sorted(set(pb) & (set(stats_cols) | set(bloom_cols)))
+    if clash:
+        raise ValueError(
+            f"partition columns {clash!r} cannot carry stats/blooms — "
+            "their value is exact from the path already"
+        )
+
+
+def _stage(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame | None,
+    head: dict | None,
+    pb: tuple[str, ...],
+    stats_cols: tuple[str, ...] | None,
+    bloom_cols: tuple[str, ...] = (),
+    bloom_bits: int = _BLOOM_DEFAULT_BITS,
+    bloom_hashes: int = _BLOOM_DEFAULT_HASHES,
+    discard: Callable[[], bool] | None = None,
+) -> _Staged | None:
+    """Stage ``df``'s data files (none when ``df`` is None) in ``pb``'s
+    hive layout and collect their manifest entries: per-file [min, max]
+    for ``stats_cols``, row counts, bitmaps for ``head``'s bloom columns
+    plus ``bloom_cols``, and partition values — one job at most
+    (``_collect_stats``). ``stats_cols=None`` keeps the head's stat
+    columns: the one rule every rewrite follows, so a rewritten file
+    keeps the skipping its predecessor had. Argument checks run before
+    anything is written. ``discard()`` runs right after the write; when
+    it returns True the staged files are removed and None is returned
+    (a zero-hit rewrite's speculative output)."""
+    if stats_cols is None:
+        names = {f.name for f in StructType.fromJson(json.loads(head["schema"])).fields}
+        had = {c for s in head.get("stats", {}).values() for c in s}
+        stats_cols = tuple(sorted((had & names) - set(pb)))
+    if df is not None:
+        missing = [c for c in pb if c not in df.columns]
+        if missing:
+            raise ValueError(f"partition_by {missing!r} not in {df.columns}")
+    _check_stats_cols(pb, stats_cols, bloom_cols)
+    spec = _bloom_effective_spec(head, tuple(bloom_cols), bloom_bits, bloom_hashes)
+    if df is None:
+        return _Staged(pb, bloom_spec=spec)
+    root = path.rstrip("/")
+    files, schema_json = _stage_data(df, path, pb)
+    if discard is not None and discard():
+        _remove_staged(spark, root, files)
+        return None
+    # partition columns live in paths, not files: the stats job reads
+    # the staged leaves with the schema MINUS partition columns
+    stats, rows, blooms = _collect_stats(
+        spark,
+        root,
+        files,
+        StructType([f for f in df.schema.fields if f.name not in set(pb)]),
+        tuple(stats_cols),
+        spec,
+    )
+    parts = {rel: _partition_values(rel, pb) for rel in files} if pb else {}
+    return _Staged(pb, files, schema_json, spec, stats, rows, blooms, parts)
+
+
+def _successor(
+    h: dict | None,
+    drop: set[str] | None,
+    st: _Staged,
+    txn: tuple[str, int] | None = None,
+    properties: dict | None = None,
+    schema: str | None = None,
+) -> dict:
+    """The next manifest's payload — the successor rule every commit
+    path except ``restore_table`` shares.
+
+    ``drop=None`` replaces the table: the staged files are the whole
+    snapshot, and the stage's schema, bloom spec and layout are the
+    table's. Otherwise ``h``'s files minus ``drop`` are carried BY
+    REFERENCE with their per-file stats/rows/blooms/parts entries, the
+    staged files join them with theirs, and the schema (``schema``
+    overrides it — an evolving append), bloom spec and layout carry
+    from ``h``. Either way ``txn`` advances ``h``'s watermark map and
+    ``h``'s properties carry unless ``properties`` replaces them."""
+    base = h if drop is not None and h is not None else {}
+    files = [r for r in base.get("files", ()) if r not in drop] + st.files
+    spec, staged_blooms = st.bloom_spec, st.blooms
+    if base:
+        # a competing writer may have introduced a column first; its
+        # sizing wins so the table stays internally consistent
+        spec = {**st.bloom_spec, **base.get("bloom_meta", {})}
+        # staged bitmaps were computed with THIS writer's pre-race
+        # sizing; where the winning sizing differs, the bit positions
+        # are probe-incompatible — drop those columns' staged bitmaps
+        # (missing bitmap = scan keeps the file, the conservative
+        # outcome) instead of publishing garbage that would silently
+        # prune files that hold the key
+        stale = {
+            c
+            for c, m in spec.items()
+            if c in st.bloom_spec
+            and (int(m["bits"]), int(m["hashes"]))
+            != (int(st.bloom_spec[c]["bits"]), int(st.bloom_spec[c]["hashes"]))
+        }
+        if stale:
+            staged_blooms = {
+                rel: kept
+                for rel, bm in st.blooms.items()
+                if (kept := {c: b for c, b in bm.items() if c not in stale})
+            }
+    carried = set(files)
+    out = {
+        "files": files,
+        "schema": (schema or base["schema"]) if base else st.schema,
+        "txn": _merged_txn(h, txn),
+    }
+    for key, staged in (
+        ("stats", st.stats),
+        ("rows", st.rows),
+        ("blooms", staged_blooms),
+        ("parts", st.parts),
+    ):
+        entries = {
+            **{r: v for r, v in base.get(key, {}).items() if r in carried},
+            **staged,
+        }
+        if entries:
+            out[key] = entries
+    if spec:
+        out["bloom_meta"] = spec
+    if st.pb:
+        out["partition_by"] = list(st.pb)
+    props = properties if properties is not None else (h or {}).get("properties")
+    if props:
+        out["properties"] = dict(props)
+    return out
 
 
 def write_table(
@@ -1244,141 +1437,37 @@ def write_table(
             "overwrite_partitions requires a partitioned table "
             "(declare partition_by at creation)"
         )
-    if pb:
-        missing_pc = [c for c in pb if c not in df.columns]
-        if missing_pc:
-            raise ValueError(f"partition_by {missing_pc!r} not in {df.columns}")
-        clash = sorted(set(pb) & (set(stats_cols) | set(bloom_cols)))
-        if clash:
-            raise ValueError(
-                f"partition columns {clash!r} cannot carry stats/blooms — "
-                "their value is exact from the path already"
-            )
-    bloom_spec = _bloom_effective_spec(
-        head0 if mode != "overwrite" else None,
-        tuple(bloom_cols),
-        bloom_bits,
-        bloom_hashes,
-    )
-    staged, schema_json = _stage_data(df, path, pb)
-    # partition columns live in paths, not files: the stats job reads
-    # the staged leaves with the schema MINUS partition columns
-    stats_schema = StructType(
-        [f for f in df.schema.fields if f.name not in set(pb)]
-    )
-    staged_stats, staged_rows, staged_blooms = _collect_stats(
-        spark, path.rstrip("/"), staged, stats_schema, tuple(stats_cols), bloom_spec
-    )
-    staged_parts = (
-        {rel: _partition_values(rel, pb) for rel in staged} if pb else {}
+    st = _stage(
+        spark, path, df, head0 if mode != "overwrite" else None, pb,
+        tuple(stats_cols), tuple(bloom_cols), bloom_bits, bloom_hashes,
     )
 
     def build(head: dict | None) -> dict | None:
         if _txn_skip(head, txn):
             return None  # competing replay landed first
-        files = staged
-        stats = staged_stats
-        rows = staged_rows
-        blooms = staged_blooms
-        meta = bloom_spec
-        schema_out = schema_json
-        parts = staged_parts
-        props = dict(properties) if properties is not None else dict(
-            (head or {}).get("properties", {})
+        if mode == "overwrite" or head is None:
+            return _successor(head, None, st, txn, properties)
+        if tuple(head.get("partition_by", ())) != pb:
+            # a competing overwrite changed the table's layout while
+            # we staged under the old one — our files are laid out
+            # wrong for the new table; retrying can't fix that
+            raise RuntimeError(
+                f"partition layout changed concurrently at {path} "
+                f"({head.get('partition_by')!r} != {pb!r}) — re-run"
+            )
+        drop: set[str] = set()
+        if mode == "overwrite_partitions":
+            replaced = {tuple(sorted(v.items())) for v in st.parts.values()}
+            head_parts = head.get("parts", {})
+            drop = {
+                rel
+                for rel in head["files"]
+                if tuple(sorted(head_parts.get(rel, {}).items())) in replaced
+            }
+        return _successor(
+            head, drop, st, txn, properties,
+            _evolved_schema(head["schema"], st.schema, schema_mode),
         )
-        if mode != "overwrite" and head is not None:
-            if tuple(head.get("partition_by", ())) != pb:
-                # a competing overwrite changed the table's layout while
-                # we staged under the old one — our files are laid out
-                # wrong for the new table; retrying can't fix that
-                raise RuntimeError(
-                    f"partition layout changed concurrently at {path} "
-                    f"({head.get('partition_by')!r} != {pb!r}) — re-run"
-                )
-            head_files = head["files"]
-            if mode == "overwrite_partitions":
-                replaced = {
-                    tuple(sorted(v.items())) for v in staged_parts.values()
-                }
-                head_parts = head.get("parts", {})
-                head_files = [
-                    rel
-                    for rel in head_files
-                    if tuple(sorted(head_parts.get(rel, {}).items()))
-                    not in replaced
-                ]
-            carried = set(head_files)
-            files = head_files + staged
-            stats = {
-                **{
-                    r: s
-                    for r, s in head.get("stats", {}).items()
-                    if r in carried
-                },
-                **staged_stats,
-            }
-            rows = {
-                **{
-                    r: n
-                    for r, n in head.get("rows", {}).items()
-                    if r in carried
-                },
-                **staged_rows,
-            }
-            parts = {
-                **{
-                    r: v
-                    for r, v in head.get("parts", {}).items()
-                    if r in carried
-                },
-                **staged_parts,
-            }
-            # a competing writer may have introduced a column first; its
-            # sizing wins so the table stays internally consistent
-            meta = {**bloom_spec, **head.get("bloom_meta", {})}
-            # staged bitmaps were computed with THIS writer's pre-race
-            # sizing; where the winning sizing differs, the bitmap's bit
-            # positions are probe-incompatible — drop those columns'
-            # staged bitmaps (missing bitmap = scan keeps the file, the
-            # conservative outcome) instead of publishing garbage that
-            # would silently prune files that hold the key
-            mismatched = {
-                c
-                for c, m in meta.items()
-                if c in bloom_spec
-                and (
-                    int(m["bits"]) != int(bloom_spec[c]["bits"])
-                    or int(m["hashes"]) != int(bloom_spec[c]["hashes"])
-                )
-            }
-            safe_staged = staged_blooms
-            if mismatched:
-                safe_staged = {
-                    rel: {c: b for c, b in bm.items() if c not in mismatched}
-                    for rel, bm in staged_blooms.items()
-                }
-                safe_staged = {rel: bm for rel, bm in safe_staged.items() if bm}
-            blooms = {
-                **{
-                    r: b
-                    for r, b in head.get("blooms", {}).items()
-                    if r in carried
-                },
-                **safe_staged,
-            }
-            schema_out = _evolved_schema(head["schema"], schema_json, schema_mode)
-        return {
-            "files": files,
-            "schema": schema_out,
-            "txn": _merged_txn(head, txn),
-            **({"stats": stats} if stats else {}),
-            **({"rows": rows} if rows else {}),
-            **({"bloom_meta": meta} if meta else {}),
-            **({"blooms": blooms} if blooms else {}),
-            **({"partition_by": list(pb)} if pb else {}),
-            **({"parts": parts} if parts else {}),
-            **({"properties": props} if props else {}),
-        }
 
     return _commit(spark, path, build, mode)
 
@@ -1397,13 +1486,7 @@ def table_row_count(
     one. At 100 TB this is the difference between an O(manifest) driver
     sum and a million-file scan for the most common query there is."""
     root = path.rstrip("/")
-    m = (
-        read_manifest(spark, root, version)
-        if version is not None
-        else latest_manifest(spark, root)
-    )
-    if m is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
+    m = _head(spark, path, version)
     rows = m.get("rows", {})
     known = [rel for rel in m["files"] if rel in rows]
     missing = [rel for rel in m["files"] if rel not in rows]
@@ -1420,15 +1503,7 @@ def table_properties(
     head) — metadata-only, zero data files opened. Set via
     ``write_table(..., properties=...)``; carried by every commit path
     and restored verbatim by ``restore_table``."""
-    root = path.rstrip("/")
-    m = (
-        read_manifest(spark, root, version)
-        if version is not None
-        else latest_manifest(spark, root)
-    )
-    if m is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
-    return dict(m.get("properties", {}))
+    return dict(_head(spark, path, version).get("properties", {}))
 
 
 def table_partitions(
@@ -1441,14 +1516,7 @@ def table_partitions(
     counting). Sorted by the stringified values for determinism. At
     100 TB this is the partition listing a catalog query (SHOW
     PARTITIONS) answers without touching storage."""
-    root = path.rstrip("/")
-    m = (
-        read_manifest(spark, root, version)
-        if version is not None
-        else latest_manifest(spark, root)
-    )
-    if m is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
+    m = _head(spark, path, version)
     if not m.get("partition_by"):
         raise ValueError(f"table at {path} is not partitioned")
     parts = m.get("parts", {})
@@ -1479,10 +1547,8 @@ def drop_partition(
     matched (no empty commit). The GDPR/retention fast path on a
     partitioned table: O(manifest) where ``delete_rows`` is O(files
     rewritten)."""
-    head = latest_manifest(spark, path)
-    if head is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
-    pb = head.get("partition_by", ())
+    head = _head(spark, path)
+    pb = tuple(head.get("partition_by", ()))
     bad = sorted(set(values) - set(pb))
     if not pb or bad:
         raise ValueError(
@@ -1496,33 +1562,12 @@ def drop_partition(
         p = parts.get(rel, {})
         return all(k in p and p[k] == v for k, v in want.items())
 
-    dropped = [rel for rel in head["files"] if matches(rel)]
+    dropped = {rel for rel in head["files"] if matches(rel)}
     if not dropped:
         return None
-    kept = [rel for rel in head["files"] if rel not in set(dropped)]
-
-    def build(h: dict | None) -> dict:
-        if h is None or h["version"] != head["version"]:
-            raise RuntimeError(
-                f"concurrent commit during drop_partition at {path} — re-run"
-            )
-        keep = set(kept)
-        return {
-            "files": kept,
-            "schema": h["schema"],
-            "txn": _merged_txn(h, None),
-            **{
-                k: {r: v for r, v in h[k].items() if r in keep}
-                for k in ("stats", "rows", "blooms", "parts")
-                if h.get(k)
-            },
-            **({"bloom_meta": h["bloom_meta"]} if h.get("bloom_meta") else {}),
-            **({"properties": h["properties"]} if h.get("properties") else {}),
-            "partition_by": list(pb),
-        }
-
-    out = _commit(spark, path, build, "drop_partition")
-    assert out is not None
+    out = _commit_pinned(
+        spark, path, head, "drop_partition", _successor(head, dropped, _Staged(pb))
+    )
     out["files_dropped"] = len(dropped)
     return out
 
@@ -1535,29 +1580,24 @@ def snapshot(
     file list, so it stays consistent even if merges/compactions commit
     while it runs (their files are new directories; only ``vacuum_table``
     deletes, and it only reclaims versions you asked it to drop)."""
-    root = path.rstrip("/")
-    m = (
-        read_manifest(spark, root, version)
-        if version is not None
-        else latest_manifest(spark, root)
-    )
-    if m is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
-    return _read_files(spark, m, root, m["files"])
+    m = _head(spark, path, version)
+    return _read_files(spark, m, path.rstrip("/"), m["files"])
 
 
-def _reject_partitioned(head: dict | None, path: str, op: str) -> None:
-    """merge_table / compact_table re-stage the WHOLE snapshot
+def _reject_partitioned(head: dict, path: str, op: str) -> None:
+    """merge_table / compact_table restage the WHOLE snapshot
     unpartitioned, which would silently drop the table's layout (and
     its exact pruning) — refuse with a clear error instead. Partitioned
-    tables get their own cheap paths (overwrite_partitions,
-    drop_partition, compact_partition), and row-level delete_rows /
-    update_rows restage partitioned and work unchanged."""
-    if head and head.get("partition_by"):
+    tables get their own cheap paths (compact_partition,
+    replace_partitions, overwrite_partitions, drop_partition), and
+    row-level delete_rows / update_rows restage partitioned and work
+    unchanged."""
+    if head.get("partition_by"):
         raise ValueError(
             f"{op} does not support partitioned tables (partition_by="
-            f"{head['partition_by']!r} at {path}); use "
-            "mode='overwrite_partitions' / drop_partition instead"
+            f"{head['partition_by']!r} at {path}); use compact_partition / "
+            "replace_partitions / mode='overwrite_partitions' / "
+            "drop_partition instead"
         )
 
 
@@ -1566,14 +1606,16 @@ def merge_table(
     batch: DataFrame,
     key_cols: tuple[str, ...],
     tombstone_col: str | None = None,
-    stats_cols: tuple[str, ...] = (),
+    stats_cols: tuple[str, ...] | None = None,
 ) -> dict:
     """MERGE INTO with an atomic commit: apply the change batch
     (updates / inserts / tombstone deletes — ``operators/upsert.
     merge_snapshot``) to the current snapshot and publish the result as
     the next version. Readers either see the pre-merge snapshot or the
     post-merge one; the in-between state (new files written, manifest
-    not yet renamed) is invisible.
+    not yet renamed) is invisible. ``stats_cols`` defaults to the
+    table's existing stat columns (None), so the rewritten files keep
+    their file skipping; pass a tuple to choose others.
 
     The merge is computed against the snapshot resolved at call time
     and staged before the commit loop; if another writer commits in
@@ -1584,45 +1626,13 @@ def merge_table(
     from ensembl_database_loader_spark.operators.upsert import merge_snapshot
 
     spark = batch.sparkSession
-    base_head = latest_manifest(spark, path)
-    _reject_partitioned(base_head, path, "merge_table")
-    if base_head is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
-    bloom_spec = _bloom_effective_spec(
-        base_head, (), _BLOOM_DEFAULT_BITS, _BLOOM_DEFAULT_HASHES
-    )
-    snap = snapshot(spark, path, base_head["version"])
+    head = _head(spark, path)
+    _reject_partitioned(head, path, "merge_table")
+    snap = _read_files(spark, head, path.rstrip("/"), head["files"])
     merged = merge_snapshot(snap, batch, key_cols, tombstone_col)
-    staged, schema_json = _stage_data(merged, path)
-    stats, row_counts, blooms = _collect_stats(
-        spark, path.rstrip("/"), staged, merged.schema, tuple(stats_cols), bloom_spec
-    )
-
-    def build(head: dict | None) -> dict:
-        if head is None or head["version"] != base_head["version"]:
-            raise RuntimeError(
-                f"concurrent commit during merge at {path} "
-                f"(expected head {base_head['version']}, "
-                f"found {head['version'] if head else None}) — re-run the merge"
-            )
-        return {
-            "files": staged,
-            "schema": schema_json,
-            "txn": _merged_txn(head, None),
-            **({"stats": stats} if stats else {}),
-            **({"rows": row_counts} if row_counts else {}),
-            **({"bloom_meta": bloom_spec} if bloom_spec else {}),
-            **({"blooms": blooms} if blooms else {}),
-            **(
-                {"properties": head["properties"]}
-                if head.get("properties")
-                else {}
-            ),
-        }
-
-    out = _commit(spark, path, build, "merge")
-    assert out is not None
-    return out
+    # the whole pinned snapshot restages: nothing carries by reference
+    st = _stage(spark, path, merged, head, (), stats_cols)
+    return _commit_pinned(spark, path, head, "merge", _successor(head, None, st))
 
 
 def zorder_value(df: DataFrame, cols: tuple[str, ...], bits: int = 16) -> DataFrame:
@@ -1669,12 +1679,34 @@ def zorder_value(df: DataFrame, cols: tuple[str, ...], bits: int = 16) -> DataFr
     return df.withColumn("_z", z)
 
 
+def _clustered(
+    df: DataFrame,
+    n_out: int,
+    sort_cols: tuple[str, ...] = (),
+    zorder_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """``df`` laid out into ``n_out`` files for a compaction: Z-ordered,
+    range-sorted on ``sort_cols``, or just repartitioned."""
+    if zorder_cols:
+        return (
+            zorder_value(df, tuple(zorder_cols))
+            .repartitionByRange(n_out, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z")
+        )
+    if sort_cols:
+        return df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
+            *sort_cols
+        )
+    return df.repartition(n_out)
+
+
 def compact_table(
     spark: SparkSession,
     path: str,
     target_bytes: int = 128 << 20,
     sort_cols: tuple[str, ...] = (),
-    stats_cols: tuple[str, ...] = (),
+    stats_cols: tuple[str, ...] | None = None,
     zorder_cols: tuple[str, ...] = (),
 ) -> dict:
     """Small-file compaction as a commit: rewrite the current snapshot
@@ -1687,11 +1719,12 @@ def compact_table(
     ``files_after`` stats attached).
 
     ``sort_cols`` uses repartitionByRange + sortWithinPartitions, so
-    each output file covers a DISJOINT range of the sort key — with
-    ``stats_cols`` on the same columns, a point/range ``scan_table``
-    predicate then skips all but ~one file (clustering is the index:
-    the compaction that fixes small files is the same one that makes
-    file skipping effective).
+    each output file covers a DISJOINT range of the sort key — and the
+    rewritten files keep the table's stat columns (``stats_cols=None``,
+    the default; pass a tuple to choose others), so a point/range
+    ``scan_table`` predicate on a stat column then skips all but ~one
+    file (clustering is the index: the compaction that fixes small
+    files is the same one that makes file skipping effective).
 
     ``zorder_cols`` clusters on the MORTON interleaving of several
     columns instead (``zorder_value``): each file gets a tight stats
@@ -1699,58 +1732,45 @@ def compact_table(
     skip files — the multi-dimension layout a lone sort can't give."""
     if sort_cols and zorder_cols:
         raise ValueError("pass sort_cols or zorder_cols, not both")
-    head = latest_manifest(spark, path)
+    head = _head(spark, path)
     _reject_partitioned(head, path, "compact_table")
-    if head is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
     root = path.rstrip("/")
-    total = _total_size(spark, root, head["files"])
-    n_out = max(1, math.ceil(total / target_bytes))
-    df = snapshot(spark, path, head["version"])
-    if zorder_cols:
-        df = (
-            zorder_value(df, tuple(zorder_cols))
-            .repartitionByRange(n_out, "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        )
-    elif sort_cols:
-        df = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(*sort_cols)
-    else:
-        df = df.repartition(n_out)
-    bloom_spec = _bloom_effective_spec(
-        head, (), _BLOOM_DEFAULT_BITS, _BLOOM_DEFAULT_HASHES
+    n_out = max(1, math.ceil(_total_size(spark, root, head["files"]) / target_bytes))
+    df = _clustered(
+        _read_files(spark, head, root, head["files"]), n_out, sort_cols, zorder_cols
     )
-    staged, schema_json = _stage_data(df, path)
-    stats, row_counts, blooms = _collect_stats(
-        spark, root, staged, df.schema, tuple(stats_cols), bloom_spec
-    )
-
-    def build(h: dict | None) -> dict:
-        if h is None or h["version"] != head["version"]:
-            raise RuntimeError(
-                f"concurrent commit during compaction at {path} — re-run"
-            )
-        return {
-            "files": staged,
-            "schema": schema_json,
-            "txn": _merged_txn(h, None),
-            **({"stats": stats} if stats else {}),
-            **({"rows": row_counts} if row_counts else {}),
-            **({"bloom_meta": bloom_spec} if bloom_spec else {}),
-            **({"blooms": blooms} if blooms else {}),
-            **(
-                {"properties": head["properties"]}
-                if head.get("properties")
-                else {}
-            ),
-        }
-
-    out = _commit(spark, path, build, "compact")
-    assert out is not None
+    st = _stage(spark, path, df, head, (), stats_cols)
+    out = _commit_pinned(spark, path, head, "compact", _successor(head, None, st))
     out["files_before"] = len(head["files"])
-    out["files_after"] = len(staged)
+    out["files_after"] = len(out["files"])
     return out
+
+
+def _partition_files(head: dict, path: str, values_list: list[dict], op: str) -> list[str]:
+    """The head's files in the partitions ``values_list`` names; each
+    entry must name every partition column (exactly one partition)."""
+    pb = tuple(head.get("partition_by", ()))
+    if not pb:
+        raise ValueError(f"table at {path} is not partitioned")
+    for values in values_list:
+        if set(values) != set(pb):
+            raise ValueError(
+                f"{op} values must name exactly the partition columns "
+                f"{list(pb)!r}, got {sorted(values)!r}"
+            )
+    parts = head.get("parts", {})
+    wants = [
+        {k: (None if v is None else str(v)) for k, v in values.items()}
+        for values in values_list
+    ]
+    return [
+        rel
+        for rel in head["files"]
+        if any(
+            all(parts.get(rel, {}).get(k) == v for k, v in want.items())
+            for want in wants
+        )
+    ]
 
 
 def compact_partition(
@@ -1759,105 +1779,81 @@ def compact_partition(
     values: dict,
     target_bytes: int = 128 << 20,
     sort_cols: tuple[str, ...] = (),
-    stats_cols: tuple[str, ...] = (),
+    stats_cols: tuple[str, ...] | None = None,
 ) -> dict | None:
     """Small-file compaction scoped to ONE partition of a hive-
     partitioned table — the maintenance loop a streaming-fed partition
     needs (every micro-batch appends a file; this folds them back to
     ~``target_bytes``). ``values`` must name every partition column
     (exactly one partition compacts per call — at 100 TB you compact
-    the partitions whose file counts drifted, never the whole table).
-    Only that partition's files rewrite; every other file is carried by
+    the partitions whose file counts drifted, never the whole table:
+    ``table_partitions`` lists each partition's ``n_files`` from
+    metadata alone). It is ``replace_partitions`` fed that partition's
+    own rows: only its files rewrite, every other file is carried by
     reference, so the commit is as cheap as the partition is small.
     Returns None when the partition has fewer than two files (nothing
-    to fold). ``sort_cols`` restores min/max clustering within the
-    partition for stats-based skipping inside it."""
-    head = latest_manifest(spark, path)
-    if head is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
-    pb = tuple(head.get("partition_by", ()))
-    if not pb or set(values) != set(pb):
-        raise ValueError(
-            f"compact_partition values must name exactly the partition "
-            f"columns {list(pb)!r}, got {sorted(values)!r}"
-        )
-    clash = sorted(set(pb) & set(stats_cols))
-    if clash:
-        raise ValueError(
-            f"partition columns {clash!r} cannot carry stats — their "
-            "value is exact from the path already"
-        )
-    root = path.rstrip("/")
-    parts = head.get("parts", {})
-    want = {k: (None if v is None else str(v)) for k, v in values.items()}
-    matched = [
-        rel
-        for rel in head["files"]
-        if all(parts.get(rel, {}).get(k) == v for k, v in want.items())
-    ]
+    to fold), else the manifest with ``files_before``/``files_after``.
+    ``sort_cols`` restores min/max clustering within the partition, and
+    the new files keep the table's stat columns (``stats_cols=None``,
+    the default) for stats-based skipping inside it."""
+    head = _head(spark, path)
+    matched = _partition_files(head, path, [values], "compact_partition")
+    _check_stats_cols(head["partition_by"], stats_cols or ())
     if len(matched) < 2:
         return None
-    total = _total_size(spark, root, matched)
-    n_out = max(1, math.ceil(total / target_bytes))
-    df = _read_files(spark, head, root, matched)
-    if sort_cols:
-        df = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        df = df.repartition(n_out)
-    bloom_spec = _bloom_effective_spec(
-        head, (), _BLOOM_DEFAULT_BITS, _BLOOM_DEFAULT_HASHES
+    root = path.rstrip("/")
+    n_out = max(1, math.ceil(_total_size(spark, root, matched) / target_bytes))
+    df = _clustered(_read_files(spark, head, root, matched), n_out, sort_cols)
+    out = _replace(
+        spark, path, head, [values], df, stats_cols, None, None, "compact_partition"
     )
-    staged, _schema_json = _stage_data(df, path, pb)
-    stats_schema = StructType(
-        [f for f in df.schema.fields if f.name not in set(pb)]
-    )
-    staged_stats, staged_rows, staged_blooms = _collect_stats(
-        spark, root, staged, stats_schema, tuple(stats_cols), bloom_spec
-    )
-    staged_parts = {rel: _partition_values(rel, pb) for rel in staged}
-
-    def build(h: dict | None) -> dict:
-        if h is None or h["version"] != head["version"]:
-            raise RuntimeError(
-                f"concurrent commit during compact_partition at {path} — re-run"
-            )
-        gone = set(matched)
-        kept = [rel for rel in h["files"] if rel not in gone]
-        keep = set(kept)
-        return {
-            "files": kept + staged,
-            "schema": h["schema"],
-            "txn": _merged_txn(h, None),
-            "stats": {
-                **{r: s for r, s in h.get("stats", {}).items() if r in keep},
-                **staged_stats,
-            },
-            "rows": {
-                **{r: n for r, n in h.get("rows", {}).items() if r in keep},
-                **staged_rows,
-            },
-            **(
-                {"bloom_meta": h["bloom_meta"], "blooms": {
-                    **{r: b for r, b in h.get("blooms", {}).items() if r in keep},
-                    **staged_blooms,
-                }}
-                if h.get("bloom_meta")
-                else {}
-            ),
-            "partition_by": list(pb),
-            "parts": {
-                **{r: v for r, v in parts.items() if r in keep},
-                **staged_parts,
-            },
-            **({"properties": h["properties"]} if h.get("properties") else {}),
-        }
-
-    out = _commit(spark, path, build, "compact_partition")
-    assert out is not None
     out["files_before"] = len(matched)
-    out["files_after"] = len(staged)
+    out["files_after"] = len(out["files"]) - out["files_untouched"]
+    return out
+
+
+def _replace(
+    spark: SparkSession,
+    path: str,
+    head: dict,
+    values_list: list[dict],
+    df: DataFrame,
+    stats_cols: tuple[str, ...] | None,
+    properties: dict | None,
+    txn: tuple[str, int] | None,
+    operation: str,
+) -> dict:
+    """Shared core of ``replace_partitions`` / ``compact_partition``:
+    stage ``df`` partitioned, then commit it in place of the named
+    partitions' files of the pinned ``head``."""
+    matched = _partition_files(head, path, values_list, operation)
+    pb = tuple(head["partition_by"])
+    st = _stage(spark, path, df, head, pb, stats_cols)
+    # row-containment gate: staged rows may land only in the NAMED
+    # partitions or in partitions NEW to the table — anything else
+    # would double-serve next to the partition's still-referenced
+    # files. Checked from the staged hive paths (no extra job); a
+    # violation aborts before commit (the staged files are orphans
+    # until a manifest references them — remove_orphans reclaims).
+    want_keys = {
+        tuple(sorted((k, None if v is None else str(v)) for k, v in w.items()))
+        for w in values_list
+    }
+    existing = {tuple(sorted(v.items())) for v in head.get("parts", {}).values()}
+    for v in st.parts.values():
+        key = tuple(sorted(v.items()))
+        if key not in want_keys and key in existing:
+            raise ValueError(
+                f"{operation}: staged rows land in existing "
+                f"partition {dict(key)!r} which is not in values_list — "
+                "name it or drop those rows"
+            )
+    out = _commit_pinned(
+        spark, path, head, operation,
+        _successor(head, set(matched), st, txn, properties),
+    )
+    out["files_rewritten"] = len(matched)
+    out["files_untouched"] = len(head["files"]) - len(matched)
     return out
 
 
@@ -1890,145 +1886,16 @@ def replace_partitions(
     ``df``'s rows may land only in the NAMED partitions or in
     partitions NEW to the table (rows for an unnamed existing
     partition would duplicate its still-referenced files' rows)."""
-    head = latest_manifest(spark, path)
-    if head is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
+    head = _head(spark, path)
     if _txn_skip(head, txn):
         return None
-    pb = tuple(head.get("partition_by", ()))
-    if not pb:
-        raise ValueError(f"table at {path} is not partitioned")
-    for values in values_list:
-        if set(values) != set(pb):
-            raise ValueError(
-                f"each values dict must name exactly the partition columns "
-                f"{list(pb)!r}, got {sorted(values)!r}"
-            )
-    clash = sorted(set(pb) & set(stats_cols))
-    if clash:
-        raise ValueError(
-            f"partition columns {clash!r} cannot carry stats — their "
-            "value is exact from the path already"
-        )
     # strict schema gate BEFORE any file is written (nullability-only
     # drift passes, anything else raises — _evolved_schema's contract)
     _evolved_schema(head["schema"], df.schema.json(), "strict")
-    root = path.rstrip("/")
-    parts = head.get("parts", {})
-    wants = [
-        {k: (None if v is None else str(v)) for k, v in values.items()}
-        for values in values_list
-    ]
-    matched = [
-        rel
-        for rel in head["files"]
-        if any(
-            all(parts.get(rel, {}).get(k) == v for k, v in want.items())
-            for want in wants
-        )
-    ]
-    bloom_spec = _bloom_effective_spec(
-        head, (), _BLOOM_DEFAULT_BITS, _BLOOM_DEFAULT_HASHES
+    return _replace(
+        spark, path, head, values_list, df, stats_cols, properties, txn,
+        "replace_partitions",
     )
-    staged, _schema_json = _stage_data(df, path, pb)
-    # row-containment gate: staged rows may land only in the NAMED
-    # partitions or in partitions NEW to the table — anything else
-    # would double-serve next to the partition's still-referenced
-    # files. Checked from the staged hive paths (no extra job); a
-    # violation aborts before commit (the staged files are orphans
-    # until a manifest references them — remove_orphans reclaims).
-    want_keys = {tuple(sorted(w.items())) for w in wants}
-    existing = {
-        tuple(sorted(v.items())) for v in parts.values()
-    }
-    for rel in staged:
-        key = tuple(sorted(_partition_values(rel, pb).items()))
-        if key not in want_keys and key in existing:
-            raise ValueError(
-                f"replace_partitions: staged rows land in existing "
-                f"partition {dict(key)!r} which is not in values_list — "
-                "name it or drop those rows"
-            )
-    stats_schema = StructType(
-        [f for f in df.schema.fields if f.name not in set(pb)]
-    )
-    staged_stats, staged_rows, staged_blooms = _collect_stats(
-        spark, root, staged, stats_schema, tuple(stats_cols), bloom_spec
-    )
-    staged_parts = {rel: _partition_values(rel, pb) for rel in staged}
-
-    def build(h: dict | None) -> dict:
-        if h is None or h["version"] != head["version"]:
-            raise RuntimeError(
-                f"concurrent commit during replace_partitions at {path} — re-run"
-            )
-        gone = set(matched)
-        kept = [rel for rel in h["files"] if rel not in gone]
-        keep = set(kept)
-        return {
-            "files": kept + staged,
-            "schema": h["schema"],
-            "txn": _merged_txn(h, txn),
-            "stats": {
-                **{r: s for r, s in h.get("stats", {}).items() if r in keep},
-                **staged_stats,
-            },
-            "rows": {
-                **{r: n for r, n in h.get("rows", {}).items() if r in keep},
-                **staged_rows,
-            },
-            **(
-                {"bloom_meta": h["bloom_meta"], "blooms": {
-                    **{r: b for r, b in h.get("blooms", {}).items() if r in keep},
-                    **staged_blooms,
-                }}
-                if h.get("bloom_meta")
-                else {}
-            ),
-            "partition_by": list(pb),
-            "parts": {
-                **{r: v for r, v in parts.items() if r in keep},
-                **staged_parts,
-            },
-            **(
-                {"properties": properties}
-                if properties is not None
-                else ({"properties": h["properties"]} if h.get("properties") else {})
-            ),
-        }
-
-    out = _commit(spark, path, build, "replace_partitions")
-    assert out is not None
-    out["files_rewritten"] = len(matched)
-    out["files_untouched"] = len(head["files"]) - len(matched)
-    return out
-
-
-def partitions_needing_compaction(
-    spark: SparkSession,
-    path: str,
-    max_files: int = 16,
-) -> list[dict]:
-    """The maintenance worklist for a streaming-fed partitioned table:
-    partitions whose file count exceeds ``max_files``, sorted by file
-    count descending — feed each ``values`` straight into
-    ``compact_partition``. Pure manifest metadata (zero data files
-    opened), so the maintenance loop's planning step is free however
-    big the table; each entry carries ``values``, ``n_files`` and
-    ``n_rows``. Every micro-batch append adds one file per touched
-    partition, so without this loop snapshot plan size and small-file
-    overhead grow with commit count — run it on whatever cadence keeps
-    ``n_files`` bounded (the read path stays O(partitions) regardless
-    via ``_read_files``' per-partition grouping; compaction is about
-    file-open cost and footer metadata, not plan size)."""
-    return [
-        p
-        for p in sorted(
-            table_partitions(spark, path),
-            key=lambda p: -p["n_files"],
-        )
-        if p["n_files"] > int(max_files)
-    ]
 
 
 def _prune_to_where(prune) -> str:
@@ -2087,9 +1954,7 @@ def _rewrite_rows(
     read).
     """
     root = path.rstrip("/")
-    head = latest_manifest(spark, root)
-    if head is None:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
+    head = _head(spark, path)
     if _txn_skip(head, txn):
         return None
     delta_mode = append_df is not None or txn is not None
@@ -2132,14 +1997,14 @@ def _rewrite_rows(
     # the manifest outcome is IDENTICAL to the two-pass protocol in
     # every case, and rows_affected comes from the observed count.
     n_hit = 0
-    staged: list[str] = []
+    st = None
     if cand:
         from pyspark.sql import Observation
 
         df = _read_files(spark, head, root, cand)
         hit = F.coalesce(F.expr(where), F.lit(False))
         obs = Observation()
-        out_df: DataFrame | None = transform(
+        out_df: DataFrame = transform(
             df.observe(obs, F.sum(hit.cast("bigint")).alias("n_hit")), hit
         )
         if append_df is not None:
@@ -2148,114 +2013,26 @@ def _rewrite_rows(
             # so the file layout matches two separate writes at one
             # write job's cost); schemas already strict-validated equal
             out_df = out_df.unionByName(append_df)
-        staged, _ = _stage_data(out_df, path, pb)
-        n_hit = int(obs.get["n_hit"] or 0)
-        if n_hit == 0:
-            _remove_staged(spark, root, staged)
-            staged = []
-            if not delta_mode:
-                return None
-            # nothing to rewrite: candidates stay referenced as they
-            # are; only the arrivals (if any) stage
-            cand_set = set()
-            untouched = list(head["files"])
-            if append_df is not None:
-                staged, _ = _stage_data(append_df, path, pb)
-        else:
-            untouched = [f for f in head["files"] if f not in cand_set]
-    else:
-        cand_set = set()
-        untouched = list(head["files"])
-        if append_df is not None:
-            staged, _ = _stage_data(append_df, path, pb)
-    if stats_cols is None:
-        # default: keep the table's existing stat columns alive on the
-        # rewritten files (union of columns any head file has stats for)
-        inferred: set[str] = set()
-        for fstats in head.get("stats", {}).values():
-            inferred.update(fstats)
-        stats_cols = tuple(sorted(
-            c for c in inferred
-            if c in {f.name for f in schema.fields} and c not in set(pb)
-        ))
-    clash = sorted(set(pb) & set(stats_cols))
-    if clash:
-        raise ValueError(
-            f"partition columns {clash!r} cannot carry stats — their "
-            "value is exact from the path already"
+        st = _stage(
+            spark, path, out_df, head, pb, stats_cols,
+            discard=lambda: not obs.get["n_hit"],
         )
-    bloom_spec = _bloom_effective_spec(
-        head, (), _BLOOM_DEFAULT_BITS, _BLOOM_DEFAULT_HASHES
+        n_hit = int(obs.get["n_hit"] or 0)
+        if st is None and not delta_mode:
+            return None
+    if st is None:
+        # nothing to rewrite: candidates stay referenced as they are;
+        # only the arrivals (if any) stage
+        cand_set = set()
+        st = _stage(spark, path, append_df, head, pb, stats_cols)
+    out = _commit_pinned(
+        spark, path, head, operation,
+        # an explicit properties override replaces the carried map in
+        # the SAME commit (safe: the commit is pinned to this head)
+        _successor(head, cand_set, st, txn, properties),
     )
-    stats_schema = StructType(
-        [f for f in schema.fields if f.name not in set(pb)]
-    )
-    staged_stats, staged_rows, staged_blooms = _collect_stats(
-        spark, root, staged, stats_schema, tuple(stats_cols), bloom_spec
-    )
-    staged_parts = (
-        {rel: _partition_values(rel, pb) for rel in staged} if pb else {}
-    )
-
-    def build(h: dict | None) -> dict:
-        if h is None or h["version"] != head["version"]:
-            raise RuntimeError(
-                f"concurrent commit during {operation} at {path} "
-                f"(expected head {head['version']}, "
-                f"found {h['version'] if h else None}) — re-run"
-            )
-        stats = {
-            rel: s
-            for rel, s in h.get("stats", {}).items()
-            if rel not in cand_set
-        }
-        stats.update(staged_stats)
-        row_counts = {
-            rel: n
-            for rel, n in h.get("rows", {}).items()
-            if rel not in cand_set
-        }
-        row_counts.update(staged_rows)
-        blooms = {
-            rel: b
-            for rel, b in h.get("blooms", {}).items()
-            if rel not in cand_set
-        }
-        blooms.update(staged_blooms)
-        parts = {
-            rel: v
-            for rel, v in h.get("parts", {}).items()
-            if rel not in cand_set
-        }
-        parts.update(staged_parts)
-        return {
-            "files": untouched + staged,
-            "schema": head["schema"],
-            "txn": _merged_txn(h, txn),
-            **({"stats": stats} if stats else {}),
-            **({"rows": row_counts} if row_counts else {}),
-            **({"bloom_meta": bloom_spec} if bloom_spec else {}),
-            **({"blooms": blooms} if blooms else {}),
-            **({"partition_by": list(pb)} if pb else {}),
-            **({"parts": parts} if parts else {}),
-            **(
-                # an explicit override replaces the carried map in the
-                # SAME commit (safe: build raises on a concurrent head
-                # change, so the override was computed from this head)
-                {"properties": properties}
-                if properties is not None
-                else (
-                    {"properties": head["properties"]}
-                    if head.get("properties")
-                    else {}
-                )
-            ),
-        }
-
-    out = _commit(spark, path, build, operation)
-    assert out is not None
     out["files_rewritten"] = len(cand_set)
-    out["files_untouched"] = len(untouched)
+    out["files_untouched"] = len(head["files"]) - len(cand_set)
     out["rows_affected"] = n_hit
     return out
 
@@ -2413,7 +2190,7 @@ def vacuum_table(spark: SparkSession, path: str, keep_last: int = 1) -> dict:
     root = path.rstrip("/")
     versions = list_manifests(spark, root)
     if not versions:
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
+        raise _not_committed(path)
     keep_versions = versions[-keep_last:]
     drop_versions = versions[:-keep_last]
     live: set[str] = set()
@@ -2572,8 +2349,7 @@ def restore_table(spark: SparkSession, path: str, version: int) -> dict:
     message instead of a mid-scan file-not-found)."""
     root = path.rstrip("/")
     target = read_manifest(spark, root, version)
-    head = latest_manifest(spark, root)
-    assert head is not None
+    head = _head(spark, path)
     lp = _local_path(root)
     if lp is not None:
         missing = [
@@ -2594,28 +2370,20 @@ def restore_table(spark: SparkSession, path: str, version: int) -> dict:
             f"data files were vacuumed (first: {missing[0]!r})"
         )
 
-    def build(h: dict | None) -> dict:
-        if h is None or h["version"] != head["version"]:
-            raise RuntimeError(
-                f"concurrent commit during restore at {path} — re-run"
-            )
-        return {
-            "files": target["files"],
-            "schema": target["schema"],
-            "txn": _merged_txn(h, None),
-            # `k in target`, not `target.get(k)`: falsy-but-meaningful
-            # values (an empty target version's rows/stats maps) must be
-            # restored verbatim, not dropped
-            **{
-                k: target[k]
-                for k in ("stats", "rows", "bloom_meta", "blooms",
-                          "partition_by", "parts", "properties")
-                if k in target
-            },
-        }
-
-    out = _commit(spark, path, build, "restore")
-    assert out is not None
+    out = _commit_pinned(spark, path, head, "restore", {
+        "files": target["files"],
+        "schema": target["schema"],
+        "txn": _merged_txn(head, None),
+        # `k in target`, not `target.get(k)`: falsy-but-meaningful
+        # values (an empty target version's rows/stats maps) must be
+        # restored verbatim, not dropped
+        **{
+            k: target[k]
+            for k in ("stats", "rows", "bloom_meta", "blooms",
+                      "partition_by", "parts", "properties")
+            if k in target
+        },
+    })
     out["restored_from"] = version
     return out
 
@@ -2747,10 +2515,11 @@ def orphan_files(spark: SparkSession, path: str) -> list[str]:
     names them so ``remove_orphans`` can reclaim the storage. Returns
     table-root-relative paths."""
     root = path.rstrip("/")
-    if not list_manifests(spark, root):
-        raise FileNotFoundError(f"no manifest at {path} — not a committed table")
+    versions = list_manifests(spark, root)
+    if not versions:
+        raise _not_committed(path)
     referenced: set[str] = set()
-    for v in list_manifests(spark, root):
+    for v in versions:
         referenced.update(read_manifest(spark, root, v)["files"])
     lp = _local_path(root)
     found: list[str] = []

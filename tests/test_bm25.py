@@ -303,6 +303,21 @@ def test_shuffle_query_shape_row_identical(spark, tmp_path):
     assert _rows(frame) == _rows(listed)
 
 
+def test_frame_wave_leaves_no_cached_frame(spark, tmp_path):
+    """A DataFrame wave persists nothing: after three served waves and
+    a JVM gc, no persisted RDD the serves created is left behind."""
+    docs, queries = _frames(spark)
+    path = str(tmp_path / "bm25_cache")
+    build_bm25_index(docs, "doc_id", "text", path)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    for n in (1, 2, 3):
+        wave = queries.withColumn("qid", F.col("qid") + n)
+        assert bm25_topk(spark, path, wave, k=3).count() > 0
+    spark._jvm.System.gc()
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_wave_guards_raise_before_any_job(spark, tmp_path):
     """Two list rows under one qid would silently union their terms, so
     a duplicate qid raises with the row and distinct counts; an index

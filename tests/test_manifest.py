@@ -174,31 +174,113 @@ def test_vacuum_reclaims_only_dead_files(spark, tbl):
     assert sorted(os.path.relpath(p, tbl) for p in remaining) == sorted(head["files"])
 
 
-def test_merge_raises_on_concurrent_commit_instead_of_losing_it(spark, tbl):
-    """merge_table computes against the head it resolved; if another
-    writer commits first, blindly publishing would silently drop that
-    writer's rows — it must raise for an explicit re-run instead."""
-    M.write_table(_df(spark, [(1, "a")]), tbl)
-    batch = spark.createDataFrame([(1, "A", False)], "k bigint, v string, dead boolean")
+def _two_partition_table(spark, tbl, stats_cols=()):
+    """Partition p=a holds keys 0..59 in three files, p=b keys 100..119
+    in one."""
+    for lo in (0, 20, 40):
+        M.write_table(
+            spark.createDataFrame(
+                [(k, "a", f"v{k}") for k in range(lo, lo + 20)],
+                "k bigint, p string, v string",
+            ).coalesce(1),
+            tbl, mode="append", partition_by=("p",), stats_cols=stats_cols,
+        )
+    M.write_table(
+        spark.createDataFrame(
+            [(k, "b", f"v{k}") for k in range(100, 120)],
+            "k bigint, p string, v string",
+        ).coalesce(1),
+        tbl, mode="append", stats_cols=stats_cols,
+    )
 
-    import ensembl_database_loader_spark.sinks.manifest as mod
 
-    real_stage = mod._stage_data
+#: every commit that rewrites data read from (or metadata of) the head
+#: it resolved: (operation name in the error, call)
+_PINNED_OPS = {
+    "merge_table": ("merge", lambda spark, tbl: M.merge_table(
+        tbl,
+        spark.createDataFrame([(1, "A", False)], "k bigint, v string, dead boolean"),
+        ("k",), tombstone_col="dead",
+    )),
+    "compact_table": ("compact", lambda spark, tbl: M.compact_table(spark, tbl)),
+    "restore_table": ("restore", lambda spark, tbl: M.restore_table(spark, tbl, 0)),
+    "compact_partition": ("compact_partition", lambda spark, tbl: M.compact_partition(
+        spark, tbl, {"p": "a"},
+    )),
+    "replace_partitions": ("replace_partitions", lambda spark, tbl: M.replace_partitions(
+        spark, tbl, [{"p": "a"}],
+        spark.createDataFrame([(1, "a", "new")], "k bigint, p string, v string"),
+    )),
+    "drop_partition": ("drop_partition", lambda spark, tbl: M.drop_partition(
+        spark, tbl, {"p": "a"},
+    )),
+}
 
-    def stage_and_race(df, path, partition_by=()):
+
+@pytest.mark.parametrize("op", sorted(_PINNED_OPS))
+def test_pinned_commit_raises_on_concurrent_commit(spark, tbl, monkeypatch, op):
+    """Every commit computed from the head it resolved raises when
+    another writer commits first — blindly publishing would silently
+    drop that writer's rows — and the competing commit survives."""
+    partitioned = op in ("compact_partition", "replace_partitions", "drop_partition")
+    if partitioned:
+        _two_partition_table(spark, tbl)
+        racer = spark.createDataFrame([(7, "b", "racer")], "k bigint, p string, v string")
+    else:
+        M.write_table(_df(spark, [(1, "a")]), tbl)
+        M.write_table(_df(spark, [(2, "b")]), tbl, mode="append")
+        racer = _df(spark, [(7, "racer")])
+    real_commit = M._commit
+
+    def race_then_commit(*args, **kwargs):
+        monkeypatch.setattr(M, "_commit", real_commit)  # before the racer
+        M.write_table(racer, tbl, mode="append")
+        return real_commit(*args, **kwargs)
+
+    monkeypatch.setattr(M, "_commit", race_then_commit)
+    name, call = _PINNED_OPS[op]
+    with pytest.raises(RuntimeError, match=f"concurrent commit during {name} "):
+        call(spark, tbl)
+    head = M.latest_manifest(spark, tbl)
+    assert head["operation"] == "append"  # the racer's commit is the head
+    assert 7 in {r.k for r in M.snapshot(spark, tbl).collect()}
+
+
+@pytest.mark.parametrize("op", ["append", "delete_rows"])
+def test_failed_publish_leaves_head_and_orphans_only_staged_files(
+    spark, tbl, monkeypatch, op
+):
+    """A writer that dies between staging and publishing changes
+    nothing readers see; its staged files are exactly the orphans, and
+    remove_orphans reclaims them."""
+    M.write_table(_df(spark, [(1, "a"), (2, "b"), (3, "c")]), tbl, stats_cols=("k",))
+    before = _content(M.snapshot(spark, tbl))
+    staged: list[str] = []
+    real_stage = M._stage_data
+
+    def recording_stage(df, path, partition_by=()):
         out = real_stage(df, path, partition_by)
-        mod._stage_data = real_stage  # restore before the competing write
-        M.write_table(_df(spark, [(7, "racer")]), tbl, mode="append")
+        staged.extend(out[0])
         return out
 
-    mod._stage_data = stage_and_race
-    try:
-        with pytest.raises(RuntimeError, match="concurrent commit"):
-            M.merge_table(tbl, batch, ("k",), tombstone_col="dead")
-    finally:
-        mod._stage_data = real_stage
-    # the racer's append survived untouched
-    assert (7, "racer") in _content(M.snapshot(spark, tbl))
+    def publish_fails(*_args):
+        raise OSError("injected publish failure")
+
+    monkeypatch.setattr(M, "_stage_data", recording_stage)
+    monkeypatch.setattr(M, "_write_bytes", publish_fails)
+    with pytest.raises(OSError, match="injected"):
+        if op == "append":
+            M.write_table(_df(spark, [(4, "d")]), tbl, mode="append")
+        else:
+            M.delete_rows(spark, tbl, where="k = 2")
+    monkeypatch.undo()
+    assert staged
+    assert M.list_manifests(spark, tbl) == [0]
+    assert _content(M.snapshot(spark, tbl)) == before
+    assert M.orphan_files(spark, tbl) == sorted(staged)
+    assert M.remove_orphans(spark, tbl, grace_ms=0)["deleted"] == len(staged)
+    assert M.orphan_files(spark, tbl) == []
+    assert _content(M.snapshot(spark, tbl)) == before
 
 
 def test_manifest_files_invisible_to_plain_scan(spark, tbl):
@@ -300,6 +382,54 @@ def test_compact_with_sort_restores_clustering(spark, tbl):
     assert len(M.files_matching(head, [("k", "=", 42)])) == 1
     got = M.scan_table(spark, tbl, [("k", "=", 42)])
     assert [(r.k, r.v) for r in got.collect()] == [(42, "row42")]
+
+
+_REWRITES = {
+    "compact_table": lambda spark, tbl: M.compact_table(
+        spark, tbl, target_bytes=1024, sort_cols=("k",)
+    ),
+    "compact_partition": lambda spark, tbl: M.compact_partition(
+        spark, tbl, {"p": "a"}, target_bytes=1024, sort_cols=("k",)
+    ),
+    "merge_table": lambda spark, tbl: M.merge_table(
+        tbl,
+        spark.createDataFrame(
+            [(5, "a", "upd"), (61, "a", "new")], "k bigint, p string, v string"
+        ),
+        ("k",),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_REWRITES))
+def test_rewrites_keep_file_stats(spark, tbl, op):
+    """A rewrite keeps the table's stat columns by default: every file
+    of the new head still has ``k`` stats, so a key no file holds
+    prunes every file and a point lookup reads only matching files."""
+    if op == "compact_partition":
+        _two_partition_table(spark, tbl, stats_cols=("k",))
+    else:
+        for lo in (0, 20, 40):
+            M.write_table(
+                spark.createDataFrame(
+                    [(k, "a", f"v{k}") for k in range(lo, lo + 20)],
+                    "k bigint, p string, v string",
+                ).coalesce(1),
+                tbl, mode="append", stats_cols=("k",),
+            )
+    before = M.latest_manifest(spark, tbl)
+    _REWRITES[op](spark, tbl)
+    head = M.latest_manifest(spark, tbl)
+    assert head["version"] == before["version"] + 1
+    assert set(head["files"]) - set(before["files"])  # files were rewritten
+    assert all("k" in head.get("stats", {}).get(rel, {}) for rel in head["files"])
+    assert M.files_matching(head, [("k", "=", 1000)]) == []
+    hits = M.files_matching(head, [("k", "=", 10)])
+    assert hits
+    if op != "merge_table":  # sorted rewrites: a point lookup skips files
+        assert len(hits) < len(head["files"])
+    got = M.scan_table(spark, tbl, [("k", "=", 10)])
+    assert [(r.k, r.v) for r in got.collect()] == [(10, "v10")]
 
 
 def test_timestamp_stats_skip_with_string_predicates(spark, tbl):
@@ -1282,6 +1412,9 @@ def test_table_partitions_and_drop_partition(spark, tbl):
         tbl, partition_by=("p",),
     )
     parts = M.table_partitions(spark, tbl)
+    # sorted by the stringified values ("'a'" < "'b'" < "None")
+    assert [e["values"]["p"] for e in parts] == ["a", "b", None]
+    assert all(e["n_files"] >= 1 for e in parts)
     as_map = {tuple(e["values"].items()): (e["n_files"], e["n_rows"]) for e in parts}
     assert as_map[(("p", "a"),)][1] == 2
     assert as_map[(("p", "b"),)][1] == 1
@@ -1361,8 +1494,19 @@ def test_compact_partition_folds_only_that_partition(spark, tbl):
     a_files = {r for r in m0["files"] if m0["parts"][r]["p"] == "a"}
     b_files = {r for r in m0["files"] if m0["parts"][r]["p"] == "b"}
     assert len(a_files) == 3
+
+    def partitions():
+        return {
+            e["values"]["p"]: (e["n_files"], e["n_rows"])
+            for e in M.table_partitions(spark, tbl)
+        }
+
+    # the metadata listing names the partition that needs compacting
+    assert partitions() == {"a": (3, 3), "b": (1, 1)}
     out = M.compact_partition(spark, tbl, {"p": "a"}, sort_cols=("k",))
     assert out["files_before"] == 3 and out["files_after"] == 1
+    assert out["operation"] == "compact_partition"
+    assert partitions() == {"a": (1, 3), "b": (1, 1)}
     m1 = M.latest_manifest(spark, tbl)
     # b carried BY REFERENCE; a replaced by one file with parts recorded
     assert b_files < set(m1["files"])
@@ -1553,25 +1697,6 @@ def test_restore_table_rolls_back_metadata_only(spark, tbl):
     os.remove(os.path.join(tbl, only_v2[0]))
     with _pytest.raises(FileNotFoundError, match="vacuumed"):
         M.restore_table(spark, tbl, 2)
-
-
-def test_partitions_needing_compaction_worklist(spark, tbl):
-    df = spark.createDataFrame(
-        [(1, "p1"), (2, "p2")], "k bigint, p string"
-    )
-    M.write_table(df, tbl, partition_by=("p",))
-    # p1 accumulates 3 more files; p2 stays at 1
-    for i in range(3):
-        M.write_table(
-            spark.createDataFrame([(10 + i, "p1")], "k bigint, p string"),
-            tbl, mode="append",
-        )
-    work = M.partitions_needing_compaction(spark, tbl, max_files=2)
-    assert [w["values"] for w in work] == [{"p": "p1"}]
-    assert work[0]["n_files"] == 4 and work[0]["n_rows"] == 4
-    # compacting the flagged partition clears the worklist
-    M.compact_partition(spark, tbl, work[0]["values"])
-    assert M.partitions_needing_compaction(spark, tbl, max_files=2) == []
 
 
 def test_restore_carries_empty_target_metadata_verbatim(spark, tbl):
