@@ -17,7 +17,10 @@ Measurement protocol (defensible-by-construction):
 - **Isolation between probes**: after each probe, `catalog.clearCache()`
   drops anything the probe persisted (curation-funnel/dedup frames) and
   a Python `gc.collect()` drops pandas/Arrow buffers, so no probe pays
-  for a predecessor's leftovers.
+  for a predecessor's leftovers. Each probe also runs with `tempfile`
+  pointed at a fresh directory that is removed after it, so the
+  indexes and stores probes stage under `tempfile.mkdtemp` do not
+  pile up.
 - **Self-persisted record**: the complete per-probe JSON is written to
   `.benchmarks/BENCH_full_latest.json` (and appended to
   `.benchmarks/history.jsonl`) BEFORE the stdout line is printed — the
@@ -32,11 +35,14 @@ Usage: python bench.py [--repeat N] [--only name1,name2] [--seed S]
 from __future__ import annotations
 
 import argparse
+import contextlib
 import gc
 import json
 import os
 import random
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -45,6 +51,20 @@ from ensembl_database_loader_spark.plans import all_probes  # noqa: E402
 from ensembl_database_loader_spark.session import get_spark  # noqa: E402
 
 BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".benchmarks")
+
+
+@contextlib.contextmanager
+def probe_tempdir():
+    """Point ``tempfile`` at a fresh directory for one probe and remove
+    it once the probe's results are collected: probes stage their
+    indexes, stores and exports under ``tempfile.mkdtemp``."""
+    d = tempfile.mkdtemp(prefix="probe_")
+    old, tempfile.tempdir = tempfile.tempdir, d
+    try:
+        yield d
+    finally:
+        tempfile.tempdir = old
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def main() -> int:
@@ -106,54 +126,55 @@ def main() -> int:
 
     times: dict[str, float] = {}
     for name in probes_list:
-        p = probes[name]
-        best = None
-        try:
-            p.spark_fn(spark, sf_dir).collect()  # warm-up, untimed
-        except Exception as exc:  # noqa: BLE001 - record, keep benching
-            print(f"# FAIL {name} (warm-up): {exc}", file=sys.stderr)
+        with probe_tempdir():
+            p = probes[name]
+            best = None
+            try:
+                p.spark_fn(spark, sf_dir).collect()  # warm-up, untimed
+            except Exception as exc:  # noqa: BLE001 - record, keep benching
+                print(f"# FAIL {name} (warm-up): {exc}", file=sys.stderr)
+                spark.catalog.clearCache()
+                gc.collect()
+                continue
+            for _ in range(max(1, args.repeat)):
+                t0 = time.perf_counter()
+                try:
+                    p.spark_fn(spark, sf_dir).collect()
+                except Exception as exc:  # noqa: BLE001
+                    print(f"# FAIL {name}: {exc}", file=sys.stderr)
+                    best = None
+                    break
+                dt = time.perf_counter() - t0
+                best = dt if best is None else min(best, dt)
+            # extra min() samples for sub-threshold probes (see --small-probe-extra)
+            extra = 0
+            while (
+                best is not None
+                and best < args.small_probe_threshold
+                and extra < max(0, args.small_probe_extra)
+            ):
+                extra += 1
+                t0 = time.perf_counter()
+                try:
+                    p.spark_fn(spark, sf_dir).collect()
+                except Exception as exc:  # noqa: BLE001 - keep the valid best-of
+                    print(f"# WARN {name} (extra iter): {exc}", file=sys.stderr)
+                    break
+                best = min(best, time.perf_counter() - t0)
+            if best is not None:
+                times[name] = round(best, 3)
+            # Isolation: drop anything this probe cached/persisted and let
+            # BOTH runtimes release memory before the next probe — Python
+            # (Arrow/pandas buffers) and the JVM (a heavy predecessor like
+            # the curation funnel fills the old gen, and the next small
+            # probe otherwise pays its collection: q20-after-funnel measured
+            # ~0.43s in suite order vs ~0.27s isolated).
             spark.catalog.clearCache()
             gc.collect()
-            continue
-        for _ in range(max(1, args.repeat)):
-            t0 = time.perf_counter()
             try:
-                p.spark_fn(spark, sf_dir).collect()
-            except Exception as exc:  # noqa: BLE001
-                print(f"# FAIL {name}: {exc}", file=sys.stderr)
-                best = None
-                break
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        # extra min() samples for sub-threshold probes (see --small-probe-extra)
-        extra = 0
-        while (
-            best is not None
-            and best < args.small_probe_threshold
-            and extra < max(0, args.small_probe_extra)
-        ):
-            extra += 1
-            t0 = time.perf_counter()
-            try:
-                p.spark_fn(spark, sf_dir).collect()
-            except Exception as exc:  # noqa: BLE001 - keep the valid best-of
-                print(f"# WARN {name} (extra iter): {exc}", file=sys.stderr)
-                break
-            best = min(best, time.perf_counter() - t0)
-        if best is not None:
-            times[name] = round(best, 3)
-        # Isolation: drop anything this probe cached/persisted and let
-        # BOTH runtimes release memory before the next probe — Python
-        # (Arrow/pandas buffers) and the JVM (a heavy predecessor like
-        # the curation funnel fills the old gen, and the next small
-        # probe otherwise pays its collection: q20-after-funnel measured
-        # ~0.43s in suite order vs ~0.27s isolated).
-        spark.catalog.clearCache()
-        gc.collect()
-        try:
-            spark._jvm.System.gc()  # noqa: SLF001
-        except Exception:  # noqa: BLE001 - isolation is best-effort
-            pass
+                spark._jvm.System.gc()  # noqa: SLF001
+            except Exception:  # noqa: BLE001 - isolation is best-effort
+                pass
 
     # Host-speed spot-check (VERDICT r11 #6): a fixed 20M-op
     # single-thread Python loop, timed AFTER the suite on the same

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ensembl_database_loader_spark.functions.text import normalize_text, tokens
 from ensembl_database_loader_spark.operators.dedup import (
@@ -57,7 +58,7 @@ def _near_dup_pairs(
       fewer drops).
 
     ``shingles``/``bands`` (minhash only): precomputed — typically
-    persisted — (id, shingles) / (id, band, key) frames so candidate
+    cut — (id, shingles) / (id, band, key) frames so candidate
     generation and the Jaccard verify reuse ONE Arrow shingle pass
     instead of re-deriving both from text (pairs are identical)."""
     if strategy == "prefix":
@@ -135,51 +136,43 @@ def curate_corpus(
                 extra rounds)
 
     ``stats`` is a 1-row frame: n_input, n_quality, n_exact, n_kept,
-    tokens_kept — the funnel numbers every curation run reports."""
+    tokens_kept — the funnel numbers every curation run reports.
+
+    The call runs eagerly: multi-consumer stages are cut with
+    ``localCheckpoint(eager=True)`` (freed by the ContextCleaner, never
+    in the catalog cache) and ``stats`` is counted on the cut leaves. A
+    lost executor fails a later action on ``kept`` instead of a recompute."""
     base = df.select(F.col(id_col).alias("id"), F.col(block_col).alias("blk"), F.col(text_col).alias("text"))
 
-    quality = with_quality_score(base, "text").filter(
-        F.col("quality_score") >= min_quality
-    ).select("id", "blk", "text")
+    scored = with_quality_score(base, "text")
+    quality = scored.filter(F.col("quality_score") >= min_quality).select(
+        "id", "blk", "text"
+    )
 
     # exact dedup, smallest id per normalized text (deterministic)
     from pyspark.sql import Window
 
     w = Window.partitionBy(normalize_text("text")).orderBy("id")
-    # the survivor frame is referenced by the pair join (both sides),
-    # the keep anti-join, and two stats aggregates — persist so the
-    # quality+window pipeline runs once. Freed when the returned frames
-    # are garbage-collected (ContextCleaner) or on catalog.clearCache();
-    # at 100 TB use persist(DISK_ONLY) or a materialized stage table.
     exact = (
         quality.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
-        .persist()
+        .localCheckpoint(eager=True)
     )
 
     # One Arrow shingle pass per funnel: the minhash strategy and the
     # fingerprint store both need the distinct-shingle arrays AND the
-    # band keys derived from them — computed once over the persisted
-    # exact survivors and PERSISTED, they feed candidate generation,
-    # the Jaccard verify, and both store files (previously each
-    # consumer re-ran the shingle UDF + band aggregate from text: up
-    # to 4 independent Arrow passes per curate_corpus(store_path=...)
-    # call). Same ContextCleaner lifetime note as ``exact`` above.
+    # band keys derived from them — computed once over the exact leaf
+    # and cut, they feed candidate generation, the Jaccard verify, and
+    # both store files.
     shg = bands = None
     if near_dup == "minhash" or store_path is not None:
-        shg = with_shingles(exact, "id", "text", _STORE_N).persist()
+        shg = with_shingles(exact, "id", "text", _STORE_N).localCheckpoint(eager=True)
         bands = minhash_band_keys_from_shingles(
             shg, "id", "shingles", _STORE_NUM_HASHES, _STORE_ROWS_PER_BAND
-        ).persist()
+        ).localCheckpoint(eager=True)
 
-    pairs = _near_dup_pairs(
-        exact,
-        near_dup,
-        jaccard_threshold,
-        shingles=shg if near_dup == "minhash" else None,
-        bands=bands if near_dup == "minhash" else None,
-    )
+    pairs = _near_dup_pairs(exact, near_dup, jaccard_threshold, shg, bands)
     if cluster_exact:
         # exact cluster-level dedup: transitive closure of the pair
         # graph, keep the minimum id of every component
@@ -194,21 +187,42 @@ def curate_corpus(
         # keep-first greedy: drop any doc a pair links to a smaller id
         dropped = pairs.select(F.col("id2").alias("id")).distinct()
         kept = exact.join(dropped, "id", "left_anti")
+    kept = kept.localCheckpoint(eager=True)
 
-    stats = (
-        base.agg(F.count(F.lit(1)).alias("n_input"))
-        .crossJoin(quality.agg(F.count(F.lit(1)).alias("n_quality")))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact")))
-        .crossJoin(
-            kept.agg(
-                F.count(F.lit(1)).alias("n_kept"),
-                F.sum(F.size(tokens("text"))).cast("bigint").alias("tokens_kept"),
-            )
-        )
-    )
+    stats = _funnel_stats(scored, min_quality, exact, kept)
     if store_path is not None:
         write_fingerprint_store(exact, store_path, shingles=shg, bands=bands)
     return kept, stats
+
+
+def _funnel_stats(
+    scored: DataFrame, min_quality: int, exact: DataFrame, kept: DataFrame
+) -> DataFrame:
+    """The funnel's stats row: n_input and n_quality from one aggregate
+    over the quality-scored input, the rest counted on the cut leaves;
+    typed as the aggregates are (a sum over no rows is null)."""
+    n_input, n_quality = scored.agg(
+        F.count(F.lit(1)), F.count_if(F.col("quality_score") >= min_quality)
+    ).first()
+    n_kept, tokens_kept = kept.agg(
+        F.count(F.lit(1)), F.sum(F.size(tokens("text"))).cast("bigint")
+    ).first()
+    counts = dict(n_input=n_input, n_quality=n_quality, n_exact=exact.count(),
+                  n_kept=n_kept, tokens_kept=tokens_kept)
+    schema = StructType([StructField(c, LongType(), c == "tokens_kept") for c in counts])
+    return one_row(kept.sparkSession, counts, schema)
+
+
+def one_row(spark, row: dict, schema: StructType) -> DataFrame:
+    """``row`` as a 1-row frame with ``schema``'s exact types and
+    nullability. It is built through Arrow so it plans as a local
+    relation: collecting it starts no Spark job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(
+        pa.Table.from_pylist([row], schema=to_arrow_schema(schema)), schema
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -245,7 +259,7 @@ def _store_signatures(
     exact: DataFrame, shingles: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """(exact_sigs, band_keys) for a frame of exact-stage survivors.
-    Pass a precomputed (persisted) ``shingles`` frame so the sigs join
+    Pass a precomputed (cut or persisted) ``shingles`` frame so the sigs join
     and the band keys share ONE Arrow shingle pass; band keys always
     derive from the same shingle frame the sigs carry (bit-identical
     to deriving them from text — pinned in tests)."""
@@ -321,6 +335,7 @@ def curate_increment(
     """Curate a NEW batch against the persisted fingerprint store plus
     itself; returns (kept_new_docs, stats) with the same funnel-stats
     shape as ``curate_corpus`` (counts are for the new batch only).
+    Runs eagerly with cut stages, as ``curate_corpus`` does.
 
     Old signatures are never recomputed: the exact stage anti-joins the
     new batch's sha2 against the store, and near-dup candidates against
@@ -331,12 +346,11 @@ def curate_increment(
 
     ``update_store=True`` appends the new exact survivors' signatures
     to the store so the next increment composes. The store is read as a
-    SNAPSHOT — the file list is pinned at call time and the frames read
-    those explicit files, so the returned lazy frames never see their
-    own appended output. (A directory read + persist is NOT enough:
-    writing to a path invalidates every cached plan on that path, and
-    the recompute would read the appended files — measured as kept==0
-    self-poisoning.)
+    SNAPSHOT (the file list is pinned at call time) and ``kept`` is cut
+    before the append, so it never sees its own appended output. (A
+    directory read + persist is NOT enough: writing to a path
+    invalidates every cached plan on that path, and the recompute would
+    read the appended files — measured as kept==0 self-poisoning.)
 
     Requires new ids > every stored id (monotone ingest)."""
     spark = new_df.sparkSession
@@ -345,10 +359,9 @@ def curate_increment(
         F.col(block_col).alias("blk"),
         F.col(text_col).alias("text"),
     )
-    quality = (
-        with_quality_score(base, "text")
-        .filter(F.col("quality_score") >= min_quality)
-        .select("id", "blk", "text")
+    scored = with_quality_score(base, "text")
+    quality = scored.filter(F.col("quality_score") >= min_quality).select(
+        "id", "blk", "text"
     )
 
     from pyspark.sql import Window
@@ -369,24 +382,23 @@ def curate_increment(
             "left_anti",
         )
         .drop("_sha")
-        .persist()
+        .localCheckpoint(eager=True)
     )
 
     new_sigs, _ = _store_signatures(exact)
-    new_sigs = new_sigs.persist()
-    # band keys derive from the PERSISTED sigs' shingle arrays — the
-    # four consumers below (old-bucket join, both sides of the
-    # new-vs-new self-join, the store append) previously each re-ran
-    # the Arrow shingle pass + band aggregate from text; now they share
-    # one cached pass, and the small (4 rows/doc) band frame is itself
-    # persisted so the explode+MIN aggregate also runs once.
+    new_sigs = new_sigs.localCheckpoint(eager=True)
+    # band keys derive from the cut sigs' shingle arrays — the four
+    # consumers below (old-bucket join, both sides of the new-vs-new
+    # self-join, the store append) share one Arrow shingle pass, and
+    # the small (4 rows/doc) band frame is cut too so the explode+MIN
+    # aggregate also runs once.
     new_bands = minhash_band_keys_from_shingles(
         new_sigs.select("id", F.col("sh").alias("shingles")),
         "id",
         "shingles",
         _STORE_NUM_HASHES,
         _STORE_ROWS_PER_BAND,
-    ).persist()
+    ).localCheckpoint(eager=True)
 
     # new-vs-old: bucket join on stored band keys, exact-Jaccard verify
     cand_old = (
@@ -467,19 +479,9 @@ def curate_increment(
 
     kept = exact.join(
         dropped_vs_old.unionByName(dropped_vs_new).distinct(), "id", "left_anti"
-    )
+    ).localCheckpoint(eager=True)
 
-    stats = (
-        base.agg(F.count(F.lit(1)).alias("n_input"))
-        .crossJoin(quality.agg(F.count(F.lit(1)).alias("n_quality")))
-        .crossJoin(exact.agg(F.count(F.lit(1)).alias("n_exact")))
-        .crossJoin(
-            kept.agg(
-                F.count(F.lit(1)).alias("n_kept"),
-                F.sum(F.size(tokens("text"))).cast("bigint").alias("tokens_kept"),
-            )
-        )
-    )
+    stats = _funnel_stats(scored, min_quality, exact, kept)
     if update_store:
         new_sigs.write.mode("append").parquet(store_path + "/exact_sigs")
         new_bands.write.mode("append").parquet(store_path + "/band_keys")

@@ -15,11 +15,12 @@ probe oracles)
 
 Every stage is one of the already-tested operators (pipeline/curate.py,
 operators/contamination.py, operators/mixing.py, operators/packing.py),
-so the composed plan inherits each stage's scale posture: the only
-shuffles are the funnel's own (window dedup + pair join), one broadcast
-membership probe, and the packing shard groupBy — mixing adds zero.
-Stage semantics up to packing are SQL-expressible, so the whole
-pipeline is oracle-checkable end to end (probe
+so each stage keeps its scale posture: the only shuffles are the
+funnel's own (window dedup + pair join), one broadcast membership
+probe, and the packing shard groupBy — mixing adds zero. Each costly
+stage's output is cut (``localCheckpoint``), so no plan carries the
+whole funnel. Stage semantics up to packing are SQL-expressible, so
+the whole pipeline is oracle-checkable end to end (probe
 ``llp_training_pipeline``); packing adds its hash-gated contract
 booleans on top.
 """
@@ -28,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ensembl_database_loader_spark.operators.contamination import decontaminate
 from ensembl_database_loader_spark.operators.mixing import stratified_sample
@@ -36,7 +38,7 @@ from ensembl_database_loader_spark.operators.packing import (
     packing_report,
 )
 from ensembl_database_loader_spark.operators.textstats import with_token_stats
-from ensembl_database_loader_spark.pipeline.curate import curate_corpus
+from ensembl_database_loader_spark.pipeline.curate import curate_corpus, one_row
 
 
 def build_training_corpus(
@@ -76,7 +78,12 @@ def build_training_corpus(
     (n_input / n_quality / n_exact / n_kept / tokens_kept) plus
     n_clean (post-decontamination), n_mixed (post-mixing),
     packed_tokens, and the packing contract booleans (each_doc_once,
-    no_overflow, ffd_bound_ok, above_lower_bound).
+    no_overflow, ffd_bound_ok, above_lower_bound), counted on the cut
+    leaves during the call: collecting it starts no Spark job.
+
+    The call runs eagerly. ``packed`` is a cut leaf (freed by the
+    ContextCleaner when dropped): a lost executor fails a later action
+    on it instead of recomputing it from ``docs``.
 
     ``benchmark=None`` skips decontamination; ``mix_rates=None`` skips
     mixing (n_clean / n_mixed then equal the prior stage). Pass
@@ -142,12 +149,9 @@ def build_training_corpus(
         near_dup=near_dup,
         store_path=store_path,
     )
-    # kept: (id, blk, text) — referenced by the contamination report
-    # (shingle explode + per-doc counts) AND the decontamination
-    # anti-join AND the funnel stats; persist so the near-dup pair join
-    # in its lineage runs once (curate persists only the exact stage).
-    kept = kept.persist()
-    n_lm_col = None
+    # each costly stage is cut and counted: no aggregate re-runs the funnel
+    counts = funnel.first().asDict()
+    extra = {}
     if lm_ref is not None:
         from ensembl_database_loader_spark.operators.lm import (
             perplexity_filter,
@@ -158,8 +162,8 @@ def build_training_corpus(
         kept = perplexity_filter(
             kept, "id", "text", uni, bi, vocab,
             min_mean_logprob=lm_min_logprob, alpha=lm_alpha,
-        ).drop("mean_logprob", "n_bigrams").persist()
-        n_lm_col = kept.agg(F.count(F.lit(1)).alias("n_lm"))
+        ).drop("mean_logprob", "n_bigrams").localCheckpoint(eager=True)
+        extra["n_lm"] = kept.count()
     clean = (
         decontaminate(
             kept,
@@ -168,16 +172,18 @@ def build_training_corpus(
             "text",
             n=contamination_n,
             max_frac=max_contamination,
-        )
+        ).localCheckpoint(eager=True)
         if benchmark is not None
         else kept
     )
+    # mixing is a per-row hash filter: cheap to re-run over its leaf
     mixed = (
         stratified_sample(clean, "id", "blk", mix_rates, modulus=mix_modulus)
         if mix_rates
         else clean
     )
-    n_mixed_col = mixed.agg(F.count(F.lit(1)).alias("n_mixed"))
+    counts["n_clean"] = clean.count()
+    counts["n_mixed"] = mixed.count() if mix_rates else counts["n_clean"]
     if token_budgets is not None:
         from ensembl_database_loader_spark.operators.budget import (
             select_token_budget,
@@ -187,36 +193,29 @@ def build_training_corpus(
             with_token_stats(mixed, "text"), "id", "n_tokens", "blk",
             token_budgets,
         ).drop("n_tokens", "n_distinct_tokens", "mean_tok_len")
-    # mixed feeds three consumers (clean/mixed counts, packing, the
-    # text back-join) — persist so the funnel lineage runs once; at
-    # 100 TB substitute a materialized stage table.
-    mixed = mixed.persist()
+        mixed = mixed.localCheckpoint(eager=True)
+        extra["n_budget"] = mixed.count()
 
-    packed_assign = pack_sequences(
-        with_token_stats(mixed, "text"), "id", "n_tokens",
-        budget=pack_budget, n_shards=pack_shards,
+    packed = (
+        pack_sequences(
+            with_token_stats(mixed, "text"), "id", "n_tokens",
+            budget=pack_budget, n_shards=pack_shards,
+        )
+        .join(mixed.select("id", "blk", "text"), "id")
+        .localCheckpoint(eager=True)
     )
-    packed = packed_assign.join(mixed.select("id", "blk", "text"), "id")
-
-    pack_contract = packing_report(packed_assign, pack_budget).select(
+    contract = packing_report(packed, pack_budget).select(
         F.col("total_tokens").alias("packed_tokens"),
         "each_doc_once",
         "no_overflow",
         "ffd_bound_ok",
         "above_lower_bound",
     )
-    report = (
-        funnel.crossJoin(clean.agg(F.count(F.lit(1)).alias("n_clean")))
-        .crossJoin(n_mixed_col)
-        .crossJoin(pack_contract)
-    )
-    if n_lm_col is not None:
-        report = report.crossJoin(n_lm_col)
-    if token_budgets is not None:
-        report = report.crossJoin(
-            mixed.agg(F.count(F.lit(1)).alias("n_budget"))
-        )
-    return packed, report
+    counts.update(contract.first().asDict(), **extra)
+    # funnel and contract fields keep their types; stage counts are non-null
+    typed = {f.name: f for f in funnel.schema.fields + contract.schema.fields}
+    schema = StructType([typed.get(c, StructField(c, LongType(), False)) for c in counts])
+    return packed, one_row(kept.sparkSession, counts, schema)
 
 
 def tokenize_and_materialize(

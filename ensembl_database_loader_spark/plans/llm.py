@@ -491,10 +491,8 @@ def llp_incremental(spark: SparkSession, sf: str) -> DataFrame:
 
     Probe-cost controls: deterministic 1-in-5 subsample (variant ids
     are +100000 ≡ 0 mod 5, so base/variant near-dup pairs stay
-    together) and the three kept frames persisted — the equality check
-    references each side twice, and un-persisted funnels re-run their
-    pair-generation lineage per reference (measured 75s -> single-digit
-    seconds at sf0.1)."""
+    together); the kept frames are the funnels' cut leaves, so the
+    equality check's two references to each side re-run no funnel."""
     import tempfile
 
     from ensembl_database_loader_spark.pipeline.curate import (
@@ -511,20 +509,16 @@ def llp_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     # the one-shot reference funnel shares nothing with the incremental
-    # chain until the equality gate: materialize it on a second driver
-    # thread so its jobs back-fill the cluster while the store
-    # bootstrap + increment protocol runs (guide §2.6); the equality
-    # gate then reads it from cache
-    kept_one, _ = curate_corpus(corpus, near_dup="minhash")
-    ko = kept_one.select("id").persist()
+    # chain until the equality gate: run it on a second driver thread
+    # so its jobs back-fill the cluster while the store bootstrap +
+    # increment protocol runs (guide §2.6)
     with ThreadPoolExecutor(max_workers=1) as ex:
-        fut_one = ex.submit(ko.count)
+        fut_one = ex.submit(curate_corpus, corpus, near_dup="minhash")
         kept1, _ = curate_corpus(batch1, near_dup="minhash", store_path=store)
         n_store_1 = spark.read.parquet(store + "/exact_sigs").count()
         kept2, _ = curate_increment(batch2, store)
-        k1 = kept1.select("id").persist()
-        k2 = kept2.select("id").persist()
-        fut_one.result()
+        ko = fut_one.result()[0].select("id")
+    k1, k2 = kept1.select("id"), kept2.select("id")
 
     kept_inc = k1.unionByName(k2)
     sym_diff = kept_inc.exceptAll(ko).unionAll(ko.exceptAll(kept_inc))
@@ -1896,13 +1890,12 @@ def ws3_streaming_ingest(spark: SparkSession, sf: str) -> DataFrame:
         out,
         ckpt,
     )
-    # the one-shot reference funnel is independent of the stream:
-    # materialize it NOW, while the micro-batches drain on the
-    # engine's own threads (guide §2.6 — its jobs back-fill executors
-    # the per-batch curate_increment protocol leaves idle)
+    # the one-shot reference funnel is independent of the stream: it
+    # runs NOW (the call is eager), while the micro-batches drain on
+    # the engine's own threads (guide §2.6 — its jobs back-fill
+    # executors the per-batch curate_increment protocol leaves idle)
     one_shot, _ = curate_corpus(corpus, near_dup="minhash")
-    ko = one_shot.select("id").persist()
-    ko.count()
+    ko = one_shot.select("id")
     q.awaitTermination(300)
 
     streamed = spark.read.parquet(out).select("id").persist()

@@ -1286,9 +1286,10 @@ def _successor(
     snapshot, and the stage's schema, bloom spec and layout are the
     table's. Otherwise ``h``'s files minus ``drop`` are carried BY
     REFERENCE with their per-file stats/rows/blooms/parts entries, the
-    staged files join them with theirs, and the schema (``schema``
-    overrides it — an evolving append), bloom spec and layout carry
-    from ``h``. Either way ``txn`` advances ``h``'s watermark map and
+    staged files join them with theirs, and the schema, bloom spec and
+    layout carry from ``h``. ``schema`` overrides the published schema
+    either way (an evolving append, or a restage that keeps its pinned
+    head's). Either way ``txn`` advances ``h``'s watermark map and
     ``h``'s properties carry unless ``properties`` replaces them."""
     base = h if drop is not None and h is not None else {}
     files = [r for r in base.get("files", ()) if r not in drop] + st.files
@@ -1319,7 +1320,7 @@ def _successor(
     carried = set(files)
     out = {
         "files": files,
-        "schema": (schema or base["schema"]) if base else st.schema,
+        "schema": schema or (base["schema"] if base else st.schema),
         "txn": _merged_txn(h, txn),
     }
     for key, staged in (
@@ -1632,7 +1633,11 @@ def merge_table(
     merged = merge_snapshot(snap, batch, key_cols, tombstone_col)
     # the whole pinned snapshot restages: nothing carries by reference
     st = _stage(spark, path, merged, head, (), stats_cols)
-    return _commit_pinned(spark, path, head, "merge", _successor(head, None, st))
+    # the restage reads back all-nullable: keep the head's schema
+    # unless the batch widened a column's type
+    widened = merged.schema.simpleString() != snap.schema.simpleString()
+    nxt = _successor(head, None, st, schema=None if widened else head["schema"])
+    return _commit_pinned(spark, path, head, "merge", nxt)
 
 
 def zorder_value(df: DataFrame, cols: tuple[str, ...], bits: int = 16) -> DataFrame:
@@ -1740,7 +1745,8 @@ def compact_table(
         _read_files(spark, head, root, head["files"]), n_out, sort_cols, zorder_cols
     )
     st = _stage(spark, path, df, head, (), stats_cols)
-    out = _commit_pinned(spark, path, head, "compact", _successor(head, None, st))
+    nxt = _successor(head, None, st, schema=head["schema"])  # read back all-nullable
+    out = _commit_pinned(spark, path, head, "compact", nxt)
     out["files_before"] = len(head["files"])
     out["files_after"] = len(out["files"])
     return out

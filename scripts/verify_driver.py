@@ -67,6 +67,9 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    sys.path.insert(0, ROOT)
+    from bench import probe_tempdir
+
     # Python workers inherit the JVM's environment: put this checkout
     # first so they import the same package the driver loaded.
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -101,7 +104,10 @@ def main() -> int:
     for name, fn in queries.items():
         t0 = time.perf_counter()
         try:
-            pdf = fn(spark, args.sf_dir).toPandas()
+            # a fresh tempfile directory per probe, removed once its rows
+            # are collected
+            with probe_tempdir():
+                pdf = fn(spark, args.sf_dir).toPandas()
             if name in oracles:
                 ocols, orows = frame_fingerprint(con.sql(oracles[name]).df())
                 scols, srows = frame_fingerprint(pdf)

@@ -665,6 +665,24 @@ def test_row_changes_compaction_is_an_empty_feed(spark, tbl):
     assert M.table_diff(spark, tbl, 0, v, ("k",)).count() == 0
 
 
+@pytest.mark.parametrize("op", ["compact_table", "merge_table"])
+def test_restage_keeps_non_nullable_schema(spark, tbl, op):
+    """A whole-table restage reads the snapshot back with every field
+    nullable; the commit still publishes the head's schema, so a
+    non-nullable column survives and the row feed across it is empty."""
+    df = spark.range(20).withColumn("v", F.concat(F.lit("v"), F.col("id").cast("string")))
+    M.write_table(df.repartition(4), tbl)
+    schema = M.latest_manifest(spark, tbl)["schema"]
+    assert '"nullable":false' in schema
+    if op == "compact_table":
+        M.compact_table(spark, tbl)
+    else:
+        M.merge_table(tbl, df.filter("id < 3"), ("id",))
+    head = M.latest_manifest(spark, tbl)
+    assert head["schema"] == schema
+    assert M.row_changes(spark, tbl, 0, head["version"], ("id",)).count() == 0
+
+
 def test_row_changes_drop_partition_feeds_deletes(spark, tbl):
     M.write_table(
         spark.createDataFrame(

@@ -3,6 +3,10 @@ semantics on a small controlled corpus."""
 
 from __future__ import annotations
 
+import gc
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from ensembl_database_loader_spark.pipeline.training import build_training_corpus
@@ -50,6 +54,81 @@ def test_build_training_corpus_stage_accounting(spark):
     assert got == {1, 5}
     # packed rows carry the text back for export
     assert packed.filter(F.col("text").isNull()).count() == 0
+
+
+#: the report's (name, type, nullable) as the lazily aggregated report
+#: had them; the opt-in stages append theirs
+_REPORT_FIELDS = [
+    ("n_input", "bigint", False),
+    ("n_quality", "bigint", False),
+    ("n_exact", "bigint", False),
+    ("n_kept", "bigint", False),
+    ("tokens_kept", "bigint", True),
+    ("n_clean", "bigint", False),
+    ("n_mixed", "bigint", False),
+    ("packed_tokens", "bigint", True),
+    ("each_doc_once", "boolean", False),
+    ("no_overflow", "boolean", True),
+    ("ffd_bound_ok", "boolean", True),
+    ("above_lower_bound", "boolean", True),
+]
+_OPTIN_FIELDS = [("n_lm", "bigint", False), ("n_budget", "bigint", False)]
+
+
+@pytest.mark.parametrize("optin", [False, True], ids=["default", "lm_budget"])
+def test_build_training_corpus_report_is_local(spark, optin):
+    """The report is built from the cut leaves' counts inside the call:
+    collecting it starts no Spark job, and its schema is the pinned one."""
+    docs = _corpus(spark)
+    kw = (
+        dict(lm_ref=docs, lm_min_logprob=-20.0, token_budgets={"en": 1000, "zh": 1000})
+        if optin
+        else {}
+    )
+    _, report = build_training_corpus(
+        docs, None, near_dup="inverted", pack_budget=128, pack_shards=2, **kw
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    report.collect()
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    got = [(f.name, f.dataType.simpleString(), f.nullable) for f in report.schema]
+    assert got == _REPORT_FIELDS + (_OPTIN_FIELDS if optin else [])
+
+
+def test_build_training_corpus_leaves_no_cached_frame(spark, tmp_path):
+    """Once the caller drops ``packed`` and the report, every block the
+    call materialized is freed: no persistent RDD outlives the call and
+    the catalog cache stays empty."""
+    sc = spark.sparkContext
+
+    def persistent():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    spark.catalog.clearCache()
+    before = persistent()
+    docs = _corpus(spark)
+    bench = spark.createDataFrame(
+        [(100, " ".join(f"oth{i:03d}" for i in range(40)))],
+        "doc_id bigint, text string",
+    )
+    packed, report = build_training_corpus(
+        docs, bench, near_dup="inverted", mix_rates={"en": 1.0, "zh": 1.0},
+        pack_budget=128, pack_shards=2,
+    )
+    report.collect()
+    packed.write.parquet(str(tmp_path / "packed"))
+    del packed, report
+    # the ContextCleaner frees a leaf asynchronously after the JVM
+    # collects it; poll briefly
+    for _ in range(40):
+        gc.collect()
+        sc._jvm.System.gc()
+        if persistent() <= before:
+            break
+        time.sleep(0.25)
+    assert persistent() <= before
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_build_training_corpus_optional_stages_skip(spark):
