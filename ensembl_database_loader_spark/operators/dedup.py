@@ -482,7 +482,8 @@ def banded_hamming_pairs(
     (id, simhash, blk) fingerprint frame — the engine behind
     ``simhash_pairs_banded`` and the weighted 60-bit variant
     (``simhash64_pairs_banded``). Returns (id1, id2, hamming) for every
-    pair with Hamming <= max_hamming within a block."""
+    pair with Hamming <= max_hamming within a block; the grouping of
+    fingerprints runs (and is cut) during the call."""
     if n_bands is None:
         n_bands = max_hamming + 1
     if n_bands < max_hamming + 1:
@@ -493,14 +494,14 @@ def banded_hamming_pairs(
     width = -(-bits // n_bands)  # ceil
     mask = (1 << width) - 1
     # The group frame is referenced four times (both band-join sides +
-    # two member re-attach joins); persist it so the upstream
-    # fingerprint pipeline (pandas-UDF votes, weight joins) runs once —
-    # it is tiny (one row per DISTINCT fingerprint) and Spark's
-    # ContextCleaner auto-unpersists it once unreferenced.
+    # two member re-attach joins); cut it so the upstream fingerprint
+    # pipeline (pandas-UDF votes, weight joins) runs once — it is tiny
+    # (one row per DISTINCT fingerprint), and with no catalog cache entry
+    # the ContextCleaner frees it once the result is unreferenced.
     g = (
         fps.groupBy("blk", "simhash")
         .agg(F.collect_list("id").alias("ids"))
-        .persist()
+        .localCheckpoint(eager=True)
     )
     bands = g.select(
         "blk",

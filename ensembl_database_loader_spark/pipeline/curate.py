@@ -32,6 +32,7 @@ from ensembl_database_loader_spark.operators.dedup import (
     with_shingles,
 )
 from ensembl_database_loader_spark.operators.textstats import with_quality_score
+from ensembl_database_loader_spark.session import local_frame
 
 
 def _near_dup_pairs(
@@ -210,19 +211,7 @@ def _funnel_stats(
     counts = dict(n_input=n_input, n_quality=n_quality, n_exact=exact.count(),
                   n_kept=n_kept, tokens_kept=tokens_kept)
     schema = StructType([StructField(c, LongType(), c == "tokens_kept") for c in counts])
-    return one_row(kept.sparkSession, counts, schema)
-
-
-def one_row(spark, row: dict, schema: StructType) -> DataFrame:
-    """``row`` as a 1-row frame with ``schema``'s exact types and
-    nullability. It is built through Arrow so it plans as a local
-    relation: collecting it starts no Spark job."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return spark.createDataFrame(
-        pa.Table.from_pylist([row], schema=to_arrow_schema(schema)), schema
-    )
+    return local_frame(kept.sparkSession, [tuple(counts.values())], schema)
 
 
 # ---------------------------------------------------------------------------

@@ -3,17 +3,18 @@ prioritise -> load -> summarize) as a plain PySpark program.
 
 The reference runs this as an eHive DAG with per-database jobs on an
 LSF cluster (LoadDBs_conf.pm:103-214). Spark-first, the orchestration
-is driver code: database names are a small DataFrame (thousands at
-most), per-database loads are Spark jobs submitted from a bounded
-thread pool into FAIR scheduler pools keyed by priority class, and the
-final email summary becomes a report DataFrame aggregation.
+is driver code: database names are a small local relation (thousands
+at most; routing them starts no Spark job) shuffled on the driver,
+per-database loads are Spark jobs submitted from a bounded thread pool
+into FAIR scheduler pools keyed by priority class, and the final email
+summary becomes a report DataFrame aggregation.
 
 Operator parity (SURVEY.md §2.1):
 - S2  discover_local_databases   (DatabaseFactory.pm:124-139)
 - F1  mode_filter regex dispatch (DatabaseFactory.pm:32-53,110-121)
 - F2  mode validation            (DatabaseFactory.pm:68-90)
-- F3  assert_coverage anti-join  (DatabaseFactory.pm:152-167)
-- X1  fan-out, randomized order  (LoadDBs_conf.pm:113-122)
+- F3  assert_coverage set diff   (DatabaseFactory.pm:152-167)
+- X1  fan-out, seeded shuffle    (LoadDBs_conf.pm:113-122)
 - P1  priority_score             (Prioritise.pm:32-68)
 - P2  priority_branch routing    (Prioritise.pm:70-81; LoadDBs_conf.pm:139-144)
 - D3  checksum verify            (sources.mysql_dump.verify_checksums)
@@ -31,12 +32,14 @@ pre-existing target raises.
 from __future__ import annotations
 
 import os
+import random
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ensembl_database_loader_spark.session import local_frame
 from ensembl_database_loader_spark.sources.discovery import prepare_target_dir
 from ensembl_database_loader_spark.sources.mysql_dump import read_mysql_dump
 
@@ -100,15 +103,13 @@ def mode_filter(
 
 
 def assert_coverage(accepted: DataFrame, requested: list[str]) -> None:
-    """F3: every requested db must have been accepted — left-anti join,
-    raise with the missing set."""
+    """F3: every requested db must have been accepted — set difference
+    against the collected names, raise with the missing ones sorted."""
     if not requested:
         return
-    spark = accepted.sparkSession
-    req = spark.createDataFrame([(d,) for d in requested], "database string")
-    missing = [r.database for r in req.join(accepted, "database", "left_anti").collect()]
+    missing = set(requested) - {r.database for r in accepted.select("database").collect()}
     if missing:
-        raise CoverageError(missing)
+        raise CoverageError(sorted(missing))
 
 
 def priority_score(
@@ -157,12 +158,12 @@ class MirrorReport:
     results: list[JobResult] = field(default_factory=list)
 
     def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [
                 (r.database, r.analysis, r.status, r.attempt, r.error, r.branch)
                 for r in self.results
-            ]
-            or [],
+            ],
             "database string, analysis string, status string, attempt int, "
             "error string, branch int",
         )
@@ -256,38 +257,16 @@ def render_email_summary(report_df: DataFrame) -> str:
     branch; 'grant' counts grant-analysis rows when a JDBC target
     emits them (the parquet mirror has no grant stage, so 0/0). The
     generic ``render_report`` remains the structured alternative."""
-    rows = report_df.select(
-        "database", "analysis", "status", "branch"
-    ).collect()
-    verified_dbs = {
-        r.database
-        for r in rows
-        if r.analysis == "verify" and r.status == "DONE"
-    }
+    rows = report_df.select("database", "analysis", "status", "branch").collect()
+    verified_dbs = {r.database for r in rows if r.analysis == "verify" and r.status == "DONE"}
 
     def pair(analysis: str, branch: int | None) -> tuple[int, int]:
         if analysis == "prioritise":
             return len(verified_dbs), 0
-        done = {
-            r.database
-            for r in rows
-            if r.analysis == analysis
-            and r.status == "DONE"
-            and (branch is None or r.branch == branch)
-        }
-        failed = {
-            r.database
-            for r in rows
-            if r.analysis == analysis
-            and r.status == "FAILED"
-            and (branch is None or r.branch == branch)
-        }
-        return len(done), len(failed)
+        hit = [r for r in rows if r.analysis == analysis and branch in (None, r.branch)]
+        return tuple(len({r.database for r in hit if r.status == st}) for st in ("DONE", "FAILED"))
 
-    args: list[object] = []
-    for analysis, branch in _EMAIL_SLOTS:
-        s, f = pair(analysis, branch)
-        args.extend([s, f])
+    args: list[object] = [n for slot in _EMAIL_SLOTS for n in pair(*slot)]
 
     failures = failed_jobs(report_df).collect()
     if not failures:
@@ -374,13 +353,17 @@ def mirror(
 ) -> MirrorReport:
     """Mirror every selected dump database into a parquet target.
 
-    The discover/filter/coverage/priority stages run as DataFrame ops;
-    the per-database load fan-out (X1) runs ``max_concurrent`` databases
-    at a time in randomized order (LoadDBs_conf.pm:115), each thread
-    tagged with its priority class's FAIR pool."""
+    The discover/filter/coverage/priority stages run as DataFrame ops on
+    a local relation (no Spark job); the per-database load fan-out (X1)
+    runs ``max_concurrent`` databases at a time in randomized order
+    (LoadDBs_conf.pm:115), each thread tagged with its priority class's
+    FAIR pool. The order is ``random.Random(seed).shuffle`` of the rows
+    in discovery (sorted) order: fixed per ``seed`` and covering each
+    accepted database once, but not the permutation the former
+    ``orderBy(rand(seed))`` gave that seed."""
     validate_mode(mode, databases)
-    found = spark.createDataFrame(
-        [(d,) for d in discover_local_databases(work_dir)] or [], "database string"
+    found = local_frame(
+        spark, [(d,) for d in discover_local_databases(work_dir)], "database string"
     )
     accepted = mode_filter(found, mode, databases)
     assert_coverage(accepted, databases or [])
@@ -388,7 +371,8 @@ def mirror(
         "database", priority_score("database", priority_species, priority_groups)
     ).select("database", "priority", priority_branch("priority"))
     # X1 fan-out: randomized order for load balancing, seeded for tests
-    rows = routed.orderBy(F.rand(seed)).collect()
+    rows = routed.collect()
+    random.Random(seed).shuffle(rows)
 
     report = MirrorReport()
     os.makedirs(target_dir, exist_ok=True)

@@ -38,7 +38,8 @@ from ensembl_database_loader_spark.operators.packing import (
     packing_report,
 )
 from ensembl_database_loader_spark.operators.textstats import with_token_stats
-from ensembl_database_loader_spark.pipeline.curate import curate_corpus, one_row
+from ensembl_database_loader_spark.pipeline.curate import curate_corpus
+from ensembl_database_loader_spark.session import local_frame
 
 
 def build_training_corpus(
@@ -215,7 +216,7 @@ def build_training_corpus(
     # funnel and contract fields keep their types; stage counts are non-null
     typed = {f.name: f for f in funnel.schema.fields + contract.schema.fields}
     schema = StructType([typed.get(c, StructField(c, LongType(), False)) for c in counts])
-    return packed, one_row(kept.sparkSession, counts, schema)
+    return packed, local_frame(kept.sparkSession, [tuple(counts.values())], schema)
 
 
 def tokenize_and_materialize(
@@ -247,6 +248,11 @@ def tokenize_and_materialize(
     (example tokens == doc tokens + one eos per doc — nothing lost or
     invented by the cut).
 
+    The call runs eagerly: the encoded corpus and ``examples`` are cut
+    leaves (``localCheckpoint``, freed by the ContextCleaner when
+    dropped), and ``report`` is built from their counts during the
+    call, so collecting it starts no Spark job.
+
     ``merges=None`` trains the vocabulary here (parallel-BPE batched
     passes by default — at a 50k vocab the exact-sequential trainer is
     50k driver round-trips; pass ``merges_per_pass=1`` when exact
@@ -267,31 +273,26 @@ def tokenize_and_materialize(
     if merges is None:
         merges = train_bpe(wf, num_merges, merges_per_pass=merges_per_pass)
     vocab_size = token_vocabulary(wf, merges).count()
+    wf.unpersist()
     eos = int(eos_id) if eos_id is not None else int(vocab_size)
-    enc = encode_corpus(docs, merges, id_col, text_col).persist()
+    # both stages are cut and counted once; the report is built on the driver
+    enc = encode_corpus(docs, merges, id_col, text_col).localCheckpoint(eager=True)
     ex = materialize_examples(
         enc, id_col, "token_ids", seq_len, n_shards=n_shards, eos=eos
-    ).persist()
-    totals = enc.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("total_doc_tokens"),
-    )
-    ex_totals = ex.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_examples"),
-        F.sum(F.col("complete").cast("int")).cast("bigint").alias("n_complete"),
-        F.sum("n_tokens").cast("bigint").alias("_ex_tokens"),
-    )
-    report = totals.crossJoin(ex_totals).select(
-        "n_docs",
-        F.lit(int(vocab_size)).cast("bigint").alias("vocab_size"),
-        F.lit(eos).cast("bigint").alias("eos_id"),
-        "total_doc_tokens",
-        "n_examples",
-        "n_complete",
-        (
-            F.col("_ex_tokens")
-            == F.col("total_doc_tokens") + F.col("n_docs")
-        ).alias("tokens_conserved"),
+    ).localCheckpoint(eager=True)
+    n_docs, doc_tokens = enc.agg(F.count(F.lit(1)), F.sum("n_tokens").cast("bigint")).first()
+    n_examples, n_complete, ex_tokens = ex.agg(
+        F.count(F.lit(1)),
+        F.sum(F.col("complete").cast("int")).cast("bigint"),
+        F.sum("n_tokens").cast("bigint"),
+    ).first()
+    conserved = None if None in (doc_tokens, ex_tokens) else ex_tokens == doc_tokens + n_docs
+    report = local_frame(
+        docs.sparkSession,
+        [(n_docs, int(vocab_size), eos, doc_tokens, n_examples, n_complete, conserved)],
+        "n_docs bigint not null, vocab_size bigint not null, eos_id bigint not null, "
+        "total_doc_tokens bigint, n_examples bigint not null, n_complete bigint, "
+        "tokens_conserved boolean",
     )
     if output_path is not None:
         # one physically example-ordered file per shard=K/ directory —

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Runtime-settable confs every probe relies on. Applied both at build
 #: time and defensively at call time (``ensure_session_confs``) because
@@ -100,3 +101,17 @@ def ensure_session_confs(spark: SparkSession) -> SparkSession:
         except Exception:  # conf may be static on some deployments
             pass
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """``rows`` (tuples in field order) as a frame with the exact types
+    and nullability of ``schema`` (a StructType or DDL). It is built
+    through Arrow so it plans as a local relation: collecting it, or a
+    filter/projection of it, starts no Spark job."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    records = [dict(zip(schema.names, r)) for r in rows]
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

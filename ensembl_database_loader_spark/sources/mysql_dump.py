@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, StringType, StructField, StructType, TimestampType
 
+from ensembl_database_loader_spark.session import local_frame
 from ensembl_database_loader_spark.sources.mysql_ddl import DumpSchema, parse_mysql_ddl
 
 #: Part-grouping regex — the reference's, verbatim (LoadFiles.pm:203):
@@ -163,8 +164,9 @@ def verify_checksums(
     """Compare the CHECKSUMS manifest against ``sum -r`` of the files.
 
     Returns a DataFrame (file, expected, actual) of FAILURES (empty =
-    verified), built from the local list: the check itself runs no
-    Spark job. Missing files surface as actual='-' exactly like the
+    verified), a local relation built through Arrow from the failure
+    list: neither the check nor collecting the frame starts a Spark
+    job. Missing files surface as actual='-' exactly like the
     reference (DownloadDatabase.pm:157); extra on-disk files not in the
     manifest are ignored (the manifest drives the check). Like the
     reference, the compared value is the combined ``'%05d sum' blocks``
@@ -188,7 +190,7 @@ def verify_checksums(
     ]
     if raise_on_failure and failures:
         raise ChecksumError(dump.name, failures)
-    return spark.createDataFrame(failures, _FAILURE_SCHEMA)
+    return local_frame(spark, failures, _FAILURE_SCHEMA)
 
 
 def _read_schema(table_schema: StructType) -> tuple[StructType, list[str]]:
@@ -500,7 +502,7 @@ def read_dump_table(
         raise KeyError(f"{dump.name}: table {table} not in DDL")
     paths = [os.path.join(dump.path, f) for f in dump.files_by_table.get(table, [])]
     if not paths:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     read_schema, temporal = _read_schema(schema)
     if strict_escapes:
         string_schema = StructType(

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 import duckdb
 import pytest
@@ -34,6 +36,18 @@ def spark():
         },
     )
     yield spark
+
+
+@pytest.fixture(autouse=True)
+def _per_test_tempdir(tmp_path_factory, monkeypatch):
+    """Point ``tempfile`` at a fresh directory for each test and remove
+    it afterwards: probes and operators stage their indexes, stores and
+    exports under ``tempfile.mkdtemp``. The directory comes from
+    pytest's base temp dir, which is resolved before the switch."""
+    d = tmp_path_factory.mktemp("tempfile")
+    monkeypatch.setattr(tempfile, "tempdir", str(d))
+    yield
+    shutil.rmtree(d, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

@@ -649,6 +649,19 @@ def test_simhash64_weighted_banded_equivalence(spark):
     assert banded == quad
 
 
+def test_simhash_banded_leaves_no_cached_frame(spark, sf_dir):
+    """The banded engine's group frame is a cut leaf, not a catalog
+    cache entry: once the pairs are consumed and dropped it is freed."""
+    from ensembl_database_loader_spark.operators.dedup import simhash_pairs_banded
+    from tests.test_training_pipeline import assert_leaves_no_cached_frame
+
+    def run():
+        d = table(spark, sf_dir, "documents")
+        simhash_pairs_banded(d, "doc_id", "text", "lang", max_hamming=4).collect()
+
+    assert_leaves_no_cached_frame(spark, run)
+
+
 def test_simhash_banded_rejects_too_few_bands(spark, sf_dir):
     import pytest as _pytest
 

@@ -4,6 +4,7 @@ retry semantics, and the A1 summary aggregation."""
 
 from __future__ import annotations
 
+import importlib
 import os
 import re
 
@@ -21,6 +22,7 @@ from ensembl_database_loader_spark.pipeline import (
     summarize,
 )
 from ensembl_database_loader_spark.pipeline.mirror import failed_jobs, validate_mode
+from ensembl_database_loader_spark.session import local_frame
 from tests.test_mysql_dump import build_dump
 
 
@@ -85,6 +87,47 @@ def test_priority_scoring_and_routing(spark):
     assert got["homo_sapiens_core_110_38"] == (1, 3)
     assert got["mus_musculus_core_110_39"] == (1, 3)
     assert got["ontology_mart_110"] == (0, 2)
+
+
+def test_mirror_routing_starts_no_job(spark, tmp_path, monkeypatch):
+    """Routing filters and scores a local relation of the discovered
+    names and shuffles them on the driver: it starts no Spark job,
+    dispatches every accepted database once with its P2 branch, in an
+    order fixed by ``seed``. A coverage miss raises without a job too."""
+    mirror_mod = importlib.import_module("ensembl_database_loader_spark.pipeline.mirror")
+    work = tmp_path / "work"
+    for d in DBS:
+        os.makedirs(work / d)
+    calls = []
+    monkeypatch.setattr(
+        mirror_mod, "_load_one",
+        lambda spark, work_dir, target_dir, db, branch, *a, **kw: calls.append((db, branch)) or [],
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    orders = []
+    for _ in range(2):
+        calls.clear()
+        mirror(
+            spark, str(work), str(tmp_path / "target"),
+            priority_species=("homo_sapiens", "mus_musculus"),
+            priority_groups=("variation",), seed=7,
+        )
+        orders.append(list(calls))
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert sorted(orders[0]) == [
+        ("gene_mart_110", 2),
+        ("homo_sapiens_core_110_38", 3),
+        ("homo_sapiens_variation_110_38", 5),
+        ("mus_musculus_core_110_39", 3),
+        ("ontology_mart_110", 2),
+    ]
+    assert orders[0] == orders[1]
+    accepted = mode_filter(local_frame(spark, [(d,) for d in DBS], "database string"), "mart")
+    with pytest.raises(CoverageError) as ei:
+        assert_coverage(accepted, ["gene_mart_110", "zz_missing", "homo_sapiens_core_110_38"])
+    assert ei.value.missing == ["homo_sapiens_core_110_38", "zz_missing"]
+    assert set(tracker.getJobIdsForGroup(None)) == before
 
 
 def test_mirror_end_to_end(spark, tmp_path):

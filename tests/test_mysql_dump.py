@@ -275,6 +275,28 @@ def test_verify_runs_no_spark_job(spark, tmp_path):
     assert failures.count() == 0
 
 
+def test_verify_failure_frame_is_local(spark, tmp_path):
+    """The failure frame is a local relation with the three-string
+    schema: collecting it starts no Spark job, and a corrupted part
+    still yields its one failure row."""
+    dump = scan_dump_dir(build_dump(str(tmp_path), "local_core_1_1"))
+    with open(os.path.join(dump.path, "region.txt.gz"), "r+b") as f:
+        f.seek(20)
+        byte = f.read(1)
+        f.seek(20)
+        f.write(bytes([byte[0] ^ 0xFF]))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    failures = verify_checksums(spark, dump, raise_on_failure=False)
+    rows = failures.collect()
+    assert set(tracker.getJobIdsForGroup(None) or []) - before == set()
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in failures.schema] == [
+        ("file", "string", True), ("expected", "string", True), ("actual", "string", True)
+    ]
+    assert [r.file for r in rows] == ["region.txt.gz"]
+    assert rows[0].expected != rows[0].actual
+
+
 @pytest.mark.parametrize(
     "tool, message",
     [(None, r"checksum tool `sum` \(coreutils\) not found"),

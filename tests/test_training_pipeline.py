@@ -96,10 +96,10 @@ def test_build_training_corpus_report_is_local(spark, optin):
     assert got == _REPORT_FIELDS + (_OPTIN_FIELDS if optin else [])
 
 
-def test_build_training_corpus_leaves_no_cached_frame(spark, tmp_path):
-    """Once the caller drops ``packed`` and the report, every block the
-    call materialized is freed: no persistent RDD outlives the call and
-    the catalog cache stays empty."""
+def assert_leaves_no_cached_frame(spark, run):
+    """Call ``run`` (it consumes and drops every frame it makes) and
+    assert that every block it materialized is freed: no persistent
+    RDD outlives it and the catalog cache stays empty."""
     sc = spark.sparkContext
 
     def persistent():
@@ -107,18 +107,7 @@ def test_build_training_corpus_leaves_no_cached_frame(spark, tmp_path):
 
     spark.catalog.clearCache()
     before = persistent()
-    docs = _corpus(spark)
-    bench = spark.createDataFrame(
-        [(100, " ".join(f"oth{i:03d}" for i in range(40)))],
-        "doc_id bigint, text string",
-    )
-    packed, report = build_training_corpus(
-        docs, bench, near_dup="inverted", mix_rates={"en": 1.0, "zh": 1.0},
-        pack_budget=128, pack_shards=2,
-    )
-    report.collect()
-    packed.write.parquet(str(tmp_path / "packed"))
-    del packed, report
+    run()
     # the ContextCleaner frees a leaf asynchronously after the JVM
     # collects it; poll briefly
     for _ in range(40):
@@ -129,6 +118,27 @@ def test_build_training_corpus_leaves_no_cached_frame(spark, tmp_path):
         time.sleep(0.25)
     assert persistent() <= before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_build_training_corpus_leaves_no_cached_frame(spark, tmp_path):
+    """Once the caller drops ``packed`` and the report, every block the
+    call materialized is freed: no persistent RDD outlives the call and
+    the catalog cache stays empty."""
+
+    def run():
+        docs = _corpus(spark)
+        bench = spark.createDataFrame(
+            [(100, " ".join(f"oth{i:03d}" for i in range(40)))],
+            "doc_id bigint, text string",
+        )
+        packed, report = build_training_corpus(
+            docs, bench, near_dup="inverted", mix_rates={"en": 1.0, "zh": 1.0},
+            pack_budget=128, pack_shards=2,
+        )
+        report.collect()
+        packed.write.parquet(str(tmp_path / "packed"))
+
+    assert_leaves_no_cached_frame(spark, run)
 
 
 def test_build_training_corpus_optional_stages_skip(spark):
@@ -285,3 +295,30 @@ def test_tokenize_and_materialize_end_to_end(spark, tmp_path):
     a = sorted((x.shard, x.example, tuple(x.tokens)) for x in rows)
     b = sorted((x.shard, x.example, tuple(x.tokens)) for x in ex2.collect())
     assert a == b
+
+
+def test_tokenize_and_materialize_leaves_no_cached_frame(spark, tmp_path):
+    """The word frequencies are released inside the call and the
+    encoded corpus and examples are cut leaves: once the caller drops
+    the examples and the report, nothing stays cached. The report is
+    built during the call, so collecting it starts no Spark job."""
+    from ensembl_database_loader_spark.pipeline.training import (
+        tokenize_and_materialize,
+    )
+
+    def run():
+        docs = spark.createDataFrame(
+            [(i, " ".join(f"word{j % 11}" for j in range(i % 20 + 5))) for i in range(30)],
+            "doc_id bigint, text string",
+        )
+        ex, report = tokenize_and_materialize(
+            docs, num_merges=4, seq_len=16, n_shards=2,
+            output_path=str(tmp_path / "tok"),
+        )
+        tracker = spark.sparkContext.statusTracker()
+        jobs = set(tracker.getJobIdsForGroup(None))
+        assert report.collect()[0].tokens_conserved
+        assert set(tracker.getJobIdsForGroup(None)) == jobs
+        assert ex.count() == report.first().n_examples
+
+    assert_leaves_no_cached_frame(spark, run)
